@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from prod_data_pipeline_spark.plans.queries import QUERIES, ordered_queries  # noqa: E402
+from prod_data_pipeline_spark.plans.queries import QUERIES  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -32,15 +32,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ordered_queries front-loads never-driver-checked + changed queries so
-    # the driver's 50-entry correctness window exercises them (see
-    # plans/queries.py::DRIVER_ORDER for the policy).
-    return {name: spec.fn for name, spec in ordered_queries().items()}
+    return {name: spec.fn for name, spec in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         name: spec.oracle
-        for name, spec in ordered_queries().items()
+        for name, spec in QUERIES.items()
         if spec.oracle is not None
     }

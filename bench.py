@@ -1,47 +1,33 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries; print ONE JSON line for the driver.
+"""Time the headline query pack at the sf dir and at a 10x inflated copy.
 
-Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_RUNS (default 2; a
-requested 1 IS honored — one measured pass, with the caveat that the
-spread statistics then degenerate to a single sample; the suite runs as
-N FULL PASSES; per-query best-of-N reports steady
-state, not first-touch codegen/page-cache cost, and the per-PASS totals
-expose the spread a single best-of number hides on a contended box
-(round-11 verdict #5): `spread.pass_totals_sec` + min/median/max and
-`spread.median_normalized` — the noise-normalized MEDIAN pass total —
-ride the same JSON as `noise.noise_factor`).
+`python bench.py` prints ONE JSON line: per-query best-of-N walls for each
+pack, each pack's total, the min/median/max of the per-pass totals, and
+`cpus`, the session's default parallelism.
+
+Env knobs: SPARK_GRAFT_SF_DIR (default: the sf0.1 test data dir),
+SPARK_GRAFT_CPUS (default: every core, see session.default_parallelism),
+SPARK_GRAFT_BENCH_RUNS (measured passes, default 2),
+SPARK_GRAFT_BENCH_INFLATE (inflation factor, default 10; 1 skips the
+inflated pass) and SPARK_GRAFT_BENCH_TMP (where the inflated dataset is
+cached, default /tmp).
 
 Each query is materialized through the `noop` sink so we time the full
-plan execution (scan -> shuffle -> agg) without driver-collect overhead;
-a warmup query amortizes JVM/codegen startup out of the numbers.
+plan execution (scan -> shuffle -> agg) without driver-collect overhead.
+One discarded warm-up pass pays JVM start-up and whole-stage-codegen
+compile for every plan (a cold pass runs ~1.9x the warm total), then N
+measured FULL passes re-time every query; best-of-N reports steady state
+and the per-pass totals show the spread a single best-of number hides.
 
-Machine-noise sentinel (round 10): a constant-work CPU-bound calibration
-job is timed before / between / after the suite passes; median-vs-pinned-
-reference is reported as `noise.noise_factor`, and `value_normalized` /
-`inflated.total_normalized` divide measured contention out of the raw
-totals, so "the machine was busy" is a number the judge can check, not a
-claim.
-
-Round-17 changes (ADDITIONS ONLY — no entry removed, renamed, or
-re-timed differently):
-- `events_conversion_latency` + `docs_trigram_logprob` join both packs
-  (HEADLINE_ADDITIONS / INFLATED_ADDITIONS) so driver-side BENCH/PERF can
-  see optimization work; they ride the same passes, so the per-PASS
-  spread totals now include them.  The legacy `value` and
-  `inflated.total` metrics keep summing the SAME queries as rounds <=16;
-  the grown packs land in `value_full_pack` / `inflated.total_full_pack`.
-- `cpu_scaling_probe`: a fixed-total-work compute-bound entry in
-  `queries` (see scaling_probe_df) whose 8c/32c wall ratio tracks the
-  core ratio (~2.7x measured), making the $SPARK_GRAFT_CPUS contract
-  driver-visible; excluded from every total.
-- the JSON echoes `cpus` (the core count the session was built with).
+Absolute walls depend on the box and its load: compare runs only within
+one session on one box.  The gated A/B benchmark is perfbench/run.py.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from functools import reduce
@@ -56,128 +42,23 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# --- round-17 additions-only pack growth (verdict r16 directive #6) ----------
-# Two of the r16 optimization targets join the timed pack so driver-side
-# BENCH/PERF can measure optimization work directly (none of r16's four
-# plan wins was bench-visible).  ADDITIONS ONLY: every pre-r17 entry keeps
-# its name and methodology, and the legacy `value` / `inflated.total`
-# metrics keep summing the SAME queries as rounds <=16 so they stay
-# comparable round-over-round; the additions are reported per-query in
-# `queries` / `inflated.queries` and in the new *_full_pack totals.
-HEADLINE_ADDITIONS = ["events_conversion_latency", "docs_trigram_logprob"]
-
-
-# --- CPU-scaling probe (verdict r16 directive #2) ----------------------------
-# Every sf0.1 headline query is latency-floor-bound per query (8c/32c wall
-# ratios ~1), which left the driver's scaling block illegible
-# (`suspect_cpus_ignored` despite session.py honoring $SPARK_GRAFT_CPUS).
-# This probe is a fixed-total-work, compute-bound job derived from the
-# parquet inputs: seeds from `nation`, a two-level explode generates a
-# constant 25*FAN1*FAN2 rows spread over a FIXED task count, and each row
-# pays a DEPTH-long xxhash64 chain (pure codegen, no per-row arrays, no
-# data-sized shuffle).  Its wall time tracks 1/cores (measured r17:
-# ~2.5 s at local[32] vs ~6.7 s at local[8], ratio ~2.7 — the residual
-# is the fixed scan/shuffle/plan overhead), so the per-query scaling
-# ratio the driver computes from `queries` is >>1 exactly when the bench
-# honors the core count.  Deterministic integer arithmetic throughout;
-# recomputed from parquet on every invocation like every other entry.
-PROBE_NAME = "cpu_scaling_probe"
-PROBE_FAN1 = 64
-PROBE_FAN2 = 16_000
-PROBE_PARTS = 64  # fixed: total work constant, cores share it
-PROBE_DEPTH = 256
-
-
-def scaling_probe_df(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from prod_data_pipeline_spark.sources.readers import load_table
-
-    seeds = (
-        load_table(spark, sf_dir, "nation")
-        .select(F.col("n_nationkey").cast("long").alias("k"))
-        .select("k", F.explode(F.sequence(F.lit(1), F.lit(PROBE_FAN1))).alias("i"))
-        .select((F.col("k") * PROBE_FAN1 + F.col("i")).alias("s"))
-        .repartition(PROBE_PARTS)
-    )
-    rows = seeds.select(
-        "s", F.explode(F.sequence(F.lit(1), F.lit(PROBE_FAN2))).alias("j")
-    ).select((F.col("s") * PROBE_FAN2 + F.col("j")).alias("x"))
-    col = F.col("x")
-    for _ in range(PROBE_DEPTH):
-        col = F.xxhash64(col)
-    return rows.agg(F.sum(F.pmod(col, F.lit(1000000007))).alias("probe_checksum"))
-
-
-# --- machine-noise sentinel (round-10 verdict directive #2) -----------------
-# A constant-work CPU-bound JVM job: 32 partitions of pure codegen'd integer
-# arithmetic over spark.range — zero input I/O, zero shuffle beyond the final
-# scalar agg, identical work every run.  Its wall time moves ONLY with
-# machine contention (other tenants on the box, CPU throttling), so
-# measured / reference = a contention factor for the window the suite ran
-# in.  Terms are modulus-bounded so the sum stays far inside int64 under
-# ANSI overflow checking.
-CALIBRATION_ROWS = 4_000_000_000
-CALIBRATION_EXPR = "sum((id % 1048576) * 1315423911 % 1000000007) as s"
-#: Quiet-machine reference for the calibration job, measured round 10 on the
-#: grading box under a quiet window IN a full bench run (local[32], samples
-#: 0.805/0.804/0.859 after the codegen-warmup discard; a standalone probe
-#: session read ~0.92 — the in-bench context is the one that matters).
-#: noise_factor = median(samples) / this, clamped at 1.0.
-CALIBRATION_REF_SEC = 0.82
-
-
-def calibrate(spark) -> float:
-    """One timed run of the constant-work calibration job."""
-    t0 = time.perf_counter()
-    spark.range(0, CALIBRATION_ROWS, 1, 32).selectExpr(CALIBRATION_EXPR).collect()
-    return time.perf_counter() - t0
-
-
-# --- memory-bandwidth sentinel (round 12) -----------------------------------
-# The CPU sentinel above is register/ALU-bound, so it UNDER-reads the
-# contention mode this box actually exhibits: external tenants saturating
-# memory bandwidth / page cache, which inflates the data-heavy query
-# passes (especially the 10x inflated suite) while the CPU factor still
-# reads 1.0 (documented rounds 10-12).  This sentinel streams a constant
-# 256 MiB float64 array through numpy.sum four times (~1 GiB of memory
-# traffic, single-threaded, zero allocation after first call): its wall
-# time moves with MEMBW contention.  membw_factor is REPORTED beside
-# noise_factor for attribution; value_normalized keeps using the CPU
-# factor so round-over-round normalized numbers stay comparable.
-MEMBW_ELEMS = (1 << 28) // 8  # 256 MiB of float64
-#: Round-12 quiet-machine reference (8 warm samples 0.137-0.152 at load
-#: ~2).  KEPT for cross-round comparability — emitted as
-#: `membw_factor_r12` — but superseded as the gate reference: rounds 13-14
-#: measured the box's IDLE floor itself drifting 4-9% above this pin
-#: (r13 per-run minima 0.140-0.148; r14 re-pin batches min 0.1456/0.1481,
-#: quiet medians 0.148-0.156 at 1-min load 0.15), so a factor against
-#: 0.135 conflates floor drift with burst contention and the <=1.05
-#: quiet gate became unsatisfiable (six r13 attempts, none landed).
-MEMBW_REF_SEC_R12 = 0.135
-#: Round-14 re-pin (verdict r13 directive #4): the min across the
-#: round's idle samples, so `membw_factor` measures burst contention
-#: above the CURRENT floor.  The BASELINE.md addendum's quiet gate
-#: (membw_factor <= 1.05) is restated against this value.  The factor
-#: is clamped at 1.0, so a marginally-low reference cannot deflate
-#: normalized numbers.
-MEMBW_REF_SEC = 0.145
-_membw_arr = None
-
-
-def calibrate_membw() -> float:
-    """One timed run of the constant-traffic memory-bandwidth job."""
-    global _membw_arr
-    import numpy as np
-
-    if _membw_arr is None:
-        _membw_arr = np.arange(MEMBW_ELEMS, dtype="float64")
-    t0 = time.perf_counter()
-    acc = 0.0
-    for _ in range(4):
-        acc += float(_membw_arr.sum())
-    assert acc >= 0.0
-    return time.perf_counter() - t0
+# Timed at the sf dir: the relational star/TPC-H headliners, one dedup
+# and two corpus-statistics queries over documents, the brute-force ANN
+# scan, and two lineage-cut plans (conversion latency, trigram LM).
+HEADLINE_QUERIES = [
+    "events_per_day",
+    "events_type_value_stats",
+    "q1_pricing_summary",
+    "top_orders_by_revenue",
+    "regional_nation_revenue",
+    "user_sessions",
+    "docs_near_dup_pairs",
+    "corpus_curation_stats",
+    "docs_token_stats",
+    "emb_topk_bruteforce",
+    "events_conversion_latency",
+    "docs_trigram_logprob",
+]
 
 
 # Synthetic inflation: fact tables get `factor` key-shifted copies (the key
@@ -187,8 +68,8 @@ def calibrate_membw() -> float:
 # (id-shifted, text identical): that is the nightly-crawl duplication shape,
 # and it gives the LSH banding path a standing super-sf0.1 timing where
 # every band bucket holds factor× members.  `embeddings` inflates the same
-# way since round 7 (id-shifted, vectors identical): brute-force ANN gets a
-# corpus factor× the queries must scan (~linear), and SRP sign-LSH gets the
+# way (id-shifted, vectors identical): brute-force ANN gets a corpus
+# factor× the queries must scan (~linear), and SRP sign-LSH gets the
 # bucket-crowding shape where identical replicas collide in every band.
 INFLATE_KEYS = {
     "events": "event_id",
@@ -200,8 +81,7 @@ INFLATE_KEYS = {
 KEY_SHIFT = 1 << 40
 # Bump when the inflation recipe changes: the inflated dataset is
 # marker-cached on disk across runs, and a recipe change must not reuse a
-# stale cache (round 6's cache has embeddings UN-inflated; v3 pins the
-# file layout — see build_inflated).
+# stale cache (v3 pins the file layout — see build_inflated).
 INFLATE_RECIPE_V = 3
 
 # Relational headliners whose cost scales with the inflated facts, plus one
@@ -231,144 +111,46 @@ INFLATED_QUERIES = [
     # key, the embedding twin of the LSH dup-clique shape above.
     "emb_topk_bruteforce",
     "emb_srp_near_dup_pairs",
-    # Curation-gate representative (round-11 verdict #4): the engine's
-    # center of mass moved to the curation-gate family, whose scale
-    # behavior previously lived only in one-off SCALE notes.  This is
-    # the most expensive of those queries — the full production
-    # MinHash-LSH pair pass under factor× bucket crowding plus the
-    # hash-split leakage join — so a banding, verify-join, or split
-    # regression gets a standing driver-visible number.
+    # Curation-gate representative: the full production MinHash-LSH pair
+    # pass under factor× bucket crowding plus the hash-split leakage join.
     "docs_split_leakage_audit",
+    # Lineage-cut plan at sf1-equivalent volume.  docs_trigram_logprob
+    # stays sf-only: at 10x documents its n-gram LM pass costs ~11 s/pass
+    # and the banding/leakage entries already cover documents at scale.
+    "events_conversion_latency",
 ]
 
-# r17 addition (verdict r16 directive #6), timed at the inflated scale
-# too so its lineage-cut plan gets a standing sf1-equivalent number.
-# Kept OUT of the legacy INFLATED_QUERIES sum: `inflated.total` keeps its
-# pre-r17 identity, the grown pack totals land in total_full_pack.
-# docs_trigram_logprob stays HEADLINE-ONLY: at 10x documents its n-gram
-# LM pass costs ~11 s/pass (a third of the whole inflated suite) and the
-# banding/leakage entries already cover the documents family at scale.
-INFLATED_ADDITIONS = ["events_conversion_latency"]
 
+def time_pack(spark, names: list[str], data_dir: str, runs: int) -> dict:
+    """One discarded warm-up pass, then `runs` measured full passes."""
 
-# BASELINE.md quiet-window per-query references for the inflated pass
-# (round-13 addendum; docs_split_leakage_audit uses its band midpoint).
-# Tier-1 denominators: valid only on a genuinely quiet box
-# (membw_factor <= 1.05) — rounds 13-15 measured the shuffle-heavy
-# entries unable to reach them on the current box floor at ANY load.
-# r17 MEASUREMENT FIX (declared in OPTIMIZATION_r17.md §7): the round's
-# first genuinely quiet full runs since r13 (three at membw 1.00-1.014)
-# confirmed exactly four entries stuck 1.35-1.9x ABOVE their r10 pins at
-# total quiet — the documented-unreachable set, whose stale pins made the
-# tier-1 gate flag healthy queries (all four sat at 1.0-1.24x their
-# CURRENT tier-2 floors, three at all-round minima).  Those four are
-# re-pinned to the r17 quiet-window minima; every other entry keeps its
-# r10 pin (all were reached or approached this round).  Old values kept
-# here: events_type_value_stats 0.28, q1_pricing_summary 0.50,
-# top_orders_by_revenue 1.13, user_sessions 0.63 (r10 pins,
-# pre-floor-drift).
-INFLATED_QUIET_REFS = {
-    "events_per_day": 0.36,
-    "events_type_value_stats": 0.555,  # r17 re-pin; r10 pin 0.28
-    "q1_pricing_summary": 0.677,  # r17 re-pin; r10 pin 0.50
-    "top_orders_by_revenue": 1.468,  # r17 re-pin; r10 pin 1.13
-    "regional_nation_revenue": 1.88,
-    "user_sessions": 1.192,  # r17 re-pin; r10 pin 0.63
-    "orders_price_deciles": 1.93,
-    "docs_near_dup_pairs": 2.12,
-    "emb_topk_bruteforce": 0.83,
-    "emb_srp_near_dup_pairs": 2.26,
-    "docs_split_leakage_audit": 3.04,
-    # r17 inflated-pack addition, seeded from the round's quiet-window
-    # minimum (attempt E, membw 1.0)
-    "events_conversion_latency": 1.851,
-}
+    def run_pass():
+        out = {}
+        for name in names:
+            t0 = time.perf_counter()
+            materialize(QUERIES[name].fn(spark, data_dir))
+            out[name] = round(time.perf_counter() - t0, 3)
+        return out
 
-# Tier-2 denominators: CURRENT-FLOOR references — the best cross-round
-# per-query minima measured under the box's standing 1.05-1.20 membw
-# band (r13 attempts A-D incl. single-shot floors for top_orders /
-# user_sessions; r15 updates where lower).  These EMBODY the band, so
-# tier 2 compares against them raw — multiplying by the in-run factor
-# would double-count the floor drift the references already carry
-# (the r15 restatement BASELINE.md's r14 verdict asked for: ratios
-# against reachable numbers mean something again).
-INFLATED_FLOOR_REFS = {
-    # tightened 0.456 -> 0.408 at r17 (attempt C beat the floor inside
-    # the band; refs only move DOWN)
-    "events_per_day": 0.408,
-    "events_type_value_stats": 0.487,
-    "q1_pricing_summary": 0.664,
-    # tightened 1.478 -> 1.468 at r17 (beaten inside the band)
-    "top_orders_by_revenue": 1.468,
-    # tightened 2.08 -> 1.981 at r16, -> 1.976 at r17 (beaten inside
-    # the band; refs only move DOWN)
-    "regional_nation_revenue": 1.976,
-    "user_sessions": 0.963,
-    "orders_price_deciles": 2.075,
-    "docs_near_dup_pairs": 2.116,
-    # tightened 0.850 -> 0.812 at r17 (beaten inside the band)
-    "emb_topk_bruteforce": 0.812,
-    # tightened 2.147 -> 2.066 at r17 (beaten inside the band)
-    "emb_srp_near_dup_pairs": 2.066,
-    "docs_split_leakage_audit": 2.573,
-    # r17 inflated-pack addition, seeded from the round's cross-attempt
-    # minimum (attempt E, noise 1.0 / membw 1.0) per the same
-    # best-cross-round-minima policy as the entries above
-    "events_conversion_latency": 1.851,
-}
-
-
-def inflated_gate(inflated: dict, membw_factor: float) -> dict:
-    """Round-15 two-tier contention gate (BASELINE.md r15 addendum).
-
-    tier 1 (quiet, membw_factor <= 1.05): per-query ratios vs the QUIET
-    references.  tier 2 (the box's standing contention band, <= 1.20):
-    ratios vs the CURRENT-FLOOR references, which were measured inside
-    that band.  Both tiers share the UNIFORMITY rule — a query >1.4x
-    its reference AND >1.35x the pack's median ratio is elevation
-    contention cannot explain (contention moves the whole pack; a
-    regression moves one query) and flags `weak`; a median itself >1.4x
-    is broad elevation beyond the instrument (no verdict).  tier 0:
-    membw beyond 1.20 — no gated verdict from this run.  A single bench
-    invocation carries best-of-N-pass minima only; the ROUND-level
-    verdict aggregates minima across >=3 invocations (SCALE.md records
-    them) under the same rule."""
-    if membw_factor <= 1.05:
-        tier, refs = 1, INFLATED_QUIET_REFS
-    elif membw_factor <= 1.20:
-        tier, refs = 2, INFLATED_FLOOR_REFS
-    else:
-        tier, refs = 0, None
-    out = {"tier": tier, "membw_factor": membw_factor}
-    if tier:
-        ratios = {
-            q: round(t / refs[q], 3)
-            for q, t in inflated.items()
-            if q in refs
-        }
-        if not ratios:
-            # a trimmed INFLATED_QUERIES run with no ref overlap carries
-            # no gate signal — same no-verdict shape as tier 0
-            out["tier"] = 0
-            return out
-        # true median (averages the two middle elements for an even-sized
-        # pack — the former upper-middle pick biased the uniformity rule)
-        import statistics
-
-        med = round(statistics.median(ratios.values()), 3)
-        out["refs"] = "quiet_r10" if tier == 1 else "floor_r13_r15"
-        out["ratios"] = ratios
-        out["median_ratio"] = med
-        out["broad_elevation"] = med > 1.4
-        out["weak"] = sorted(
-            q for q, r in ratios.items() if r > 1.4 and r > 1.35 * med
-        )
-    return out
+    run_pass()  # codegen / page-cache warm-up, discarded
+    passes = [run_pass() for _ in range(max(1, runs))]
+    best = {name: min(p[name] for p in passes) for name in names}
+    totals = [round(sum(p.values()), 3) for p in passes]
+    return {
+        "queries": best,
+        "total": round(sum(best.values()), 3),
+        "spread": {
+            "pass_totals_sec": totals,
+            "min": min(totals),
+            "median": round(statistics.median(totals), 3),
+            "max": max(totals),
+        },
+    }
 
 
 def build_inflated(spark, sf_dir: str, factor: int, out_dir: str) -> None:
     """Materialize the inflated dataset once (marker-cached across runs)."""
-    from pyspark.sql import DataFrame, functions as F
+    from pyspark.sql import DataFrame
 
     from prod_data_pipeline_spark.sources.readers import TABLES, load_table
 
@@ -386,12 +168,11 @@ def build_inflated(spark, sf_dir: str, factor: int, out_dir: str) -> None:
             )
             # Pin the file layout (recipe v3): without this the part-file
             # count is whatever partitioning the BUILDING session happened
-            # to produce (observed 10 files post-reboot vs ~30 earlier),
-            # and at ~10-20 MB/file each file is one input split — an
-            # inflated fact scan then runs 10 tasks on 32 cores and the
-            # bench numbers shift with the cache's birth session rather
-            # than the code.  defaultParallelism files ≈ one split per
-            # core, deterministic across rebuilds.
+            # to produce, and at ~10-20 MB/file each file is one input
+            # split — an inflated fact scan could then run 10 tasks on 32
+            # cores and the numbers shift with the cache's birth session
+            # rather than the code.  defaultParallelism files ≈ one split
+            # per core, deterministic across rebuilds.
             df = df.repartition(spark.sparkContext.defaultParallelism)
         df.write.mode("overwrite").parquet(os.path.join(out_dir, f"{t}.parquet"))
     with open(marker, "w") as f:
@@ -400,90 +181,22 @@ def build_inflated(spark, sf_dir: str, factor: int, out_dir: str) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # Best-of-2 by default: the first execution of each query pays one-off
-    # whole-stage-codegen compilation (~0.5-1 s locally) that a cluster
-    # amortizes over minutes of runtime; best-of-N reports steady state.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    headline = [name for name, spec in QUERIES.items() if spec.headline]
-    # additions-only growth (r17): the legacy 10 keep their names and the
-    # legacy `value` metric; the additions ride the same passes.
-    pack = headline + [q for q in HEADLINE_ADDITIONS if q not in headline]
-    # Warmup: run the cheapest headline once to pay JVM/codegen startup.
+    # JVM start-up, paid once before either pack
     materialize(QUERIES["events_per_day"].fn(spark, sf_dir))
 
-    # Noise sentinel: first calibration run pays whole-stage-codegen compile
-    # for the range-sum plan and is discarded; the kept samples bracket
-    # every suite pass so the factor reflects the same window the query
-    # timings came from.
-    calibrate(spark)  # codegen warmup, discarded
-    calibrate_membw()  # first-touch array allocation, discarded
-    noise_samples: list[float] = []
-    membw_samples: list[float] = []
-
-    def sample_noise():
-        noise_samples.append(round(calibrate(spark), 3))
-        membw_samples.append(round(calibrate_membw(), 3))
-
-    sample_noise()
-
-    def run_pass(names, data_dir):
-        """One full suite pass: every query once, in order."""
-        out = {}
-        for name in names:
-            t0 = time.perf_counter()
-            materialize(QUERIES[name].fn(spark, data_dir))
-            out[name] = round(time.perf_counter() - t0, 3)
-        return out
-
-    # One DISCARDED warmup pass pays whole-stage-codegen compile for every
-    # headline plan (measured: a cold pass runs ~1.9x the warm total —
-    # leaving it in would make the spread read codegen, not contention),
-    # then N measured FULL passes: pass k re-times every query minutes
-    # after pass k-1, so the per-pass totals sample the box's contention
-    # trajectory — the spread a single best-of-N cannot show (round-11
-    # verdict #5).
-    run_pass(pack, sf_dir)  # codegen warmup, discarded
-    sample_noise()
-    passes = []
-    for _ in range(max(1, runs)):
-        passes.append(run_pass(pack, sf_dir))
-        sample_noise()
-
-    timings = {
-        name: round(min(p[name] for p in passes), 3) for name in pack
-    }
-    pass_totals = [round(sum(p.values()), 3) for p in passes]
-
-    # CPU-scaling probe: timed with the same warmup + best-of-N
-    # methodology, OUTSIDE the suite passes (so pass totals keep
-    # measuring the query pack) and excluded from both totals below —
-    # it exists to make the core-count contract driver-visible, not to
-    # move the headline number.
-    materialize(scaling_probe_df(spark, sf_dir))  # codegen warmup
-    probe_ts = []
-    for _ in range(max(1, runs)):
-        t0 = time.perf_counter()
-        materialize(scaling_probe_df(spark, sf_dir))
-        probe_ts.append(round(time.perf_counter() - t0, 3))
-    timings[PROBE_NAME] = round(min(probe_ts), 3)
-    sample_noise()
-
-    # `value` keeps its pre-r17 identity (the SAME 10 headline queries)
-    # for round-over-round comparability; the grown pack's total is
-    # value_full_pack (additions included, probe excluded).
-    total = round(sum(timings[n] for n in headline), 3)
+    pack = time_pack(spark, HEADLINE_QUERIES, sf_dir, runs)
     result = {
         "metric": "headline_queries_total_wall",
-        "value": total,
+        "value": pack["total"],
         "unit": "sec",
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        "queries": timings,
-        "value_full_pack": round(sum(timings[n] for n in pack), 3),
+        "cpus": spark.sparkContext.defaultParallelism,
         "sf": sf,
+        "queries": pack["queries"],
+        "spread": pack["spread"],
     }
 
     # Second pass at an inflated scale (default 10x -> sf1-equivalent fact
@@ -496,87 +209,11 @@ def main() -> None:
             f"spark_graft_bench_sf{sf}x{factor}_v{INFLATE_RECIPE_V}",
         )
         build_inflated(spark, sf_dir, factor, inflated_dir)
-        # Same full-pass best-of-N as the main suite: the first touch of
-        # each inflated table pays cold page cache (the dataset may have
-        # been written seconds ago) + whole-stage-codegen compile, which
-        # showed up as a one-off 8x outlier on the first query to scan
-        # lineitem.
-        ipack = INFLATED_QUERIES + [
-            q for q in INFLATED_ADDITIONS if q not in INFLATED_QUERIES
-        ]
-        run_pass(ipack, inflated_dir)  # codegen/page-cache warmup
-        sample_noise()
-        ipasses = []
-        for _ in range(max(1, runs)):
-            ipasses.append(run_pass(ipack, inflated_dir))
-            sample_noise()
-        inflated = {
-            name: round(min(p[name] for p in ipasses), 3) for name in ipack
-        }
-        ipass_totals = [round(sum(p.values()), 3) for p in ipasses]
         result["inflated"] = {
             "factor": factor,
             "sf_equivalent": round(sf * factor, 3),
-            "queries": inflated,
-            # legacy identity: the same 11 queries rounds <=16 summed
-            "total": round(sum(inflated[n] for n in INFLATED_QUERIES), 3),
-            "total_full_pack": round(sum(inflated.values()), 3),
+            **time_pack(spark, INFLATED_QUERIES, inflated_dir, runs),
         }
-
-    # Noise normalization: median of the bracketing samples vs the pinned
-    # quiet-machine reference.  value stays RAW (comparable across rounds);
-    # value_normalized divides out measured contention.  factor < 1 is
-    # clamped to 1 — a faster-than-reference machine must not inflate the
-    # normalized number.
-    med = sorted(noise_samples)[len(noise_samples) // 2]
-    noise_factor = max(1.0, round(med / CALIBRATION_REF_SEC, 3))
-    membw_med = sorted(membw_samples)[len(membw_samples) // 2]
-    result["noise"] = {
-        "calibration_samples_sec": noise_samples,
-        "calibration_ref_sec": CALIBRATION_REF_SEC,
-        "noise_factor": noise_factor,
-        # membw sentinel (round 12): diagnostic only — attributes the
-        # contention mode the CPU factor cannot see; normalization stays
-        # on noise_factor for cross-round comparability.
-        "membw_samples_sec": membw_samples,
-        "membw_ref_sec": MEMBW_REF_SEC,
-        "membw_factor": max(1.0, round(membw_med / MEMBW_REF_SEC, 3)),
-        # the r12 pin's factor, kept so rounds <=13 stay comparable
-        "membw_ref_sec_r12": MEMBW_REF_SEC_R12,
-        "membw_factor_r12": max(1.0, round(membw_med / MEMBW_REF_SEC_R12, 3)),
-    }
-    result["value_normalized"] = round(total / noise_factor, 3)
-
-    def spread_stats(totals):
-        st = sorted(totals)
-        med_t = st[len(st) // 2]
-        return {
-            "pass_totals_sec": totals,
-            # measured pass count, so a consumer comparing across rounds
-            # can tell a robust median from a lone SPARK_GRAFT_BENCH_RUNS=1
-            # sample (r13 advisory: single-pass results must be
-            # self-describing)
-            "passes": len(totals),
-            "degenerate_spread": len(totals) < 2,
-            "min": st[0],
-            "median": med_t,
-            "max": st[-1],
-            "max_over_min": round(st[-1] / st[0], 3) if st[0] else None,
-            # the number to judge rounds on: the MEDIAN full-pass total
-            # with measured contention divided out — robust to one lucky
-            # or unlucky pass, unlike best-of and unlike a raw mean
-            "median_normalized": round(med_t / noise_factor, 3),
-        }
-
-    result["spread"] = spread_stats(pass_totals)
-    if "inflated" in result:
-        result["inflated"]["total_normalized"] = round(
-            result["inflated"]["total"] / noise_factor, 3
-        )
-        result["inflated"]["spread"] = spread_stats(ipass_totals)
-        result["inflated"]["gate"] = inflated_gate(
-            result["inflated"]["queries"], result["noise"]["membw_factor"]
-        )
 
     print(json.dumps(result))
     spark.stop()

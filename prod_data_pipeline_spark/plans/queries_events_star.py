@@ -36,7 +36,6 @@ from prod_data_pipeline_spark.plans.query_registry import (  # noqa: F401
     SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n_events
     FROM events GROUP BY 1 ORDER BY 1
     """,
-    headline=True,
     tags=("A2", "O1"),
 )
 def events_per_day(spark, sf_dir):
@@ -178,7 +177,6 @@ def events_dq_profile(spark, sf_dir):
     WHERE event_type IN ({_VALID_TYPES_SQL})
     GROUP BY event_type ORDER BY event_type
     """,
-    headline=True,
     tags=("P5", "A3"),
 )
 def events_type_value_stats(spark, sf_dir):
@@ -388,7 +386,6 @@ def events_curated_projection(spark, sf_dir):
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
-    headline=True,
     tags=("A2", "A3", "A4"),
 )
 def q1_pricing_summary(spark, sf_dir):
@@ -429,7 +426,6 @@ def q1_pricing_summary(spark, sf_dir):
     GROUP BY o.o_orderkey, o.o_orderdate, c.c_mktsegment
     ORDER BY revenue DESC, o.o_orderkey LIMIT 10
     """,
-    headline=True,
     tags=("join", "O2"),
 )
 def top_orders_by_revenue(spark, sf_dir):
@@ -474,7 +470,6 @@ def top_orders_by_revenue(spark, sf_dir):
     GROUP BY r.r_name, n.n_name
     ORDER BY r.r_name, n.n_name
     """,
-    headline=True,
     tags=("join",),
 )
 def regional_nation_revenue(spark, sf_dir):
@@ -1004,7 +999,6 @@ def user_running_value(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n_events
     FROM g GROUP BY user_id ORDER BY user_id
     """,
-    headline=True,
     tags=("window", "sessionization"),
 )
 def user_sessions(spark, sf_dir):
@@ -1092,7 +1086,6 @@ def docs_minhash_signatures(spark, sf_dir):
 
 @query(
     "docs_near_dup_pairs",
-    headline=True,
     oracle="""
     WITH t AS (
       SELECT doc_id, """ + _TOKS_SQL + """ AS toks FROM documents
@@ -1246,7 +1239,6 @@ def docs_ngram_jaccard_pairs(spark, sf_dir):
     FROM q WHERE quality >= 0.45
     GROUP BY lang ORDER BY lang
     """,
-    headline=True,
     tags=("dedup", "text", "pipeline"),
 )
 def corpus_curation_stats(spark, sf_dir):
@@ -1807,7 +1799,6 @@ def docs_tokenizer_fertility(spark, sf_dir):
            CAST(COUNT(*) AS DOUBLE) / COUNT(DISTINCT doc_id) AS avg_tokens_per_doc
     FROM e GROUP BY lang ORDER BY lang
     """,
-    headline=True,
     tags=("text", "tokens"),
 )
 def docs_token_stats(spark, sf_dir):
@@ -1866,7 +1857,6 @@ def docs_token_stats(spark, sf_dir):
     QUALIFY rank <= 5
     ORDER BY query_id, rank
     """,
-    headline=True,
     tags=("similarity", "ann"),
 )
 def emb_topk_bruteforce(spark, sf_dir):

@@ -1,17 +1,11 @@
-"""Round-15 consolidation panels — REGISTERED round 15 (prepared round 14).
+"""Consolidation panels: four near-twin query pairs merged into one
+query each.
 
-SCALE.md's rotation-relief inventory names four near-twin query pairs whose
-merges each free one permanent driver-window slot.  Verdict r13 directive
-#3 scoped round 14 to landing the merged implementations + oracles behind
-the wire (proven by tests/test_merged_panels.py with the registered sweep's
-parity harness); verdict r14 directive #1 executed the switch in round 15:
-each panel below is registered via @query, its two source queries are
-de-registered in the same commit, the pairs' SURVEY §2 rows moved onto the
-panel rows, and the DSUM_EXCEPTIONS entries migrated
-(emb_ivf_append_audit/recall -> emb_ivf_append_panel).  Net registry
-231 - 8 + 4 = 227; full-rotation budget stays ceil(227/47) = 5 rounds with
-~16 extra slack slots per cycle.  The panels seat in the r15 window as
-never-driver-checked (rotation policy #3).
+Each panel is registered via @query and its two source queries are not;
+the pairs' SURVEY §2 rows live on the panel rows, and the DSUM_EXCEPTIONS
+entries migrated (emb_ivf_append_audit/recall -> emb_ivf_append_panel).
+Net registry 231 - 8 + 4 = 227; tests/test_merged_panels.py pins the
+switch state.
 
 Each panel computes its pair's SHARED pipeline once and emits the union of
 both result shapes (NULL-padded, identically on both engines), so the

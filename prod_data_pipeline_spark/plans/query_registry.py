@@ -21,16 +21,15 @@ from prod_data_pipeline_spark.sources.readers import load_table
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None  # None => driver records rows-only check
-    headline: bool = False  # included in bench.py
     tags: tuple = field(default_factory=tuple)
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None, headline: bool = False, tags: tuple = ()):
+def query(name: str, oracle: str | None = None, tags: tuple = ()):
     def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, headline=headline, tags=tags)
+        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, tags=tags)
         return fn
 
     return deco

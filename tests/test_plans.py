@@ -381,12 +381,12 @@ def test_consolidation_panel_plan_shapes(spark):
 
 
 def test_r17_lineage_cuts_scan_counts(spark):
-    """Pins the round-17 scan-volume fixes: each builder-local lineage cut
-    collapses the query's FINAL plan to at most the quoted parquet-scan
-    count (the cut relation's single materializing scan runs inside the
-    same invocation, before the final action — plans/r17 README).  These
-    are UPPER bounds that must only ever move down; the before counts
-    (plans/r16 census) were 7/3/4/10/9/6/5/3/5/5/5 respectively."""
+    """Pins the scan-volume fixes of commit b0f506a: each builder-local
+    lineage cut collapses the query's FINAL plan to at most the quoted
+    parquet-scan count (the cut relation's single materializing scan runs
+    inside the same invocation, before the final action).  These are UPPER
+    bounds that must only ever move down; the before counts, measured at
+    b0f506a's parent, were 7/3/4/10/9/6/5/3/5/5/5 respectively."""
     bounds = {
         "emb_ivf_recall": 0,
         "events_clicks_before_purchase": 1,  # the clicks side scans once

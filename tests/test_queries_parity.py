@@ -1,7 +1,7 @@
 """Every registered query hash-matches its DuckDB oracle at sf0.001.
 
-This mirrors the driver's t2 correctness gate (run at sf0.01); sf0.001 keeps
-the suite fast while exercising identical semantics.
+This sweep over all registered queries is the engine's correctness gate;
+sf0.001 keeps the suite fast while exercising the same semantics as sf0.01.
 """
 
 from __future__ import annotations
@@ -16,102 +16,6 @@ from tests.parity import check_query
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, name):
     check_query(spark, name, SF_DIR)
-
-
-def test_driver_order_policy():
-    """The driver checks only the first 50 queries() entries: the ordered
-    registry must front-load DRIVER_ORDER (never-checked + changed queries)
-    and still expose every registered query exactly once."""
-    from prod_data_pipeline_spark.plans.queries import (
-        DRIVER_ORDER,
-        ordered_queries,
-    )
-
-    assert len(DRIVER_ORDER) == len(set(DRIVER_ORDER)), "duplicate in DRIVER_ORDER"
-    assert set(DRIVER_ORDER) <= set(QUERIES), "DRIVER_ORDER names a missing query"
-    oq = list(ordered_queries())
-    assert oq[: len(DRIVER_ORDER)] == DRIVER_ORDER
-    assert set(oq) == set(QUERIES)
-    # Rotation policy (verdict r6 directive #1), derived from the recorded
-    # CORRECTNESS_r*.json staleness data instead of a hard-coded roster so
-    # the contract survives round turnover:
-    #   (a) every query with NO driver CORRECTNESS row ever is in-window;
-    #   (b) the pinned bench sentinels are in-window;
-    #   (c) every query stale past the CAPACITY-DERIVED freshness budget
-    #       (ceil(n_queries / non-sentinel slots) rounds — the fastest
-    #       full rotation the 50-slot window physically permits; round-7
-    #       advisor proved the old hard-coded 3-round budget infeasible
-    #       once the registry outgrew 3×47 queries) is in-window — a row
-    #       older than one full rotation means the rotation was skipped.
-    from prod_data_pipeline_spark.plans.queries import DRIVER_SENTINELS
-    from tools.rotation import latest_driver_round, staleness_budget
-
-    window = set(oq[:50])
-    assert len(DRIVER_ORDER) == 50
-    assert set(DRIVER_SENTINELS) <= window, "bench sentinels rotated out"
-    latest = latest_driver_round()
-    max_round = max(latest.values())
-    budget = staleness_budget(len(QUERIES), len(DRIVER_SENTINELS))
-    # due-this-round: the window under test is for round max_round + 1, so
-    # a row from round r hits the budget when r <= max_round + 1 - budget
-    # (the former max_round - budget form computed LAST round's dueness and
-    # mislabeled the currently-expiring cohort as optional fillers)
-    stale = {
-        q
-        for q, r in latest.items()
-        if q in QUERIES and r <= max_round + 1 - budget
-    }
-    # Due rows (stale past budget, or never driver-checked) go in-window;
-    # when the mandatory set outgrows all 50 slots (round-13 case:
-    # 2 never-checked + 3 sentinels + 46 stale = 51 > 50), the overflow
-    # may defer one round — but ONLY under true saturation: no slot may
-    # be held by a non-mandatory filler while a due row waits outside
-    # (stale-first policy, tools/rotation.py docstring).  Deferred
-    # queries still get their oracle hash-checked at sf0.001 by this
-    # suite every round, and front the next round's window.
-    never_checked = {q for q in QUERIES if q not in latest}
-    # A window query whose ledger entry is stamped changed_at == round ==
-    # max_round + 1 is a policy-#4 seating (its plan/oracle moved since
-    # its last driver row and --fingerprint recorded the move at this
-    # window's adoption) — mandatory, not a filler (round-15 case:
-    # q14_promo_revenue's half-up conversion).
-    from tools.rotation import load_fingerprints
-
-    ledger = load_fingerprints()
-
-    def _seated_for_change(q):
-        e = ledger.get(q) or {}
-        return (
-            e.get("changed_at") is not None
-            and e.get("changed_at") == e.get("round") == max_round + 1
-        )
-
-    fillers = [
-        q
-        for q in DRIVER_ORDER
-        if q not in DRIVER_SENTINELS
-        and q not in stale
-        and q in latest
-        and not _seated_for_change(q)
-    ]
-    deferred = (stale | never_checked) - window
-    # Spent-window state (round-13 verdict directive #2): once every
-    # window row has its driver row at max_round, the window demonstrably
-    # RAN and is historical — the newly-due cohort correctly waits outside
-    # it because the successor window cannot be adopted until the next
-    # round's builder starts.  Without this, the lint goes red at EVERY
-    # round boundary by construction (it cost rounds 12 and 13 their
-    # end-of-round green), while detecting no real policy breach: the
-    # stale-first check below only means something for a window that has
-    # yet to run.
-    window_spent = bool(latest) and all(
-        latest.get(q) == max_round for q in DRIVER_ORDER
-    )
-    if deferred and not window_spent:
-        assert not fillers, (
-            f"due rows deferred {sorted(deferred)} while non-mandatory "
-            f"fillers hold window slots: {fillers}"
-        )
 
 
 def test_every_query_has_a_survey_row():
@@ -135,7 +39,10 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     rows = df.collect()
     assert len(rows) > 0
-    assert set(e.oracle_sql()) <= set(e.queries())
+    assert list(e.queries()) == list(QUERIES)
+    assert list(e.oracle_sql()) == [
+        name for name, spec in QUERIES.items() if spec.oracle is not None
+    ]
 
 
 def test_rows_only_queries_document_their_justification():

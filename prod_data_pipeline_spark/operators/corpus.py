@@ -147,7 +147,6 @@ def curate_corpus(
     docs: DataFrame,
     jaccard_threshold: float = 0.5,
     min_quality: float = 0.45,
-    hash_fn: str = "md5",
     id_col: str = "doc_id",
     text_col: str = "text",
     materialize: bool = False,
@@ -180,7 +179,6 @@ def curate_corpus(
         id_col,
         text_col,
         threshold=jaccard_threshold,
-        hash_fn=hash_fn,
         sort=False,
         materialize=materialize,
         collapse_exact=False,

@@ -10,11 +10,12 @@ Scale design (100 TB):
   candidate-join -> verify pipeline: the only shuffle is on band keys, and
   candidate verification touches just the colliding pairs (never the n^2
   cross join);
-- two hash backends: "md5" (bit-identical in any engine -> used by the
-  DuckDB correctness oracle) and "xxhash64" (JVM-native, ~5x cheaper — the
-  production path);
-- SimHash gives a 64-bit near-dup key per document; Hamming-adjacent
-  bucketing is a byte-chunk band join, same shuffle shape as LSH.
+- one hash recipe: every hash that reaches an output (MinHash values,
+  SimHash bits, substring-window keys) is md5-derived, so the DuckDB
+  correctness oracle replays it bit for bit;
+- SimHash gives a 60-bit near-dup key per document (15 hex nibbles of
+  md5 keep it inside a signed bigint); Hamming-adjacent bucketing is a
+  bit-chunk band join, same shuffle shape as LSH.
 """
 
 from __future__ import annotations
@@ -61,12 +62,8 @@ def drop_exact_dups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text
     return df.join(keep, on=id_col, how="left_semi")
 
 
-def _minhash_one(sh: Column, salt: int, hash_fn: str) -> Column:
-    if hash_fn == "md5":
-        return F.array_min(F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{salt}:"), s))))
-    if hash_fn == "xxhash64":
-        return F.array_min(F.transform(sh, lambda s: F.xxhash64(F.lit(salt), s)))
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+def _minhash_one(sh: Column, salt: int) -> Column:
+    return F.array_min(F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{salt}:"), s))))
 
 
 def with_minhash(
@@ -75,7 +72,6 @@ def with_minhash(
     text_col: str = "text",
     num_hashes: int = 8,
     shingle_n: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Append MinHash signature columns mh_0..mh_{k-1} plus the distinct
     shingle set (kept for verification joins)."""
@@ -83,7 +79,7 @@ def with_minhash(
     # hashing cost is per-row-heavy: spread a few-file input across the cluster
     out = ensure_parallelism(df).withColumn("shingle_set", sh)
     for j in range(num_hashes):
-        out = out.withColumn(f"mh_{j}", _minhash_one(F.col("shingle_set"), j, hash_fn))
+        out = out.withColumn(f"mh_{j}", _minhash_one(F.col("shingle_set"), j))
     return out
 
 
@@ -135,13 +131,12 @@ def _near_dup_pairs_lsh(
     band_size: int,
     shingle_n: int,
     threshold: float,
-    hash_fn: str,
 ):
     """The core MinHash-LSH pipeline over an (assumed exact-dup-free)
     corpus: signatures -> band buckets -> candidate self-join -> exact
     Jaccard verify.  Returns (pairs, sig_cache) — the caller owns the
     persisted signature relation's lifecycle."""
-    sig = with_minhash(df, id_col, text_col, num_hashes, shingle_n, hash_fn)
+    sig = with_minhash(df, id_col, text_col, num_hashes, shingle_n)
     sig = sig.select(id_col, "shingle_set", *[f"mh_{j}" for j in range(num_hashes)])
     # The signature relation feeds three plan branches (bands + both sides
     # of the verification join); without a persist each branch re-tokenizes
@@ -248,7 +243,6 @@ def near_dup_pairs(
     band_size: int = 2,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    hash_fn: str = "md5",
     sort: bool = True,
     materialize: bool = False,
     collapse_exact: bool = True,
@@ -285,7 +279,7 @@ def near_dup_pairs(
     """
     if not collapse_exact:
         out, sig = _near_dup_pairs_lsh(
-            df, id_col, text_col, num_hashes, band_size, shingle_n, threshold, hash_fn
+            df, id_col, text_col, num_hashes, band_size, shingle_n, threshold
         )
         if materialize:
             out = out.transform(truncate_lineage, eager=True)
@@ -319,7 +313,7 @@ def near_dup_pairs(
         "left_semi",
     )
     rep_pairs, sig = _near_dup_pairs_lsh(
-        reps, id_col, text_col, num_hashes, band_size, shingle_n, threshold, hash_fn
+        reps, id_col, text_col, num_hashes, band_size, shingle_n, threshold
     )
     # self-similarity of an identical pair: Jaccard of a non-empty set
     # with itself is exactly 1.0 (the verified value the uncollapsed
@@ -371,48 +365,41 @@ def ngram_jaccard_pairs(
     return _maybe_sort(out, sort)
 
 
-def _token_bit(h: Column, b: int, hash_fn: str) -> Column:
-    """Bit ``b`` of a per-token hash.  xxhash64: direct shift on the bigint.
-    md5: the bit lives in hex nibble ``b // 4`` of the lowercase digest —
-    identical nibble arithmetic is expressible in DuckDB (strpos on the hex
-    alphabet), which is what makes the md5 backend oracle-checkable."""
-    if hash_fn == "xxhash64":
-        return F.shiftright(h, b).bitwiseAND(F.lit(1))
-    if hash_fn == "md5":
-        nib = F.conv(F.substring(h, b // 4 + 1, 1), 16, 10).cast("int")
-        return F.shiftright(nib, b % 4).bitwiseAND(F.lit(1))
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+_SIMHASH_BITS = 60
+
+
+def _token_bit(h: Column, b: int) -> Column:
+    """Bit ``b`` of a token's md5 digest: the bit lives in hex nibble
+    ``b // 4`` of the lowercase digest — identical nibble arithmetic is
+    expressible in DuckDB (strpos on the hex alphabet), which is what makes
+    SimHash oracle-checkable."""
+    nib = F.conv(F.substring(h, b // 4 + 1, 1), 16, 10).cast("int")
+    return F.shiftright(nib, b % 4).bitwiseAND(F.lit(1))
 
 
 def with_simhash(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int | None = None,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash per document (64-bit xxhash64 production path; 60-bit md5
-    oracle path — 15 hex nibbles keep the value inside a signed bigint).
+    """SimHash per document: 60 bits from the md5 of each token (15 hex
+    nibbles keep the value inside a signed bigint).
 
-    bit_b(simhash) = sign of sum over tokens of (+1 if bit_b(h(tok)) else -1).
-    Expressed as explode -> per-bit conditional sums -> bit reassembly: one
-    shuffle on id, all arithmetic JVM-side.
+    bit_b(simhash) = sign of sum over tokens of (+1 if bit_b(md5(tok)) else
+    -1).  Expressed as explode -> per-bit conditional sums -> bit
+    reassembly: one shuffle on id, all arithmetic JVM-side.
     """
-    if bits is None:
-        bits = 60 if hash_fn == "md5" else 64
     toked = ensure_parallelism(df).select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
     )
-    h = F.md5(F.col("tok")) if hash_fn == "md5" else F.xxhash64(F.col("tok"))
+    h = F.md5(F.col("tok"))
     aggs = [
-        F.sum(
-            F.when(_token_bit(h, b, hash_fn) == 1, 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(bits)
+        F.sum(F.when(_token_bit(h, b) == 1, 1).otherwise(-1)).alias(f"b{b}")
+        for b in range(_SIMHASH_BITS)
     ]
     per_doc = toked.groupBy(id_col).agg(*aggs)
     sim = None
-    for b in range(bits):
+    for b in range(_SIMHASH_BITS):
         bit = F.shiftleft(F.when(F.col(f"b{b}") > 0, F.lit(1)).otherwise(F.lit(0)).cast("long"), b)
         sim = bit if sim is None else sim.bitwiseXOR(bit)
     return per_doc.select(F.col(id_col), sim.alias("simhash"))
@@ -423,8 +410,6 @@ def simhash_bucket_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    bits: int | None = None,
-    hash_fn: str = "xxhash64",
     sort: bool = True,
     materialize: bool = False,
 ) -> DataFrame:
@@ -434,11 +419,9 @@ def simhash_bucket_pairs(
     Cache lifecycle matches near_dup_pairs: materialize=False (default)
     keeps one pipelined job and the caller owns the simhash cache;
     materialize=True checkpoints the pair set and releases it."""
-    if bits is None:
-        bits = 60 if hash_fn == "md5" else 64
-    chunk_bits = bits // 4
+    chunk_bits = _SIMHASH_BITS // 4
     mask = (1 << chunk_bits) - 1
-    sim = with_simhash(df, id_col, text_col, bits, hash_fn).persist(
+    sim = with_simhash(df, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     chunks = F.array(
@@ -488,7 +471,6 @@ def substring_dup_spans(
     window: int = 12,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "md5",
     min_count: int = 2,
     materialize: bool = True,
 ) -> DataFrame:
@@ -513,27 +495,19 @@ def substring_dup_spans(
     level down.  No n² anywhere; the span merge shuffles only the (small)
     duplicated-window subset keyed by doc.
 
-    Backends: "md5" (bit-identical in any engine -> DuckDB oracle replays
-    the whole pipeline); "xxhash64" (JVM-native, production).  Returns
-    (id, span_start, span_end, n_windows) with 1-based inclusive token
-    positions.
+    Window keys are md5 digests, bit-identical in any engine, so the DuckDB
+    oracle replays the whole pipeline.  Returns (id, span_start, span_end,
+    n_windows) with 1-based inclusive token positions.
     """
     toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
     toks = ensure_parallelism(toks).filter(F.size("toks") >= window)
     sep = "\x1f"  # unit separator: token-boundary-safe concat key
 
-    def _win_hash(s: Column) -> Column:
-        if hash_fn == "md5":
-            return F.md5(s)
-        if hash_fn == "xxhash64":
-            return F.xxhash64(s).cast("string")
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
     win_arr = F.transform(
         F.sequence(F.lit(1), F.size("toks") - window + 1),
         lambda p: F.struct(
             p.alias("p"),
-            _win_hash(F.concat_ws(sep, F.slice(F.col("toks"), p, window))).alias("h"),
+            F.md5(F.concat_ws(sep, F.slice(F.col("toks"), p, window))).alias("h"),
         ),
     )
     w = (

@@ -15,7 +15,7 @@ schemes, both shuffle-light:
   local to a group (cross-group packing would serialize the corpus — the
   wasted tail per group is bounded by one bin).
 
-Layout groups: rows are grouped by a deterministic hash of the id
+Layout groups: rows are grouped by a deterministic md5 bucket of the id
 (`n_groups` buckets, one task each), so the packing parallelism is chosen
 explicitly and retries see identical inputs — the same reasoning as
 operators/skew.py's deterministic salting.
@@ -34,14 +34,10 @@ from pyspark.sql.window import Window
 from prod_data_pipeline_spark.operators.sampling import hash_bucket
 
 
-def _layout_group(id_col: str, n_groups: int, hash_fn: str) -> Column:
-    """Deterministic layout-group assignment.  xxhash64 is the production
-    default; md5 replays bit-for-bit in the DuckDB oracle."""
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_groups))
-    if hash_fn == "md5":
-        return F.pmod(hash_bucket(F.col(id_col), "pack"), F.lit(n_groups))
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+def _layout_group(id_col: str, n_groups: int) -> Column:
+    """Deterministic layout-group assignment from an md5-derived bucket of
+    the id, which the DuckDB oracle replays bit-for-bit."""
+    return F.pmod(hash_bucket(F.col(id_col), "pack"), F.lit(n_groups))
 
 
 def chunk_spans(
@@ -50,7 +46,6 @@ def chunk_spans(
     id_col: str = "doc_id",
     token_col: str = "n_tokens",
     n_groups: int = 32,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Concat-then-chunk layout: (doc, first_chunk, last_chunk, offset).
 
@@ -61,7 +56,7 @@ def chunk_spans(
     Chunk ids are globally unique: (group, local_chunk) packed as
     group * 2^40 + local.
     """
-    g = _layout_group(id_col, n_groups, hash_fn).alias("grp")
+    g = _layout_group(id_col, n_groups).alias("grp")
     base = df.select(F.col(id_col), F.col(token_col).cast("long").alias("toks"), g)
     w = Window.partitionBy("grp").orderBy(id_col)
     laid = base.select(
@@ -100,7 +95,6 @@ def pack_greedy(
     id_col: str = "doc_id",
     token_col: str = "n_tokens",
     n_groups: int = 32,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """No-split first-fit-decreasing packing within deterministic hash
     groups.  Returns (bin_id, doc_id, n_tokens, bin_fill) where bin_fill
@@ -143,7 +137,7 @@ def pack_greedy(
     base = df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(token_col).cast("long").alias("toks"),
-        _layout_group(id_col, n_groups, hash_fn).alias("grp"),
+        _layout_group(id_col, n_groups).alias("grp"),
     ).filter(F.col("toks") > 0)
     return base.groupBy("grp").applyInPandas(pack, schema=PACKED_SCHEMA)
 

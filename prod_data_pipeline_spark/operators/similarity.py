@@ -537,15 +537,6 @@ def cosine_near_dup_pairs(
     return out.orderBy("id_a", "id_b") if sort else out
 
 
-def _srp_planes(dim: int, nbits: int, seed: int = 42):
-    """Deterministic random hyperplanes for sign-LSH (seeded, inlined as
-    literals so the plan is reproducible — no Date.now()/rand() in the DAG)."""
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((nbits, dim))
-
-
 def _md5_planes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
     """Hyperplanes any engine can regenerate: component (b, i) is
     ``2*(md5("{seed}:{b}:{i}")[:13 hex] / 2^52) - 1`` — uniform in [-1, 1).
@@ -555,7 +546,7 @@ def _md5_planes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
     multiply/subtract are single IEEE ops — a SQL engine computing the same
     recipe (DuckDB: ('0x' || substr(md5(s), 1, 13))::BIGINT) produces
     bit-identical doubles.  Uniform-cube directions are not perfectly
-    spherical (the Gaussian backend is), which shifts per-bit collision
+    spherical (Gaussian ones would be), which shifts per-bit collision
     probability slightly — irrelevant for a candidate generator whose
     output is exact-cosine verified."""
     import hashlib
@@ -580,75 +571,49 @@ def with_srp_signature(
     nbits: int = 32,
     seed: int = 42,
     emb_col: str = "embedding",
-    backend: str = "mt",
 ) -> DataFrame:
     """Append a signed-random-projection (SimHash-for-cosine) signature:
-    bit b = sign(e . r_b) for seeded Gaussian hyperplanes r_b.  Collision
-    probability per bit is 1 - angle/pi, so banding the bits gives an LSH
-    family for cosine similarity.
+    bit b = sign(e . r_b) for the md5-derived hyperplanes r_b of
+    _md5_planes.  Collision probability per bit is 1 - angle/pi, so
+    banding the bits gives an LSH family for cosine similarity.
 
-    Computed as an Arrow-batched pandas UDF: one numpy (batch x dim) @
-    (dim x nbits) matmul per batch.  This is the documented exception to
-    "stay JVM-side" — Spark's higher-order array functions run interpreted
+    Every float op is replayable bit-for-bit in another engine, which makes
+    the downstream pair query exact-hash-oracle-checked (the same recipe
+    that oracled pagerank_quantized).  The sign test ``dot > 0`` branches
+    on identical doubles, so the signature — and therefore the candidate
+    set — is engine-independent.  The hyperplanes are baked into the
+    closure: recomputed lineage is identical, so task retries are safe.
+
+    Computed as an Arrow-batched pandas UDF, the documented exception to
+    "stay JVM-side": Spark's higher-order array functions run interpreted
     (no codegen), so an expression form pays nbits x dim interpreted ops
-    per row (~2x slower measured even at 32 bits, and it grows with
-    nbits), while the vectorized matmul is effectively free per row.  The
-    hyperplanes are seeded + baked into the closure: recomputed lineage is
-    identical, so task retries are safe.
-
-    backend="md5" swaps in md5-derived hyperplanes (_md5_planes) and an
-    in-order expression fold for each dot product — ~2x slower, but every
-    float op is replayable bit-for-bit in another engine, which turns the
-    downstream pair query from rows-only into exact-hash-oracle-checked
-    (the same recipe that oracled pagerank_quantized).  The sign test
-    ``dot > 0`` branches on identical doubles, so the signature — and
-    therefore the candidate set — is engine-independent.
+    per row (2.1 s at the inflated bench vs ~0.1 s vectorized).
     """
-    if backend == "md5":
-        # Arrow-batched but BIT-IDENTICAL to the expression fold (round-9
-        # perf wave: the interpreted per-row fold was 2.1 s at the
-        # inflated bench vs ~0.1 s vectorized): the accumulator loops the
-        # dims SEQUENTIALLY — acc = (((0 + p_1) + p_2) + ...) element-wise
-        # across the batch — which is exactly the in-order IEEE fold
-        # functions.vector.dot / DuckDB list_sum evaluate, so signatures
-        # (and therefore candidates and the oracle hash) are unchanged.
-        # numpy's own dot/sum would pairwise-split the adds and break
-        # bit-parity; the explicit loop is the point.
-        md5_rows = _md5_planes(dim, nbits, seed)
-
-        @F.pandas_udf("long")
-        def srp_md5_sig_udf(emb: pd.Series) -> pd.Series:
-            # invalid rows arrive zeroed (sig 0 — the expression fold's
-            # degraded value); verify later excludes them via NULL cosine
-            x, _ = _emb_matrix(emb, dim)
-            if x.size == 0:
-                return pd.Series(np.empty(0, dtype="int64"))
-            sig = np.zeros(len(x), dtype="int64")
-            for b, row in enumerate(md5_rows):
-                acc = np.zeros(len(x), dtype="float64")
-                for i in range(dim):
-                    acc = acc + x[:, i] * row[i]
-                sig |= (acc > 0).astype("int64") << b
-            return pd.Series(sig)
-
-        v = _norm_emb(df, emb_col)
-        return v.withColumn("srp_sig", srp_md5_sig_udf(F.col("_emb")))
-    if backend != "mt":
-        raise ValueError(f"unknown backend {backend!r}")
-    planes_t = _srp_planes(dim, nbits, seed).T.copy()  # (dim, nbits)
-    weights = (1 << np.arange(nbits, dtype=np.uint64)).astype("float64")
+    # BIT-IDENTICAL to the expression fold: the accumulator loops the dims
+    # SEQUENTIALLY — acc = (((0 + p_1) + p_2) + ...) element-wise across
+    # the batch — which is exactly the in-order IEEE fold
+    # functions.vector.dot / DuckDB list_sum evaluate.  numpy's own dot/sum
+    # would pairwise-split the adds and break bit-parity; the explicit loop
+    # is the point.
+    md5_rows = _md5_planes(dim, nbits, seed)
 
     @F.pandas_udf("long")
-    def srp_sig_udf(emb: pd.Series) -> pd.Series:
-        # invalid rows arrive zeroed → sig 0; verify excludes them later
-        x, _ = _emb_matrix(emb, dim)  # (batch, dim)
+    def srp_md5_sig_udf(emb: pd.Series) -> pd.Series:
+        # invalid rows arrive zeroed (sig 0 — the expression fold's
+        # degraded value); verify later excludes them via NULL cosine
+        x, _ = _emb_matrix(emb, dim)
         if x.size == 0:
             return pd.Series(np.empty(0, dtype="int64"))
-        bits = (x @ planes_t) > 0  # (batch, nbits)
-        return pd.Series((bits.astype("float64") @ weights).astype("int64"))
+        sig = np.zeros(len(x), dtype="int64")
+        for b, row in enumerate(md5_rows):
+            acc = np.zeros(len(x), dtype="float64")
+            for i in range(dim):
+                acc = acc + x[:, i] * row[i]
+            sig |= (acc > 0).astype("int64") << b
+        return pd.Series(sig)
 
     v = _norm_emb(df, emb_col)
-    return v.withColumn("srp_sig", srp_sig_udf(F.col("_emb")))
+    return v.withColumn("srp_sig", srp_md5_sig_udf(F.col("_emb")))
 
 
 def _srp_pairs_lsh(
@@ -661,12 +626,11 @@ def _srp_pairs_lsh(
     id_col: str,
     emb_col: str,
     round_sim: int,
-    backend: str,
 ):
     """Core sign-LSH pipeline over an (assumed exact-dup-free) corpus:
     SRP signatures -> band chunks -> candidate self-join -> exact cosine
     verify.  Returns (pairs, sig_cache) — caller owns the cache."""
-    sig = with_srp_signature(df, dim, nbits, seed, emb_col, backend)
+    sig = with_srp_signature(df, dim, nbits, seed, emb_col)
     # referenced by both band sides + both verify sides: persist or the
     # 1024-literal projection re-evaluates four times
     sig = sig.select(F.col(id_col), "_emb", "srp_sig").persist(StorageLevel.MEMORY_AND_DISK)
@@ -720,7 +684,6 @@ def srp_near_dup_pairs(
     emb_col: str = "embedding",
     round_sim: int = 4,
     sort: bool = True,
-    backend: str = "mt",
     materialize: bool = True,
     collapse_exact: bool = True,
 ) -> DataFrame:
@@ -755,7 +718,7 @@ def srp_near_dup_pairs(
     if not collapse_exact:
         out, sig = _srp_pairs_lsh(
             df, dim, threshold, nbits, band_bits, seed, id_col, emb_col,
-            round_sim, backend,
+            round_sim,
         )
         if materialize:
             # sig feeds four plan branches; materialize the (small) verified
@@ -802,7 +765,7 @@ def srp_near_dup_pairs(
     )
     rep_pairs, sig = _srp_pairs_lsh(
         reps, dim, threshold, nbits, band_bits, seed, id_col, emb_col,
-        round_sim, backend,
+        round_sim,
     )
     self_sim = (
         sig.select(
@@ -1405,7 +1368,7 @@ def pq_encode(
     the compression-quality metric PQ deployments monitor.
 
     Computed as an Arrow-batched pandas UDF with ORDER-PRESERVING
-    accumulation (the SRP md5-backend recipe: the dim loop runs
+    accumulation (the SRP signature recipe: the dim loop runs
     sequentially, so every float op replays the expression/SQL fold
     bit-for-bit; ascending strict-< argmin reproduces the (d, idx)
     tie-break).  The unrolled expression form of the same math ran ~10 s

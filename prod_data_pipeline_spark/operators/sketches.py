@@ -25,11 +25,12 @@ Guarantee: estimate >= true count always (cells only over-count via
 collisions); with width w and depth d, the overestimate exceeds
 2N/w with probability <= 2^-d (N = total additions).
 
-Hash backends mirror operators/dedup.py: "md5" derives the bucket from
+Hashing follows operators/dedup.py's one recipe: the bucket comes from
 the first 12 hex digits of md5 (48 bits, exact in int64, replayable in
-any engine — the DuckDB oracle recomputes every cell bit-for-bit) and
-"xxhash64" is the cheaper JVM production path.  Both are deterministic
-per (salt, row) — safe under task retry/speculation.
+any engine — the DuckDB oracle recomputes every cell bit-for-bit).  It is
+deterministic per (salt, row) — safe under task retry/speculation — and
+a sketch built anywhere is read back by `cms_estimate` with the same
+(depth, width, salt).
 """
 
 from __future__ import annotations
@@ -40,16 +41,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _bucket(key: F.Column, row: int, width: int, hash_fn: str, salt: str) -> F.Column:
+def _bucket(key: F.Column, row: int, width: int, salt: str) -> F.Column:
     """Bucket of `key` in hash row `row`: non-negative int64 mod width."""
-    if hash_fn == "md5":
-        h = F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{salt}{row}:"), key)), 1, 12), 16, 10
-        ).cast("long")
-    elif hash_fn == "xxhash64":
-        h = F.xxhash64(F.concat(F.lit(f"{salt}{row}:"), key))
-    else:  # pragma: no cover - guarded by callers
-        raise ValueError(f"hash_fn must be md5|xxhash64, got {hash_fn!r}")
+    h = F.conv(
+        F.substring(F.md5(F.concat(F.lit(f"{salt}{row}:"), key)), 1, 12), 16, 10
+    ).cast("long")
     return F.pmod(h, F.lit(width)).cast("int")
 
 
@@ -59,7 +55,6 @@ def cms_build(
     weight_col: str | None = None,
     depth: int = 4,
     width: int = 512,
-    hash_fn: str = "md5",
     salt: str = "cms",
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -81,7 +76,7 @@ def cms_build(
         *[
             F.struct(
                 F.lit(r).alias("row"),
-                _bucket(key, r, width, hash_fn, salt).alias("bucket"),
+                _bucket(key, r, width, salt).alias("bucket"),
             )
             for r in range(depth)
         ]
@@ -106,7 +101,6 @@ def cms_estimate(
     key_col: str,
     depth: int = 4,
     width: int = 512,
-    hash_fn: str = "md5",
     salt: str = "cms",
 ) -> DataFrame:
     """Point-estimate each key in `keys`: min over its depth cells.
@@ -126,7 +120,7 @@ def cms_estimate(
                 *[
                     F.struct(
                         F.lit(r).alias("row"),
-                        _bucket(key, r, width, hash_fn, salt).alias("bucket"),
+                        _bucket(key, r, width, salt).alias("bucket"),
                     )
                     for r in range(depth)
                 ]
@@ -211,7 +205,7 @@ def cms_inner_product(sketch_a: DataFrame, sketch_b: DataFrame) -> DataFrame:
     relations, so the estimate never touches the underlying corpora —
     and because CMS cells are counters, both sides inherit cms_build's
     incremental/mergeable story (sketch daily partitions, merge, then
-    estimate).  Both sketches MUST share (depth, width, hash_fn, salt).
+    estimate).  Both sketches MUST share (depth, width, salt).
 
     The bucket join is INNER: a (row, bucket) cell missing from either
     side is zero-count and contributes 0 to the dot.  A hash row with NO

@@ -308,17 +308,15 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 3,
     window: int = 4,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 scheme):
     hash every k-token shingle, keep the min hash of each sliding window,
-    dedupe.  Sub-linear fingerprint count per doc; xxhash64 keeps hashing
-    JVM-side.  Used for plagiarism-style containment detection at scale.
+    dedupe.  Sub-linear fingerprint count per doc.  Used for
+    plagiarism-style containment detection at scale.
 
-    hash_fn="md5" swaps the shingle hash for the lowercase hex digest and
-    takes lexicographic window minima — bit-identical in DuckDB, so the
-    correctness oracle can replay the whole scheme (fingerprints become
-    array<string> instead of array<bigint>).
+    Each shingle hashes to the lowercase hex md5 digest and window minima
+    are lexicographic — bit-identical in DuckDB, so the correctness oracle
+    replays the whole scheme.  Fingerprints are array<string>.
 
     The sliding-window min runs as posexplode + a rows-frame window MIN —
     codegen'd, O(n·w).  The tempting pure-expression form
@@ -330,12 +328,7 @@ def winnow_fingerprints(
 
     df = ensure_parallelism(df)
     toks = tokens(F.col(text_col))
-    if hash_fn == "md5":
-        hashes = F.transform(shingles(toks, k), lambda s: F.md5(s))
-    elif hash_fn == "xxhash64":
-        hashes = F.transform(shingles(toks, k), lambda s: F.xxhash64(s))
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    hashes = F.transform(shingles(toks, k), lambda s: F.md5(s))
     e = df.select(F.col(id_col), F.posexplode(hashes).alias("_pos", "_h"))
     wmin = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(0, window - 1)
     wn = Window.partitionBy(id_col)
@@ -357,9 +350,8 @@ def winnow_fingerprints(
         .join(fps, id_col, "left")
         .select(
             F.col(id_col),
-            F.coalesce(
-                "fingerprints",
-                F.array().cast("array<string>" if hash_fn == "md5" else "array<bigint>"),
-            ).alias("fingerprints"),
+            F.coalesce("fingerprints", F.array().cast("array<string>")).alias(
+                "fingerprints"
+            ),
         )
     )

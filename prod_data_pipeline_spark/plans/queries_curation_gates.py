@@ -1390,7 +1390,7 @@ def docs_cluster_canonical_by_quality(spark, sf_dir):
     from prod_data_pipeline_spark.operators.text import quality_score
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, threshold=0.5, hash_fn="md5")
+    pairs = near_dup_pairs(docs, threshold=0.5)
     comp = dup_clusters(pairs)
     toks = tokens(F.col("text"))
     q = docs.select(
@@ -1786,7 +1786,7 @@ def docs_split_leakage_audit(spark, sf_dir):
     from prod_data_pipeline_spark.operators.dedup import near_dup_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, threshold=0.5, hash_fn="md5", sort=False)
+    pairs = near_dup_pairs(docs, threshold=0.5, sort=False)
 
     def split_of(c):
         b = F.substring(F.md5(c.cast("string")), 1, 2)
@@ -2427,7 +2427,7 @@ def docs_near_dup_threshold_sweep(spark, sf_dir):
     from prod_data_pipeline_spark.operators.dedup import near_dup_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, threshold=0.3, hash_fn="md5", sort=False)
+    pairs = near_dup_pairs(docs, threshold=0.3, sort=False)
     num = lambda t: F.sum(
         F.when(
             F.col("jaccard") >= t,

@@ -1075,12 +1075,12 @@ def dedup_docs_exact(spark, sf_dir):
     tags=("dedup", "minhash"),
 )
 def docs_minhash_signatures(spark, sf_dir):
-    """MinHash signatures (8 hashes, word-3-gram shingles, md5 backend) —
-    bit-identical to the SQL oracle; production swaps hash_fn='xxhash64'."""
+    """MinHash signatures (8 hashes, word-3-gram shingles, md5 per
+    shingle) — bit-identical to the SQL oracle."""
     from prod_data_pipeline_spark.operators.dedup import with_minhash
 
     docs = _t(spark, sf_dir, "documents")
-    sig = with_minhash(docs, num_hashes=8, hash_fn="md5")
+    sig = with_minhash(docs, num_hashes=8)
     return sig.select("doc_id", *[f"mh_{j}" for j in range(8)]).orderBy("doc_id")
 
 
@@ -1138,7 +1138,7 @@ def docs_near_dup_pairs(spark, sf_dir):
     from prod_data_pipeline_spark.operators.dedup import near_dup_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return near_dup_pairs(docs, threshold=0.5, hash_fn="md5")
+    return near_dup_pairs(docs, threshold=0.5)
 
 
 @query(
@@ -1252,7 +1252,7 @@ def corpus_curation_stats(spark, sf_dir):
     from prod_data_pipeline_spark.operators.corpus import curate_corpus
 
     docs = _t(spark, sf_dir, "documents")
-    kept = curate_corpus(docs, jaccard_threshold=0.5, min_quality=0.45, hash_fn="md5")
+    kept = curate_corpus(docs, jaccard_threshold=0.5, min_quality=0.45)
     return (
         kept.groupBy("lang")
         .agg(
@@ -1326,12 +1326,12 @@ def corpus_dup_clusters(spark, sf_dir):
     from prod_data_pipeline_spark.operators.dedup import near_dup_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, threshold=0.5, hash_fn="md5")
+    pairs = near_dup_pairs(docs, threshold=0.5)
     return dup_clusters(pairs).orderBy("doc_id")
 
 
 def _simhash_core_sql(bits: int = 60, max_hamming: int = 3, p: str = "") -> str:
-    """CTE chain (no WITH, no final SELECT) replaying the md5-backend
+    """CTE chain (no WITH, no final SELECT) replaying the md5
     SimHash pipeline: per-token bit from hex-nibble arithmetic,
     sign-of-sum per bit, 4-chunk pigeonhole bucketing, exact Hamming
     verify.  Mirrors operators/dedup.py bit for bit.  ``p`` prefixes
@@ -1381,13 +1381,12 @@ def _simhash_sql(bits: int = 60, max_hamming: int = 3) -> str:
 @query("docs_simhash_pairs", oracle=_simhash_sql(), tags=("dedup", "simhash"))
 def docs_simhash_pairs(spark, sf_dir):
     """SimHash near-dup candidates (4-chunk pigeonhole, Hamming <= 3).
-    md5 backend (60-bit) so the DuckDB oracle replays the scheme exactly;
-    production swaps hash_fn='xxhash64' (64-bit, JVM-native).  Planted
-    near-dup unit tests cover the xxhash64 path (tests/test_dedup_text.py)."""
+    60-bit md5 SimHash, so the DuckDB oracle replays the scheme exactly;
+    planted near-dup unit tests cover recall (tests/test_dedup_text.py)."""
     from prod_data_pipeline_spark.operators.dedup import simhash_bucket_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return simhash_bucket_pairs(docs, hash_fn="md5")
+    return simhash_bucket_pairs(docs)
 
 
 @query(
@@ -1460,9 +1459,7 @@ def docs_simhash_recall_vs_exact(spark, sf_dir):
     # materialize=True in both operators: each relation feeds two
     # consumers (its own count + the overlap join) off stored blocks
     exact = jaccard_prefix_pairs(docs, threshold_pct=90).select("id_a", "id_b")
-    sh = simhash_bucket_pairs(
-        docs, hash_fn="md5", sort=False, materialize=True
-    ).select("id_a", "id_b")
+    sh = simhash_bucket_pairs(docs, sort=False, materialize=True).select("id_a", "id_b")
     ov = sh.join(exact, ["id_a", "id_b"], "left_semi")
     n_e = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     n_s = sh.agg(F.count(F.lit(1)).alias("n_simhash"))
@@ -1486,7 +1483,7 @@ def docs_simhash_recall_vs_exact(spark, sf_dir):
 
 
 def _winnow_sql(k: int = 3, window: int = 4) -> str:
-    """DuckDB replay of md5-backend winnowing: k-gram shingles (ordered,
+    """DuckDB replay of md5 winnowing: k-gram shingles (ordered,
     with duplicates), md5 per shingle, lexicographic min of each w-window
     (a short doc keeps the min of everything it has), distinct + explode."""
     return f"""
@@ -1517,14 +1514,14 @@ def _winnow_sql(k: int = 3, window: int = 4) -> str:
 @query("docs_winnow_fingerprints", oracle=_winnow_sql(), tags=("text", "fingerprint"))
 def docs_winnow_fingerprints(spark, sf_dir):
     """Winnowing fingerprints, exploded to (doc_id, fingerprint) rows.
-    md5 backend (lexicographic window min) so the DuckDB oracle replays the
-    whole scheme; production swaps hash_fn='xxhash64' — containment unit
-    tests cover that path."""
+    md5 shingle hashes and lexicographic window minima, so the DuckDB oracle
+    replays the whole scheme; containment is unit-tested
+    (tests/test_dedup_text.py)."""
     from prod_data_pipeline_spark.operators.text import winnow_fingerprints
 
     docs = _t(spark, sf_dir, "documents")
     return (
-        winnow_fingerprints(docs, hash_fn="md5")
+        winnow_fingerprints(docs)
         .select("doc_id", F.explode("fingerprints").alias("fingerprint"))
         .orderBy("doc_id", "fingerprint")
     )
@@ -2217,9 +2214,7 @@ def docs_chunk_spans(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").withColumn(
         "n_tokens", F.size(tokens(F.col("text")))
     )
-    return chunk_spans(
-        docs, budget=512, n_groups=8, hash_fn="md5"
-    ).orderBy("doc_id")
+    return chunk_spans(docs, budget=512, n_groups=8).orderBy("doc_id")
 
 
 @query(
@@ -2279,7 +2274,7 @@ def docs_packed_bins(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").withColumn(
         "n_tokens", F.size(tokens(F.col("text")))
     )
-    return pack_greedy(docs, budget=512, n_groups=8, hash_fn="md5").orderBy("doc_id")
+    return pack_greedy(docs, budget=512, n_groups=8).orderBy("doc_id")
 
 
 _PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -3133,23 +3128,20 @@ def emb_srp_near_dup_pairs(spark, sf_dir):
     """Sign-LSH (random-hyperplane) bucketed near-dup candidates + exact
     cosine verify — the 100 TB path (no blocking attribute needed).
 
-    Runs the md5-hyperplane backend: each plane component is derived from
+    Uses md5-derived hyperplanes: each plane component is derived from
     an md5 digest (13 hex digits / 2^52, exact in double) and every dot
     product is an in-order fold, so DuckDB regenerates the planes, the
     signatures, the candidate set, and the verified similarities
     bit-for-bit — the determinism recipe that oracled pagerank_quantized,
-    applied to LSH.  The numpy-Gaussian matmul backend (backend="mt",
-    operator default) remains the production path; its planted-dup recall
-    is unit-tested (tests/test_similarity.py)."""
+    applied to LSH.  Planted-dup recall is unit-tested
+    (tests/test_similarity.py)."""
     from prod_data_pipeline_spark.operators.similarity import srp_near_dup_pairs
 
     emb = _t(spark, sf_dir, "embeddings")
     # materialize=False: one-shot query — the lazy pre-sort lineage cut
     # (blocks owned by the returned plan, freed by ContextCleaner) beats
     # the eager checkpoint+unpersist by ~0.6 s at the inflated bench
-    return srp_near_dup_pairs(
-        emb, dim=64, threshold=0.3, backend="md5", materialize=False
-    )
+    return srp_near_dup_pairs(emb, dim=64, threshold=0.3, materialize=False)
 
 
 @query(

@@ -2781,7 +2781,7 @@ def docs_leakage_safe_split(spark, sf_dir):
     from prod_data_pipeline_spark.functions.text import tokens
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, threshold=0.5, hash_fn="md5", sort=False, materialize=True)
+    pairs = near_dup_pairs(docs, threshold=0.5, sort=False, materialize=True)
     comp = dup_clusters(pairs)
     base = docs.select("doc_id", F.size(tokens(F.col("text"))).alias("n_tokens"))
     assigned = (

@@ -1519,7 +1519,7 @@ def docs_dup_pagerank(spark, sf_dir):
     from prod_data_pipeline_spark.operators.graph import pagerank_quantized
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, hash_fn="md5", sort=False).select("id_a", "id_b")
+    pairs = near_dup_pairs(docs, sort=False).select("id_a", "id_b")
     ranks = pagerank_quantized(pairs, n_iters=6, checkpoint_every=3)
     return (
         ranks.select(
@@ -2380,7 +2380,7 @@ def docs_dup_triangles(spark, sf_dir):
     from prod_data_pipeline_spark.operators.graph import triangle_stats
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, hash_fn="md5", sort=False)
+    pairs = near_dup_pairs(docs, sort=False)
     return triangle_stats(pairs)
 
 
@@ -2592,14 +2592,14 @@ def docs_substring_dup_spans(spark, sf_dir):
     boilerplate/templates that whole-document dedup cannot see.  Built on
     operators.dedup.substring_dup_spans (sliding window hashes -> repeat
     groupBy -> per-doc interval union); the oracle replays the entire
-    pipeline in SQL with the md5 backend, so every span boundary is
+    pipeline in SQL with the same md5 window keys, so every span boundary is
     hash-checked.  Shuffle ∝ token windows (corpus token count), never
     doc pairs; all-integer span arithmetic — no float decides a span."""
     from prod_data_pipeline_spark.functions.text import tokens as _tokens
     from prod_data_pipeline_spark.operators.dedup import substring_dup_spans
 
     docs = _t(spark, sf_dir, "documents")
-    spans = substring_dup_spans(docs, window=12, hash_fn="md5")
+    spans = substring_dup_spans(docs, window=12)
     sizes = docs.select(
         "doc_id", F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens")
     )
@@ -3102,7 +3102,7 @@ def docs_lsh_recall_vs_exact(spark, sf_dir, sample_pct: int = 100):
     exact = jaccard_prefix_pairs(docs, threshold_pct=50, shingle_n=3).select(
         "id_a", "id_b"
     )
-    sig = with_minhash(docs, num_hashes=8, shingle_n=3, hash_fn="md5").select(
+    sig = with_minhash(docs, num_hashes=8, shingle_n=3).select(
         "doc_id", "shingle_set", *[f"mh_{j}" for j in range(8)]
     )
     from pyspark.storagelevel import StorageLevel

@@ -1210,7 +1210,7 @@ def docs_taint_blast_radius(spark, sf_dir):
     from prod_data_pipeline_spark.operators.graph import min_hop_distance
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, hash_fn="md5", sort=False)
+    pairs = near_dup_pairs(docs, sort=False)
     seeds = docs.filter(F.col("doc_id") % 97 == 0).select("doc_id")
     dist = min_hop_distance(pairs, seeds, max_hops=4)
     return (
@@ -2030,7 +2030,7 @@ def docs_local_clustering(spark, sf_dir):
     from prod_data_pipeline_spark.operators.graph import local_clustering
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, hash_fn="md5", sort=False)
+    pairs = near_dup_pairs(docs, sort=False)
     return local_clustering(pairs).orderBy("v")
 
 
@@ -2103,7 +2103,6 @@ def events_cms_heavy_hitters(spark, sf_dir):
         "user_id",
         depth=4,
         width=512,
-        hash_fn="md5",
         group_cols=("day",),
     )
     merged = cms_merge(daily)
@@ -2184,7 +2183,7 @@ def events_selfjoin_size_cms(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    sketch = cms_build(ev, "user_id", depth=4, width=512, hash_fn="md5")
+    sketch = cms_build(ev, "user_id", depth=4, width=512)
     est = cms_inner_product(sketch, sketch).agg(
         F.coalesce(F.min("dot"), F.lit(0)).cast("long").alias("cms_est")
     )
@@ -2268,8 +2267,8 @@ def lineitem_orders_join_size_cms(spark, sf_dir):
     od = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    sa = cms_build(li, "l_orderkey", depth=4, width=512, hash_fn="md5")
-    sb = cms_build(od, "o_orderkey", depth=4, width=512, hash_fn="md5")
+    sa = cms_build(li, "l_orderkey", depth=4, width=512)
+    sb = cms_build(od, "o_orderkey", depth=4, width=512)
     est = cms_inner_product(sa, sb).agg(
         F.coalesce(F.min("dot"), F.lit(0)).cast("long").alias("cms_est")
     )
@@ -2386,7 +2385,7 @@ def docs_kcore_summary(spark, sf_dir):
     from prod_data_pipeline_spark.operators.graph import kcore
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, hash_fn="md5", sort=False)
+    pairs = near_dup_pairs(docs, sort=False)
     return kcore(pairs, k=2, max_rounds=6).orderBy("node")
 
 
@@ -2842,7 +2841,7 @@ def docs_cdc_chunk_dedup(spark, sf_dir):
     (same doc or across docs/sources) is duplicated, and the per-source
     duplicated-token fraction is the storage/training-redundancy the
     corpus carries.  Boundary decisions are pure token-hash residues
-    (md5 backend — the oracle replays every boundary bit-for-bit);
+    (md5 — the oracle replays every boundary bit-for-bit);
     chunking is one per-doc window pass, dedup one groupBy on chunk
     hash — shuffle proportional to chunks, never doc pairs."""
     docs = _t(spark, sf_dir, "documents")
@@ -3040,7 +3039,7 @@ def docs_dup_threshold_sweep(spark, sf_dir):
     from prod_data_pipeline_spark.operators.dedup import near_dup_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, hash_fn="md5", sort=False, materialize=True)
+    pairs = near_dup_pairs(docs, sort=False, materialize=True)
     thetas = spark.createDataFrame([(t,) for t in (0.5, 0.6, 0.7, 0.8)], ["theta"])
     ends = pairs.select(F.col("id_a").alias("v"), "jaccard").unionByName(
         pairs.select(F.col("id_b").alias("v"), "jaccard")
@@ -3284,7 +3283,7 @@ def docs_lpa_communities(spark, sf_dir):
     from prod_data_pipeline_spark.operators.graph import label_propagation
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = near_dup_pairs(docs, hash_fn="md5", sort=False)
+    pairs = near_dup_pairs(docs, sort=False)
     labels = label_propagation(pairs, n_rounds=4)
     return (
         labels.groupBy(F.col("label").alias("community"))

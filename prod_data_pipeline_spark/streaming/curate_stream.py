@@ -476,7 +476,6 @@ def streaming_cms_sink(
     checkpoint_dir: str,
     depth: int = 4,
     width: int = 512,
-    hash_fn: str = "xxhash64",
 ):
     """Streaming frequency sketch: maintain a mergeable count-min sketch
     of `key_col` occurrences from a stream via foreachBatch +
@@ -492,12 +491,13 @@ def streaming_cms_sink(
     delta rather than double-counting.  `read_cms` unions the deltas and
     folds them with cms_merge, which an engine can do lazily at query
     time or compact periodically — sketch state grows as
-    batches x depth x width rows, independent of stream volume.
+    batches x depth x width rows, independent of stream volume.  Read the
+    merged sketch back with cms_estimate at the same (depth, width).
     """
     from prod_data_pipeline_spark.operators.sketches import cms_build
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        sk = cms_build(batch, key_col, depth=depth, width=width, hash_fn=hash_fn)
+        sk = cms_build(batch, key_col, depth=depth, width=width)
         sk.write.mode("overwrite").parquet(
             os.path.join(sketch_path, f"batch={batch_id}")
         )

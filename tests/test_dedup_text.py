@@ -47,9 +47,8 @@ def test_exact_dedup(docs):
     assert kept.filter(F.col("doc_id") == 2).count() == 0
 
 
-@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
-def test_minhash_lsh_finds_planted_pairs(docs, hash_fn):
-    pairs = near_dup_pairs(docs, threshold=0.5, hash_fn=hash_fn).collect()
+def test_minhash_lsh_finds_planted_pairs(docs):
+    pairs = near_dup_pairs(docs, threshold=0.5).collect()
     found = {(r["id_a"], r["id_b"]) for r in pairs}
     assert (1, 2) in found  # exact dup: jaccard 1.0
     assert (1, 3) in found and (2, 3) in found  # near dup
@@ -86,17 +85,21 @@ def test_simhash_near_dups_close_far_docs_far(spark, docs):
     assert pairs[(1, 2)] == 0
 
 
-def test_simhash_buckets_find_long_near_dups(spark):
+@pytest.mark.parametrize(
+    "seed,pos,word", [(11, 45, "EDITED"), (7, 90, "CHANGED")], ids=["pos45", "pos90"]
+)
+def test_simhash_buckets_find_long_near_dups(spark, seed, pos, word):
     """SimHash bit-flip probability per bit is ~theta/pi, so near-dup
     detection needs long docs: a 1-word edit in a 180-token doc flips ~2
-    bits of 64, inside the <=3-Hamming 16-bit-chunk pigeonhole."""
+    of the 60 md5-derived bits, inside the <=3-Hamming 15-bit-chunk
+    pigeonhole; a far doc stays apart."""
     import random
 
-    rng = random.Random(7)
+    rng = random.Random(seed)
     vocab = [f"w{i}" for i in range(300)]
     long_base = " ".join(rng.choice(vocab) for _ in range(180))
     words = long_base.split()
-    words[90] = "CHANGED"
+    words[pos] = word
     long_near = " ".join(words)
     df = spark.createDataFrame(
         [(1, long_base), (2, long_near), (3, FAR)], ["doc_id", "text"]
@@ -109,43 +112,10 @@ def test_simhash_buckets_find_long_near_dups(spark):
     assert not any(3 in p for p in pairs)
 
 
-def test_simhash_md5_backend_matches_semantics(spark):
-    """The md5 oracle backend (60-bit) finds the same planted long-doc
-    near-dup as the xxhash64 production path and keeps far docs apart."""
-    import random
-
-    rng = random.Random(11)
-    vocab = [f"w{i}" for i in range(300)]
-    long_base = " ".join(rng.choice(vocab) for _ in range(180))
-    words = long_base.split()
-    words[45] = "EDITED"
-    df = spark.createDataFrame(
-        [(1, long_base), (2, " ".join(words)), (3, FAR)], ["doc_id", "text"]
-    )
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_bucket_pairs(df, max_hamming=6, hash_fn="md5").collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] <= 6
-    assert not any(3 in p for p in pairs)
-
-
-def test_winnow_md5_backend_containment(spark):
-    """md5 (string-min) winnowing preserves the containment property."""
-    df = spark.createDataFrame(
-        [(1, BASE), (2, "breaking news today " + BASE), (3, FAR)], ["doc_id", "text"]
-    )
-    fps = {
-        r["doc_id"]: set(r["fingerprints"])
-        for r in winnow_fingerprints(df, hash_fn="md5").collect()
-    }
-    assert len(fps[1] & fps[2]) / len(fps[1]) > 0.6
-    assert len(fps[1] & fps[3]) == 0
-
-
 def test_winnow_fingerprint_containment(spark):
     """A doc and the same doc with extra prefix share most fingerprints —
-    the winnowing containment property; unrelated docs share ~none."""
+    the winnowing containment property; unrelated docs share none.
+    Fingerprints are md5 hex digests (lexicographic window minima)."""
     rows = [
         (1, BASE),
         (2, "breaking news today " + BASE),
@@ -153,6 +123,7 @@ def test_winnow_fingerprint_containment(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     fps = {r["doc_id"]: set(r["fingerprints"]) for r in winnow_fingerprints(df).collect()}
+    assert all(len(fp) == 32 for fp in fps[1])  # md5 hex digests
     overlap_near = len(fps[1] & fps[2]) / len(fps[1])
     overlap_far = len(fps[1] & fps[3]) / len(fps[1])
     assert overlap_near > 0.6
@@ -338,7 +309,7 @@ def test_near_dup_agrees_with_pyspark_ml_minhashlsh(spark):
 
     ours = {
         (r["id_a"], r["id_b"])
-        for r in near_dup_pairs(corpus, shingle_n=1, threshold=0.7, hash_fn="md5").collect()
+        for r in near_dup_pairs(corpus, shingle_n=1, threshold=0.7).collect()
     }
     assert (0, 90_000) in ours
 
@@ -425,8 +396,7 @@ def _bruteforce_dup_spans(texts: dict[int, str], window: int, min_count: int = 2
     return spans
 
 
-@pytest.mark.parametrize("hash_fn", ["md5", "xxhash64"])
-def test_substring_dup_spans_equals_bruteforce(spark, hash_fn):
+def test_substring_dup_spans_equals_bruteforce(spark):
     """Span-level exact substring dedup: boundaries match a plain-Python
     sliding-window reference exactly, on a corpus with cross-doc repeated
     boilerplate, within-doc repetition, and a too-short doc."""
@@ -444,7 +414,7 @@ def test_substring_dup_spans_equals_bruteforce(spark, hash_fn):
     W = 6
     got = {
         (r["doc_id"], r["span_start"], r["span_end"])
-        for r in substring_dup_spans(df, window=W, hash_fn=hash_fn).collect()
+        for r in substring_dup_spans(df, window=W).collect()
     }
     assert got == _bruteforce_dup_spans(texts, W)
     # the boilerplate span must cover the shared sentence in both docs
@@ -506,7 +476,7 @@ def test_substring_dup_spans_saturated_boilerplate(spark):
     W = 8
     got = {
         (r["doc_id"], r["span_start"], r["span_end"])
-        for r in substring_dup_spans(df, window=W, hash_fn="xxhash64").collect()
+        for r in substring_dup_spans(df, window=W).collect()
     }
     # tokens 1-4 and 13 are per-doc unique, boiler occupies positions 5..12:
     # the only repeated 8-window is exactly the boilerplate span
@@ -776,10 +746,10 @@ def test_near_dup_pairs_collapse_equivalence(spark):
         (7, "the quick brown fox jumps over the lazy dog tonight"),   # 3rd clique member
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {tuple(r) for r in near_dup_pairs(docs, threshold=0.5, hash_fn="md5",
-                                          sort=False, collapse_exact=False).collect()}
-    b = {tuple(r) for r in near_dup_pairs(docs, threshold=0.5, hash_fn="md5",
-                                          sort=False, collapse_exact=True).collect()}
+    a = {tuple(r) for r in near_dup_pairs(docs, threshold=0.5, sort=False,
+                                          collapse_exact=False).collect()}
+    b = {tuple(r) for r in near_dup_pairs(docs, threshold=0.5, sort=False,
+                                          collapse_exact=True).collect()}
     assert a == b
     found = {(x, y) for x, y, _ in b}
     assert {(1, 2), (1, 7), (2, 7)} <= found          # full clique expanded
@@ -802,7 +772,7 @@ def test_srp_pairs_collapse_equivalence(spark):
         (7, [1.0, 0.0, 0.5, 0.2]),      # 3rd clique member
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(dim=4, threshold=0.3, nbits=16, band_bits=4, sort=False, backend="md5")
+    kw = dict(dim=4, threshold=0.3, nbits=16, band_bits=4, sort=False)
     a = {tuple(r) for r in srp_near_dup_pairs(emb, collapse_exact=False, **kw).collect()}
     b = {tuple(r) for r in srp_near_dup_pairs(emb, collapse_exact=True, **kw).collect()}
     assert a == b

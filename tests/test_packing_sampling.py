@@ -69,7 +69,7 @@ def test_mixing_weights_hit_target_mixture(spark, docs):
 
 def test_chunk_spans_layout_invariants(spark, docs_tok):
     budget, groups = 128, 4
-    out = chunk_spans(docs_tok, budget=budget, n_groups=groups, hash_fn="md5").collect()
+    out = chunk_spans(docs_tok, budget=budget, n_groups=groups).collect()
     nonempty = docs_tok.filter(F.col("n_tokens") > 0)
     assert len(out) == nonempty.count()  # every non-empty doc placed once
     assert sum(r["toks"] for r in out) == (

@@ -42,7 +42,7 @@ def test_near_dup_pairs_subset_of_truth_and_catches_identicals(spark, texts):
     )
     got = {
         (r["id_a"], r["id_b"])
-        for r in near_dup_pairs(df, threshold=0.5, hash_fn="md5").collect()
+        for r in near_dup_pairs(df, threshold=0.5).collect()
     }
     truth = _brute_jaccard_pairs(texts, threshold=0.5)
     # verified LSH candidates never invent a pair
@@ -82,7 +82,7 @@ def test_substring_dup_spans_equals_bruteforce_property(spark, texts):
     )
     got = {
         (r["doc_id"], r["span_start"], r["span_end"])
-        for r in substring_dup_spans(df, window=W, hash_fn="md5").collect()
+        for r in substring_dup_spans(df, window=W).collect()
     }
     assert got == _bruteforce_dup_spans(dict(enumerate(texts)), W)
 
@@ -270,15 +270,11 @@ def test_collapse_exact_is_output_identical(spark, texts):
     )
     off = {
         tuple(r)
-        for r in near_dup_pairs(
-            df, threshold=0.5, hash_fn="md5", sort=False, collapse_exact=False
-        ).collect()
+        for r in near_dup_pairs(df, threshold=0.5, sort=False, collapse_exact=False).collect()
     }
     on = {
         tuple(r)
-        for r in near_dup_pairs(
-            df, threshold=0.5, hash_fn="md5", sort=False, collapse_exact=True
-        ).collect()
+        for r in near_dup_pairs(df, threshold=0.5, sort=False, collapse_exact=True).collect()
     }
     assert on == off
 
@@ -301,7 +297,7 @@ def test_srp_collapse_exact_is_output_identical(spark, vecs):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
     )
-    kw = dict(dim=4, threshold=0.3, nbits=16, band_bits=4, sort=False, backend="md5")
+    kw = dict(dim=4, threshold=0.3, nbits=16, band_bits=4, sort=False)
     off = {
         tuple(r)
         for r in srp_near_dup_pairs(df, collapse_exact=False, **kw).collect()

@@ -588,16 +588,15 @@ def test_srp_kernels_tolerate_malformed_embeddings(spark):
         (92, [1.0, None, 0.0, 0.0]),  # NULL element
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for backend in ("mt", "md5"):
-        sig = with_srp_signature(df, dim=4, backend=backend)
-        got = {r["vec_id"]: r["srp_sig"] for r in sig.collect()}
-        assert got[90] == got[91] == got[92] == 0, backend
-        assert got[1] == got[2], backend  # identical vectors, identical sigs
-        pairs = srp_near_dup_pairs(df, dim=4, threshold=0.9, backend=backend)
-        got_pairs = {(r.id_a, r.id_b) for r in pairs.collect()}
-        assert (1, 2) in got_pairs, backend
-        touched = {i for p in got_pairs for i in p}
-        assert not touched & {90, 91, 92}, backend
+    sig = with_srp_signature(df, dim=4)
+    got = {r["vec_id"]: r["srp_sig"] for r in sig.collect()}
+    assert got[90] == got[91] == got[92] == 0
+    assert got[1] == got[2]  # identical vectors, identical sigs
+    pairs = srp_near_dup_pairs(df, dim=4, threshold=0.9)
+    got_pairs = {(r.id_a, r.id_b) for r in pairs.collect()}
+    assert (1, 2) in got_pairs
+    touched = {i for p in got_pairs for i in p}
+    assert not touched & {90, 91, 92}
 
 
 def test_srp_collapse_key_is_null_safe(spark):

@@ -54,17 +54,12 @@ def test_cms_merge_equals_global_build(spark):
     assert a == b
 
 
-def test_cms_weighted_and_backends(spark):
+def test_cms_weighted(spark):
     df = _events(spark).withColumn("w", F.lit(3))
-    for backend in ("md5", "xxhash64"):
-        sk = cms_build(df, "key", weight_col="w", depth=3, width=64, hash_fn=backend)
-        est = cms_estimate(
-            sk, df.select("key").distinct(), "key", depth=3, width=64, hash_fn=backend
-        )
-        true = df.groupBy("key").agg((3 * F.count(F.lit(1))).alias("t"))
-        assert all(
-            r["cms_count"] >= r["t"] for r in est.join(true, "key").collect()
-        )
+    sk = cms_build(df, "key", weight_col="w", depth=3, width=64)
+    est = cms_estimate(sk, df.select("key").distinct(), "key", depth=3, width=64)
+    true = df.groupBy("key").agg((3 * F.count(F.lit(1))).alias("t"))
+    assert all(r["cms_count"] >= r["t"] for r in est.join(true, "key").collect())
 
 
 def test_value_histogram_merge_equals_global_build(spark):
@@ -199,8 +194,8 @@ def test_cms_inner_product_disjoint_keys_empty_relation(spark):
     # would fail loudly, not silently pass)
     a = spark.createDataFrame([("alpha-key-1",)], "k string")
     b = spark.createDataFrame([("omega-key-2",)], "k string")
-    sa = cms_build(a, "k", depth=4, width=512, hash_fn="md5")
-    sb = cms_build(b, "k", depth=4, width=512, hash_fn="md5")
+    sa = cms_build(a, "k", depth=4, width=512)
+    sb = cms_build(b, "k", depth=4, width=512)
     dots = cms_inner_product(sa, sb)
     assert dots.count() == 0
     est = dots.agg(

@@ -190,7 +190,11 @@ def main(argv: list[str] | None = None) -> int:
                 }))
             return 0
         if args.action == "vacuum":
-            removed = vacuum(args.table_path, keep_last=args.keep_last)
+            try:
+                removed = vacuum(args.table_path, keep_last=args.keep_last)
+            except ValueError as ex:
+                print(f"error: {ex}", file=sys.stderr)
+                return 2
             print(json.dumps({"removed_files": len(removed)}))
             return 0
         if args.action == "clean-orphans":

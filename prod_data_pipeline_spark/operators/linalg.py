@@ -27,7 +27,6 @@ from prod_data_pipeline_spark.session import truncate_lineage
 def covariance_matrix(
     df: DataFrame,
     emb_col: str = "embedding",
-    id_col: str = "vec_id",
     round_term: int = 12,
     quantizer: str = "int40",
 ) -> DataFrame:

@@ -21,9 +21,12 @@ mutable pointer.  This module implements that pattern minimally:
   and read exactly the listed files: no directory listing, no torn reads,
   and a reader holding version N is immune to any concurrent commit.
 - **Scale**: the manifest holds file paths + row counts, kilobytes per
-  thousand files; the pointer swap is the only coordination point.  (Real
-  formats add manifest trees and optimistic locking for multi-writer —
-  single-writer semantics are assumed here, as in the reference.)
+  thousand files; the pointer swap is the only coordination point.
+- **Concurrency**: commits serialize under a single-host ``flock`` on the
+  table's commit lock (``_publish``); concurrent appends compose, and an
+  operation whose plan was made against an older head raises
+  ``ConcurrentCommit`` instead of publishing.  (Real formats add manifest
+  trees and a catalog compare-and-swap for multi-host writers.)
 - **Path scope**: data files go through Spark writers (any Hadoop FS),
   but manifest/pointer IO and post-write file discovery use driver-local
   Python IO (`os.listdir`/`open`/`os.rename`), so `table_path` must be a
@@ -38,35 +41,44 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from dataclasses import dataclass
+from contextlib import contextmanager
+from dataclasses import asdict, dataclass, field, replace
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass(frozen=True)
 class Snapshot:
+    """One committed table version: the manifest record.  The only list
+    of the manifest's fields — ``_publish`` writes ``asdict`` of it (field
+    order = JSON key order) and ``read_manifest`` reads it back, keys
+    missing from older manifests taking the defaults below."""
+
     version: int
     files: list[str]
     n_rows: int
-    mode: str  # "append" | "overwrite"
+    # "append" | "overwrite" | "delete" | "mor-delete" | "merge-deletes"
+    # | "replace_where" | "compact" | "rollback"
+    mode: str
     # zone maps: {file: {col: [min, max]}} for the columns the writer chose
     # to track (commit_snapshot stats_cols=...).  Files written before stats
     # were tracked simply have no entry and are never pruned away.
-    stats: dict = None  # type: ignore[assignment]
+    stats: dict = field(default_factory=dict)
     # per-file bloom filters: {file: {col: [set bit positions]}} for
     # equality pruning on high-cardinality keys (commit_snapshot
     # bloom_cols=...); md5-derived positions, 1024 bits x 3 hashes.
-    blooms: dict = None  # type: ignore[assignment]
+    blooms: dict = field(default_factory=dict)
     # per-file NULL counts: {file: {col: n_null}} for the stats columns —
     # kept SEPARATE from the [min, max] zone maps (the Iceberg
     # null_value_counts design) because min/max ignore NULLs: a file whose
     # range is exactly [v, v] may still hold NULL rows, and replace_where
     # must not delete those with the partition.  Files committed before
     # null tracking have no entry (treated as unknown — conservative).
-    nulls: dict = None  # type: ignore[assignment]
+    nulls: dict = field(default_factory=dict)
     # commit metadata, atomic with the version (e.g. the streaming sink's
     # last_batch_id transaction marker, a rollback's source version).
-    meta: dict = None  # type: ignore[assignment]
+    meta: dict = field(default_factory=dict)
     # merge-on-read equality deletes: {delete_id: {"col": c, "value": v,
     # "applies_to": [files]}}.  Each entry hides rows where col == value
     # from the listed files WITHOUT rewriting them (delete_where_mor);
@@ -75,7 +87,7 @@ class Snapshot:
     # number: files appended later are absent from the list, so a
     # re-inserted key survives.  read_snapshot applies the filters;
     # compact_deletes folds them back into data files.
-    deletes: dict = None  # type: ignore[assignment]
+    deletes: dict = field(default_factory=dict)
     # authoritative table schema (Spark StructType jsonValue, all fields
     # nullable), recorded at commit time and evolved ADDITIVELY: previous
     # columns keep position and type, columns new to a commit append.
@@ -87,7 +99,7 @@ class Snapshot:
     # schema-in-metadata design.  None on tables whose last commit
     # predates round 14 (legacy: reads fall back to footer behavior; the
     # next commit records the footer-merged union once).
-    schema: dict = None  # type: ignore[assignment]
+    schema: dict | None = None
 
 
 class ConcurrentCommit(Exception):
@@ -101,21 +113,42 @@ def _manifest_dir(table_path: str) -> str:
     return os.path.join(table_path, "manifests")
 
 
-def _publish(table_path: str, build) -> "Snapshot":
+@contextmanager
+def _commit_lock(table_path: str):
+    """The table's exclusive commit lock — a single-host ``flock`` held by
+    every publish, ``vacuum`` and ``clean_orphans``, so none of them can
+    observe another half-done.  Auto-releases on process death."""
+    import fcntl
+
+    mdir = _manifest_dir(table_path)
+    os.makedirs(mdir, exist_ok=True)
+    with open(os.path.join(mdir, "_commit.lock"), "w") as lk:
+        fcntl.flock(lk, fcntl.LOCK_EX)
+        yield
+
+
+def _publish(
+    table_path: str, build, op: str | None = None, head: int | None = None
+) -> Snapshot:
     """Serialized manifest publish — the table's single coordination
     point.  Writers prepare data files and stats OUTSIDE this call
-    (arbitrarily slow, fully parallel); under an exclusive lock the head
-    is re-read, ``build(prev_v, version)`` produces the manifest dict for
-    head+1 (raising ConcurrentCommit if its plan is stale), the manifest
-    is written, and the pointer swaps.  The critical section is a couple
-    of local file writes — at warehouse scale this lock is the catalog's
-    compare-and-swap, and the behavior is identical: concurrent appends
-    serialize and compose; conflicting rewrites abort and retry.
+    (arbitrarily slow, fully parallel); under the commit lock the head is
+    re-read, ``build(prev, version)`` returns the Snapshot for head+1
+    (``prev`` is the head's Snapshot, None on an empty table), the
+    manifest is written, and the pointer swaps.  The critical section is
+    a couple of local file writes — at warehouse scale this lock is the
+    catalog's compare-and-swap, and the behavior is identical: concurrent
+    appends serialize and compose; conflicting rewrites abort and retry.
 
-    The lock auto-releases on process death (flock), and a crash inside
-    the section leaves at worst an unreferenced vN.json that the next
-    committer overwrites via tmp+rename before swapping the pointer —
-    readers can never observe a partial commit.
+    ``op`` names an operation that planned against version ``head`` (its
+    prune set, rewrite set, drop set or rollback base): if another commit
+    landed since, the plan is stale and ``ConcurrentCommit`` is raised
+    before anything is written.  Appends pass no ``op`` — they compose
+    with whatever head is current.
+
+    A crash inside the section leaves at worst an unreferenced vN.json
+    that the next committer overwrites via tmp+rename before swapping the
+    pointer — readers can never observe a partial commit.
 
     Two invariants are enforced HERE, for every commit path, so no
     individual operation can forget them:
@@ -136,30 +169,29 @@ def _publish(table_path: str, build) -> "Snapshot":
       corruption into a loud retryable failure (clean_orphans holds this
       same lock, so the check and the swap cannot interleave with a
       cleanup scan)."""
-    import fcntl
-
-    mdir = _manifest_dir(table_path)
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, "_commit.lock"), "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
+    with _commit_lock(table_path):
         prev_v = current_version(table_path)
+        if op is not None and prev_v != head:
+            raise ConcurrentCommit(
+                f"table advanced v{head} -> v{prev_v} during {op}; re-run"
+            )
+        prev = read_manifest(table_path, prev_v) if prev_v is not None else None
         version = (prev_v or 0) + 1
-        manifest = build(prev_v, version)
-        if prev_v is not None:
-            prev_meta = read_manifest(table_path, prev_v).meta or {}
-            meta = dict(manifest.get("meta") or {})
-            if "last_batch_id" in prev_meta or "last_batch_id" in meta:
+        snap = build(prev, version)
+        if prev is not None:
+            meta = dict(snap.meta)
+            if "last_batch_id" in prev.meta or "last_batch_id" in meta:
                 meta["last_batch_id"] = max(
-                    prev_meta.get("last_batch_id", -1),
+                    prev.meta.get("last_batch_id", -1),
                     meta.get("last_batch_id", -1),
                 )
-            if "txn" in prev_meta or "txn" in meta:
-                merged_txn = dict(prev_meta.get("txn") or {})
+            if "txn" in prev.meta or "txn" in meta:
+                merged_txn = dict(prev.meta.get("txn") or {})
                 for app, ver in (meta.get("txn") or {}).items():
                     merged_txn[app] = max(ver, merged_txn.get(app, -1))
                 meta["txn"] = merged_txn
-            manifest["meta"] = meta
-        missing = [f for f in manifest["files"] if not os.path.exists(f)]
+            snap = replace(snap, meta=meta)
+        missing = [f for f in snap.files if not os.path.exists(f)]
         if missing:
             raise FileNotFoundError(
                 f"refusing to publish v{version}: {len(missing)} listed "
@@ -167,26 +199,15 @@ def _publish(table_path: str, build) -> "Snapshot":
                 "clean_orphans run with older_than_s shorter than this "
                 "commit's write phase?"
             )
-        mpath = os.path.join(mdir, f"v{version}.json")
+        mpath = os.path.join(_manifest_dir(table_path), f"v{version}.json")
         with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
+            json.dump(asdict(snap), f)
         os.rename(mpath + ".tmp", mpath)
         ptr = _pointer_path(table_path)
         with open(ptr + ".tmp", "w") as f:
             f.write(str(version))
         os.rename(ptr + ".tmp", ptr)  # the commit point: atomic on POSIX
-    return Snapshot(
-        version=version,
-        files=manifest["files"],
-        n_rows=manifest["n_rows"],
-        mode=manifest["mode"],
-        stats=manifest.get("stats", {}),
-        blooms=manifest.get("blooms", {}),
-        nulls=manifest.get("nulls", {}),
-        meta=manifest.get("meta", {}),
-        deletes=manifest.get("deletes", {}),
-        schema=manifest.get("schema"),
-    )
+    return snap
 
 
 def _pointer_path(table_path: str) -> str:
@@ -203,19 +224,16 @@ def current_version(table_path: str) -> int | None:
 
 def read_manifest(table_path: str, version: int) -> Snapshot:
     with open(os.path.join(_manifest_dir(table_path), f"v{version}.json")) as f:
-        m = json.load(f)
-    return Snapshot(
-        version=m["version"],
-        files=m["files"],
-        n_rows=m["n_rows"],
-        mode=m["mode"],
-        stats=m.get("stats", {}),
-        blooms=m.get("blooms", {}),
-        nulls=m.get("nulls", {}),
-        meta=m.get("meta", {}),
-        deletes=m.get("deletes", {}),
-        schema=m.get("schema"),
-    )
+        return Snapshot(**json.load(f))
+
+
+def _read_head(table_path: str, version: int | None = None) -> Snapshot:
+    """The Snapshot of ``version``, by default the current head; raises
+    FileNotFoundError when the table has no committed version."""
+    v = current_version(table_path) if version is None else version
+    if v is None:
+        raise FileNotFoundError(f"no committed version at {table_path}")
+    return read_manifest(table_path, v)
 
 
 def snapshots(table_path: str) -> list[Snapshot]:
@@ -225,10 +243,10 @@ def snapshots(table_path: str) -> list[Snapshot]:
 
 
 def _stats_repr(value):
-    """The zone-map representation of a Python value — mirrors the
-    `_plain` serialization inside _collect_file_stats so equality and
-    order comparisons against stored bounds are coherent (temporal /
-    decimal values go through str(); ISO strings sort like the values)."""
+    """The zone-map representation of a Python value — used both to store
+    bounds (_collect_file_stats) and to probe them, so equality and order
+    comparisons against stored bounds are coherent (temporal / decimal
+    values go through str(); ISO strings sort like the values)."""
     return (
         value
         if isinstance(value, (int, float, str, bool, type(None)))
@@ -272,11 +290,6 @@ def _collect_file_stats(
         .collect()
     )
 
-    def _plain(v):
-        # JSON-serializable zone-map bound; temporal/decimal go via str
-        # (ISO order == value order for dates/timestamps of one column)
-        return v if isinstance(v, (int, float, str, bool, type(None))) else str(v)
-
     by_base = {}
     bloom_by_base = {}
     null_by_base = {}
@@ -286,7 +299,8 @@ def _collect_file_stats(
         base = os.path.basename(r["__f"])
         if stats_cols:
             by_base[base] = {
-                c: [_plain(r[f"__mn_{c}"]), _plain(r[f"__mx_{c}"])] for c in stats_cols
+                c: [_stats_repr(r[f"__mn_{c}"]), _stats_repr(r[f"__mx_{c}"])]
+                for c in stats_cols
             }
             null_by_base[base] = {c: int(r[f"__nl_{c}"]) for c in stats_cols}
         if bloom_cols:
@@ -455,6 +469,61 @@ def _evolve_schema_value(
     return StructType(fields).jsonValue()
 
 
+class _NewFiles(NamedTuple):
+    """A commit's freshly written data files and what one scan of them
+    measured (see _collect_file_stats)."""
+
+    files: list[str]
+    n_rows: int
+    stats: dict
+    blooms: dict
+    nulls: dict
+
+
+_NO_NEW_FILES = _NewFiles([], 0, {}, {}, {})
+
+
+def _write_data_files(
+    df: DataFrame,
+    table_path: str,
+    stats_cols: tuple[str, ...] = (),
+    bloom_cols: tuple[str, ...] = (),
+    write=None,
+) -> _NewFiles:
+    """Write a commit's data files into a fresh, immutable
+    ``data/<commit-uuid>`` dir — ``df.write`` by default, ``write(dir)``
+    for a custom layout — then scan them once for row count, zone maps,
+    null counts and blooms.  The write may leave no part file at all
+    (every row filtered away); nothing is scanned then."""
+    data_dir = os.path.join(table_path, "data", uuid.uuid4().hex)
+    if write is None:
+        df.write.mode("error").parquet(data_dir)
+    else:
+        write(data_dir)
+    written = [
+        os.path.join(data_dir, f)
+        for f in os.listdir(data_dir)
+        if f.endswith(".parquet")
+    ]
+    if not written:
+        return _NO_NEW_FILES
+    return _NewFiles(
+        written,
+        *_collect_file_stats(
+            df.sparkSession, written, tuple(stats_cols), tuple(bloom_cols)
+        ),
+    )
+
+
+def _tracked_cols(snap: Snapshot) -> tuple[tuple[str, ...], tuple[str, ...]]:
+    """The stats and bloom columns ``snap`` tracks — what a rewrite
+    re-collects for the files it writes."""
+    return (
+        tuple(sorted({c for per_file in snap.stats.values() for c in per_file})),
+        tuple(sorted({c for per_file in snap.blooms.values() for c in per_file})),
+    )
+
+
 def commit_snapshot(
     df: DataFrame,
     table_path: str,
@@ -474,9 +543,11 @@ def commit_snapshot(
     MULTI-WRITER SAFE: the publish runs under the table's commit lock
     (`_publish`) with the merged file list rebuilt against whatever head
     is current at publish time, so concurrent appends serialize and both
-    land — no lost updates.  Rewriting operations (delete_where,
-    rewrite_small_files, rollback) instead raise ConcurrentCommit when
-    the head moved under them, the optimistic-concurrency contract.
+    land — no lost updates.  The six operations that plan against the
+    head (delete_where, delete_where_mor, compact_deletes,
+    commit_replace_where, rewrite_small_files, rollback) instead raise
+    ConcurrentCommit when the head moved under them, the
+    optimistic-concurrency contract.
 
     `stats_cols` opts columns into per-file min/max **zone maps** stored in
     the manifest: readers prune whole files whose range cannot match a
@@ -489,57 +560,24 @@ def commit_snapshot(
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    commit_id = uuid.uuid4().hex
-    data_dir = os.path.join(table_path, "data", commit_id)
-    df.write.mode("error").parquet(data_dir)
+    new = _write_data_files(df, table_path, stats_cols, bloom_cols)
 
-    spark = df.sparkSession
-    written = [
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    ]
-    n_new, new_stats, new_blooms, new_nulls = (
-        _collect_file_stats(spark, written, tuple(stats_cols), tuple(bloom_cols))
-        if written
-        else (0, {}, {}, {})
-    )
-
-    # Publish under the commit lock: appends COMPOSE with any concurrent
-    # writer (the merged file list is rebuilt against whatever head is
-    # current at publish time), so two parallel appenders both land.
-    def build(prev_v: int | None, version: int) -> dict:
-        if mode == "append" and prev_v is not None:
-            prev = read_manifest(table_path, prev_v)
-            files = prev.files + written
-            n_rows = prev.n_rows + n_new
-            stats = {**(prev.stats or {}), **new_stats}
-            blooms = {**(prev.blooms or {}), **new_blooms}
-            nulls = {**(prev.nulls or {}), **new_nulls}
-            # MOR deletes carry verbatim: the appended files are absent
-            # from every applies_to, so a re-inserted key is visible —
-            # the sequence-number semantics
-            deletes = dict(prev.deletes or {})
+    def build(prev: Snapshot | None, version: int) -> Snapshot:
+        # an append carries every file of the head CURRENT AT PUBLISH, so
+        # two parallel appenders both land; the appended files are absent
+        # from every MOR delete's applies_to, so a re-inserted key is
+        # visible — the sequence-number semantics
+        base = prev if mode == "append" else None
+        return Snapshot(
+            version,
+            n_rows=(base.n_rows if base else 0) + new.n_rows,
+            mode=mode,
+            meta=meta or {},
             # evolved against the ACTUAL head (under the commit lock), so
             # a concurrent append's new columns are never dropped
-            schema = _evolve_schema_value(spark, prev, df)
-        else:
-            files, n_rows = written, n_new
-            stats, blooms, nulls = new_stats, new_blooms, new_nulls
-            deletes = {}
-            schema = _schema_value(df)
-        return {
-            "version": version,
-            "files": files,
-            "n_rows": n_rows,
-            "mode": mode,
-            "stats": stats,
-            "blooms": blooms,
-            "nulls": nulls,
-            "meta": meta or {},
-            "deletes": deletes,
-            "schema": schema,
-        }
+            schema=_evolve_schema_value(df.sparkSession, base, df),
+            **_carry(base, base.files if base else [], new),
+        )
 
     return _publish(table_path, build)
 
@@ -557,7 +595,7 @@ def prune_files(snap: Snapshot, col: str, lo, hi) -> list[str]:
     merely slower instead of crashing the commit path."""
     kept = []
     for f in snap.files:
-        rng = (snap.stats or {}).get(f, {}).get(col)
+        rng = snap.stats.get(f, {}).get(col)
         if rng is None or rng[0] is None or rng[1] is None:
             kept.append(f)
             continue
@@ -597,7 +635,7 @@ def prune_files_eq(snap: Snapshot, col: str, value) -> list[str]:
     for f in snap.files:
         if f not in zone_kept:
             continue  # zone map proves the value cannot occur in f
-        setbits = (snap.blooms or {}).get(f, {}).get(col)
+        setbits = snap.blooms.get(f, {}).get(col)
         if setbits is None:
             kept.append(f)
             continue
@@ -613,11 +651,30 @@ def _carry_deletes(prev_deletes: dict, kept_files: list[str]) -> dict:
     (every file they hid rows from was rewritten or removed)."""
     kept = set(kept_files)
     out = {}
-    for did, e in (prev_deletes or {}).items():
+    for did, e in prev_deletes.items():
         scoped = [f for f in e["applies_to"] if f in kept]
         if scoped:
             out[did] = {**e, "applies_to": scoped}
     return out
+
+
+def _carry(base: Snapshot | None, carried: list[str], new: _NewFiles) -> dict:
+    """The per-file fields of a commit that lists ``carried`` files of
+    ``base`` untouched, then ``new``: carried files keep their stats,
+    blooms and null counts, and the MOR delete entries scoping them —
+    rewritten files had their pending entries folded in."""
+    keep = set(carried)
+
+    def merged(old: dict, fresh: dict) -> dict:
+        return {**{f: x for f, x in old.items() if f in keep}, **fresh}
+
+    return dict(
+        files=carried + new.files,
+        stats=merged(base.stats if base else {}, new.stats),
+        blooms=merged(base.blooms if base else {}, new.blooms),
+        nulls=merged(base.nulls if base else {}, new.nulls),
+        deletes=_carry_deletes(base.deletes if base else {}, carried),
+    )
 
 
 def _has_pending(snap: Snapshot, files) -> bool:
@@ -625,7 +682,7 @@ def _has_pending(snap: Snapshot, files) -> bool:
     of those files must fold the entries in via _grouped_delete_read."""
     touched = set(files)
     return any(
-        touched & set(e["applies_to"]) for e in (snap.deletes or {}).values()
+        touched & set(e["applies_to"]) for e in snap.deletes.values()
     )
 
 
@@ -731,10 +788,7 @@ def read_snapshot(
     for the additive union; False samples one footer (plain Spark)."""
     from pyspark.sql import functions as F
 
-    v = version if version is not None else current_version(table_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot at {table_path}")
-    snap = read_manifest(table_path, v)
+    snap = _read_head(table_path, version)
     auth = _auth_struct(snap)
     if auth is not None:
         reader = spark.read.schema(auth)
@@ -747,7 +801,7 @@ def read_snapshot(
         # apply merge-on-read equality deletes to exactly the files each
         # entry scopes (grouped by entry-set — _grouped_delete_read)
         return _grouped_delete_read(
-            reader, snap.deletes or {}, files, allow_missing=merge_schema
+            reader, snap.deletes, files, allow_missing=merge_schema
         )
 
     if prune is None:
@@ -794,30 +848,18 @@ def delete_where(
     """
     from pyspark.sql import functions as F
 
-    v = current_version(table_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {table_path}")
-    snap = read_manifest(table_path, v)
+    snap = _read_head(table_path)
     _require_schema_column(snap, col, "delete_where")
     rewrite = set(prune_files_eq(snap, col, value))
     carried = [f for f in snap.files if f not in rewrite]
 
-    stats_cols = tuple(
-        sorted({c for per_file in (snap.stats or {}).values() for c in per_file})
-    )
-    bloom_cols = tuple(
-        sorted({c for per_file in (snap.blooms or {}).values() for c in per_file})
-    )
-
-    written: list[str] = []
-    n_new, new_stats, new_blooms, new_nulls = 0, {}, {}, {}
-    n_rewritten_before = 0
+    new, n_rewritten_before = _NO_NEW_FILES, 0
     if rewrite:
         n_rewritten_before = spark.read.parquet(*sorted(rewrite)).count()
         # fold pending MOR deletes in — scoped to exactly the files each
         # entry covers (a union-wide filter would destroy a key
         # re-inserted by a later append) — then apply this delete's own
-        # predicate
+        # predicate.
         # REWRITES always read full-width: the authoritative manifest
         # schema when recorded, else merged footers — a sampled narrow
         # footer would silently DROP an evolved column's data from the
@@ -825,9 +867,7 @@ def delete_where(
         # columns).  Footer merging is negligible next to the full read
         # the rewrite performs anyway.
         src = _grouped_delete_read(
-            _rewrite_reader(spark, snap),
-            snap.deletes or {},
-            sorted(rewrite),
+            _rewrite_reader(spark, snap), snap.deletes, sorted(rewrite)
         )
         # The full-width grouped read above is AUTHORITATIVE: it carries
         # the recorded schema (or, on a legacy table, every column present
@@ -836,10 +876,9 @@ def delete_where(
         # rewrite set entirely predates the column (the schema-recorded
         # path already failed fast on unknown columns above) and the
         # decidable-NULL branches below apply.  Do NOT "fall back" to a
-        # raw re-read here: it would
-        # bypass the pending MOR delete filters folded in by the grouped
-        # read and resurrect deleted rows in the rewritten files
-        # (r13 advisory).
+        # raw re-read here: it would bypass the pending MOR delete filters
+        # folded in by the grouped read and resurrect deleted rows in the
+        # rewritten files (r13 advisory).
         if col in src.columns:
             kept_rows = src.filter(~F.col(col).eqNullSafe(F.lit(value)))
         elif value is None:
@@ -849,56 +888,22 @@ def delete_where(
             kept_rows = src.filter(F.lit(False))
         else:
             kept_rows = src  # non-NULL value matches nothing here
-        commit_id = uuid.uuid4().hex
-        data_dir = os.path.join(table_path, "data", commit_id)
-        kept_rows.write.mode("error").parquet(data_dir)
-        written = [
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        ]
-        if written:
-            n_new, new_stats, new_blooms, new_nulls = _collect_file_stats(
-                spark, written, stats_cols, bloom_cols
-            )
+        new = _write_data_files(kept_rows, table_path, *_tracked_cols(snap))
 
-    files = carried + written
-    n_rows = snap.n_rows - n_rewritten_before + n_new
-    stats = {
-        **{f: s for f, s in (snap.stats or {}).items() if f in set(carried)},
-        **new_stats,
-    }
-    blooms = {
-        **{f: b for f, b in (snap.blooms or {}).items() if f in set(carried)},
-        **new_blooms,
-    }
-    nulls = {
-        **{f: n for f, n in (snap.nulls or {}).items() if f in set(carried)},
-        **new_nulls,
-    }
-
-    def build(prev_v: int | None, version: int) -> dict:
-        if prev_v != v:
-            # the prune/rewrite plan was computed against v; a concurrent
-            # commit may have added files containing the key
-            raise ConcurrentCommit(
-                f"table advanced v{v} -> v{prev_v} during delete; re-run"
-            )
-        return {
-            "version": version,
-            "files": files,
-            "n_rows": n_rows,
-            "mode": "delete",
-            "stats": stats,
-            "blooms": blooms,
-            "nulls": nulls,
-            "meta": {},
-            # rewritten files had their pending MOR deletes folded in
-            "deletes": _carry_deletes(snap.deletes, carried),
-            "schema": snap.schema,  # a delete never changes the width
-        }
-
-    return _publish(table_path, build)
+    # the prune/rewrite plan was computed against the head; a concurrent
+    # commit may have added files containing the key
+    return _publish(
+        table_path,
+        lambda _, version: Snapshot(
+            version,
+            n_rows=snap.n_rows - n_rewritten_before + new.n_rows,
+            mode="delete",
+            schema=snap.schema,  # a delete never changes the width
+            **_carry(snap, carried, new),
+        ),
+        op="delete",
+        head=snap.version,
+    )
 
 
 def delete_where_mor(
@@ -942,41 +947,31 @@ def delete_where_mor(
             "MOR delete value must be a non-NULL JSON-representable scalar, "
             f"got {value!r}"
         )
-    v = current_version(table_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {table_path}")
-    snap = read_manifest(table_path, v)
+    snap = _read_head(table_path)
     _require_schema_column(snap, col, "delete_where_mor")
     affected = prune_files_eq(snap, col, value)
     if not affected:
         return snap  # bloom/zone proof: nothing to hide
 
+    # applies_to was pruned against the head; a concurrent append could
+    # add files containing the key that this entry must NOT scope.
+    # Physical rows are unchanged: files, n_rows and indexes carry as-is.
     did = uuid.uuid4().hex
-
-    def build(prev_v: int | None, version: int) -> dict:
-        if prev_v != v:
-            # applies_to was pruned against v; a concurrent append could
-            # add files containing the key that this entry must NOT scope
-            raise ConcurrentCommit(
-                f"table advanced v{v} -> v{prev_v} during MOR delete; re-run"
-            )
-        return {
-            "version": version,
-            "files": snap.files,
-            "n_rows": snap.n_rows,  # physical rows unchanged
-            "mode": "mor-delete",
-            "stats": snap.stats or {},
-            "blooms": snap.blooms or {},
-            "nulls": snap.nulls or {},
-            "meta": {"mor_delete": [col, _stats_repr(value)]},
-            "deletes": {
-                **(snap.deletes or {}),
+    return _publish(
+        table_path,
+        lambda _, version: replace(
+            snap,
+            version=version,
+            mode="mor-delete",
+            meta={"mor_delete": [col, _stats_repr(value)]},
+            deletes={
+                **snap.deletes,
                 did: {"col": col, "value": value, "applies_to": affected},
             },
-            "schema": snap.schema,
-        }
-
-    return _publish(table_path, build)
+        ),
+        op="MOR delete",
+        head=snap.version,
+    )
 
 
 def compact_deletes(spark: SparkSession, table_path: str) -> Snapshot:
@@ -992,95 +987,53 @@ def compact_deletes(spark: SparkSession, table_path: str) -> Snapshot:
     same bloom/zone-pruned footprint the COW delete would have paid at
     delete time, now paid once on a maintenance schedule instead of on
     the (latency-sensitive) delete path."""
-    from pyspark.sql import functions as F
-
-    v = current_version(table_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {table_path}")
-    snap = read_manifest(table_path, v)
-    if not (snap.deletes or {}):
+    snap = _read_head(table_path)
+    if not snap.deletes:
         return snap
     rewrite = sorted({f for e in snap.deletes.values() for f in e["applies_to"]})
-    carried = [f for f in snap.files if f not in set(rewrite)]
-
-    stats_cols = tuple(
-        sorted({c for per_file in (snap.stats or {}).values() for c in per_file})
-    )
-    bloom_cols = tuple(
-        sorted({c for per_file in (snap.blooms or {}).values() for c in per_file})
-    )
+    rewrite_set = set(rewrite)
+    carried = [f for f in snap.files if f not in rewrite_set]
 
     n_before = spark.read.parquet(*rewrite).count()
     # scoped per entry — never a union-wide filter (sequencing contract);
     # full-width read so the rewrite can never drop an evolved column
-    src = _grouped_delete_read(
-        _rewrite_reader(spark, snap), snap.deletes or {}, rewrite
+    src = _grouped_delete_read(_rewrite_reader(spark, snap), snap.deletes, rewrite)
+    new = _write_data_files(src, table_path, *_tracked_cols(snap))
+    # every entry's scope was rewritten, so no delete entry carries
+    return _publish(
+        table_path,
+        lambda _, version: Snapshot(
+            version,
+            n_rows=snap.n_rows - n_before + new.n_rows,
+            mode="merge-deletes",
+            meta={"merged_delete_entries": len(snap.deletes)},
+            schema=snap.schema,
+            **_carry(snap, carried, new),
+        ),
+        op="delete compaction",
+        head=snap.version,
     )
-    commit_id = uuid.uuid4().hex
-    data_dir = os.path.join(table_path, "data", commit_id)
-    src.write.mode("error").parquet(data_dir)
-    written = [
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    ]
-    n_new, new_stats, new_blooms, new_nulls = (
-        _collect_file_stats(spark, written, stats_cols, bloom_cols)
-        if written
-        else (0, {}, {}, {})
-    )
-
-    files = carried + written
-    carried_set = set(carried)
-
-    def build(prev_v: int | None, version: int) -> dict:
-        if prev_v != v:
-            raise ConcurrentCommit(
-                f"table advanced v{v} -> v{prev_v} during delete compaction; "
-                "re-run"
-            )
-        return {
-            "version": version,
-            "files": files,
-            "n_rows": snap.n_rows - n_before + n_new,
-            "mode": "merge-deletes",
-            "stats": {
-                **{f: x for f, x in (snap.stats or {}).items() if f in carried_set},
-                **new_stats,
-            },
-            "blooms": {
-                **{f: x for f, x in (snap.blooms or {}).items() if f in carried_set},
-                **new_blooms,
-            },
-            "nulls": {
-                **{f: x for f, x in (snap.nulls or {}).items() if f in carried_set},
-                **new_nulls,
-            },
-            "meta": {"merged_delete_entries": len(snap.deletes)},
-            "deletes": {},
-            "schema": snap.schema,
-        }
-
-    return _publish(table_path, build)
 
 
 def vacuum(table_path: str, keep_last: int = 1) -> list[str]:
     """Delete data files referenced ONLY by expired versions (all but the
-    last `keep_last`).  Returns the deleted paths.  Time travel to expired
-    versions stops working — the standard retention trade-off.
+    last `keep_last`, which must be >= 1: the head is never expired).
+    Returns the deleted paths.  Time travel to expired versions stops
+    working — the standard retention trade-off.
 
     Runs under the table's commit lock: the live-file set is computed
     against a head no publish can move mid-scan, so vacuum can never race
-    a rollback into deleting files the new head references (rollback's
-    own existence check also runs under the lock — the two serialize in
+    a rollback into deleting files the new head references (the publish
+    existence check also runs under the lock — the two serialize in
     either order, and the loser behaves correctly)."""
-    import fcntl
-
-    mdir = _manifest_dir(table_path)
-    if not os.path.isdir(mdir):
+    if keep_last < 1:
+        raise ValueError(
+            f"vacuum keep_last must be >= 1 (the head version is always "
+            f"kept), got {keep_last}"
+        )
+    if not os.path.isdir(_manifest_dir(table_path)):
         return []
-    with open(os.path.join(mdir, "_commit.lock"), "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
+    with _commit_lock(table_path):
         v = current_version(table_path)
         if v is None:
             return []
@@ -1110,7 +1063,7 @@ def commit_replace_where(
 ) -> Snapshot:
     """Partition-scoped idempotent overwrite (Delta's ``replaceWhere`` /
     the reference pipeline's purge-then-rewrite —
-    /root/reference/glue/jobs/raw_to_curated_events_v3_dq.py:153-156
+    glue/jobs/raw_to_curated_events_v3_dq.py:153-156
     `purge_s3_path` + append — on manifest tables):
     commit ``df`` as the NEW content of the logical partition
     ``col == value``, atomically dropping every existing file that lies
@@ -1158,8 +1111,8 @@ def commit_replace_where(
     kept, ambiguous = [], []
     if prev is not None:
         for f in prev.files:
-            rng = (prev.stats or {}).get(f, {}).get(col)
-            n_null = (prev.nulls or {}).get(f, {}).get(col)  # None = unknown
+            rng = prev.stats.get(f, {}).get(col)
+            n_null = prev.nulls.get(f, {}).get(col)  # None = unknown
             if rng is None:
                 ambiguous.append(f)  # no zone map at all
             elif rng[0] is None and rng[1] is None:
@@ -1200,63 +1153,27 @@ def commit_replace_where(
                 "including the partition column and partition-clustered files"
             )
 
-    all_stats = tuple(sorted(set(stats_cols) | {col}))
-    commit_id = uuid.uuid4().hex
-    data_dir = os.path.join(table_path, "data", commit_id)
-    df.write.mode("error").parquet(data_dir)
     spark = df.sparkSession
-    written = [
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    ]
-    n_new, new_stats, new_blooms, new_nulls = (
-        _collect_file_stats(spark, written, all_stats, tuple(bloom_cols))
-        if written
-        else (0, {}, {}, {})
+    new = _write_data_files(
+        df, table_path, tuple(sorted(set(stats_cols) | {col})), bloom_cols
     )
-    kept_set = set(kept)
-    n_kept = 0
-    if prev is not None and kept:
-        # count once via recorded manifest arithmetic is impossible (rows
-        # per file aren't stored); one cheap count over the kept files only
-        n_kept = spark.read.parquet(*kept).count()
-
-    def build(prev_v: int | None, version: int) -> dict:
-        if prev_v != v:
-            raise ConcurrentCommit(
-                f"table advanced v{v} -> v{prev_v} during replace_where; re-run"
-            )
-        return {
-            "version": version,
-            "files": kept + written,
-            "n_rows": n_kept + n_new,
-            "mode": "replace_where",
-            "stats": {
-                **{f: s for f, s in ((prev.stats or {}) if prev else {}).items()
-                   if f in kept_set},
-                **new_stats,
-            },
-            "blooms": {
-                **{f: b for f, b in ((prev.blooms or {}) if prev else {}).items()
-                   if f in kept_set},
-                **new_blooms,
-            },
-            "nulls": {
-                **{f: n for f, n in ((prev.nulls or {}) if prev else {}).items()
-                   if f in kept_set},
-                **new_nulls,
-            },
-            "meta": {**(meta or {}), "replace_where": [col, _stats_repr(value)]},
-            "deletes": _carry_deletes(
-                (prev.deletes if prev else {}) or {}, kept
-            ),
+    # rows per file aren't stored: one cheap count over the kept files only
+    n_kept = spark.read.parquet(*kept).count() if kept else 0
+    return _publish(
+        table_path,
+        lambda _, version: Snapshot(
+            version,
+            n_rows=n_kept + new.n_rows,
+            mode="replace_where",
+            meta={**(meta or {}), "replace_where": [col, _stats_repr(value)]},
             # kept files from other partitions retain their columns, so
             # the width evolves additively against the previous schema
-            "schema": _evolve_schema_value(spark, prev, df),
-        }
-
-    return _publish(table_path, build)
+            schema=_evolve_schema_value(spark, prev, df),
+            **_carry(prev, kept, new),
+        ),
+        op="replace_where",
+        head=v,
+    )
 
 
 def clean_orphans(table_path: str, older_than_s: float = 3600.0) -> list[str]:
@@ -1274,15 +1191,12 @@ def clean_orphans(table_path: str, older_than_s: float = 3600.0) -> list[str]:
     and retryable, never a torn table.  Runs under the commit lock so
     the referenced set cannot move mid-scan.  Returns the deleted paths;
     empty data dirs are pruned too."""
-    import fcntl
     import time
 
-    mdir = _manifest_dir(table_path)
     data_root = os.path.join(table_path, "data")
-    if not os.path.isdir(mdir) or not os.path.isdir(data_root):
+    if not os.path.isdir(_manifest_dir(table_path)) or not os.path.isdir(data_root):
         return []
-    with open(os.path.join(mdir, "_commit.lock"), "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
+    with _commit_lock(table_path):
         referenced: set[str] = set()
         for snap in snapshots(table_path):
             referenced.update(snap.files)
@@ -1338,113 +1252,74 @@ def rewrite_small_files(
     ``partition_col`` preserves REPLACEABILITY: plain coalescing would
     mix logical partitions in one output file, and commit_replace_where
     would then (correctly) refuse the table as ambiguous.  With the
-    column set, the rewrite writes `partitionBy(partition_col)` — every
-    output file provably holds one value, the partition value is read
-    back from the Hive-style path, and stats re-collection keeps
-    min == max per file, so compaction and partition replacement compose
+    column set, each partition value is written as its own coalesced
+    file (the value stays a data column), so every output file provably
+    holds one value and stats re-collection keeps min == max per file:
+    compaction and partition replacement compose
     for the life of the table (the streaming-ingest → nightly-compact →
     daily-replace loop)."""
     from pyspark.sql import functions as F
 
-    v = current_version(table_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {table_path}")
-    snap = read_manifest(table_path, v)
+    snap = _read_head(table_path)
     small = [f for f in snap.files if os.path.getsize(f) < target_file_bytes]
     if len(small) < min_group:
         return snap
-    carried = [f for f in snap.files if f not in set(small)]
-
-    stats_cols = tuple(
-        sorted({c for per_file in (snap.stats or {}).values() for c in per_file})
-    )
-    bloom_cols = tuple(
-        sorted({c for per_file in (snap.blooms or {}).values() for c in per_file})
-    )
+    small_set = set(small)
+    carried = [f for f in snap.files if f not in small_set]
 
     pending = _has_pending(snap, small)
     n_small_before = spark.read.parquet(*small).count() if pending else 0
     total = sum(os.path.getsize(f) for f in small)
     n_out = max(1, -(-total // target_file_bytes))  # ceil div
-    commit_id = uuid.uuid4().hex
-    data_dir = os.path.join(table_path, "data", commit_id)
+    # fold pending MOR deletes into the compaction (the classic
+    # merge-on-read maintenance contract), scoped per entry — a
+    # union-wide filter would destroy later-appended re-inserts
+    src = _grouped_delete_read(_rewrite_reader(spark, snap), snap.deletes, small)
     if partition_col is None:
-        # fold pending MOR deletes into the compaction (the classic
-        # merge-on-read maintenance contract), scoped per entry — a
-        # union-wide filter would destroy later-appended re-inserts
-        src0 = _grouped_delete_read(
-            _rewrite_reader(spark, snap), snap.deletes or {}, small
+        new = _write_data_files(
+            src.coalesce(int(n_out)), table_path, *_tracked_cols(snap)
         )
-        src0.coalesce(int(n_out)).write.mode("error").parquet(data_dir)
     else:
         # one output file per partition VALUE (kept as a data column, so
         # stats re-collection proves min == max and replace_where keeps
         # working); the value count is maintenance-small by definition
-        src = _grouped_delete_read(
-            _rewrite_reader(spark, snap), snap.deletes or {}, small
-        ).persist()
+        src = src.persist()
         values = sorted(
             (r[0] for r in src.select(partition_col).distinct().collect()),
             key=lambda x: (x is None, str(x)),
         )
-        os.makedirs(data_dir, exist_ok=True)
-        for val in values:
-            src.filter(F.col(partition_col).eqNullSafe(F.lit(val))).coalesce(
-                1
-            ).write.mode("append").parquet(data_dir)
-        src.unpersist()
-    written = [
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    ]
-    # written can be EMPTY when pending MOR deletes hid every small-file
-    # row (the partitioned path then runs zero per-value writes)
-    n_new, new_stats, new_blooms, new_nulls = (
-        _collect_file_stats(spark, written, stats_cols, bloom_cols)
-        if written
-        else (0, {}, {}, {})
-    )
 
-    files = carried + written
-    stats = {
-        **{f: s for f, s in (snap.stats or {}).items() if f in set(carried)},
-        **new_stats,
-    }
-    blooms = {
-        **{f: b for f, b in (snap.blooms or {}).items() if f in set(carried)},
-        **new_blooms,
-    }
-    nulls = {
-        **{f: n for f, n in (snap.nulls or {}).items() if f in set(carried)},
-        **new_nulls,
-    }
+        def write(data_dir: str) -> None:
+            os.makedirs(data_dir)
+            for val in values:
+                src.filter(F.col(partition_col).eqNullSafe(F.lit(val))).coalesce(
+                    1
+                ).write.mode("append").parquet(data_dir)
+            src.unpersist()
 
-    def build(prev_v: int | None, version: int) -> dict:
-        if prev_v != v:
-            # the rewrite set was chosen against v; composing blindly with
-            # a concurrent overwrite/delete would resurrect its rows
-            raise ConcurrentCommit(
-                f"table advanced v{v} -> v{prev_v} during compaction; re-run"
-            )
-        return {
-            "version": version,
-            "files": files,
+        # writes NOTHING when pending MOR deletes hid every small-file row
+        new = _write_data_files(src, table_path, *_tracked_cols(snap), write=write)
+
+    # the rewrite set was chosen against the head; composing blindly with
+    # a concurrent overwrite/delete would resurrect its rows
+    return _publish(
+        table_path,
+        lambda _, version: Snapshot(
+            version,
             # row-preserving by construction UNLESS pending MOR deletes
             # were folded in — then the physical count drops by the rows
-            # they hid (n_new already measured over the written files)
-            "n_rows": snap.n_rows if not pending
-            else snap.n_rows - n_small_before + n_new,
-            "mode": "compact",
-            "stats": stats,
-            "blooms": blooms,
-            "nulls": nulls,
-            "meta": {"compacted_files": len(small), "new_files": len(written)},
-            "deletes": _carry_deletes(snap.deletes, carried),
-            "schema": snap.schema,  # layout-only: width unchanged
-        }
-
-    return _publish(table_path, build)
+            # they hid (measured over the written files)
+            n_rows=snap.n_rows - n_small_before + new.n_rows
+            if pending
+            else snap.n_rows,
+            mode="compact",
+            meta={"compacted_files": len(small), "new_files": len(new.files)},
+            schema=snap.schema,  # layout-only: width unchanged
+            **_carry(snap, carried, new),
+        ),
+        op="compaction",
+        head=snap.version,
+    )
 
 
 def rollback(table_path: str, to_version: int) -> Snapshot:
@@ -1460,41 +1335,29 @@ def rollback(table_path: str, to_version: int) -> Snapshot:
     versions — the documented retention trade-off).  Stats and blooms
     travel with the file list, so data skipping keeps working on the
     restored version."""
-    v = current_version(table_path)
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {table_path}")
+    v = _read_head(table_path).version
     if not 1 <= to_version <= v:
         raise ValueError(f"cannot roll back to v{to_version}: table is at v{v}")
     target = read_manifest(table_path, to_version)
-
-    def build(prev_v: int | None, version: int) -> dict:
-        if prev_v != v:
-            raise ConcurrentCommit(
-                f"table advanced v{v} -> v{prev_v} during rollback; re-run"
-            )
-        # the existence check runs HERE, under the commit lock, so a
-        # concurrent vacuum (which also holds the lock) cannot delete the
-        # target's files between this check and the pointer swap
-        missing = [f for f in target.files if not os.path.exists(f)]
-        if missing:
-            raise FileNotFoundError(
-                f"v{to_version} references {len(missing)} vacuumed file(s); "
-                f"rollback impossible (first: {missing[0]})"
-            )
-        return {
-            "version": version,
-            "files": target.files,
-            "n_rows": target.n_rows,
-            "mode": "rollback",
-            "stats": target.stats or {},
-            "blooms": target.blooms or {},
-            "nulls": target.nulls or {},
-            "meta": {"rolled_back_to": to_version},
-            "deletes": target.deletes or {},
-            "schema": target.schema,  # the restored version's width
-        }
-
-    return _publish(table_path, build)
+    # names the cause up front; _publish re-checks every listed file under
+    # the commit lock, so a concurrent vacuum cannot slip in after this
+    missing = [f for f in target.files if not os.path.exists(f)]
+    if missing:
+        raise FileNotFoundError(
+            f"v{to_version} references {len(missing)} vacuumed file(s); "
+            f"rollback impossible (first: {missing[0]})"
+        )
+    return _publish(
+        table_path,
+        lambda _, version: replace(
+            target,
+            version=version,
+            mode="rollback",
+            meta={"rolled_back_to": to_version},
+        ),
+        op="rollback",
+        head=v,
+    )
 
 
 def snapshot_changelog(

@@ -6,6 +6,7 @@ good dates' partitions (run_backfill.py:85-87 semantics)."""
 from __future__ import annotations
 
 import json
+import os
 import pathlib
 import subprocess
 import sys
@@ -163,6 +164,24 @@ def test_cli_table_maintenance_roundtrip(tmp_path, spark):
     proc = _run(["table", "vacuum", t, "--keep-last", "1"])
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert json.loads(proc.stdout.splitlines()[-1])["removed_files"] > 0
+
+
+def test_cli_vacuum_rejects_keep_last_below_one(tmp_path, spark):
+    """``table vacuum --keep-last 0`` would expire the head version's own
+    files; it is a bad argument (exit 2) and removes nothing."""
+    from prod_data_pipeline_spark.sources.manifest import (
+        commit_snapshot,
+        read_snapshot,
+    )
+
+    t = str(tmp_path / "tbl")
+    s = commit_snapshot(spark.range(0, 20).coalesce(1), t)
+    for keep in ("0", "-1"):
+        proc = _run(["table", "vacuum", t, "--keep-last", keep])
+        assert proc.returncode == 2, proc.stderr[-2000:]
+        assert "keep_last" in proc.stderr
+    assert all(os.path.exists(f) for f in s.files)
+    assert read_snapshot(spark, t).count() == 20
 
 
 def test_cli_mor_delete_and_compaction(tmp_path, spark):

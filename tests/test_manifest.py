@@ -57,6 +57,12 @@ def test_vacuum_removes_only_expired_files(spark, tmp_path):
     commit_snapshot(spark.range(0, 10), t)
     commit_snapshot(spark.range(10, 20), t, mode="overwrite")
     commit_snapshot(spark.range(20, 30), t, mode="overwrite")
+    # keep_last < 1 would expire the head itself: refused before any delete
+    files_before = {f for s in snapshots(t) for f in s.files}
+    with pytest.raises(ValueError, match="keep_last"):
+        vacuum(t, keep_last=0)
+    assert all(os.path.exists(f) for f in files_before)
+    assert read_snapshot(spark, t).count() == 10
     deleted = vacuum(t, keep_last=2)
     assert deleted  # v1's files went away
     assert read_snapshot(spark, t).count() == 10          # current fine
@@ -454,6 +460,75 @@ def test_rewriting_ops_abort_on_concurrent_commit(spark, tmp_path, monkeypatch):
     # is the head, and every u7 row (old and new) is still present
     cur = read_snapshot(spark, t)
     assert cur.filter(F.col("k") == "u7").count() == 20 + 10
+
+
+def _stale_head_table(spark, t):
+    """Two partition-clustered commits (p=1, p=2) with zone maps and
+    blooms on ``k`` plus one pending MOR delete, so every rewriting
+    operation below has real work to plan against the head."""
+    import prod_data_pipeline_spark.sources.manifest as M
+
+    for p in (1, 2):
+        commit_snapshot(
+            spark.range(p * 100, p * 100 + 100)
+            .withColumn("k", F.concat(F.lit("u"), F.col("id") % 10))
+            .withColumn("p", F.lit(p))
+            .repartition(2),
+            t,
+            stats_cols=("k", "p"),
+            bloom_cols=("k",),
+        )
+    M.delete_where_mor(spark, t, "k", "u3")
+
+
+_STALE_HEAD_OPS = {
+    "delete_where": lambda M, spark, t: M.delete_where(spark, t, "k", "u7"),
+    "delete_where_mor": lambda M, spark, t: M.delete_where_mor(spark, t, "k", "u5"),
+    "compact_deletes": lambda M, spark, t: M.compact_deletes(spark, t),
+    "commit_replace_where": lambda M, spark, t: M.commit_replace_where(
+        spark.range(0, 10)
+        .withColumn("k", F.lit("u1"))
+        .withColumn("p", F.lit(1)),
+        t, "p", 1, stats_cols=("k",), bloom_cols=("k",),
+    ),
+    "rewrite_small_files": lambda M, spark, t: M.rewrite_small_files(spark, t),
+    "rollback": lambda M, spark, t: M.rollback(t, 1),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_STALE_HEAD_OPS))
+def test_stale_head_aborts_every_planned_operation(spark, tmp_path, monkeypatch, op):
+    """Every operation that plans against the head (prune set, rewrite
+    set, drop set, rollback base) must raise ConcurrentCommit when an
+    append lands between its plan and its publish, leaving that append
+    as the head.  The race is injected at the publish call itself, so it
+    hits each operation at the same point whatever its write phase."""
+    import prod_data_pipeline_spark.sources.manifest as M
+
+    t = str(tmp_path / "tbl")
+    _stale_head_table(spark, t)
+
+    real = M._publish
+    state = {"injected": None}
+
+    def racing_publish(*args, **kwargs):
+        if state["injected"] is None:
+            state["injected"] = False  # guard against recursion via the inner commit
+            state["injected"] = M.commit_snapshot(
+                spark.range(5000, 5010)
+                .withColumn("k", F.lit("u7"))
+                .withColumn("p", F.lit(3)),
+                t,
+            )
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(M, "_publish", racing_publish)
+    with pytest.raises(M.ConcurrentCommit):
+        _STALE_HEAD_OPS[op](M, spark, t)
+    injected = state["injected"]
+    assert injected and injected.mode == "append"
+    assert current_version(t) == injected.version
+    assert M.read_manifest(t, injected.version) == injected
 
 
 def test_additive_schema_evolution_on_manifest_table(spark, tmp_path):
@@ -1731,3 +1806,57 @@ def test_append_after_full_delete_keeps_recorded_schema(spark, tmp_path):
         commit_snapshot(
             spark.range(30, 32).withColumn("v", F.lit("s")), t, mode="append"
         )
+
+
+def test_returned_snapshot_equals_stored_manifest(spark, tmp_path):
+    """Every commit path returns exactly the record it wrote: the
+    Snapshot handed back by the operation equals ``read_manifest`` of
+    its version, field for field (meta carry-forward, schema, indexes
+    and delete entries included)."""
+    from prod_data_pipeline_spark.sources.manifest import (
+        commit_replace_where,
+        compact_deletes,
+        delete_where,
+        delete_where_mor,
+        read_manifest,
+        rewrite_small_files,
+        rollback,
+    )
+
+    t = str(tmp_path / "tbl")
+
+    def part(lo, p, keys):
+        return (
+            spark.range(lo, lo + 50)
+            .withColumn("k", F.concat(F.lit("u"), F.col("id") % 5 + keys))
+            .withColumn("p", F.lit(p))
+            .coalesce(1)
+        )
+
+    indexes = dict(stats_cols=("k", "p"), bloom_cols=("k",))
+    steps = [
+        lambda: commit_snapshot(
+            part(0, 1, 0), t, **indexes,
+            meta={"last_batch_id": 0, "txn": {"app": 3}},
+        ),
+        # an append carrying a new column
+        lambda: commit_snapshot(
+            part(100, 2, 5).withColumn("extra", F.lit("x")), t, **indexes
+        ),
+        lambda: delete_where_mor(spark, t, "k", "u7"),
+        lambda: delete_where(spark, t, "k", "u2"),
+        lambda: commit_replace_where(part(200, 1, 0), t, "p", 1, **indexes),
+        lambda: rewrite_small_files(spark, t, partition_col="p"),
+        lambda: delete_where_mor(spark, t, "k", "u8"),
+        lambda: compact_deletes(spark, t),
+        lambda: rollback(t, 2),
+    ]
+    modes = []
+    for step in steps:
+        s = step()
+        modes.append(s.mode)
+        assert read_manifest(t, s.version) == s, s.mode
+    assert modes == [
+        "append", "append", "mor-delete", "delete", "replace_where",
+        "compact", "mor-delete", "merge-deletes", "rollback",
+    ]

@@ -37,28 +37,34 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from prod_data_pipeline_spark.session import truncate_lineage
+
 RANK_COL = "rank"
 TOTAL_COL = "n_total"
+# Bucket count of the bounds sketch.  It sets load balance only: every
+# bucket count gives the same exact rank.
+N_BUCKETS = 32
 
 
-def bucketed_global_rank(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    by: Sequence[str] = (),
-    n_buckets: int = 32,
-) -> DataFrame:
-    """Exact 1-based row_number rank over ``order_cols`` (per ``by`` group,
-    or global when ``by`` is empty), computed without a global sort.
+def _rank(
+    df: DataFrame, order_cols: Sequence[str], by: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """The rank body shared by both operators: returns ``(ranked,
+    offsets)``, where ``ranked`` is the input plus ``rank`` and
+    ``n_total``, and ``offsets`` is the |groups| * N_BUCKETS-row
+    relation (by, __b, __off, n_total) it was joined from.
 
-    Output: input columns + ``rank`` (bigint) + ``n_total`` (bigint, the
-    group's row count).  The plan's only full-data exchange is one hash
-    partition on (by, bucket); everything else runs over relations of at
-    most |groups| * n_buckets rows.
+    The bounds sketch, the bucketing pass and the bucket counts all read
+    the input, so it is cut here with one lazy ``truncate_lineage``: the
+    first action stores its blocks and every later pass reads them, so
+    the input is evaluated once.  An input whose own plan has no exchange
+    runs no job at build time; one with an exchange runs that exchange's
+    map stage when the cut is taken (adaptive execution materializes it).
     """
-    by = list(by)
+    df = truncate_lineage(df, eager=False)
     val = F.col(order_cols[0]).cast("double")
 
-    probs = [i / n_buckets for i in range(1, n_buckets)]
+    probs = [i / N_BUCKETS for i in range(1, N_BUCKETS)]
     agg = [F.approx_percentile(val, F.lit(probs), F.lit(10_000)).alias("__bounds")]
     bounds = df.groupBy(*by).agg(*agg) if by else df.agg(*agg)
 
@@ -70,11 +76,10 @@ def bucketed_global_rank(
     ).drop("__bounds")
 
     w_rn = Window.partitionBy(*by, "__b").orderBy(*[F.col(c).asc() for c in order_cols])
-    ranked = bucketed.withColumn("__rn", F.row_number().over(w_rn))
 
-    # Tiny relation: |groups| * n_buckets rows.  partitionBy(lit(0)) for the
+    # Tiny relation: |groups| * N_BUCKETS rows.  partitionBy(lit(0)) for the
     # global case keeps the exchange a hash partition (the relation is
-    # n_buckets rows by construction, never the fact table).
+    # N_BUCKETS rows by construction, never the fact table).
     part = [F.col(c) for c in by] if by else [F.lit(0)]
     counts = bucketed.groupBy(*by, "__b").agg(F.count(F.lit(1)).alias("__cnt"))
     w_off = Window.partitionBy(*part).orderBy("__b")
@@ -88,11 +93,31 @@ def bucketed_global_rank(
         F.sum("__cnt").over(Window.partitionBy(*part)).alias(TOTAL_COL),
     )
 
-    return (
-        ranked.join(F.broadcast(offsets), on=[*by, "__b"])
+    ranked = (
+        bucketed.withColumn("__rn", F.row_number().over(w_rn))
+        .join(F.broadcast(offsets), on=[*by, "__b"])
         .withColumn(RANK_COL, (F.col("__off") + F.col("__rn")).cast("bigint"))
         .drop("__b", "__rn", "__off")
     )
+    return ranked, offsets
+
+
+def bucketed_global_rank(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    by: Sequence[str] = (),
+) -> DataFrame:
+    """Exact 1-based row_number rank over ``order_cols`` (per ``by`` group,
+    or global when ``by`` is empty), computed without a global sort.
+
+    Output: input columns + ``rank`` (bigint) + ``n_total`` (bigint, the
+    group's row count).  The plan's only full-data exchange is one hash
+    partition on (by, bucket); everything else runs over relations of at
+    most |groups| * N_BUCKETS rows.  The input is evaluated once (the
+    operator cuts its lineage itself), so callers cut it only when the
+    same relation also feeds another consumer.
+    """
+    return _rank(df, order_cols, list(by))[0]
 
 
 def ntile_from_rank(rank: Column, n_total: Column, k: int) -> Column:
@@ -112,7 +137,6 @@ def exact_quantiles(
     value_col: str,
     probs: dict[str, float],
     by: Sequence[str] = (),
-    n_buckets: int = 32,
 ) -> DataFrame:
     """Exact interpolated quantiles (SQL ``percentile_cont`` /  DuckDB
     ``quantile_cont`` semantics) per ``by`` group, distributed.
@@ -128,58 +152,14 @@ def exact_quantiles(
     rank join), use this when the answer must be exact — both stay
     parallel at any scale.
 
-    Single-consumer rank (round-16 swap, prepared and equality-proven in
-    round 15): the original body consumed its ranked relation TWICE — a
-    corpus-wide DISTINCT for the per-group totals, then the flank join —
-    so the whole ``bucketed_global_rank`` pipeline (4 scans) replayed per
-    consumer: 8 corpus scans.  The totals are group-level facts the rank
-    pass already aggregates, so this body inlines the rank and reads
-    ``n_total`` off the bucket-count OFFSETS relation (|groups| ×
-    n_buckets rows — no corpus re-scan), leaving the ranked relation
-    single-consumer: 4 scans, and strictly fewer exchanges.  The flank
-    join, interpolation arithmetic, and tie semantics are byte-identical
-    to the two-consumer form (pinned at swap time by the r15
-    side-by-side run recorded in SCALE.md; the live pins are
-    tests/test_ranking.py::test_exact_quantiles_events_shape and the
-    ≤4-scan pin in test_exact_quantiles_scan_count).
+    Contract: the operator reads its input once.  The group totals come
+    off the rank's bucket-offset relation (|groups| * N_BUCKETS rows), so
+    the ranked relation has a single consumer, the flank join.  Callers
+    cut lineage only on relations that also feed other consumers.
     """
     by = list(by)
-    val = F.col(value_col).cast("double")
+    ranked, offsets = _rank(df, [value_col], by)
 
-    bprobs = [i / n_buckets for i in range(1, n_buckets)]
-    agg = [F.approx_percentile(val, F.lit(bprobs), F.lit(10_000)).alias("__bounds")]
-    bounds = df.groupBy(*by).agg(*agg) if by else df.agg(*agg)
-    joined = (
-        df.join(F.broadcast(bounds), on=by) if by else df.crossJoin(F.broadcast(bounds))
-    )
-    bucketed = joined.withColumn(
-        "__b", F.size(F.filter("__bounds", lambda x: val > x))
-    ).drop("__bounds")
-
-    w_rn = Window.partitionBy(*by, "__b").orderBy(F.col(value_col).asc())
-    ranked = bucketed.withColumn("__rn", F.row_number().over(w_rn))
-
-    part = [F.col(c) for c in by] if by else [F.lit(0)]
-    counts = bucketed.groupBy(*by, "__b").agg(F.count(F.lit(1)).alias("__cnt"))
-    # |groups| x n_buckets rows feeding TWO consumers (the rank-offset
-    # join and the totals) — cut lineage so the corpus-side combiner agg
-    # behind it runs once, not per consumer
-    from prod_data_pipeline_spark.session import truncate_lineage
-
-    counts = counts.transform(truncate_lineage, eager=False)
-    w_off = Window.partitionBy(*part).orderBy("__b")
-    offsets = counts.select(
-        *by,
-        "__b",
-        F.coalesce(
-            F.sum("__cnt").over(w_off.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("__off"),
-        F.sum("__cnt").over(Window.partitionBy(*part)).alias(TOTAL_COL),
-    )
-
-    # group totals straight off the offsets relation — |groups| rows,
-    # zero corpus scans (THE change vs the pre-r16 two-consumer body)
     totals = offsets.select(*by, TOTAL_COL).distinct()
     prob_rows = F.array(
         *[
@@ -199,11 +179,6 @@ def exact_quantiles(
         .withColumn("__frac", F.col("__h") - F.col("__k1"))
     )
 
-    ranked = (
-        ranked.join(F.broadcast(offsets), on=[*by, "__b"])
-        .withColumn(RANK_COL, (F.col("__off") + F.col("__rn")).cast("bigint"))
-        .drop("__b", "__rn", "__off")
-    )
     r, nd = ranked.alias("__r"), needed.alias("__nd")
     cond = [F.col(f"__r.{c}") == F.col(f"__nd.{c}") for c in by] + [
         (F.col(f"__r.{RANK_COL}") == F.col("__nd.__k1"))

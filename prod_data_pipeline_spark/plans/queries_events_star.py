@@ -2147,14 +2147,7 @@ def docs_dsir_selection(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     raw = docs.filter(F.col("lang") != "en")
     target = docs.filter(F.col("lang") == "en")
-    # The slim weight relation feeds bucketed_global_rank's three passes;
-    # each replay re-ran the full-corpus left join inside dsir_importance
-    # (5 documents scan nodes without the cut, 1 with).
-    w = (
-        dsir_importance(raw, target)
-        .withColumn("_negw", -F.col("log_w"))
-        .transform(truncate_lineage, eager=False)
-    )
+    w = dsir_importance(raw, target).withColumn("_negw", -F.col("log_w"))
     ranked = bucketed_global_rank(w, ["_negw", "doc_id"])
     sel = ranked.withColumn(
         "s",

@@ -1750,13 +1750,10 @@ def events_value_sketch_quantiles(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    # Two cuts = the no-restructure floor of 2 corpus reads (sketch and
-    # exact halves need different columns): the slim rank input feeds the
-    # bucketed-rank pipeline (bounds sketch + bucketing + offsets), and
-    # the tiny per-day sketch (|days| x 64 rows) feeds merge + day count.
-    r = ev.select(
-        "event_id", F.round(F.col("value") * 100).cast("long").alias("vc")
-    ).transform(truncate_lineage, eager=False)
+    # Two corpus reads (sketch and exact halves need different columns):
+    # the rank operator reads its slim input once, and the tiny per-day
+    # sketch (|days| x 64 rows) is cut because it feeds merge + day count.
+    r = ev.select("event_id", F.round(F.col("value") * 100).cast("long").alias("vc"))
     sk = value_histogram_build(
         ev, "value", by=(F.to_date("ts").alias("day"),), n_buckets=64, vmax_cents=50_000
     ).transform(truncate_lineage, eager=True)
@@ -2485,7 +2482,7 @@ def events_conversion_latency(spark, sf_dir):
         .agg(F.min("ts").alias("pt"))
     )
     # one-column converted-user relation, consumed by the count and the
-    # quantile machinery's two passes
+    # quantile operator
     lat = p.join(v, "user_id").select(
         (F.unix_micros("pt") - F.unix_micros("vt")).alias("us")
     ).transform(truncate_lineage, eager=False)

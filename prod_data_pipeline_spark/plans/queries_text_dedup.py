@@ -829,22 +829,14 @@ def orders_price_deciles(spark, sf_dir):
     bucket counts, and ntile_from_rank reproduces the NTILE(10) bucket
     assignment in closed form.  o_orderkey tie-break keeps both engines'
     assignment identical; plan pinned single-partition-free in
-    tests/test_plans.py."""
+    tests/test_plans.py.  The operator reads the orders scan once (it
+    cuts its own input), so the query needs no lineage cut of its own."""
     from prod_data_pipeline_spark.operators.ranking import (
         bucketed_global_rank,
         ntile_from_rank,
     )
 
-    # Builder-local input cut: bucketed_global_rank consumes its input for
-    # the bounds sketch, the bucketing pass and the offsets join — 4 orders
-    # scans without it, 1 with (operator untouched; decision rule recorded
-    # in SCALE.md "r17 prep": the ~7% local wall trade buys a 4x scan-volume
-    # win at 100 TB).
-    orders = (
-        _t(spark, sf_dir, "orders")
-        .select("o_totalprice", "o_orderkey")
-        .transform(truncate_lineage, eager=False)
-    )
+    orders = _t(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
     ranked = bucketed_global_rank(orders, ["o_totalprice", "o_orderkey"])
     return (
         ranked.select(

@@ -469,10 +469,8 @@ def events_value_mad_outliers(spark, sf_dir):
         exact_quantiles(ev, "value", {"med": 0.5}, by=["event_type"])
         .select("event_type", F.col("quantile").alias("med"))
     )
-    # the second quantile pass and the final rollup each reference `dev`
-    # several times (exact_quantiles reads its input for bounds, bucket
-    # ranks and offsets) — checkpointing cuts the replayed median chain
-    # (4.9 s -> 3.5 s at sf0.1); identical values
+    # `dev` feeds both the second quantile pass and the final rollup —
+    # the cut keeps the median chain from replaying per consumer
     dev = (
         ev.join(F.broadcast(med), "event_type")
         .withColumn("dev", F.abs(F.col("value") - F.col("med")))
@@ -1559,19 +1557,16 @@ def customer_rfm_segments(spark, sf_dir):
         "mn",
         F.datediff(F.col("anchor"), F.col("last_order")).alias("r_days"),
     )
-    # Each bucketed_global_rank references its input several times
-    # (percentile bounds, bucket assignment, offset join); chained three
-    # deep the unmaterialized plan replays the whole prior chain per
-    # reference.  Checkpoint the customer-sized relation between stages
-    # — identical values, 4.5 s -> ~2 s at sf0.1.
-    cur = scored.transform(truncate_lineage, eager=False)
+    # each stage ranks the previous stage's output; the rank operator cuts
+    # its own input, so no stage replays the chain before it
+    cur = scored
     for metric, alias in (("r_days", "r_q"), ("f", "f_q"), ("m_d", "m_q")):
         if metric == "m_d":
             cur = cur.withColumn("m_d", num_to_double(F.col("mn")))
         ranked = bucketed_global_rank(cur, [metric, "o_custkey"])
         cur = ranked.withColumn(
             alias, ntile_from_rank(F.col("rank"), F.col("n_total"), 4)
-        ).drop("rank", "n_total").transform(truncate_lineage, eager=False)
+        ).drop("rank", "n_total")
     return (
         cur.groupBy("r_q", "f_q", "m_q")
         .agg(

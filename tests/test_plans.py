@@ -365,18 +365,17 @@ def test_consolidation_panel_plan_shapes(spark):
     - events_hll_users_panel: exactly TWO parquet scans (daily sketching
       + the direct rollup — the merge's whole point; the pair ran three)
       joined with a broadcast, never a sort-merge.
-    - events_value_distribution: one histogram scan + the exact_quantiles
-      pipeline.  The r16 single-consumer-rank swap (derive totals from
-      the bucket-count relation, lineage-cut) landed: measured 4 scans
-      at swap time, down from the pre-swap 10.  This pin is an UPPER
-      bound that must only ever move down.
+    - events_value_distribution: the histogram and per-type count scans;
+      exact_quantiles cuts its own input, so its single read runs before
+      the final plan.  This pin is an UPPER bound that must only ever
+      move down.
     """
     plan = _executed_plan(spark, "events_hll_users_panel")
     assert plan.count("Scan parquet") == 2, plan.count("Scan parquet")
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
     plan = _executed_plan(spark, "events_value_distribution")
-    assert plan.count("Scan parquet") <= 4, plan.count("Scan parquet")
+    assert plan.count("Scan parquet") <= 2, plan.count("Scan parquet")
     assert "SortMergeJoin" not in plan
 
 
@@ -386,7 +385,10 @@ def test_r17_lineage_cuts_scan_counts(spark):
     parquet-scan count (the cut relation's single materializing scan runs
     inside the same invocation, before the final action).  These are UPPER
     bounds that must only ever move down; the before counts, measured at
-    b0f506a's parent, were 7/3/4/10/9/6/5/3/5/5/5 respectively."""
+    b0f506a's parent, were 7/3/4/10/9/6/5/3/5/5/5 respectively.  The
+    deciles, dsir and sketch-quantile cuts now live inside the rank
+    operator (operators/ranking.py cuts its own input), not at the call
+    site; the bounds are unchanged."""
     bounds = {
         "emb_ivf_recall": 0,
         "events_clicks_before_purchase": 1,  # the clicks side scans once

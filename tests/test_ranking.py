@@ -30,7 +30,7 @@ def _rand_df(spark, n=5003, seed=11, dup_every=7):
 
 def test_rank_matches_global_sort(spark):
     df = _rand_df(spark)
-    mine = bucketed_global_rank(df, ["v", "id"], n_buckets=16)
+    mine = bucketed_global_rank(df, ["v", "id"])
     ref = df.withColumn("rrank", F.row_number().over(Window.orderBy("v", "id")))
     assert mine.join(ref, ["id"]).filter(F.col("rank") != F.col("rrank")).count() == 0
     assert mine.count() == df.count()
@@ -38,7 +38,7 @@ def test_rank_matches_global_sort(spark):
 
 def test_grouped_rank_and_totals(spark):
     df = _rand_df(spark).withColumn("g", (F.col("id") % 4).cast("int"))
-    mine = bucketed_global_rank(df, ["v", "id"], by=["g"], n_buckets=8)
+    mine = bucketed_global_rank(df, ["v", "id"], by=["g"])
     w = Window.partitionBy("g").orderBy("v", "id")
     ref = df.withColumn("rrank", F.row_number().over(w))
     assert mine.join(ref, ["id"]).filter(F.col("rank") != F.col("rrank")).count() == 0
@@ -65,7 +65,7 @@ def test_ntile_fewer_rows_than_buckets(spark):
 @pytest.mark.parametrize("k", [3, 10])
 def test_ntile_from_rank_matches_window_ntile(spark, k):
     df = _rand_df(spark, n=1009)
-    mine = bucketed_global_rank(df, ["v", "id"], n_buckets=8).select(
+    mine = bucketed_global_rank(df, ["v", "id"]).select(
         "id", ntile_from_rank(F.col("rank"), F.col("n_total"), k).alias("d")
     )
     ref = df.select("id", F.ntile(k).over(Window.orderBy("v", "id")).alias("rd"))
@@ -142,9 +142,9 @@ def test_exact_quantiles_events_shape(spark):
 
 
 def test_exact_quantiles_scan_count(spark):
-    """The point of the r16 swap: the ranked relation is single-consumer,
-    so one exact_quantiles call costs at most 4 source scans on the
-    events shape (the pre-swap two-consumer body cost 8)."""
+    """The operator cuts its own input, so the final plan of one
+    exact_quantiles call reads no parquet at all: the single scan runs
+    when the cut input is first materialized."""
     from prod_data_pipeline_spark.sources.readers import load_table
 
     ev = (
@@ -155,4 +155,79 @@ def test_exact_quantiles_scan_count(spark):
     probs = {"p50": 0.5, "p90": 0.9, "p99": 0.99}
     q = exact_quantiles(ev, "value", probs, by=["event_type"])
     n = q._jdf.queryExecution().executedPlan().toString().count("Scan parquet")
-    assert n <= 4, n
+    assert n == 0, n
+
+
+def test_rank_operators_read_input_once(spark):
+    """Both operators evaluate their input once: the bounds sketch, the
+    bucketing pass and the bucket counts all read the operator's own
+    lineage cut, so an accumulator-ticking UDF in the input ticks once per
+    row."""
+    from pyspark.sql.types import DoubleType
+
+    n = 5000
+
+    def ticking_input():
+        acc = spark.sparkContext.accumulator(0)
+
+        def tick(x):
+            acc.add(1)
+            return float(x % 97)
+
+        v = F.udf(tick, DoubleType())(F.col("id"))
+        g = (F.col("id") % 3).alias("g")
+        return spark.range(0, n, 1, 4).select("id", v.alias("v"), g), acc
+
+    df, acc = ticking_input()
+    ranks = [r["rank"] for r in bucketed_global_rank(df, ["v", "id"]).collect()]
+    assert sorted(ranks) == list(range(1, n + 1))
+    assert acc.value == n, acc.value
+
+    df, acc = ticking_input()
+    got = exact_quantiles(df, "v", {"p50": 0.5}, by=["g"]).collect()
+    assert len(got) == 3
+    assert acc.value == n, acc.value
+
+
+def test_rank_queries_reliable_checkpoint_mode(tmp_path):
+    """With $SPARK_GRAFT_CHECKPOINT_DIR set, the rank operators' input cut
+    is a reliable checkpoint instead of a local one; two rank-family
+    queries (a plain rank and two chained quantile passes) must still
+    match their oracles, and the cut must write RDD blocks under the
+    directory.  Runs in a subprocess because a SparkContext checkpoint
+    dir cannot be unset once configured."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import SF_DIR
+
+    ckpt = tmp_path / "ckpt"
+    script = r"""
+import glob, json, os, sys
+sys.path.insert(0, os.environ["REPO"])
+from prod_data_pipeline_spark.session import get_spark
+from tests.parity import check_query
+spark = get_spark(cpus=4)
+names = ["orders_price_deciles", "events_value_mad_outliers"]
+for name in names:
+    check_query(spark, name, os.environ["SF_DIR"])
+rdd_dirs = glob.glob(os.path.join(os.environ["SPARK_GRAFT_CHECKPOINT_DIR"], "*", "rdd-*"))
+print(json.dumps({"checked": names, "n_rdd_dirs": len(rdd_dirs),
+                  "ckpt": spark.sparkContext.getCheckpointDir() is not None}))
+"""
+    env = dict(
+        os.environ,
+        REPO=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        SPARK_GRAFT_CHECKPOINT_DIR=str(ckpt),
+        SF_DIR=SF_DIR,
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True, text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["ckpt"] and len(out["checked"]) == 2
+    assert out["n_rdd_dirs"] >= 1

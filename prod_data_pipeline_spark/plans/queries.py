@@ -16,9 +16,9 @@ parquet tables.  Conventions that make the value-hash comparison exact:
 - averages are written as (exact_sum_as_double) / count — one double
   division instead of engine-specific AVG accumulation;
 - top-k queries always carry a unique tie-break key;
-- ``events.ts`` is parquet TIMESTAMP(NANOS): Spark reads int64 nanos
-  (sources.readers.load_table converts with `div 1000`), DuckDB truncates
-  on CAST(ts AS TIMESTAMP) — identical micros on both sides.
+- ``events.ts`` is naive parquet TIMESTAMP(MICROS): Spark reads it as a
+  session-UTC TIMESTAMP (sources.readers.load_table), DuckDB as a naive
+  UTC TIMESTAMP — identical micros on both sides.
 
 Reference parity notes cite /root/reference file:line in each docstring.
 """

@@ -11,9 +11,9 @@ local[N]:
 - Session timezone pinned to UTC: the reference's event timestamps are
   ISO-8601 ``Z`` strings (data/sample_raw/generate_events.py:9-10) and the
   DuckDB correctness oracle compares naive-UTC timestamps.
-- ``nanosAsLong=true``: the test tables carry parquet TIMESTAMP(NANOS)
-  which Spark has no native type for; we read the raw int64 and convert to
-  micros explicitly (sources.readers.load_table).
+- ``inferTimestampNTZ=false``: the test tables carry naive parquet
+  TIMESTAMP(MICROS), read as the session-UTC TIMESTAMP type
+  (sources.readers.load_table casts for sessions built elsewhere).
 """
 
 from __future__ import annotations
@@ -32,7 +32,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Parquet timestamps without a timezone annotation (isAdjustedToUTC=false)
     # read as TIMESTAMP_LTZ, not TIMESTAMP_NTZ.  The test tables store naive
     # micros; with the session pinned to UTC the instant is identical, and the
@@ -155,6 +154,12 @@ def truncate_lineage(df, eager: bool = True):
 
     Usage is drop-in at method position: ``df.transform(truncate_lineage,
     eager=False)`` replaces ``df.localCheckpoint(eager=False)``.
+
+    A lazy cut (``eager=False``) defers only the work after the last
+    exchange.  Taking the cut builds the plan's RDD, and adaptive execution
+    runs every exchange's map stage to do so: a narrow plan costs 0 jobs
+    when the cut is taken, a ``groupBy`` plan 1.  That work shows up in the
+    caller's build time, not in its first action or its final plan.
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
@@ -169,13 +174,12 @@ def truncate_lineage(df, eager: bool = True):
             out = df.checkpoint(eager=True)
             df.unpersist()
             return out
-        # Lazy mode: materialization happens at the caller's first action.
-        # Persist FIRST — a bare checkpoint(eager=False) recomputes the
-        # whole plan in the checkpoint-write job (the same RDD.checkpoint
-        # caveat the eager branch mitigates), which would make every
-        # pre-sort lazy lineage cut execute its pipeline twice on
-        # checkpoint-dir sessions — the opposite of what those call sites
-        # want (round-9 advisor).  The trade-off: the pinned blocks are
+        # Lazy mode: persist FIRST — a bare checkpoint(eager=False)
+        # recomputes the whole plan in the checkpoint-write job (the same
+        # RDD.checkpoint caveat the eager branch mitigates), which would
+        # make every pre-sort lazy lineage cut execute its pipeline twice
+        # on checkpoint-dir sessions — the opposite of what those call
+        # sites want (round-9 advisor).  The trade-off: the pinned blocks are
         # only reclaimed when the caller drops the plan (ContextCleaner);
         # there is no post-checkpoint hook in lazy mode to unpersist at.
         return df.persist(StorageLevel.MEMORY_AND_DISK).checkpoint(eager=False)
@@ -197,6 +201,10 @@ def compact_for_sort(df):
     1000-executor cluster, where a big pair relation still sorts in
     parallel) while cutting the tiny-relation task count 8x.  The
     exchange itself is one narrow shuffle of the already-slim output.
+
+    The cut is lazy, but the ``repartition`` is an exchange, so its map
+    stage (and any upstream stage not yet run) executes when this function
+    is called: 1 job at build time (see truncate_lineage).
     """
     sc = df.sparkSession.sparkContext
     n = max(1, sc.defaultParallelism // 4)

@@ -20,6 +20,11 @@ mutable pointer.  This module implements that pattern minimally:
 - **Readers** resolve the pointer (or an explicit version — time travel)
   and read exactly the listed files: no directory listing, no torn reads,
   and a reader holding version N is immune to any concurrent commit.
+- **Strict format**: every version records the table schema and each
+  listed file's physical row count (``file_rows``), measured once when
+  the file was written.  Reads project to the recorded schema and no
+  operation re-reads footers or recounts rows; ``read_manifest`` rejects
+  a version missing either field instead of guessing.
 - **Scale**: the manifest holds file paths + row counts, kilobytes per
   thousand files; the pointer swap is the only coordination point.
 - **Concurrency**: commits serialize under a single-host ``flock`` on the
@@ -52,15 +57,27 @@ from pyspark.sql import DataFrame, SparkSession
 class Snapshot:
     """One committed table version: the manifest record.  The only list
     of the manifest's fields — ``_publish`` writes ``asdict`` of it (field
-    order = JSON key order) and ``read_manifest`` reads it back, keys
-    missing from older manifests taking the defaults below."""
+    order = JSON key order) and ``read_manifest`` reads it back."""
 
     version: int
     files: list[str]
+    # physical rows across ``files``: the sum of ``file_rows`` (_carry)
     n_rows: int
     # "append" | "overwrite" | "delete" | "mor-delete" | "merge-deletes"
     # | "replace_where" | "compact" | "rollback"
     mode: str
+    # authoritative table schema (Spark StructType jsonValue, all fields
+    # nullable), recorded at commit time and evolved ADDITIVELY: previous
+    # columns keep position and type, columns new to a commit append.
+    # Readers project to it (spark.read.schema), so a table's width is a
+    # manifest fact — stable across footer sampling and pending MOR
+    # delete state — and reads pay ZERO footer scans, the Iceberg/Delta
+    # schema-in-metadata design.
+    schema: dict
+    # per-file physical row count {file: n}, measured by the scan that
+    # collects a new file's stats and carried with the file from then on
+    # (MOR-hidden rows included until a rewrite folds them in).
+    file_rows: dict
     # zone maps: {file: {col: [min, max]}} for the columns the writer chose
     # to track (commit_snapshot stats_cols=...).  Files written before stats
     # were tracked simply have no entry and are never pruned away.
@@ -88,18 +105,6 @@ class Snapshot:
     # re-inserted key survives.  read_snapshot applies the filters;
     # compact_deletes folds them back into data files.
     deletes: dict = field(default_factory=dict)
-    # authoritative table schema (Spark StructType jsonValue, all fields
-    # nullable), recorded at commit time and evolved ADDITIVELY: previous
-    # columns keep position and type, columns new to a commit append.
-    # Readers project to it (spark.read.schema), so a table's width is a
-    # manifest fact — stable across footer sampling and pending MOR
-    # delete state (r13 advisory: per-group footer promotion made the
-    # same table expose evolved columns before compaction and hide them
-    # after) — and reads pay ZERO footer scans, the Iceberg/Delta
-    # schema-in-metadata design.  None on tables whose last commit
-    # predates round 14 (legacy: reads fall back to footer behavior; the
-    # next commit records the footer-merged union once).
-    schema: dict | None = None
 
 
 class ConcurrentCommit(Exception):
@@ -223,8 +228,17 @@ def current_version(table_path: str) -> int | None:
 
 
 def read_manifest(table_path: str, version: int) -> Snapshot:
+    """The Snapshot stored as ``version``; raises ValueError when the
+    record lacks the schema or the per-file row counts every version
+    must carry."""
     with open(os.path.join(_manifest_dir(table_path), f"v{version}.json")) as f:
-        return Snapshot(**json.load(f))
+        record = json.load(f)
+    for key in ("schema", "file_rows"):
+        if record.get(key) is None:
+            raise ValueError(
+                f"manifest v{version} of {table_path} has no {key!r} field"
+            )
+    return Snapshot(**record)
 
 
 def _read_head(table_path: str, version: int | None = None) -> Snapshot:
@@ -259,7 +273,7 @@ def _collect_file_stats(
     written: list[str],
     stats_cols: tuple[str, ...],
     bloom_cols: tuple[str, ...] = (),
-) -> tuple[int, dict, dict, dict]:
+) -> tuple[dict, dict, dict, dict]:
     """One scan of the just-written files: per-file row count plus min/max
     zone maps AND null counts for `stats_cols`.  Cost is a single
     combiner-friendly agg over data the page cache still holds — the
@@ -290,13 +304,13 @@ def _collect_file_stats(
         .collect()
     )
 
+    rows_by_base = {}
     by_base = {}
     bloom_by_base = {}
     null_by_base = {}
-    n_new = 0
     for r in rows:
-        n_new += r["__n"]
         base = os.path.basename(r["__f"])
+        rows_by_base[base] = r["__n"]
         if stats_cols:
             by_base[base] = {
                 c: [_stats_repr(r[f"__mn_{c}"]), _stats_repr(r[f"__mx_{c}"])]
@@ -311,10 +325,11 @@ def _collect_file_stats(
                 for c in bloom_cols
             }
     # a ZERO-ROW part file never surfaces in the groupBy above (no rows to
-    # group); record it explicitly as [None, None] bounds + 0 nulls, which
-    # downstream consumers already treat soundly (prune keeps it a no-op,
-    # replace_where classifies it all-null ⇒ keepable/droppable, never
-    # 'missing stats forever')
+    # group); record it explicitly as 0 rows and [None, None] bounds + 0
+    # nulls, which downstream consumers already treat soundly (prune keeps
+    # it a no-op, replace_where classifies it all-null ⇒
+    # keepable/droppable, never 'missing stats forever')
+    file_rows = {f: rows_by_base.get(os.path.basename(f), 0) for f in written}
     if stats_cols:
         for f in written:
             base = os.path.basename(f)
@@ -332,7 +347,7 @@ def _collect_file_stats(
         for f in written
         if os.path.basename(f) in null_by_base
     }
-    return n_new, stats, blooms, nulls
+    return file_rows, stats, blooms, nulls
 
 
 _BLOOM_BITS = 1024
@@ -397,64 +412,41 @@ def _schema_value(df: DataFrame) -> dict:
     ).jsonValue()
 
 
-def _auth_struct(snap: "Snapshot"):
-    """The snapshot's authoritative schema as a StructType, or None on a
-    legacy table (no schema recorded yet)."""
+def _reader(spark: SparkSession, snap: "Snapshot"):
+    """The reader for ``snap``'s files — every read and every rewrite
+    (COW delete, delete compaction, bin-pack): projection to the recorded
+    schema, so pre-evolution files read evolved columns as NULL and no
+    footer is opened to decide the width."""
     from pyspark.sql.types import StructType
 
-    return StructType.fromJson(snap.schema) if snap.schema else None
+    return spark.read.schema(StructType.fromJson(snap.schema))
 
 
 def _require_schema_column(snap: "Snapshot", col: str, op: str) -> None:
     """Fail fast when a delete targets a column the recorded schema does
     not contain: SQL errors on an unknown column, and before this guard a
     typo'd ``delete_where(col, None)`` read the phantom column as
-    all-NULL and deleted EVERY row in its rewrite set.  Legacy tables
-    (no recorded schema) keep the old decidable-NULL behavior — absence
-    cannot be proven there without a footer scan."""
-    auth = _auth_struct(snap)
-    if auth is not None and col not in auth.fieldNames():
+    all-NULL and deleted EVERY row in its rewrite set."""
+    names = [f["name"] for f in snap.schema["fields"]]
+    if col not in names:
         raise ValueError(
-            f"{op}({col!r}): column not in the table schema "
-            f"{auth.fieldNames()}"
+            f"{op}({col!r}): column not in the table schema {names}"
         )
 
 
-def _rewrite_reader(spark: SparkSession, snap: "Snapshot"):
-    """The reader every rewrite path (COW delete, delete compaction,
-    bin-pack) uses: authoritative-schema projection when the manifest
-    records one, merged footers otherwise — never a sampled footer,
-    which could drop an evolved column's data from rewritten files."""
-    auth = _auth_struct(snap)
-    if auth is not None:
-        return spark.read.schema(auth)
-    return spark.read.option("mergeSchema", "true")
-
-
-def _evolve_schema_value(
-    spark: SparkSession, prev: "Snapshot | None", df: DataFrame
-) -> dict:
+def _evolve_schema_value(prev: "Snapshot | None", df: DataFrame) -> dict:
     """Additive schema evolution at commit time: previous columns keep
     their position and type; columns new to ``df`` append in frame order.
-    A same-name type conflict is a corrupt evolution and fails fast.
-    Legacy base (files committed before schemas were recorded): the
-    previous width is recovered ONCE from merged footers and recorded
-    from then on — the only footer scan a schema-recorded table ever
-    pays.  A recorded schema keeps evolving additively even when the
-    previous version has NO files (every row deleted): deletes carry the
-    schema forward, so an append to an emptied table must not silently
-    reset the recorded width/column order or skip the type-conflict
-    check (r14 advisory #2)."""
+    A same-name type conflict is a corrupt evolution and fails fast.  A
+    recorded schema keeps evolving additively even when the previous
+    version has NO files (every row deleted): deletes carry the schema
+    forward, so an append to an emptied table must not silently reset
+    the recorded width/column order or skip the type-conflict check."""
     from pyspark.sql.types import StructField, StructType
 
-    if prev is None or (not prev.files and not prev.schema):
+    if prev is None:
         return _schema_value(df)
-    if prev.schema:
-        base = StructType.fromJson(prev.schema)
-    else:
-        base = (
-            spark.read.option("mergeSchema", "true").parquet(*prev.files).schema
-        )
+    base = StructType.fromJson(prev.schema)
     fields = [StructField(f.name, f.dataType, True) for f in base.fields]
     have = {f.name: f.dataType for f in fields}
     for f in df.schema.fields:
@@ -474,13 +466,13 @@ class _NewFiles(NamedTuple):
     measured (see _collect_file_stats)."""
 
     files: list[str]
-    n_rows: int
+    file_rows: dict
     stats: dict
     blooms: dict
     nulls: dict
 
 
-_NO_NEW_FILES = _NewFiles([], 0, {}, {}, {})
+_NO_NEW_FILES = _NewFiles([], {}, {}, {}, {})
 
 
 def _write_data_files(
@@ -570,12 +562,11 @@ def commit_snapshot(
         base = prev if mode == "append" else None
         return Snapshot(
             version,
-            n_rows=(base.n_rows if base else 0) + new.n_rows,
             mode=mode,
             meta=meta or {},
             # evolved against the ACTUAL head (under the commit lock), so
             # a concurrent append's new columns are never dropped
-            schema=_evolve_schema_value(df.sparkSession, base, df),
+            schema=_evolve_schema_value(base, df),
             **_carry(base, base.files if base else [], new),
         )
 
@@ -660,16 +651,21 @@ def _carry_deletes(prev_deletes: dict, kept_files: list[str]) -> dict:
 
 def _carry(base: Snapshot | None, carried: list[str], new: _NewFiles) -> dict:
     """The per-file fields of a commit that lists ``carried`` files of
-    ``base`` untouched, then ``new``: carried files keep their stats,
-    blooms and null counts, and the MOR delete entries scoping them —
-    rewritten files had their pending entries folded in."""
+    ``base`` untouched, then ``new``: carried files keep their row
+    counts, stats, blooms and null counts, and the MOR delete entries
+    scoping them — rewritten files had their pending entries folded in.
+    ``n_rows`` is the sum of the listed files' row counts: the one place
+    a version's row count is computed."""
     keep = set(carried)
 
     def merged(old: dict, fresh: dict) -> dict:
         return {**{f: x for f, x in old.items() if f in keep}, **fresh}
 
+    file_rows = merged(base.file_rows if base else {}, new.file_rows)
     return dict(
         files=carried + new.files,
+        n_rows=sum(file_rows.values()),
+        file_rows=file_rows,
         stats=merged(base.stats if base else {}, new.stats),
         blooms=merged(base.blooms if base else {}, new.blooms),
         nulls=merged(base.nulls if base else {}, new.nulls),
@@ -677,18 +673,7 @@ def _carry(base: Snapshot | None, carried: list[str], new: _NewFiles) -> dict:
     )
 
 
-def _has_pending(snap: Snapshot, files) -> bool:
-    """True when any MOR delete entry scopes one of ``files`` — a rewrite
-    of those files must fold the entries in via _grouped_delete_read."""
-    touched = set(files)
-    return any(
-        touched & set(e["applies_to"]) for e in snap.deletes.values()
-    )
-
-
-def _grouped_delete_read(
-    reader, entries: dict, files: list, allow_missing: bool = False
-):
+def _grouped_delete_read(reader, entries: dict, files: list):
     """Read ``files`` with every applicable MOR delete entry applied — to
     exactly the files each entry scopes, never the whole union.  An
     entry's filter must NOT touch files outside its applies_to: a file
@@ -697,7 +682,11 @@ def _grouped_delete_read(
     destroy it.  Files are grouped by their applicable entry-set (one or
     two groups in practice), each group filtered once, and the groups
     unioned — the shared kernel behind read_snapshot and every rewrite
-    path (COW delete, bin-pack compaction, delete compaction)."""
+    path (COW delete, bin-pack compaction, delete compaction).  ``reader``
+    projects to the recorded schema (_reader), so every group has the
+    table's full width and every entry's column resolves: a file written
+    before the column existed reads it as NULL, which a value delete
+    never matches."""
     from pyspark.sql import functions as F
 
     scopes = {did: set(e["applies_to"]) for did, e in (entries or {}).items()}
@@ -710,53 +699,13 @@ def _grouped_delete_read(
     parts = []
     for key in sorted(groups, key=sorted):
         df = reader.parquet(*groups[key])
-        missing = [
-            entries[did]["col"]
-            for did in key
-            if entries[did]["col"] not in df.columns
-        ]
-        if missing:
-            # Without mergeSchema Spark samples ONE footer for the group's
-            # schema; in a group mixing pre- and post-evolution files it
-            # may sample an old file and hide a column the newer files DO
-            # carry — skipping the filter on that evidence would silently
-            # resurrect deleted rows.  Merge the group's footers for an
-            # authoritative answer; only a column absent from EVERY file
-            # gets the decidable-NULL shortcut below.
-            merged = (
-                df.sparkSession.read.option("mergeSchema", "true")
-                .parquet(*groups[key])
-            )
-            if any(c in merged.columns for c in missing):
-                df = merged
         for did in sorted(key):
             e = entries[did]
-            if e["col"] not in df.columns:
-                # Schema-evolved scope: these files predate the column, so
-                # every row reads it as NULL.  Resolving F.col would throw
-                # unresolved-column; the NULL semantics are decidable here
-                # instead — a non-NULL delete value matches nothing (skip
-                # the filter), a NULL delete value matches every row
-                # (drop the group's rows outright).
-                if e["value"] is None:
-                    df = df.filter(F.lit(False))
-                continue
             df = df.filter(~F.col(e["col"]).eqNullSafe(F.lit(e["value"])))
         parts.append(df)
     out = parts[0]
-    # Groups can come back with DIFFERENT widths even under a non-merging
-    # reader: the footer-merge promotion above widens exactly the groups
-    # a schema-evolved delete scopes, while unscoped groups keep their
-    # sampled schema.  A strict unionByName would then crash every
-    # default read and every rewrite (bin-pack has no merge knob at
-    # all), so divergent column sets always union with
-    # allowMissingColumns=True — the absent columns ARE null for those
-    # rows, which is strictly more faithful than plain Spark's
-    # sampled-footer projection, and rewrites must never drop an
-    # evolved column's data anyway.
     for df in parts[1:]:
-        allow = allow_missing or set(df.columns) != set(out.columns)
-        out = out.unionByName(df, allowMissingColumns=allow)
+        out = out.unionByName(df)
     return out
 
 
@@ -765,7 +714,6 @@ def read_snapshot(
     table_path: str,
     version: int | None = None,
     prune: tuple[str, object, object] | None = None,
-    merge_schema: bool = False,
 ) -> DataFrame:
     """Read a table version (default: current).  Time travel = pass an
     older version; the files it lists are immutable, so the read is
@@ -777,32 +725,20 @@ def read_snapshot(
     `read_snapshot(...).filter(lo <= col <= hi)` exactly — skipping is a
     physical optimization, never a semantic one.
 
-    Schema: on tables whose manifest records the authoritative schema
-    (every commit since round 14), the read projects to EXACTLY it —
-    `spark.read.schema(...)` — so the width is a manifest fact: stable
-    across footer sampling, pending MOR delete state, and compaction
-    (r13 advisory), with NULLs for pre-evolution rows and zero footer
-    scans, the Iceberg/Delta schema-in-metadata design.  `merge_schema`
-    is then moot.  On LEGACY tables (no recorded schema) the flag keeps
-    its old meaning: `merge_schema=True` footprint-scans every footer
-    for the additive union; False samples one footer (plain Spark)."""
+    Schema: the read projects to EXACTLY the version's recorded schema
+    (`spark.read.schema(...)`), so the width is a manifest fact: stable
+    across footer sampling, pending MOR delete state, and compaction,
+    with NULLs for pre-evolution rows and zero footer scans, the
+    Iceberg/Delta schema-in-metadata design."""
     from pyspark.sql import functions as F
 
     snap = _read_head(table_path, version)
-    auth = _auth_struct(snap)
-    if auth is not None:
-        reader = spark.read.schema(auth)
-    elif merge_schema:
-        reader = spark.read.option("mergeSchema", "true")
-    else:
-        reader = spark.read
+    reader = _reader(spark, snap)
 
     def _with_deletes(files: list[str]) -> DataFrame:
         # apply merge-on-read equality deletes to exactly the files each
         # entry scopes (grouped by entry-set — _grouped_delete_read)
-        return _grouped_delete_read(
-            reader, snap.deletes, files, allow_missing=merge_schema
-        )
+        return _grouped_delete_read(reader, snap.deletes, files)
 
     if prune is None:
         return _with_deletes(snap.files)
@@ -853,41 +789,17 @@ def delete_where(
     rewrite = set(prune_files_eq(snap, col, value))
     carried = [f for f in snap.files if f not in rewrite]
 
-    new, n_rewritten_before = _NO_NEW_FILES, 0
+    new = _NO_NEW_FILES
     if rewrite:
-        n_rewritten_before = spark.read.parquet(*sorted(rewrite)).count()
         # fold pending MOR deletes in — scoped to exactly the files each
         # entry covers (a union-wide filter would destroy a key
         # re-inserted by a later append) — then apply this delete's own
-        # predicate.
-        # REWRITES always read full-width: the authoritative manifest
-        # schema when recorded, else merged footers — a sampled narrow
-        # footer would silently DROP an evolved column's data from the
-        # rewritten files (reads may project; rewrites must not lose
-        # columns).  Footer merging is negligible next to the full read
-        # the rewrite performs anyway.
+        # predicate.  The read has the recorded width, so the rewritten
+        # files keep every evolved column's data.
         src = _grouped_delete_read(
-            _rewrite_reader(spark, snap), snap.deletes, sorted(rewrite)
+            _reader(spark, snap), snap.deletes, sorted(rewrite)
         )
-        # The full-width grouped read above is AUTHORITATIVE: it carries
-        # the recorded schema (or, on a legacy table, every column present
-        # in ANY rewrite file via merged footers).  `col not in
-        # src.columns` therefore only happens on a LEGACY table whose
-        # rewrite set entirely predates the column (the schema-recorded
-        # path already failed fast on unknown columns above) and the
-        # decidable-NULL branches below apply.  Do NOT "fall back" to a
-        # raw re-read here: it would bypass the pending MOR delete filters
-        # folded in by the grouped read and resurrect deleted rows in the
-        # rewritten files (r13 advisory).
-        if col in src.columns:
-            kept_rows = src.filter(~F.col(col).eqNullSafe(F.lit(value)))
-        elif value is None:
-            # every row reads the absent column as NULL: a NULL-targeted
-            # delete drops them all (same decidable-NULL semantics as
-            # the grouped MOR read)
-            kept_rows = src.filter(F.lit(False))
-        else:
-            kept_rows = src  # non-NULL value matches nothing here
+        kept_rows = src.filter(~F.col(col).eqNullSafe(F.lit(value)))
         new = _write_data_files(kept_rows, table_path, *_tracked_cols(snap))
 
     # the prune/rewrite plan was computed against the head; a concurrent
@@ -896,7 +808,6 @@ def delete_where(
         table_path,
         lambda _, version: Snapshot(
             version,
-            n_rows=snap.n_rows - n_rewritten_before + new.n_rows,
             mode="delete",
             schema=snap.schema,  # a delete never changes the width
             **_carry(snap, carried, new),
@@ -994,17 +905,15 @@ def compact_deletes(spark: SparkSession, table_path: str) -> Snapshot:
     rewrite_set = set(rewrite)
     carried = [f for f in snap.files if f not in rewrite_set]
 
-    n_before = spark.read.parquet(*rewrite).count()
     # scoped per entry — never a union-wide filter (sequencing contract);
     # full-width read so the rewrite can never drop an evolved column
-    src = _grouped_delete_read(_rewrite_reader(spark, snap), snap.deletes, rewrite)
+    src = _grouped_delete_read(_reader(spark, snap), snap.deletes, rewrite)
     new = _write_data_files(src, table_path, *_tracked_cols(snap))
     # every entry's scope was rewritten, so no delete entry carries
     return _publish(
         table_path,
         lambda _, version: Snapshot(
             version,
-            n_rows=snap.n_rows - n_before + new.n_rows,
             mode="merge-deletes",
             meta={"merged_delete_entries": len(snap.deletes)},
             schema=snap.schema,
@@ -1153,22 +1062,18 @@ def commit_replace_where(
                 "including the partition column and partition-clustered files"
             )
 
-    spark = df.sparkSession
     new = _write_data_files(
         df, table_path, tuple(sorted(set(stats_cols) | {col})), bloom_cols
     )
-    # rows per file aren't stored: one cheap count over the kept files only
-    n_kept = spark.read.parquet(*kept).count() if kept else 0
     return _publish(
         table_path,
         lambda _, version: Snapshot(
             version,
-            n_rows=n_kept + new.n_rows,
             mode="replace_where",
             meta={**(meta or {}), "replace_where": [col, _stats_repr(value)]},
             # kept files from other partitions retain their columns, so
             # the width evolves additively against the previous schema
-            schema=_evolve_schema_value(spark, prev, df),
+            schema=_evolve_schema_value(prev, df),
             **_carry(prev, kept, new),
         ),
         op="replace_where",
@@ -1267,14 +1172,12 @@ def rewrite_small_files(
     small_set = set(small)
     carried = [f for f in snap.files if f not in small_set]
 
-    pending = _has_pending(snap, small)
-    n_small_before = spark.read.parquet(*small).count() if pending else 0
     total = sum(os.path.getsize(f) for f in small)
     n_out = max(1, -(-total // target_file_bytes))  # ceil div
     # fold pending MOR deletes into the compaction (the classic
     # merge-on-read maintenance contract), scoped per entry — a
     # union-wide filter would destroy later-appended re-inserts
-    src = _grouped_delete_read(_rewrite_reader(spark, snap), snap.deletes, small)
+    src = _grouped_delete_read(_reader(spark, snap), snap.deletes, small)
     if partition_col is None:
         new = _write_data_files(
             src.coalesce(int(n_out)), table_path, *_tracked_cols(snap)
@@ -1306,12 +1209,6 @@ def rewrite_small_files(
         table_path,
         lambda _, version: Snapshot(
             version,
-            # row-preserving by construction UNLESS pending MOR deletes
-            # were folded in — then the physical count drops by the rows
-            # they hid (measured over the written files)
-            n_rows=snap.n_rows - n_small_before + new.n_rows
-            if pending
-            else snap.n_rows,
             mode="compact",
             meta={"compacted_files": len(small), "new_files": len(new.files)},
             schema=snap.schema,  # layout-only: width unchanged

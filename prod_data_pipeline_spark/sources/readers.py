@@ -31,16 +31,12 @@ TABLES = [
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one test table; normalize nanosecond timestamps to micros.
+    """Read one test table; read naive timestamps as session-UTC TIMESTAMP.
 
-    The `events` table stores parquet TIMESTAMP(NANOS), which Spark reads
-    as int64 only under ``spark.sql.legacy.parquet.nanosAsLong``.  We
-    convert with integer division (never float — ns-since-epoch overflows
-    a double's 53-bit mantissa) to match DuckDB's ns->us truncation.
+    The `events` table stores ``ts`` as parquet TIMESTAMP(MICROS) without a
+    timezone annotation, which DuckDB reads as naive UTC.
     """
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Naive parquet timestamps read as TIMESTAMP_NTZ unless the session sets
     # parquet.inferTimestampNTZ.enabled=false (session.RUNTIME_CONFS does; this
     # covers externally built sessions).  Session tz is UTC, so the NTZ->LTZ

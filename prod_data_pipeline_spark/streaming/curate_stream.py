@@ -419,7 +419,7 @@ def manifest_commit_batch(
 
     v = current_version(table_path)
     if v is not None:
-        last = (read_manifest(table_path, v).meta or {}).get("last_batch_id", -1)
+        last = read_manifest(table_path, v).meta.get("last_batch_id", -1)
         if batch_id <= last:
             return False  # replayed batch: already committed atomically
     commit_snapshot(

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -533,8 +534,8 @@ def test_stale_head_aborts_every_planned_operation(spark, tmp_path, monkeypatch,
 
 def test_additive_schema_evolution_on_manifest_table(spark, tmp_path):
     """An append that carries a NEW column coexists with pre-evolution
-    files: merge_schema=True returns the union schema with NULLs for old
-    rows; the default read of a homogeneous version is unaffected."""
+    files: the read returns the union schema with NULLs for old rows;
+    the read of a homogeneous version is unaffected."""
     t = str(tmp_path / "tbl")
     commit_snapshot(spark.range(0, 30).withColumn("v", F.col("id")), t)
     commit_snapshot(
@@ -544,13 +545,13 @@ def test_additive_schema_evolution_on_manifest_table(spark, tmp_path):
         t,
         mode="append",
     )
-    cur = read_snapshot(spark, t, merge_schema=True)
+    cur = read_snapshot(spark, t)
     assert set(cur.columns) == {"id", "v", "source"}
     assert cur.count() == 40
     assert cur.filter(F.col("source").isNull()).count() == 30
     assert cur.filter(F.col("source") == "crawl2").count() == 10
     # time travel to the pre-evolution version: old schema, no phantom col
-    old = read_snapshot(spark, t, version=1, merge_schema=True)
+    old = read_snapshot(spark, t, version=1)
     assert set(old.columns) == {"id", "v"}
 
 
@@ -1453,7 +1454,7 @@ def test_mor_delete_on_schema_evolved_column(spark, tmp_path):
     (entry,) = s.deletes.values()
     # the pre-evolution files have no stats for "tier": pruning keeps them
     assert len(entry["applies_to"]) > 1
-    got = read_snapshot(spark, t, merge_schema=True)
+    got = read_snapshot(spark, t)
     assert got.count() == 30 + 5  # old rows intact, tier=1 rows hidden
     assert got.filter(F.col("tier") == 1).count() == 0
     assert got.filter(F.col("tier").isNull()).count() == 30
@@ -1490,7 +1491,7 @@ def test_mor_delete_mixed_schema_group_never_resurrects(spark, tmp_path):
     s = compact_deletes(spark, t)
     assert not (s.deletes or {})
     assert s.n_rows == 35
-    got = read_snapshot(spark, t, merge_schema=True)
+    got = read_snapshot(spark, t)
     assert got.count() == 35
     assert got.filter(F.col("tier") == 1).count() == 0
     assert got.filter(F.col("tier") == 0).count() == 5
@@ -1538,7 +1539,7 @@ def test_mixed_width_groups_union_and_binpack(spark, tmp_path):
     # bin-pack folds the pending delete across the mixed-width groups
     s = rewrite_small_files(spark, t, target_file_bytes=1 << 20)
     assert s.n_rows == 40
-    final = read_snapshot(spark, t, merge_schema=True)
+    final = read_snapshot(spark, t)
     assert final.count() == 40
     assert final.filter(F.col("tier") == 1).count() == 0
 
@@ -1567,7 +1568,7 @@ def test_cow_delete_on_schema_evolved_column(spark, tmp_path):
     )
     s = delete_where(spark, t, "tier", 1)
     assert not (s.deletes or {})
-    got = read_snapshot(spark, t, merge_schema=True)
+    got = read_snapshot(spark, t)
     assert got.count() == 35
     assert got.filter(F.col("tier") == 1).count() == 0
     assert got.filter(F.col("tier").isNull()).count() == 30
@@ -1598,7 +1599,7 @@ def test_binpack_never_drops_evolved_column(spark, tmp_path):
     )
     s = rewrite_small_files(spark, t, target_file_bytes=1 << 20)
     assert s.mode == "compact"
-    got = read_snapshot(spark, t, merge_schema=True)
+    got = read_snapshot(spark, t)
     assert got.count() == 40
     # the evolved column's data survived the rewrite
     assert "tier" in got.columns
@@ -1629,7 +1630,7 @@ def test_authoritative_schema_recorded_and_stable_across_mor_state(spark, tmp_pa
     s2 = commit_snapshot(evolved, t, mode="append", stats_cols=("tier",))
     assert [f["name"] for f in s2.schema["fields"]] == ["id", "v", "tier"]
 
-    # DEFAULT read (merge_schema=False): full recorded width already
+    # DEFAULT read: full recorded width already
     cols_before = read_snapshot(spark, t).columns
     delete_where_mor(spark, t, "tier", 1)
     cols_pending = read_snapshot(spark, t).columns
@@ -1655,37 +1656,35 @@ def test_schema_evolution_is_additive_only(spark, tmp_path):
         commit_snapshot(bad, t, mode="append")
 
 
-def test_legacy_manifest_without_schema_upgrades_on_next_commit(spark, tmp_path):
-    """Tables committed before round 14 carry no schema field: reads fall
-    back to footer behavior, and the NEXT commit records the
-    footer-merged union (one-time scan) so evolved columns are never
-    dropped from the recorded width."""
+@pytest.mark.parametrize("field", ["schema", "file_rows"])
+def test_manifest_missing_schema_or_file_rows_is_rejected(spark, tmp_path, field):
+    """Every version records its schema and per-file row counts; a
+    manifest without either is refused by name (table, version, field)
+    on read, on the next commit and on history, never guessed from
+    footers or recounted."""
     import json
 
     from prod_data_pipeline_spark.sources.manifest import read_manifest
 
     t = str(tmp_path / "tbl")
-    commit_snapshot(
-        spark.range(0, 10)
-        .withColumn("v", F.col("id") * 2)
-        .withColumn("tier", F.lit(1).cast("long")),
-        t,
-    )
-    # simulate a pre-round-14 manifest: strip the schema field
+    commit_snapshot(spark.range(0, 10).withColumn("v", F.col("id") * 2), t)
     mpath = str(tmp_path / "tbl" / "manifests" / "v1.json")
-    m = json.load(open(mpath))
-    del m["schema"]
-    json.dump(m, open(mpath, "w"))
-    assert read_manifest(t, 1).schema is None
-    assert read_snapshot(spark, t).columns == ["id", "v", "tier"]  # footer path
+    with open(mpath) as f:
+        m = json.load(f)
+    del m[field]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
 
-    # next commit appends a NARROWER frame: the recorded union must still
-    # carry every legacy column
-    s2 = commit_snapshot(spark.range(10, 15).withColumn("v", F.lit(0).cast("long")), t, mode="append")
-    assert [f["name"] for f in s2.schema["fields"]] == ["id", "v", "tier"]
-    got = read_snapshot(spark, t)
-    assert got.columns == ["id", "v", "tier"]
-    assert got.filter(F.col("tier").isNull()).count() == 5
+    msg = re.escape(f"manifest v1 of {t} has no '{field}' field")
+    with pytest.raises(ValueError, match=msg):
+        read_manifest(t, 1)
+    with pytest.raises(ValueError, match=msg):
+        read_snapshot(spark, t)
+    with pytest.raises(ValueError, match=msg):
+        snapshots(t)
+    with pytest.raises(ValueError, match=msg):
+        commit_snapshot(spark.range(10, 15).withColumn("v", F.col("id")), t)
+    assert current_version(t) == 1
 
 
 def test_rollback_restores_schema_with_files(spark, tmp_path):
@@ -1843,6 +1842,8 @@ def test_returned_snapshot_equals_stored_manifest(spark, tmp_path):
         lambda: commit_snapshot(
             part(100, 2, 5).withColumn("extra", F.lit("x")), t, **indexes
         ),
+        # an append of no rows: its part file records 0 rows
+        lambda: commit_snapshot(part(300, 3, 0).limit(0), t, **indexes),
         lambda: delete_where_mor(spark, t, "k", "u7"),
         lambda: delete_where(spark, t, "k", "u2"),
         lambda: commit_replace_where(part(200, 1, 0), t, "p", 1, **indexes),
@@ -1852,11 +1853,71 @@ def test_returned_snapshot_equals_stored_manifest(spark, tmp_path):
         lambda: rollback(t, 2),
     ]
     modes = []
+    n_empty_files = 0
     for step in steps:
         s = step()
         modes.append(s.mode)
         assert read_manifest(t, s.version) == s, s.mode
+        # the recorded per-file row counts are the files' physical counts
+        # (zero-row files included) and n_rows is their sum
+        assert sorted(s.file_rows) == sorted(s.files), s.mode
+        for f in s.files:
+            assert s.file_rows[f] == spark.read.parquet(f).count(), (s.mode, f)
+            n_empty_files += s.file_rows[f] == 0
+        assert s.n_rows == sum(s.file_rows.values()), s.mode
     assert modes == [
-        "append", "append", "mor-delete", "delete", "replace_where",
-        "compact", "mor-delete", "merge-deletes", "rollback",
+        "append", "append", "append", "mor-delete", "delete",
+        "replace_where", "compact", "mor-delete", "merge-deletes", "rollback",
     ]
+    assert n_empty_files > 0
+
+
+def test_table_operations_take_row_counts_from_the_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """Rewrites and replacements take ``n_rows`` from the recorded
+    per-file row counts: delete_where, rewrite_small_files (with a MOR
+    delete pending) and compact_deletes run no DataFrame.count job, and
+    commit_replace_where runs exactly one, its out-of-partition
+    validation of the incoming frame."""
+    from prod_data_pipeline_spark.sources.manifest import (
+        commit_replace_where,
+        compact_deletes,
+        delete_where,
+        delete_where_mor,
+        rewrite_small_files,
+    )
+
+    t = _mor_table(spark, tmp_path)  # 30 rows in 3 files
+    days = str(tmp_path / "days")
+    for day in (0, 1):
+        frame = spark.range(day * 10, day * 10 + 10).withColumn("day", F.lit(day))
+        commit_snapshot(frame.coalesce(1), days, stats_cols=("day",))
+
+    # the session's concrete DataFrame class: it overrides
+    # pyspark.sql.DataFrame.count
+    frame_cls = type(spark.range(0))
+    calls = []
+    real_count = frame_cls.count
+
+    def counting(self):
+        calls.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(frame_cls, "count", counting)
+
+    def counts_and_rows(op):
+        calls.clear()
+        snap = op()
+        return len(calls), snap.n_rows
+
+    delete_where_mor(spark, t, "user_id", 12)
+    # physical rows: the hidden user_id=12 row stays until a rewrite folds it
+    assert counts_and_rows(lambda: delete_where(spark, t, "user_id", 3)) == (0, 29)
+    assert counts_and_rows(lambda: rewrite_small_files(spark, t)) == (0, 28)
+    delete_where_mor(spark, t, "user_id", 25)
+    assert counts_and_rows(lambda: compact_deletes(spark, t)) == (0, 27)
+    repl = spark.range(100, 105).withColumn("day", F.lit(1)).coalesce(1)
+    assert counts_and_rows(
+        lambda: commit_replace_where(repl, days, "day", 1, stats_cols=("day",))
+    ) == (1, 15)

@@ -28,8 +28,10 @@ from pyspark.sql import functions as F
 from prod_data_pipeline_spark.sources.manifest import (
     commit_snapshot,
     compact_deletes,
+    current_version,
     delete_where,
     delete_where_mor,
+    read_manifest,
     read_snapshot,
     rewrite_small_files,
 )
@@ -91,6 +93,13 @@ def test_mor_sequencing_matches_model(spark, tmp_path_factory, ops):
     assert got == sorted(model), (
         f"table/model diverged after {ops}: table={got} model={sorted(model)}"
     )
-    # maintenance ops must leave row counts consistent with the manifest
+    # maintenance ops must leave row counts consistent with the manifest:
+    # each recorded per-file count is the file's physical count, and the
+    # head's n_rows is their total (MOR-hidden rows included)
     final = read_snapshot(spark, t)
     assert final.filter(F.col("user_id").isNull()).count() == 0
+    head = read_manifest(t, current_version(t))
+    for f in head.files:
+        assert head.file_rows[f] == spark.read.parquet(f).count(), f
+    physical = spark.read.parquet(*head.files).count() if head.files else 0
+    assert head.n_rows == physical

@@ -221,8 +221,10 @@ def main(argv: list[str] | None = None) -> int:
                     return 2
                 col, raw = args.where
                 value = parse_where_value(raw)
-                op = delete_where_mor if args.mor else delete_where
-                s = op(spark, args.table_path, col, value)
+                if args.mor:
+                    s = delete_where_mor(args.table_path, col, value)
+                else:
+                    s = delete_where(spark, args.table_path, col, value)
                 print(json.dumps({
                     "version": s.version, "mode": s.mode,
                     "n_rows": s.n_rows,

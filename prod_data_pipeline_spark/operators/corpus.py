@@ -35,10 +35,13 @@ from prod_data_pipeline_spark.operators.dedup import drop_exact_dups, near_dup_p
 from prod_data_pipeline_spark.operators.text import quality_score
 
 
+# Round cap of dup_clusters' distributed label propagation.
+MAX_LABEL_ROUNDS = 25
+
+
 def dup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 25,
     driver_edge_threshold: int = 2_000_000,
     driver_byte_budget: int = DRIVER_BYTE_BUDGET,
 ) -> DataFrame:
@@ -58,8 +61,9 @@ def dup_clusters(
     - **large graphs**: distributed min-label propagation — label(x)
       starts at min(x, min neighbor), each round takes the min of its own
       and all neighbors' labels, to fixpoint (at most the component
-      diameter rounds).  Each round is one equi-join plus one groupBy,
-      both shuffled on node id; nothing widens beyond (id, label) rows.
+      diameter rounds, capped at MAX_LABEL_ROUNDS).  Each round is one
+      equi-join plus one groupBy, both shuffled on node id; nothing widens
+      beyond (id, label) rows.
       localCheckpoint truncates per-iteration lineage; on a real cluster
       set a reliable checkpoint dir (sc.setCheckpointDir) and swap in
       .checkpoint() for fault tolerance.
@@ -117,7 +121,7 @@ def dup_clusters(
         )
         .transform(truncate_lineage, eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(MAX_LABEL_ROUNDS):
         nbr = (
             edges.join(labels.withColumnRenamed("id", "src"), "src")
             .groupBy("dst")
@@ -149,7 +153,6 @@ def curate_corpus(
     min_quality: float = 0.45,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = False,
 ) -> DataFrame:
     """Curated corpus: per-document (doc_id, lang, n_tokens, quality) after
     exact dedup, transitive near-dup removal, and the quality threshold.
@@ -159,11 +162,10 @@ def curate_corpus(
     chains collapse to one survivor even when the endpoints never collided
     directly.
 
-    Cache lifecycle: with the default materialize=False the exact-dedup
-    and LSH-signature caches live until session end (caller-owned; keeps
-    the composition one pipelined job — eager checkpoints measured ~2x on
-    this operator's wall at sf0.1).  Pass materialize=True in long-running
-    sessions: the result is checkpointed and both caches are released.
+    Cache lifecycle: the exact-dedup and LSH-signature caches are never
+    unpersisted here; they live until session end or LRU eviction.  That
+    keeps the composition one pipelined job (eager checkpoints measured
+    ~2x on this operator's wall at sf0.1).
     """
     # d1 feeds both the near-dup pipeline and the final keep-join; persist
     # so the exact-dedup semi-join runs once, not per branch
@@ -180,7 +182,6 @@ def curate_corpus(
         text_col,
         threshold=jaccard_threshold,
         sort=False,
-        materialize=materialize,
         collapse_exact=False,
     )
     clusters = dup_clusters(pairs, id_col=id_col)
@@ -193,10 +194,4 @@ def curate_corpus(
         F.size(toks).cast("long").alias("n_tokens"),
         quality_score(toks, F.array_distinct(toks)).alias("quality"),
     )
-    out = scored.filter(F.col("quality") >= min_quality)
-    if materialize:
-        # checkpoint the (per-surviving-doc, 4-column) result, then release
-        # the exact-dedup cache — no session-lifetime storage per call
-        out = out.transform(truncate_lineage, eager=True)
-        d1.unpersist()
-    return out
+    return scored.filter(F.col("quality") >= min_quality)

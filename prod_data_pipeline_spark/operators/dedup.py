@@ -32,6 +32,13 @@ from prod_data_pipeline_spark.session import (
 )
 
 
+# MinHash-LSH recipe of near_dup_pairs: 8 md5 MinHashes in 4 bands of 2.
+MINHASH_HASHES = 8
+LSH_BAND_SIZE = 2
+# Word-shingle width of the blocked Jaccard and sorted-neighborhood joins.
+SHINGLE_N = 3
+
+
 def _maybe_sort(pairs: DataFrame, sort: bool) -> DataFrame:
     """Deterministic (id_a, id_b) ordering for oracle comparison and stable
     reports.  Production pipelines that only consume the pair RELATION
@@ -70,7 +77,7 @@ def with_minhash(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 8,
+    num_hashes: int = MINHASH_HASHES,
     shingle_n: int = 3,
 ) -> DataFrame:
     """Append MinHash signature columns mh_0..mh_{k-1} plus the distinct
@@ -127,8 +134,6 @@ def _near_dup_pairs_lsh(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int,
-    band_size: int,
     shingle_n: int,
     threshold: float,
 ):
@@ -136,14 +141,14 @@ def _near_dup_pairs_lsh(
     corpus: signatures -> band buckets -> candidate self-join -> exact
     Jaccard verify.  Returns (pairs, sig_cache) — the caller owns the
     persisted signature relation's lifecycle."""
-    sig = with_minhash(df, id_col, text_col, num_hashes, shingle_n)
-    sig = sig.select(id_col, "shingle_set", *[f"mh_{j}" for j in range(num_hashes)])
+    sig = with_minhash(df, id_col, text_col, MINHASH_HASHES, shingle_n)
+    sig = sig.select(id_col, "shingle_set", *[f"mh_{j}" for j in range(MINHASH_HASHES)])
     # The signature relation feeds three plan branches (bands + both sides
     # of the verification join); without a persist each branch re-tokenizes
     # and re-hashes the corpus.  MEMORY_AND_DISK spills under pressure; at
     # warehouse scale the equivalent is materializing a signature table.
     sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    bands = lsh_bands(sig, id_col, num_hashes, band_size)
+    bands = lsh_bands(sig, id_col, MINHASH_HASHES, LSH_BAND_SIZE)
     left = bands.alias("l")
     right = bands.alias("r")
     cand = (
@@ -239,8 +244,6 @@ def near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 8,
-    band_size: int = 2,
     shingle_n: int = 3,
     threshold: float = 0.5,
     sort: bool = True,
@@ -268,18 +271,18 @@ def near_dup_pairs(
     (id, md5) group-by — ~0.3 s at sf0.1.
 
     Cache lifecycle: the signature relation (and under collapse_exact the
-    member table) is persisted; with the default materialize=False the
-    CALLER owns those caches' lifetimes — the session releases them at
-    shutdown, or LRU eviction reclaims them under pressure.  This keeps
-    the hot path a single pipelined job (an eager checkpoint costs a
-    measured +0.7 s per call at sf0.1 — scheduling, not data).
-    Long-running sessions calling this in a loop should pass
-    materialize=True: the verified pairs are checkpointed and the caches
-    are released before returning.
+    member table) is persisted; with the default materialize=False they
+    are never unpersisted and the caller gets no handle to them — they
+    live until the session stops, ``spark.catalog.clearCache()`` runs, or
+    LRU eviction reclaims them under pressure.  This keeps the hot path a
+    single pipelined job (an eager checkpoint costs a measured +0.7 s per
+    call at sf0.1 — scheduling, not data).  Long-running sessions calling
+    this in a loop should pass materialize=True: the verified pairs are
+    checkpointed and the caches are released before returning.
     """
     if not collapse_exact:
         out, sig = _near_dup_pairs_lsh(
-            df, id_col, text_col, num_hashes, band_size, shingle_n, threshold
+            df, id_col, text_col, shingle_n, threshold
         )
         if materialize:
             out = out.transform(truncate_lineage, eager=True)
@@ -313,7 +316,7 @@ def near_dup_pairs(
         "left_semi",
     )
     rep_pairs, sig = _near_dup_pairs_lsh(
-        reps, id_col, text_col, num_hashes, band_size, shingle_n, threshold
+        reps, id_col, text_col, shingle_n, threshold
     )
     # self-similarity of an identical pair: Jaccard of a non-empty set
     # with itself is exactly 1.0 (the verified value the uncollapsed
@@ -336,14 +339,13 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     block_cols: tuple = ("lang", "source"),
-    shingle_n: int = 3,
     threshold: float = 0.2,
-    sort: bool = True,
 ) -> DataFrame:
     """Blocked pairwise n-gram Jaccard: exact similarity within blocking
     groups (cheap attribute equality) instead of LSH candidates.  The n^2
-    blowup is bounded per block; pick block_cols so blocks stay small."""
-    sh = F.array_distinct(shingles(tokens(F.col(text_col)), shingle_n))
+    blowup is bounded per block; pick block_cols so blocks stay small.
+    Pairs come back sorted by (id_a, id_b)."""
+    sh = F.array_distinct(shingles(tokens(F.col(text_col)), SHINGLE_N))
     base = ensure_parallelism(df).select(
         F.col(id_col), *[F.col(c) for c in block_cols], sh.alias("sset")
     )
@@ -362,10 +364,12 @@ def ngram_jaccard_pairs(
             "jaccard",
         )
     )
-    return _maybe_sort(out, sort)
+    return out.orderBy("id_a", "id_b")
 
 
-_SIMHASH_BITS = 60
+SIMHASH_BITS = 60
+# Hamming bound of simhash_bucket_pairs; 4 chunks make <= 3 a guaranteed hit.
+SIMHASH_MAX_HAMMING = 3
 
 
 def _token_bit(h: Column, b: int) -> Column:
@@ -395,11 +399,11 @@ def with_simhash(
     h = F.md5(F.col("tok"))
     aggs = [
         F.sum(F.when(_token_bit(h, b) == 1, 1).otherwise(-1)).alias(f"b{b}")
-        for b in range(_SIMHASH_BITS)
+        for b in range(SIMHASH_BITS)
     ]
     per_doc = toked.groupBy(id_col).agg(*aggs)
     sim = None
-    for b in range(_SIMHASH_BITS):
+    for b in range(SIMHASH_BITS):
         bit = F.shiftleft(F.when(F.col(f"b{b}") > 0, F.lit(1)).otherwise(F.lit(0)).cast("long"), b)
         sim = bit if sim is None else sim.bitwiseXOR(bit)
     return per_doc.select(F.col(id_col), sim.alias("simhash"))
@@ -409,7 +413,7 @@ def simhash_bucket_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_hamming: int = 3,
+    max_hamming: int = SIMHASH_MAX_HAMMING,
     sort: bool = True,
     materialize: bool = False,
 ) -> DataFrame:
@@ -417,9 +421,11 @@ def simhash_bucket_pairs(
     bit-chunks (pigeonhole: Hamming distance <= 3 guarantees a shared
     chunk), verified by exact Hamming distance <= max_hamming.
     Cache lifecycle matches near_dup_pairs: materialize=False (default)
-    keeps one pipelined job and the caller owns the simhash cache;
-    materialize=True checkpoints the pair set and releases it."""
-    chunk_bits = _SIMHASH_BITS // 4
+    keeps one pipelined job and leaves the simhash cache persisted, with
+    no handle returned (it lives until the session stops, clearCache()
+    or LRU eviction); materialize=True checkpoints the pair set and
+    releases it."""
+    chunk_bits = SIMHASH_BITS // 4
     mask = (1 << chunk_bits) - 1
     sim = with_simhash(df, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -471,11 +477,10 @@ def substring_dup_spans(
     window: int = 12,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_count: int = 2,
     materialize: bool = True,
 ) -> DataFrame:
     """Span-level EXACT substring dedup (the ExactSubstr family): find the
-    maximal token spans that occur (>= min_count times) ANYWHERE in the
+    maximal token spans that occur (at least twice) ANYWHERE in the
     corpus — across documents or repeated within one — as opposed to the
     whole-document exact/near dedup above.  This is the standard LLM-corpus
     pass that strips boilerplate/licenses/templates repeated verbatim
@@ -518,7 +523,7 @@ def substring_dup_spans(
     dup_h = (
         w.groupBy("h")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
+        .filter(F.col("cnt") >= 2)
         .select("h")
     )
     dupw = w.join(dup_h, "h", "left_semi").select(
@@ -937,29 +942,32 @@ def containment_pairs(
     return out
 
 
+# Sorted-neighborhood blocking: 16-character sort key, 5-record window.
+SNM_KEY_LEN = 16
+SNM_WINDOW = 5
+
+
 def sorted_neighborhood_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    window: int = 5,
-    key_len: int = 16,
     threshold: float = 0.3,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Sorted-neighborhood blocking (the classic entity-resolution
     alternative to LSH banding): sort the corpus by a normalized prefix
-    key, compare each record only against its `window` successors in
-    that order, verify candidates by shingle Jaccard.  Catches
+    key (its first SNM_KEY_LEN characters), compare each record only
+    against its SNM_WINDOW successors in that order, verify candidates
+    by shingle Jaccard.  Catches
     prefix-stable near-dups (shared title/boilerplate head) that land in
     one neighborhood regardless of how later edits perturb MinHash
     bands — the complementary recall profile to docs_near_dup_pairs.
 
     Scale: the global order comes from operators.ranking's two-pass
     bucketed rank — NO single-partition sort.  The rank relation is slim
-    (id, key, rank); the window expansion is a `window`-fold sequence
+    (id, key, rank); the window expansion is a SNM_WINDOW-fold sequence
     explode joined back on rank (equi-join), and shingle sets join in by
     id afterwards, so documents shuffle at most twice and never as
-    key-cartesian blocks.  Candidate count is exactly n*window — load is
+    key-cartesian blocks.  Candidate count is exactly n*SNM_WINDOW — load is
     data-size-linear by construction, the property LSH can't promise
     under adversarial key skew.
 
@@ -973,23 +981,23 @@ def sorted_neighborhood_pairs(
     the remaining ties.
 
     Output: (id_a, id_b, rank_gap, jaccard) for verified pairs, where
-    id_a precedes id_b in key order and 1 <= rank_gap <= window.
+    id_a precedes id_b in key order and 1 <= rank_gap <= SNM_WINDOW.
     """
     from prod_data_pipeline_spark.operators.ranking import bucketed_global_rank
 
     key = F.substring(
         F.regexp_replace(
-            F.lower(F.substring(F.col(text_col), 1, 4 * key_len)), "[^a-z0-9]", ""
+            F.lower(F.substring(F.col(text_col), 1, 4 * SNM_KEY_LEN)), "[^a-z0-9]", ""
         ),
         1,
-        key_len,
+        SNM_KEY_LEN,
     )
     keyed = (
         ensure_parallelism(df)
         .select(
             F.col(id_col).alias("doc_id"),
             key.alias("_key"),
-            F.array_distinct(shingles(tokens(F.col(text_col)), shingle_n)).alias("_sh"),
+            F.array_distinct(shingles(tokens(F.col(text_col)), SHINGLE_N)).alias("_sh"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -1006,7 +1014,7 @@ def sorted_neighborhood_pairs(
     probes = ranked.select(
         F.col("doc_id").alias("id_a"),
         F.col("rank").alias("rank_a"),
-        F.explode(F.sequence(F.col("rank") + 1, F.col("rank") + window)).alias(
+        F.explode(F.sequence(F.col("rank") + 1, F.col("rank") + SNM_WINDOW)).alias(
             "rank_b"
         ),
     )

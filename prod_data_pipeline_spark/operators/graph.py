@@ -34,15 +34,17 @@ from pyspark.storagelevel import StorageLevel
 from prod_data_pipeline_spark.session import truncate_lineage
 from prod_data_pipeline_spark.operators.gates import driver_collect_allowed
 
+# PageRank damping factor, and the digits every quantized rank rounds to.
+DAMPING = 0.85
+RANK_SCALE = 12
+_RANK_DEC = f"decimal({max(RANK_SCALE + 8, 18)},{RANK_SCALE})"
+
 
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     n_iters: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 4,
-    handle_dangling: bool = True,
 ) -> DataFrame:
     """PageRank by power iteration over a directed edge list.
 
@@ -52,12 +54,9 @@ def pagerank(
     round, so total rank stays 1 and the result matches the standard
     eigenvector definition (numpy-verified in tests/test_graph.py).
 
-    ``handle_dangling=False`` drops the per-iteration dangling-mass
-    aggregation branch — pass it when every node is known to have
-    out-edges (e.g. a symmetrized undirected graph), saving one job per
-    iteration.  The edge and node relations are pre-partitioned on the
-    join key before persisting, so each iteration shuffles only the
-    (node, rank) relation.
+    The edge and node relations are pre-partitioned on the join key
+    before persisting, so each iteration shuffles only the (node, rank)
+    relation.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (
@@ -83,20 +82,19 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("contrib"))
         )
-        new_rank = F.lit((1.0 - damping) / n_nodes) + F.lit(damping) * F.coalesce(
+        new_rank = F.lit((1.0 - DAMPING) / n_nodes) + F.lit(DAMPING) * F.coalesce(
             "contrib", F.lit(0.0)
         )
         joined = nodes.join(contribs, nodes.node == contribs.dst, "left")
-        if handle_dangling:
-            # dangling mass: rank not held by any src with out-edges
-            dangling = (
-                ranks.join(deg, ranks.node == deg.src, "left_anti")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
-            )
-            joined = joined.crossJoin(F.broadcast(dangling))
-            new_rank = new_rank + F.lit(damping) * F.col("m") / n_nodes
+        # dangling mass: rank not held by any src with out-edges
+        dangling = (
+            ranks.join(deg, ranks.node == deg.src, "left_anti")
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
+        )
+        joined = joined.crossJoin(F.broadcast(dangling))
+        new_rank = new_rank + F.lit(DAMPING) * F.col("m") / n_nodes
         ranks = joined.select("node", new_rank.alias("rank"))
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
+        if (i + 1) % 4 == 0 and i + 1 < n_iters:  # cut lineage every 4th round
             ranks = ranks.transform(truncate_lineage, eager=True)
 
     # materialize the final state BEFORE releasing the node/edge caches —
@@ -225,10 +223,10 @@ def _dec_half_up(x: float, scale: int):
     return Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP)
 
 
-def _pagerank_quantized_driver(edge_rows, n_iters, damping, scale):
+def _pagerank_quantized_driver(edge_rows, n_iters):
     """Driver-side replay of the quantized PageRank recurrence — the SAME
     engine-independent recipe the distributed loop and the SQL oracle
-    evaluate (contributions rounded HALF_UP to `scale` then summed as
+    evaluate (contributions rounded HALF_UP to RANK_SCALE then summed as
     exact decimals; damped update computed lit + damping*s in that IEEE
     order and rounded back), so the output is bit-identical to the
     cluster path.  `edge_rows` is the SYMMETRIZED distinct edge list."""
@@ -238,16 +236,16 @@ def _pagerank_quantized_driver(edge_rows, n_iters, damping, scale):
     for src, dst in edge_rows:
         adj.setdefault(src, []).append(dst)
     n = len(adj)
-    base = (1.0 - damping) / n
-    rank = {node: _rnd_half_up(1.0 / n, scale) for node in adj}
+    base = (1.0 - DAMPING) / n
+    rank = {node: _rnd_half_up(1.0 / n, RANK_SCALE) for node in adj}
     for _ in range(n_iters):
         sums = {node: Decimal(0) for node in adj}
         for s, ds in adj.items():
-            cd = _dec_half_up(_rnd_half_up(rank[s] / len(ds), scale), scale)
+            cd = _dec_half_up(_rnd_half_up(rank[s] / len(ds), RANK_SCALE), RANK_SCALE)
             for d in ds:
                 sums[d] += cd
         rank = {
-            node: _rnd_half_up(base + damping * float(sums[node]), scale)
+            node: _rnd_half_up(base + DAMPING * float(sums[node]), RANK_SCALE)
             for node in adj
         }
     return sorted(rank.items())
@@ -256,9 +254,6 @@ def _pagerank_quantized_driver(edge_rows, n_iters, damping, scale):
 def pagerank_quantized(
     pairs: DataFrame,
     n_iters: int = 6,
-    damping: float = 0.85,
-    scale: int = 12,
-    checkpoint_every: int = 3,
     driver_edge_threshold: int = 200_000,
 ) -> DataFrame:
     """Cross-engine-deterministic PageRank over an undirected pair graph
@@ -269,17 +264,17 @@ def pagerank_quantized(
     engines, which is why iterative algorithms are usually "rows-only" in
     exact-hash correctness harnesses.  This variant quantizes at the two
     float points of each iteration: every contribution rank/deg rounds to
-    `scale` digits and sums as exact DECIMAL (associative, order-free),
-    and the damped update rounds back to `scale` digits.  Every float op
+    RANK_SCALE digits and sums as exact DECIMAL (associative, order-free),
+    and the damped update rounds back to RANK_SCALE digits.  Every float op
     left (two divisions, one multiply-add) is a single IEEE operation on
     identical inputs, so an engine replaying the recurrence — including
     a SQL engine with the iterations unrolled as CTEs — reproduces the
     values bit-for-bit in practice.  Residual caveat: the rounding itself
     is engine-implemented (Spark rounds the decimal expansion HALF_UP,
     DuckDB rounds the double half-away-from-zero); the two agree except
-    on exact ties at digit `scale`, which after a division are
+    on exact ties at digit RANK_SCALE, which after a division are
     astronomically rare but not impossible.  The quantization perturbs
-    ranks by <= n_iters * 1e-scale, far below reporting precision.
+    ranks by <= n_iters * 1e-RANK_SCALE, far below reporting precision.
 
     Same scale shape as `pagerank`: one (node, rank) shuffle per
     iteration + a scan of the persisted symmetrized edges; symmetric
@@ -306,14 +301,13 @@ def pagerank_quantized(
         # distributed loop below runs as before.
         rows = [(r["src"], r["dst"]) for r in edges.collect()]
         edges.unpersist()
-        out = _pagerank_quantized_driver(rows, n_iters, damping, scale)
+        out = _pagerank_quantized_driver(rows, n_iters)
         return pairs.sparkSession.createDataFrame(out, "node long, rank double")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()  # symmetric graph: every node appears as src
 
-    dec = f"decimal({max(scale + 8, 18)},{scale})"
     ranks = deg.select(
-        F.col("src").alias("node"), F.round(F.lit(1.0) / n, scale).alias("rank")
+        F.col("src").alias("node"), F.round(F.lit(1.0) / n, RANK_SCALE).alias("rank")
     )
     for i in range(n_iters):
         contribs = (
@@ -321,7 +315,7 @@ def pagerank_quantized(
             .join(deg, "src")
             .select(
                 "dst",
-                F.round(F.col("rank") / F.col("deg"), scale).cast(dec).alias("c"),
+                F.round(F.col("rank") / F.col("deg"), RANK_SCALE).cast(_RANK_DEC).alias("c"),
             )
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
@@ -329,11 +323,11 @@ def pagerank_quantized(
         ranks = contribs.select(
             F.col("dst").alias("node"),
             F.round(
-                F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("s").cast("double"),
-                scale,
+                F.lit((1.0 - DAMPING) / n) + F.lit(DAMPING) * F.col("s").cast("double"),
+                RANK_SCALE,
             ).alias("rank"),
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
+        if (i + 1) % 3 == 0 and i + 1 < n_iters:  # cut lineage every 3rd round
             ranks = ranks.transform(truncate_lineage, eager=True)
     # materialize the final state BEFORE releasing the edge cache — the tail
     # iterations' lineage still reads it, and unpersisting a lazy result
@@ -343,7 +337,7 @@ def pagerank_quantized(
     return ranks
 
 
-def _ppr_quantized_driver(edge_rows, seed_list, n_iters, damping, scale):
+def _ppr_quantized_driver(edge_rows, seed_list, n_iters):
     """Driver-side replay of the quantized PPR recurrence — bit-identical
     to the distributed loop (see _pagerank_quantized_driver); state stays
     sparse exactly as the cluster path's (node, rank) relation does."""
@@ -354,23 +348,23 @@ def _ppr_quantized_driver(edge_rows, seed_list, n_iters, damping, scale):
         adj.setdefault(src, []).append(dst)
     seeds = set(seed_list)
     ns = len(seeds)
-    tele = (1.0 - damping) / ns
-    rank = {node: _rnd_half_up(1.0 / ns, scale) for node in seeds}
+    tele = (1.0 - DAMPING) / ns
+    rank = {node: _rnd_half_up(1.0 / ns, RANK_SCALE) for node in seeds}
     for _ in range(n_iters):
         sums: dict = {}
         for s, r in rank.items():
             ds = adj.get(s)
             if not ds:
                 continue
-            cd = _dec_half_up(_rnd_half_up(r / len(ds), scale), scale)
+            cd = _dec_half_up(_rnd_half_up(r / len(ds), RANK_SCALE), RANK_SCALE)
             for d in ds:
                 sums[d] = sums.get(d, Decimal(0)) + cd
         nodes = set(sums) | seeds
         rank = {
             node: _rnd_half_up(
                 (tele if node in seeds else 0.0)
-                + damping * (float(sums[node]) if node in sums else 0.0),
-                scale,
+                + DAMPING * (float(sums[node]) if node in sums else 0.0),
+                RANK_SCALE,
             )
             for node in nodes
         }
@@ -381,9 +375,6 @@ def ppr_quantized(
     pairs: DataFrame,
     seeds: DataFrame,
     n_iters: int = 6,
-    damping: float = 0.85,
-    scale: int = 12,
-    checkpoint_every: int = 3,
     driver_edge_threshold: int = 200_000,
 ) -> DataFrame:
     """Cross-engine-deterministic PERSONALIZED PageRank (random walk with
@@ -395,7 +386,7 @@ def ppr_quantized(
     contamination neighborhoods from flagged docs).
 
     Same quantization recipe as pagerank_quantized (contributions round
-    to `scale` digits and sum as exact DECIMAL; the damped update rounds
+    to RANK_SCALE digits and sum as exact DECIMAL; the damped update rounds
     back), so a SQL engine replaying the unrolled recurrence reproduces
     the bits.  State stays SPARSE: only reached nodes carry rank rows
     (mass on unreached nodes is exactly zero by induction, so absent
@@ -425,20 +416,19 @@ def ppr_quantized(
         rows = [(r["src"], r["dst"]) for r in edges.collect()]
         seed_list = [r["node"] for r in seed_nodes.collect()]
         edges.unpersist()
-        out = _ppr_quantized_driver(rows, seed_list, n_iters, damping, scale)
+        out = _ppr_quantized_driver(rows, seed_list, n_iters)
         return pairs.sparkSession.createDataFrame(out, "node long, rank double")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
 
-    dec = f"decimal({max(scale + 8, 18)},{scale})"
-    tele = (1.0 - damping) / ns  # two IEEE ops, replayed identically in SQL
-    ranks = seed_nodes.select("node", F.round(F.lit(1.0 / ns), scale).alias("rank"))
+    tele = (1.0 - DAMPING) / ns  # two IEEE ops, replayed identically in SQL
+    ranks = seed_nodes.select("node", F.round(F.lit(1.0 / ns), RANK_SCALE).alias("rank"))
     for i in range(n_iters):
         contribs = (
             edges.join(ranks.withColumnRenamed("node", "src"), "src")
             .join(deg, "src")
             .select(
                 "dst",
-                F.round(F.col("rank") / F.col("deg"), scale).cast(dec).alias("c"),
+                F.round(F.col("rank") / F.col("deg"), RANK_SCALE).cast(_RANK_DEC).alias("c"),
             )
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
@@ -452,13 +442,13 @@ def ppr_quantized(
                 "node",
                 F.round(
                     F.when(F.col("_seed") == 1, F.lit(tele)).otherwise(F.lit(0.0))
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * F.coalesce(F.col("s").cast("double"), F.lit(0.0)),
-                    scale,
+                    RANK_SCALE,
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
+        if (i + 1) % 3 == 0 and i + 1 < n_iters:  # cut lineage every 3rd round
             ranks = ranks.transform(truncate_lineage, eager=True)
     ranks = ranks.transform(truncate_lineage, eager=True)
     edges.unpersist()
@@ -728,8 +718,7 @@ def _label_propagation_driver(edge_rows, n_rounds):
 
 
 def label_propagation(
-    pairs: DataFrame, n_rounds: int = 4, checkpoint_every: int = 2,
-    driver_edge_threshold: int = 200_000,
+    pairs: DataFrame, n_rounds: int = 4, driver_edge_threshold: int = 200_000,
 ) -> DataFrame:
     """Synchronous label-propagation communities over an undirected pair
     relation, made ENGINE-DETERMINISTIC: every node starts as its own
@@ -786,17 +775,17 @@ def label_propagation(
             labels.join(best, "node", "left")
             .select("node", F.coalesce("new_label", "label").alias("label"))
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_rounds:
+        if (i + 1) % 2 == 0 and i + 1 < n_rounds:  # cut lineage every 2nd round
             labels = labels.transform(truncate_lineage, eager=True)
     labels = labels.transform(truncate_lineage, eager=True)
     edges.unpersist()
     return labels
 
 
-def adamic_adar(pairs: DataFrame, min_common: int = 1) -> DataFrame:
+def adamic_adar(pairs: DataFrame) -> DataFrame:
     """Adamic-Adar link prediction over an undirected pair relation
     (id_a, id_b): for every NON-adjacent pair (u, v) sharing at least
-    ``min_common`` neighbors, score = sum over common neighbors z of
+    one neighbor, score = sum over common neighbors z of
     1 / ln(deg(z)) — rare shared neighbors count more than hubs.  Over
     the near-dup graph this surfaces document pairs the pairwise
     detector missed but the neighborhood structure predicts (template
@@ -863,7 +852,6 @@ def adamic_adar(pairs: DataFrame, min_common: int = 1) -> DataFrame:
             F.count(F.lit(1)).alias("common_neighbors"),
             F.sum(F.floor(F.col("w") * F.lit(1e12) + F.lit(0.5))).alias("aa_n"),
         )
-        .filter(F.col("common_neighbors") >= min_common)
     )
     out = cand.join(
         e.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")),

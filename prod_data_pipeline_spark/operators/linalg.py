@@ -23,11 +23,16 @@ from pyspark.sql import functions as F
 from prod_data_pipeline_spark.functions.vector import to_double_array
 from prod_data_pipeline_spark.session import truncate_lineage
 
+# Quantized recipe's digit budgets: every product/term is rounded HALF_UP to
+# ROUND_TERM digits before its DECIMAL(38,12) sum, and each power-iteration
+# vector to ROUND_VEC digits.  The SQL oracles replay the same digits.
+ROUND_TERM = 12
+ROUND_VEC = 9
+
 
 def covariance_matrix(
     df: DataFrame,
     emb_col: str = "embedding",
-    round_term: int = 12,
     quantizer: str = "int40",
 ) -> DataFrame:
     """Exact sample covariance as a (i, j, c) relation.
@@ -51,7 +56,7 @@ def covariance_matrix(
       Requires max |centered value| < ~2^11 and
       cmax^2 * n * 2^20 < 2^62 (verified from a max-abs ride-along on
       the count pass; violation raises with a pointer to "decimal").
-    - ``"decimal"``: the original ROUND(p, round_term) -> DECIMAL(38,12)
+    - ``"decimal"``: the original ROUND(p, ROUND_TERM) -> DECIMAL(38,12)
       exact-sum recipe — unbounded range, ~6x the quantization cost.
     - ``"float"``: the PRODUCTION path (round-9 verdict #6) — plain
       double products and double sums, no quantization at all.  Pure
@@ -265,7 +270,7 @@ def covariance_matrix(
                         F.round(
                             F.element_at(F.col("c"), i + 1)
                             * F.element_at(F.col("c"), j + 1),
-                            round_term,
+                            ROUND_TERM,
                         ).alias("p"),
                     ),
                 ),
@@ -293,12 +298,12 @@ def covariance_matrix(
     return upper.unionByName(lower)
 
 
-def _power_iteration_driver(cov_rows, dim, n_iters, round_term, round_vec):
+def _power_iteration_driver(cov_rows, dim, n_iters):
     """Driver-side replay of the quantized power-iteration recurrence —
     the SAME engine-independent recipe the distributed loop and the
-    unrolled SQL oracle evaluate (terms rounded HALF_UP to `round_term`
+    unrolled SQL oracle evaluate (terms rounded HALF_UP to ROUND_TERM
     then summed as exact decimals; norm via one IEEE sqrt; the vector
-    rounded to `round_vec`), so the output is bit-identical to the
+    rounded to ROUND_VEC), so the output is bit-identical to the
     cluster path (pinned by tests/test_similarity.py).  Same pattern as
     graph._pagerank_quantized_driver."""
     import math
@@ -317,13 +322,13 @@ def _power_iteration_driver(cov_rows, dim, n_iters, round_term, round_vec):
         for i, row in cm.items():
             s = Decimal(0)
             for j, cv in row:
-                s += _dec_half_up(cv * v[j], round_term)
+                s += _dec_half_up(cv * v[j], ROUND_TERM)
             u[i] = float(s)
         s2 = Decimal(0)
         for ui in u.values():
-            s2 += _dec_half_up(ui * ui, round_term)
+            s2 += _dec_half_up(ui * ui, ROUND_TERM)
         nrm = math.sqrt(float(s2))
-        v = {i: _rnd_half_up(ui / nrm, round_vec) for i, ui in u.items()}
+        v = {i: _rnd_half_up(ui / nrm, ROUND_VEC) for i, ui in u.items()}
     return v, nrm
 
 
@@ -352,8 +357,6 @@ def top_principal_component(
     cov: DataFrame,
     dim: int,
     n_iters: int = 6,
-    round_term: int = 12,
-    round_vec: int = 9,
     driver_dim_threshold: int = 256,
     quantize: bool = True,
 ) -> DataFrame:
@@ -363,8 +366,8 @@ def top_principal_component(
 
     Start vector is 1/sqrt(dim) in every coordinate — exact when dim is a
     power of two (1/8 for d=64), and fully deterministic regardless.
-    Each round quantizes: terms rounded to `round_term` before summing,
-    the normalized vector rounded to `round_vec` — so iteration t+1 sees
+    Each round quantizes: terms rounded to ROUND_TERM digits before
+    summing, the normalized vector rounded to ROUND_VEC — so iteration t+1 sees
     bit-identical inputs on every engine and the final loadings
     hash-compare exactly.  Returns (pos, loading, eigenvalue), where the
     eigenvalue is the final pre-normalization norm (the Rayleigh estimate
@@ -404,7 +407,7 @@ def top_principal_component(
         # below runs as before.
         rows = [(r["i"], r["j"], r["c"]) for r in cov.collect()]
         if quantize:
-            vec, nrm = _power_iteration_driver(rows, dim, n_iters, round_term, round_vec)
+            vec, nrm = _power_iteration_driver(rows, dim, n_iters)
             from prod_data_pipeline_spark.operators.graph import _rnd_half_up
 
             lam = _rnd_half_up(nrm, 6)
@@ -424,13 +427,13 @@ def top_principal_component(
         if quantize:
             matvec_sum = (
                 F.sum(
-                    F.round(F.col("c") * F.col("v"), round_term).cast("decimal(38,12)")
+                    F.round(F.col("c") * F.col("v"), ROUND_TERM).cast("decimal(38,12)")
                 ).cast("double")
             )
             norm_sum = F.sum(
-                F.round(F.col("u") * F.col("u"), round_term).cast("decimal(38,12)")
+                F.round(F.col("u") * F.col("u"), ROUND_TERM).cast("decimal(38,12)")
             ).cast("double")
-            v_next = F.round(F.col("u") / F.col("nrm"), round_vec)
+            v_next = F.round(F.col("u") / F.col("nrm"), ROUND_VEC)
         else:
             # float production path: pure codegen double arithmetic
             matvec_sum = F.sum(F.col("c") * F.col("v"))
@@ -472,11 +475,10 @@ def top_principal_component(
 def deflate(
     cov: DataFrame,
     component: DataFrame,
-    round_term: int = 12,
     quantize: bool = True,
 ) -> DataFrame:
     """Hotelling deflation as a relation: C' = C - λ·v·vᵀ, with the rank-1
-    term quantized to `round_term` digits so the deflated matrix — and
+    term quantized to ROUND_TERM digits so the deflated matrix — and
     every subsequent iteration on it — stays engine-reproducible.
     `component` is top_principal_component's output (pos, loading,
     eigenvalue); its 6-digit eigenvalue rounding is part of the recipe
@@ -489,7 +491,7 @@ def deflate(
     vj = component.select(F.col("pos").alias("j"), F.col("loading").alias("vj"))
     rank1 = F.col("lam") * F.col("vi") * F.col("vj")
     if quantize:
-        rank1 = F.round(rank1, round_term)
+        rank1 = F.round(rank1, ROUND_TERM)
     return (
         cov.join(F.broadcast(vi), "i")
         .join(F.broadcast(vj), "j")
@@ -502,8 +504,6 @@ def top_principal_components(
     dim: int,
     n_components: int = 2,
     n_iters: int = 6,
-    round_term: int = 12,
-    round_vec: int = 9,
     driver_dim_threshold: int = 256,
     quantize: bool = True,
 ) -> DataFrame:
@@ -519,7 +519,7 @@ def top_principal_components(
     For d <= driver_dim_threshold the WHOLE chain (every power iteration
     AND the deflation between components) replays on the driver — the
     d²-row relation is parameter-bounded, and the quantized deflation
-    ``c - round(lam * vi * vj, round_term)`` is the same three IEEE ops
+    ``c - round(lam * vi * vj, ROUND_TERM)`` is the same three IEEE ops
     plus the same HALF_UP round the distributed join computes, so the
     output is bit-identical (pytest-pinned).  One collect replaces
     2k eager checkpoints + k-1 deflation jobs of scheduling floor."""
@@ -533,9 +533,7 @@ def top_principal_components(
         for m in range(1, n_components + 1):
             triples = [(i, j, c) for (i, j), c in cm.items()]
             if quantize:
-                vec, nrm = _power_iteration_driver(
-                    triples, dim, n_iters, round_term, round_vec
-                )
+                vec, nrm = _power_iteration_driver(triples, dim, n_iters)
                 lam = _rnd_half_up(nrm, 6)
             else:
                 vec, nrm = _power_iteration_driver_float(triples, dim, n_iters)
@@ -544,7 +542,7 @@ def top_principal_components(
             if m < n_components:
                 if quantize:
                     cm = {
-                        (i, j): c - _rnd_half_up(lam * vec[i] * vec[j], round_term)
+                        (i, j): c - _rnd_half_up(lam * vec[i] * vec[j], ROUND_TERM)
                         for (i, j), c in cm.items()
                     }
                 else:
@@ -559,15 +557,14 @@ def top_principal_components(
     cur = cov
     for m in range(1, n_components + 1):
         comp = top_principal_component(
-            cur, dim, n_iters=n_iters, round_term=round_term, round_vec=round_vec,
-            driver_dim_threshold=0, quantize=quantize,
+            cur, dim, n_iters=n_iters, driver_dim_threshold=0, quantize=quantize,
         ).transform(truncate_lineage, eager=True)
         tagged = comp.select(
             F.lit(m).alias("component"), "pos", "loading", "eigenvalue"
         )
         out = tagged if out is None else out.unionByName(tagged)
         if m < n_components:
-            cur = deflate(
-                cur, comp, round_term=round_term, quantize=quantize
-            ).transform(truncate_lineage, eager=True)
+            cur = deflate(cur, comp, quantize=quantize).transform(
+                truncate_lineage, eager=True
+            )
     return out.orderBy("component", "pos")

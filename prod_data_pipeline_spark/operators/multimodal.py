@@ -52,42 +52,24 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode_features(payload: bytes, dim: int = 16) -> list[float]:
+# Width of every decoded feature vector (real_decode's intensity histogram
+# and the test-only fake kernel's digest bytes).
+FEATURE_DIM = 16
+
+
+def _fake_decode_features(payload: bytes) -> list[float]:
     """TEST-ONLY deterministic stand-in for a codec+embedding step:
     byte-histogram features from a sha256-seeded digest.  Production and
     all registered queries use `real_decode` (real BMP/WAV/Y4M parsing);
     this path exists solely for codec-independent plumbing tests and is
     deliberately NOT re-exported from operators/__init__.py."""
     if payload is None:
-        return [0.0] * dim
+        return [0.0] * FEATURE_DIM
     digest = hashlib.sha256(payload).digest()
-    return [b / 255.0 for b in digest[:dim]]
+    return [b / 255.0 for b in digest[:FEATURE_DIM]]
 
 
-def fake_media_assets(docs: DataFrame) -> DataFrame:
-    """TEST-ONLY media-asset table fabricated from `documents`: payload is
-    the raw UTF-8 text bytes (NOT a valid container), media_type cycles by
-    doc_id.  Pairs with decode_and_featurize for codec-independent plumbing
-    tests; registered queries build real container payloads with
-    `synthetic_media_assets` instead.  Not re-exported from
-    operators/__init__.py."""
-    media_type = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
-    return docs.select(
-        F.col("doc_id").alias("asset_id"),
-        media_type.alias("media_type"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.when(F.col("doc_id") % 3 == 2, (F.col("n_chars") * 10).cast("long")).alias(
-            "duration_ms"
-        ),
-    )
-
-
-def decode_and_featurize(df: DataFrame, feature_dim: int = 16, batch_hint: int = 4096) -> DataFrame:
+def decode_and_featurize(df: DataFrame) -> DataFrame:
     """TEST-ONLY plumbing kernel: decode media payloads into fixed-width
     fake features via mapInPandas (see _fake_decode_features).  Exercises
     the Arrow batch shape / fixed output schema / null-payload handling
@@ -98,7 +80,7 @@ def decode_and_featurize(df: DataFrame, feature_dim: int = 16, batch_hint: int =
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [_fake_decode_features(p, feature_dim) for p in pdf["payload"]]
+            feats = [_fake_decode_features(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],
@@ -129,7 +111,7 @@ REAL_DECODED_SCHEMA = T.StructType(
 )
 
 
-def synthetic_media_assets(docs: DataFrame, batch_hint: int = 4096) -> DataFrame:
+def synthetic_media_assets(docs: DataFrame) -> DataFrame:
     """Fabricate a media-asset table with REAL container payloads from
     `documents`: doc_id % 3 picks the modality — 0 -> 24-bit BMP image,
     1 -> PCM16 WAV audio, 2 -> YUV4MPEG2 (C420) video — with header
@@ -185,7 +167,7 @@ def synthetic_media_assets(docs: DataFrame, batch_hint: int = 4096) -> DataFrame
     return docs.select("doc_id", "text").mapInPandas(kernel, schema=schema)
 
 
-def real_decode(df: DataFrame, feature_dim: int = 16) -> DataFrame:
+def real_decode(df: DataFrame) -> DataFrame:
     """REAL codec path: parse BMP / WAV / Y4M payloads (pure-Python +
     numpy header/plane decoding, functions.codecs) inside an Arrow-batched
     mapInPandas kernel.  Every output fact — dimensions, frame count,
@@ -215,7 +197,7 @@ def real_decode(df: DataFrame, feature_dim: int = 16) -> DataFrame:
                         rows[k].append(0)
                     rows["duration_ms"].append(0)
                     rows["n_bytes"].append(0)
-                    rows["features"].append([0.0] * feature_dim)
+                    rows["features"].append([0.0] * FEATURE_DIM)
                 else:
                     rows["format"].append(info.format)
                     rows["width"].append(info.width)
@@ -224,7 +206,7 @@ def real_decode(df: DataFrame, feature_dim: int = 16) -> DataFrame:
                     rows["sample_rate"].append(info.sample_rate)
                     rows["duration_ms"].append(info.duration_ms)
                     rows["n_bytes"].append(info.declared_bytes)
-                    rows["features"].append(intensity_histogram(info.samples, feature_dim))
+                    rows["features"].append(intensity_histogram(info.samples, FEATURE_DIM))
             yield pd.DataFrame(rows)
 
     return df.mapInPandas(kernel, schema=REAL_DECODED_SCHEMA)
@@ -245,12 +227,11 @@ def sample_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-def repartition_for_payloads(
-    df: DataFrame,
-    target_partition_bytes: int = 128 << 20,
-    avg_payload_bytes: int = 1 << 20,
-    row_count: int | None = None,
-) -> DataFrame:
+# Rows per partition: 128 MiB partitions of ~1 MiB payloads.
+ROWS_PER_PAYLOAD_PARTITION = (128 << 20) // (1 << 20)
+
+
+def repartition_for_payloads(df: DataFrame, row_count: int | None = None) -> DataFrame:
     """Size partitions by payload volume, not row count: media rows are MBs
     wide, so the default rows-per-partition heuristics overshoot memory.
 
@@ -263,8 +244,7 @@ def repartition_for_payloads(
     n = max(1, df.sparkSession.sparkContext.defaultParallelism)
     if row_count is None:
         return df.repartition(n)
-    rows_per_part = max(1, target_partition_bytes // avg_payload_bytes)
-    return df.repartition(max(n, int(row_count / rows_per_part) + 1))
+    return df.repartition(max(n, int(row_count / ROWS_PER_PAYLOAD_PARTITION) + 1))
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -315,7 +295,7 @@ def resize_images(
     return df.mapInPandas(kernel, schema=RESIZED_SCHEMA)
 
 
-def audio_features(df: DataFrame, batch_hint: int = 4096) -> DataFrame:
+def audio_features(df: DataFrame) -> DataFrame:
     """Waveform-level audio features from REAL PCM16-WAV decoding: total
     absolute amplitude, energy, and peak per asset — the loudness/clipping
     screen of an audio-corpus curation pass.
@@ -366,7 +346,7 @@ def audio_features(df: DataFrame, batch_hint: int = 4096) -> DataFrame:
     return df.select("asset_id", "payload").mapInPandas(kernel, schema=schema)
 
 
-def audio_band_energies(df: DataFrame, batch_hint: int = 4096) -> DataFrame:
+def audio_band_energies(df: DataFrame) -> DataFrame:
     """DFT-bin band energies over REAL PCM16-WAV decoding — spectral
     analysis with an EXACT cross-engine story: per band (normalized
     freqs 1/4, 1/8, 1/16, 1/32), the cos/sin projections are int64 dot
@@ -427,7 +407,7 @@ def audio_band_energies(df: DataFrame, batch_hint: int = 4096) -> DataFrame:
     return df.select("asset_id", "payload").mapInPandas(kernel, schema=schema)
 
 
-def video_frame_features(df: DataFrame, batch_hint: int = 4096) -> DataFrame:
+def video_frame_features(df: DataFrame) -> DataFrame:
     """Per-FRAME luma statistics from REAL Y4M decoding: one row per
     (asset, frame) with the Y-plane sum and peak — the brightness /
     black-frame screen of a video-corpus curation pass, and (with the
@@ -600,7 +580,7 @@ def video_motion_energy(df: DataFrame) -> DataFrame:
     return df.select("asset_id", "payload").mapInPandas(kernel, schema=schema)
 
 
-def image_phash(df: DataFrame, hash_size: int = 8) -> DataFrame:
+def image_phash(df: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) of REAL-decoded BMP images: an
     8x8 nearest-neighbor downsample of integer grayscale, thresholded at
     the mean — the classic perceptual fingerprint that groups visually
@@ -628,7 +608,7 @@ def image_phash(df: DataFrame, hash_size: int = 8) -> DataFrame:
             T.StructField("phash", T.StringType()),
         ]
     )
-    hs = hash_size
+    hs = 8  # 8x8 cells -> 64 bits
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -323,14 +323,28 @@ def cross_doc_paragraph_dedup(
 
 #: Hashed-feature dimensionality of the linear quality classifier.
 FT_BUCKETS = 4096
+#: Salt of the stub weight table: w(b) from md5("ftq:w:<b>").
+FT_STUB_SALT = "ftq"
+#: Training labels of both trained gates: quality_score >= this cutoff.
+QUALITY_LABEL_CUTOFF = 0.52
+#: Folds are pmod(doc_id, N_FOLDS); folds < TRAIN_FOLDS train and fold
+#: TRAIN_FOLDS is held out.
+N_FOLDS = 5
+TRAIN_FOLDS = 4
+#: The NB evaluation gate: md5("nbq:<feature>") mod NB_BUCKETS buckets,
+#: and the precision/recall floors its boolean columns report.
+NB_BUCKETS = 1024
+NB_SALT = "nbq"
+NB_PRECISION_FLOOR = 0.8
+NB_RECALL_FLOOR = 0.75
 
 
-def ft_bucket(f, n_buckets: int = FT_BUCKETS):
+def ft_bucket(f):
     """fastText feature hash: first 8 md5 hex digits of the feature string
-    parsed as an integer, mod ``n_buckets``.  Mirrorable bit-for-bit in
-    ANSI SQL (``('0x' || substr(md5(f),1,8))::BIGINT % n``).  Shared by
+    parsed as an integer, mod FT_BUCKETS.  Mirrorable bit-for-bit in
+    ANSI SQL (``('0x' || substr(md5(f),1,8))::BIGINT % 4096``).  Shared by
     the scorer and the trainer so train/serve bucketing can never drift."""
-    return F.conv(F.substring(F.md5(f), 1, 8), 16, 10).cast("long") % n_buckets
+    return F.conv(F.substring(F.md5(f), 1, 8), 16, 10).cast("long") % FT_BUCKETS
 
 
 def fasttext_style_scores(
@@ -338,10 +352,7 @@ def fasttext_style_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     carry_cols: tuple[str, ...] = (),
-    n_buckets: int = FT_BUCKETS,
-    seed: str = "ftq",
     round_w: int = 12,
-    round_out: int = 6,
     features=None,
     weights: DataFrame | None = None,
     bias_df: DataFrame | None = None,
@@ -349,7 +360,7 @@ def fasttext_style_scores(
 ) -> DataFrame:
     """Model-based quality scoring with the fastText architecture — the
     DCLM / FineWeb-Edu gate shape: hash word uni+bigrams into
-    ``n_buckets`` feature buckets, mean-pool the bucket weights, squash
+    FT_BUCKETS feature buckets, mean-pool the bucket weights, squash
     through a sigmoid, threshold.  This is the third quality-filter
     family next to the heuristic gates (quality_score) and the
     perplexity gates (unigram/trigram logprob): production pipelines run
@@ -370,13 +381,13 @@ def fasttext_style_scores(
     same per-doc evidence.
 
     Determinism: bucket = first 8 md5 hex digits of the feature mod
-    n_buckets (ft_bucket — shared with the trainer); stub w(bucket) =
-    2*(md5("{seed}:w:{bucket}")[:13 hex]/2^52)-1 rounded to ``round_w``;
+    FT_BUCKETS (ft_bucket — shared with the trainer); stub w(bucket) =
+    2*(md5("ftq:w:{bucket}")[:13 hex]/2^52)-1 rounded to ``round_w``;
     mean = DECIMAL(28, round_w+2)-exact sum of rounded weights
     / feature count + bias (identical doubles both engines); score =
-    1/(1+exp(-mean)), rounded to ``round_out``.  Scale: pure projection
+    1/(1+exp(-mean)), rounded to 6 digits.  Scale: pure projection
     + one doc-keyed explode/agg — featurization is map-side, and the
-    only join is an n_buckets-row BROADCAST weight table (exactly the
+    only join is an FT_BUCKETS-row BROADCAST weight table (exactly the
     shape a trained model ships at 100 TB).
     """
     if features is None:
@@ -386,7 +397,7 @@ def fasttext_style_scores(
         F.col(id_col), *[F.col(c) for c in carry_cols], F.explode_outer(features).alias("f")
     )
     # The weight function depends only on the bucket, so it materializes
-    # ONCE as an n_buckets-row broadcast relation instead of one md5+conv
+    # ONCE as an FT_BUCKETS-row broadcast relation instead of one md5+conv
     # per feature OCCURRENCE — this is literally the broadcast weight
     # table a trained model would ship at 100 TB, and it halves the
     # per-feature expression work (same values: same formula, same
@@ -394,13 +405,15 @@ def fasttext_style_scores(
     # docs) must survive to the count with _w NULL, as before.
     spark = df.sparkSession
     if weights is None:
-        weights = spark.range(n_buckets).select(
+        weights = spark.range(FT_BUCKETS).select(
             F.col("id").alias("_b"),
             F.round(
                 (
                     F.conv(
                         F.substring(
-                            F.md5(F.concat(F.lit(f"{seed}:w:"), F.col("id").cast("string"))),
+                            F.md5(
+                                F.concat(F.lit(f"{FT_STUB_SALT}:w:"), F.col("id").cast("string"))
+                            ),
                             1,
                             13,
                         ),
@@ -414,7 +427,7 @@ def fasttext_style_scores(
                 round_w,
             ).alias("_w"),
         )
-    ex = ex.withColumn("_b", ft_bucket(F.col("f"), n_buckets))
+    ex = ex.withColumn("_b", ft_bucket(F.col("f")))
     if bernoulli:
         # presence pooling: one vote per (doc, bucket) even if two
         # features collide into the same bucket — matches the Bernoulli
@@ -461,8 +474,8 @@ def fasttext_style_scores(
         id_col,
         *carry_cols,
         "n_feats",
-        F.round(score, round_out).alias("quality_prob"),
-        (F.round(score, round_out) >= 0.5).alias("keeps"),
+        F.round(score, 6).alias("quality_prob"),
+        (F.round(score, 6) >= 0.5).alias("keeps"),
     )
 
 
@@ -491,12 +504,6 @@ def ft_trained_quality_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     carry_cols: tuple[str, ...] = (),
-    n_buckets: int = FT_BUCKETS,
-    label_cutoff: float = 0.52,
-    n_folds: int = 5,
-    train_folds: int = 4,
-    round_w: int = 7,
-    round_out: int = 6,
 ) -> DataFrame:
     """TRAINED instantiation of the fastText-architecture quality gate —
     the proof of fasttext_style_scores' "swapping in trained weights is
@@ -515,20 +522,20 @@ def ft_trained_quality_scores(
     nb_quality_gate_eval: hashed unigrams drop held-out accuracy 0.94 →
     0.53) — the trained gate is served on the structural channel
     (structural_feats), hashed with the scorer's own ft_bucket recipe
-    into ``n_buckets`` — train and serve share both functions, so the
+    into FT_BUCKETS — train and serve share both functions, so the
     spaces can never drift.
 
     Model: llr(b) = round(ln((c_pos+1)/(n_pos+2)) − ln((c_neg+1)/
-    (n_neg+2)), round_w) over per-class DISTINCT-document bucket counts
-    from folds < train_folds; bias = round(ln((n_pos+1)/(n_neg+1)), 7).
+    (n_neg+2)), 7) over per-class DISTINCT-document bucket counts
+    from folds < TRAIN_FOLDS; bias = round(ln((n_pos+1)/(n_neg+1)), 7).
     With presence pooling, sigmoid((Σllr + bias)/k) ≥ 0.5 ⟺
     Σllr + bias ≥ 0 — the exact NB decision, expressed through the
     fastText pooling.  Held-out precision/recall for this estimator is
     MEASURED by nb_quality_gate_eval (0.93/0.93 at sf0.01).
 
     100 TB shape: one corpus scan → slim lineage-cut (id, y, fold,
-    feats) relation; training is one n_buckets-bounded agg; the model
-    BROADCASTS (n_buckets rows); serving is the scorer's one doc-keyed
+    feats) relation; training is one FT_BUCKETS-bounded agg; the model
+    BROADCASTS (FT_BUCKETS rows); serving is the scorer's one doc-keyed
     agg.  Retraining = re-running one tiny agg.
     """
     from prod_data_pipeline_spark.operators.text import quality_score
@@ -547,10 +554,10 @@ def ft_trained_quality_scores(
             *carry_cols,
             F.size("tk").alias("n"),
             F.size(F.array_distinct("tk")).alias("nd"),
-            (quality_score(F.col("tk"), F.array_distinct("tk")) >= F.lit(label_cutoff))
+            (quality_score(F.col("tk"), F.array_distinct("tk")) >= F.lit(QUALITY_LABEL_CUTOFF))
             .cast("int")
             .alias("y"),
-            F.pmod(F.col(id_col), F.lit(n_folds)).cast("int").alias("fold"),
+            F.pmod(F.col(id_col), F.lit(N_FOLDS)).cast("int").alias("fold"),
         )
         .select(
             id_col,
@@ -567,25 +574,25 @@ def ft_trained_quality_scores(
     ex = (
         base.select(id_col, "y", F.col("fold"), F.explode("_feats").alias("f"))
         .select(
-            id_col, "y", "fold", ft_bucket(F.col("f"), n_buckets).alias("_b")
+            id_col, "y", "fold", ft_bucket(F.col("f")).alias("_b")
         )
         # Bernoulli: one vote per (doc, bucket) — same presence statistics
         # the scorer pools with bernoulli=True
         .distinct()
     )
-    prior_counts = base.filter(F.col("fold") < train_folds).agg(
+    prior_counts = base.filter(F.col("fold") < TRAIN_FOLDS).agg(
         F.sum("y").cast("double").alias("npos"),
         F.sum(F.lit(1) - F.col("y")).cast("double").alias("nneg"),
     )
     trainb = (
-        ex.filter(F.col("fold") < train_folds)
+        ex.filter(F.col("fold") < TRAIN_FOLDS)
         .groupBy("_b")
         .agg(
             F.sum("y").alias("cpos"),
             F.sum(F.lit(1) - F.col("y")).alias("cneg"),
         )
     )
-    dom = spark.range(n_buckets).select(F.col("id").alias("_b"))
+    dom = spark.range(FT_BUCKETS).select(F.col("id").alias("_b"))
     wtab = (
         dom.join(trainb, "_b", "left")
         .crossJoin(F.broadcast(prior_counts))
@@ -598,7 +605,7 @@ def ft_trained_quality_scores(
                 - F.log(
                     (F.coalesce("cneg", F.lit(0)) + F.lit(1.0)) / (F.col("nneg") + F.lit(2.0))
                 ),
-                round_w,
+                7,
             ).alias("_w"),
         )
     )
@@ -613,9 +620,7 @@ def ft_trained_quality_scores(
         base,
         id_col=id_col,
         carry_cols=carry_cols,
-        n_buckets=n_buckets,
-        round_w=round_w,
-        round_out=round_out,
+        round_w=7,
         features=F.col("_feats"),
         weights=wtab,
         bias_df=bias_df,
@@ -627,13 +632,6 @@ def nb_quality_gate_eval(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    label_cutoff: float = 0.52,
-    n_buckets: int = 1024,
-    n_folds: int = 5,
-    train_folds: int = 4,
-    seed: str = "nbq",
-    precision_floor: float = 0.8,
-    recall_floor: float = 0.75,
 ) -> DataFrame:
     """TRAINED model quality gate + held-out evaluation, fully in-engine
     (round-9 verdict #4): a closed-form Bernoulli Naive Bayes over
@@ -645,9 +643,9 @@ def nb_quality_gate_eval(
     determinism discipline (integer counts, ln rounded to 7 digits —
     the repo's cross-engine ln convention — exact DECIMAL per-doc sums).
 
-    Label: y = quality_score(toks) >= label_cutoff (the repo's heuristic
-    composite as ground truth, the docs_langid_eval pattern).  Folds:
-    pmod(doc_id, n_folds); folds < train_folds train, the last fold
+    Label: y = quality_score(toks) >= QUALITY_LABEL_CUTOFF (the repo's
+    heuristic composite as ground truth, the docs_langid_eval pattern).
+    Folds: pmod(doc_id, N_FOLDS); folds < TRAIN_FOLDS train, the last fold
     evaluates — deterministic and retry-safe, no rand().
 
     Features: this corpus's content tokens are drawn uniformly from a
@@ -672,12 +670,13 @@ def nb_quality_gate_eval(
 
     Output: ONE row — train/eval sizes, the full confusion matrix,
     precision / recall / accuracy / base rate (rounded to 6), and
-    integer floor booleans (precision_ok, recall_ok) that make a
+    integer floor booleans (precision_ok, recall_ok: precision >=
+    NB_PRECISION_FLOOR, recall >= NB_RECALL_FLOOR) that make a
     non-separating model fail the oracle hash loudly.
 
     100 TB shape: one corpus scan -> slim (doc, y, fold, bucket)
     relation (<= 3 buckets/doc, map-side distinct); the trained model is
-    an n_buckets-row relation that BROADCASTS; the only corpus-keyed
+    an NB_BUCKETS-row relation that BROADCASTS; the only corpus-keyed
     shuffle is the per-doc score agg.  Training and serving are the
     same join — retraining is re-running one tiny agg.
     """
@@ -696,10 +695,10 @@ def nb_quality_gate_eval(
             "doc_id",
             F.size("tk").alias("n"),
             F.size(F.array_distinct("tk")).alias("nd"),
-            (quality_score(F.col("tk"), F.array_distinct("tk")) >= F.lit(label_cutoff))
+            (quality_score(F.col("tk"), F.array_distinct("tk")) >= F.lit(QUALITY_LABEL_CUTOFF))
             .cast("int")
             .alias("y"),
-            F.pmod(F.col("doc_id"), F.lit(n_folds)).cast("int").alias("fold"),
+            F.pmod(F.col("doc_id"), F.lit(N_FOLDS)).cast("int").alias("fold"),
         )
         # slim (5 ints/doc) but read by three consumers (class priors,
         # features, eval labels): cut lineage so the text parse runs once
@@ -714,7 +713,7 @@ def nb_quality_gate_eval(
             "doc_id",
             "y",
             "fold",
-            F.pmod(hash_bucket(F.col("f"), seed), F.lit(n_buckets))
+            F.pmod(hash_bucket(F.col("f"), NB_SALT), F.lit(NB_BUCKETS))
             .cast("int")
             .alias("bucket"),
         )
@@ -723,20 +722,20 @@ def nb_quality_gate_eval(
         .distinct()
         .transform(truncate_lineage, eager=False)
     )
-    prior_counts = lab.filter(F.col("fold") < train_folds).agg(
+    prior_counts = lab.filter(F.col("fold") < TRAIN_FOLDS).agg(
         F.sum("y").cast("double").alias("npos"),
         F.sum(F.lit(1) - F.col("y")).cast("double").alias("nneg"),
         F.count(F.lit(1)).alias("n_train"),
     )
     trainb = (
-        ex.filter(F.col("fold") < train_folds)
+        ex.filter(F.col("fold") < TRAIN_FOLDS)
         .groupBy("bucket")
         .agg(
             F.sum("y").alias("cpos"),
             F.sum(F.lit(1) - F.col("y")).alias("cneg"),
         )
     )
-    dom = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
+    dom = spark.range(NB_BUCKETS).select(F.col("id").cast("int").alias("bucket"))
     llr = (
         dom.join(trainb, "bucket", "left")
         .crossJoin(F.broadcast(prior_counts))
@@ -756,7 +755,7 @@ def nb_quality_gate_eval(
         "n_train",
     )
     scored = (
-        ex.filter(F.col("fold") == train_folds)
+        ex.filter(F.col("fold") == TRAIN_FOLDS)
         .join(F.broadcast(llr), "bucket")
         .groupBy("doc_id")
         .agg(
@@ -815,6 +814,6 @@ def nb_quality_gate_eval(
         recall.alias("recall"),
         F.round((F.col("tp") + F.col("tn")) / F.col("n_eval"), 6).alias("accuracy"),
         F.round((F.col("tp") + F.col("fn")) / F.col("n_eval"), 6).alias("base_rate"),
-        (precision >= F.lit(precision_floor)).cast("int").alias("precision_ok"),
-        (recall >= F.lit(recall_floor)).cast("int").alias("recall_ok"),
+        (precision >= F.lit(NB_PRECISION_FLOOR)).cast("int").alias("precision_ok"),
+        (recall >= F.lit(NB_RECALL_FLOOR)).cast("int").alias("recall_ok"),
     )

@@ -109,20 +109,23 @@ def mixing_weights(
     )
 
 
+# DSIR features: hashed word bigrams, md5('dsir:<gram>') mod 1024 buckets.
+DSIR_NGRAM = 2
+DSIR_BUCKETS = 1024
+DSIR_SALT = "dsir"
+
+
 def dsir_importance(
     raw_df: DataFrame,
     target_df: DataFrame,
     *,
-    n: int = 2,
-    num_buckets: int = 1024,
     id_col: str = "doc_id",
     text_col: str = "text",
-    salt: str = "dsir",
 ) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al. 2023):
     score every raw document by how much more likely its hashed n-gram
-    features are under the TARGET corpus distribution than under the raw
-    one — the standard "select crawl data that looks like the curated
+    bigram features are under the TARGET corpus distribution than under the
+    raw one — the standard "select crawl data that looks like the curated
     set" pass of an LLM pretraining pipeline.
 
     Both corpora are reduced to bag-of-hashed-n-gram bucket counts
@@ -131,14 +134,14 @@ def dsir_importance(
     ``ln p_target(b) - ln p_raw(b)`` rounded to 7 digits; a document's
     importance weight is the count-weighted sum of its buckets' ratios,
     accumulated as exact DECIMAL so partition order never touches the
-    result.  Documents with fewer than ``n`` tokens have no features and
+    result.  Documents with fewer than DSIR_NGRAM tokens have no features and
     score 0 (the neutral weight).
 
     Scale shape: the raw corpus is reduced ONCE to a per-(doc, bucket)
-    count relation (map-side combined; at most ``num_buckets`` rows per
+    count relation (map-side combined; at most DSIR_BUCKETS rows per
     doc and far fewer in practice), which is lineage-cut and read twice —
     for the global raw bucket counts and for the per-doc weight join.
-    The ratio relation is exactly ``num_buckets`` rows and broadcasts;
+    The ratio relation is exactly DSIR_BUCKETS rows and broadcasts;
     the only corpus-keyed shuffle is the (doc, bucket) partial-agg.  The
     target corpus is scanned once; at 100 TB the target is the small
     curated set, the raw side the crawl.
@@ -151,11 +154,11 @@ def dsir_importance(
 
     def _doc_buckets(df: DataFrame, keep_id: bool) -> DataFrame:
         cols = [F.col(id_col)] if keep_id else []
-        t = df.select(*cols, shingles(tokens(F.col(text_col)), n).alias("_g"))
+        t = df.select(*cols, shingles(tokens(F.col(text_col)), DSIR_NGRAM).alias("_g"))
         e = t.select(*cols, F.explode("_g").alias("_gram"))
         b = e.select(
             *cols,
-            F.pmod(hash_bucket(F.col("_gram"), salt), F.lit(num_buckets))
+            F.pmod(hash_bucket(F.col("_gram"), DSIR_SALT), F.lit(DSIR_BUCKETS))
             .cast("int")
             .alias("bucket"),
         )
@@ -170,8 +173,8 @@ def dsir_importance(
     tc = _doc_buckets(target_df, keep_id=False).withColumnRenamed("cnt", "tc")
 
     spark = raw_df.sparkSession
-    dom = spark.range(num_buckets).select(F.col("id").cast("int").alias("bucket"))
-    # buckets is exactly num_buckets rows but feeds TWO consumers (totals
+    dom = spark.range(DSIR_BUCKETS).select(F.col("id").cast("int").alias("bucket"))
+    # buckets is exactly DSIR_BUCKETS rows but feeds TWO consumers (totals
     # + ratio); without a lineage cut each consumer replays its upstream —
     # including the full target-corpus scan — once more.
     buckets = (
@@ -193,8 +196,8 @@ def dsir_importance(
     ratio = buckets.crossJoin(F.broadcast(totals)).select(
         "bucket",
         F.round(
-            F.log((F.col("tc") + F.lit(1.0)) / (F.col("tt") + F.lit(float(num_buckets))))
-            - F.log((F.col("rc") + F.lit(1.0)) / (F.col("rt") + F.lit(float(num_buckets)))),
+            F.log((F.col("tc") + F.lit(1.0)) / (F.col("tt") + F.lit(float(DSIR_BUCKETS))))
+            - F.log((F.col("rc") + F.lit(1.0)) / (F.col("rt") + F.lit(float(DSIR_BUCKETS)))),
             7,
         ).alias("log_ratio"),
     )
@@ -218,7 +221,7 @@ def dsir_importance(
             .alias("log_w"),
         )
     )
-    # Short documents (< n tokens) have no grams: re-enter at weight 0.
+    # Short documents (< DSIR_NGRAM tokens) have no grams: re-enter at weight 0.
     return raw_df.select(id_col).join(w, id_col, "left").select(
         id_col,
         F.coalesce("n_grams", F.lit(0)).cast("bigint").alias("n_grams"),

@@ -27,12 +27,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from prod_data_pipeline_spark.functions.vector import cosine_sim, dot, to_double_array
+from prod_data_pipeline_spark.functions.vector import cosine_sim, to_double_array
 from prod_data_pipeline_spark.session import (
     compact_for_sort,
     ensure_parallelism,
     truncate_lineage,
 )
+
+# Digits every reported cosine similarity is rounded to (before any
+# threshold compare, in both engines).
+ROUND_SIM = 4
+# Seed of the k-means quantizer fit (and its fit-sample hash).
+KMEANS_SEED = 42
+# md5 prefix of the SRP hyperplanes: component (b, i) hashes "42:b:i".
+SRP_SEED = 42
 
 
 def _norm_emb(df: DataFrame, emb_col: str) -> DataFrame:
@@ -127,7 +135,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    round_sim: int = 4,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast queries x corpus scan + the two-stage
     per-query top-k (ranked_topk — no corpus-sized window groups).
@@ -150,7 +157,7 @@ def brute_force_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(F.col("_sim"), round_sim).alias("sim"),
+            F.round(F.col("_sim"), ROUND_SIM).alias("sim"),
             "rank",
         )
         .orderBy("query_id", "rank")
@@ -164,7 +171,6 @@ def hard_negative_topk(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     label_col: str = "label",
-    round_sim: int = 4,
 ) -> DataFrame:
     """Hard-negative mining for metric/contrastive training: per anchor,
     the top-k most-similar vectors with a DIFFERENT label — the negatives
@@ -203,7 +209,7 @@ def hard_negative_topk(
             "query_id",
             "neighbor_id",
             "neighbor_label",
-            F.round(F.col("_sim"), round_sim).alias("sim"),
+            F.round(F.col("_sim"), ROUND_SIM).alias("sim"),
             "rank",
         )
         .orderBy("query_id", "rank")
@@ -338,7 +344,6 @@ def kmeans_cells(
     emb_col: str = "embedding",
     id_col: str = "vec_id",
     max_iter: int = 8,
-    seed: int = 42,
     fit_sample_mod: int | None = None,
     dim: int | None = None,
 ):
@@ -346,7 +351,7 @@ def kmeans_cells(
     Returns (assignments(id, cell), centroids(cell, centroid)).
 
     With fit_sample_mod=m the ITERATIVE fit touches only the deterministic
-    1/m hash-sample of the corpus (rows where xxhash64(seed, id) % m == 0
+    1/m hash-sample of the corpus (rows where xxhash64(KMEANS_SEED, id) % m == 0
     — retry-safe, no rand(), the repo's standard sampling rule), while the
     one-pass ASSIGNMENT still covers every row.  This is how IVF indexes
     are actually built at 100 TB: Lloyd's scans the corpus once per
@@ -356,7 +361,7 @@ def kmeans_cells(
     full-corpus fit (exact legacy behavior for small corpora).
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     from prod_data_pipeline_spark.functions.guards import finite_embeddings
 
@@ -369,9 +374,12 @@ def kmeans_cells(
     fit_feats = feats
     if fit_sample_mod is not None and fit_sample_mod > 1:
         fit_feats = feats.filter(
-            F.pmod(F.xxhash64(F.lit(seed), F.col(id_col)), F.lit(fit_sample_mod)) == 0
+            F.pmod(F.xxhash64(F.lit(KMEANS_SEED), F.col(id_col)), F.lit(fit_sample_mod))
+            == 0
         )
-    model = KMeans(k=k, maxIter=max_iter, seed=seed, featuresCol="features").fit(fit_feats)
+    model = KMeans(k=k, maxIter=max_iter, seed=KMEANS_SEED, featuresCol="features").fit(
+        fit_feats
+    )
     assignments = model.transform(feats).select(
         F.col(id_col), F.col("prediction").alias("cell")
     )
@@ -429,7 +437,6 @@ def label_centroids_split(
     flag_col: str,
     emb_col: str = "embedding",
     label_col: str = "label",
-    dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Snapshot and union label-centroid codebooks from ONE corpus pass.
 
@@ -450,7 +457,7 @@ def label_centroids_split(
     from prod_data_pipeline_spark.functions.guards import finite_embeddings
 
     dec = "decimal(28,12)"
-    ex = finite_embeddings(df, emb_col, dim).select(
+    ex = finite_embeddings(df, emb_col).select(
         F.col(label_col).alias("cell"),
         F.col(flag_col).cast("boolean").alias("_new"),
         F.posexplode(to_double_array(F.col(emb_col))).alias("pos", "v"),
@@ -509,7 +516,6 @@ def cosine_near_dup_pairs(
     block_cols: tuple = ("label",),
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    round_sim: int = 4,
     sort: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked on cheap attribute
@@ -526,7 +532,7 @@ def cosine_near_dup_pairs(
         on = on & (F.col(f"a.{c}") == F.col(f"b.{c}"))
     out = (
         a.join(b, on)
-        .withColumn("sim", F.round(cosine_sim(F.col("a._emb"), F.col("b._emb")), round_sim))
+        .withColumn("sim", F.round(cosine_sim(F.col("a._emb"), F.col("b._emb")), ROUND_SIM))
         .filter(F.col("sim") >= threshold)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
@@ -537,9 +543,9 @@ def cosine_near_dup_pairs(
     return out.orderBy("id_a", "id_b") if sort else out
 
 
-def _md5_planes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
+def _md5_planes(dim: int, nbits: int) -> list[list[float]]:
     """Hyperplanes any engine can regenerate: component (b, i) is
-    ``2*(md5("{seed}:{b}:{i}")[:13 hex] / 2^52) - 1`` — uniform in [-1, 1).
+    ``2*(md5("{SRP_SEED}:{b}:{i}")[:13 hex] / 2^52) - 1`` — uniform in [-1, 1).
 
     13 hex digits = 52 bits < 2^53, so the int->double conversion is exact,
     the division by 2^52 is exact power-of-two scaling, and the final
@@ -555,7 +561,7 @@ def _md5_planes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
         [
             2.0
             * (
-                int(hashlib.md5(f"{seed}:{b}:{i}".encode()).hexdigest()[:13], 16)
+                int(hashlib.md5(f"{SRP_SEED}:{b}:{i}".encode()).hexdigest()[:13], 16)
                 / 2**52
             )
             - 1.0
@@ -569,7 +575,6 @@ def with_srp_signature(
     df: DataFrame,
     dim: int,
     nbits: int = 32,
-    seed: int = 42,
     emb_col: str = "embedding",
 ) -> DataFrame:
     """Append a signed-random-projection (SimHash-for-cosine) signature:
@@ -595,7 +600,7 @@ def with_srp_signature(
     # functions.vector.dot / DuckDB list_sum evaluate.  numpy's own dot/sum
     # would pairwise-split the adds and break bit-parity; the explicit loop
     # is the point.
-    md5_rows = _md5_planes(dim, nbits, seed)
+    md5_rows = _md5_planes(dim, nbits)
 
     @F.pandas_udf("long")
     def srp_md5_sig_udf(emb: pd.Series) -> pd.Series:
@@ -622,15 +627,13 @@ def _srp_pairs_lsh(
     threshold: float,
     nbits: int,
     band_bits: int,
-    seed: int,
     id_col: str,
     emb_col: str,
-    round_sim: int,
 ):
     """Core sign-LSH pipeline over an (assumed exact-dup-free) corpus:
     SRP signatures -> band chunks -> candidate self-join -> exact cosine
     verify.  Returns (pairs, sig_cache) — caller owns the cache."""
-    sig = with_srp_signature(df, dim, nbits, seed, emb_col)
+    sig = with_srp_signature(df, dim, nbits, emb_col)
     # referenced by both band sides + both verify sides: persist or the
     # 1024-literal projection re-evaluates four times
     sig = sig.select(F.col(id_col), "_emb", "srp_sig").persist(StorageLevel.MEMORY_AND_DISK)
@@ -666,7 +669,7 @@ def _srp_pairs_lsh(
     out = (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
-        .withColumn("sim", F.round(cosine_sim(F.col("_ea"), F.col("_eb")), round_sim))
+        .withColumn("sim", F.round(cosine_sim(F.col("_ea"), F.col("_eb")), ROUND_SIM))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
     )
@@ -679,10 +682,8 @@ def srp_near_dup_pairs(
     threshold: float = 0.3,
     nbits: int = 32,
     band_bits: int = 8,
-    seed: int = 42,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    round_sim: int = 4,
     sort: bool = True,
     materialize: bool = True,
     collapse_exact: bool = True,
@@ -716,10 +717,7 @@ def srp_near_dup_pairs(
     excluded, exactly as the uncollapsed verify excludes it).
     """
     if not collapse_exact:
-        out, sig = _srp_pairs_lsh(
-            df, dim, threshold, nbits, band_bits, seed, id_col, emb_col,
-            round_sim,
-        )
+        out, sig = _srp_pairs_lsh(df, dim, threshold, nbits, band_bits, id_col, emb_col)
         if materialize:
             # sig feeds four plan branches; materialize the (small) verified
             # pair set and release the cache — no per-call storage leak.
@@ -764,13 +762,12 @@ def srp_near_dup_pairs(
         "left_semi",
     )
     rep_pairs, sig = _srp_pairs_lsh(
-        reps, dim, threshold, nbits, band_bits, seed, id_col, emb_col,
-        round_sim,
+        reps, dim, threshold, nbits, band_bits, id_col, emb_col
     )
     self_sim = (
         sig.select(
             F.col(id_col).alias("_ssid"),
-            F.round(cosine_sim(F.col("_emb"), F.col("_emb")), round_sim).alias("_ss"),
+            F.round(cosine_sim(F.col("_emb"), F.col("_emb")), ROUND_SIM).alias("_ss"),
         )
         .filter(F.col("_ss") >= threshold)
     )
@@ -792,7 +789,6 @@ def ivf_recall_at_k(
     n_cells: int = 16,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Per-query recall@k of IVF against exact brute force, in one plan.
 
@@ -807,9 +803,9 @@ def ivf_recall_at_k(
     exact = brute_force_topk(df, query_df, k, id_col, emb_col).select(
         "query_id", "neighbor_id"
     )
-    approx = ivf_topk(
-        df, query_df, k, nprobe, n_cells, id_col, emb_col, seed=seed
-    ).select("query_id", "neighbor_id")
+    approx = ivf_topk(df, query_df, k, nprobe, n_cells, id_col, emb_col).select(
+        "query_id", "neighbor_id"
+    )
     hit = exact.join(approx, ["query_id", "neighbor_id"], "left_semi")
     n_exact = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
     n_hit = hit.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit"))
@@ -835,7 +831,6 @@ def ivf_nprobe_sweep(
     n_cells: int = 8,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    seed: int = 42,
     replicas: int = 1,
 ) -> DataFrame:
     """Recall@k of the k-means IVF index at SEVERAL nprobe settings from
@@ -858,9 +853,7 @@ def ivf_nprobe_sweep(
     partitioning-sensitive.
     """
     max_np = max(nprobes)
-    assignments, cents = kmeans_cells(
-        df, k=n_cells, emb_col=emb_col, id_col=id_col, seed=seed
-    )
+    assignments, cents = kmeans_cells(df, k=n_cells, emb_col=emb_col, id_col=id_col)
     norm = _norm_emb(df, emb_col).select(F.col(id_col).alias("neighbor_id"), "_emb")
     if replicas <= 1:
         corpus = norm.join(
@@ -961,7 +954,6 @@ def ivf_topk_label(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     label_col: str = "label",
-    round_sim: int = 4,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF top-k with a DETERMINISTIC coarse quantizer: cells are the
@@ -987,9 +979,7 @@ def ivf_topk_label(
         centroids if centroids is not None else label_centroids(df, emb_col, label_col)
     )
     cent_arr, _ = _codebook_literal(cents)
-    return _ivf_search_codebook(
-        df, query_df, cent_arr, k, nprobe, id_col, emb_col, round_sim
-    )
+    return _ivf_search_codebook(df, query_df, cent_arr, k, nprobe, id_col, emb_col)
 
 
 def _codebook_literal(cents: DataFrame) -> tuple[F.Column, int]:
@@ -1061,7 +1051,6 @@ def _ivf_search_codebook(
     nprobe: int,
     id_col: str,
     emb_col: str,
-    round_sim: int,
 ) -> DataFrame:
     """IVF cosine top-k against a GIVEN inlined codebook (the search half
     of ivf_topk_label, reused by the incremental-append path so a fresh
@@ -1091,7 +1080,7 @@ def _ivf_search_codebook(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(F.col("_sim"), round_sim).alias("sim"),
+            F.round(F.col("_sim"), ROUND_SIM).alias("sim"),
             "rank",
         )
         .orderBy("query_id", "rank")
@@ -1158,7 +1147,6 @@ def ivf_append_topk(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     label_col: str = "label",
-    round_sim: int = 4,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF top-k over the snapshot+batch UNION served from the STALE
@@ -1177,9 +1165,7 @@ def ivf_append_topk(
     union = snapshot_df.select(id_col, emb_col).unionByName(
         batch_df.select(id_col, emb_col)
     )
-    return _ivf_search_codebook(
-        union, query_df, cent_arr, k, nprobe, id_col, emb_col, round_sim
-    )
+    return _ivf_search_codebook(union, query_df, cent_arr, k, nprobe, id_col, emb_col)
 
 
 def ivf_topk(
@@ -1190,8 +1176,6 @@ def ivf_topk(
     n_cells: int = 16,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    round_sim: int = 4,
-    seed: int = 42,
     fit_sample_mod: int | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: k-means coarse cells; each query probes only
@@ -1206,8 +1190,7 @@ def ivf_topk(
     the test corpus).
     """
     assignments, cents = kmeans_cells(
-        df, k=n_cells, emb_col=emb_col, id_col=id_col, seed=seed,
-        fit_sample_mod=fit_sample_mod,
+        df, k=n_cells, emb_col=emb_col, id_col=id_col, fit_sample_mod=fit_sample_mod,
     )
     corpus = (
         _norm_emb(df, emb_col)
@@ -1239,7 +1222,7 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(F.col("_sim"), round_sim).alias("sim"),
+            F.round(F.col("_sim"), ROUND_SIM).alias("sim"),
             "rank",
         )
         .orderBy("query_id", "rank")
@@ -1252,7 +1235,6 @@ def semdedup(
     block_cols: tuple = ("label",),
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    round_sim: int = 4,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): inside each semantic cluster, prune every vector
@@ -1269,7 +1251,7 @@ def semdedup(
     pair above threshold.
 
     The similarity test reuses cosine_near_dup_pairs verbatim (double
-    cast, in-order fold, ROUND to `round_sim` before the compare), so the
+    cast, in-order fold, ROUND to ROUND_SIM digits before the compare), so the
     kept set is bit-reproducible across engines.  Cost: within-block
     pairs only — never corpus x corpus; at 100 TB blocks come from a
     k-means/IVF cell assignment (assign_cells) so block sizes are
@@ -1277,7 +1259,7 @@ def semdedup(
     pruned = (
         cosine_near_dup_pairs(
             df, threshold=threshold, block_cols=block_cols, id_col=id_col,
-            emb_col=emb_col, round_sim=round_sim, sort=False,
+            emb_col=emb_col, sort=False,
         )
         .select(F.col("id_b").alias(id_col))
         .distinct()
@@ -1289,11 +1271,10 @@ def pq_codebook(
     df: DataFrame,
     emb_col: str = "embedding",
     label_col: str = "label",
-    round_c: int = 6,
     dim: int | None = None,
 ):
     """Product-quantization codebook with a DETERMINISTIC trainer: the
-    per-label mean embedding (rounded to ``round_c`` at source — the
+    per-label mean embedding (rounded to 6 digits at source — the
     emb_centroid_drift recipe) doubles as one code per label in EVERY
     subspace, so the codebook is a pure function of the data that any
     engine reproduces — where k-means codebooks (the classic PQ trainer)
@@ -1323,7 +1304,7 @@ def pq_codebook(
         )
         .groupBy("label", "pos")
         .agg(
-            F.round(F.sum(F.col("v")) / F.count(F.lit(1)), round_c).alias("c")
+            F.round(F.sum(F.col("v")) / F.count(F.lit(1)), 6).alias("c")
         )
         .groupBy("label")
         .agg(
@@ -1430,7 +1411,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     label_col: str = "label",
-    round_out: int = 6,
 ) -> DataFrame:
     """Asymmetric-distance-computation top-k over a PQ-encoded corpus —
     the memory-bound ANN technique: the corpus is stored as m byte-ish
@@ -1513,7 +1493,7 @@ def pq_adc_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(F.col("_adc"), round_out).alias("adc_dist"),
+            F.round(F.col("_adc"), 6).alias("adc_dist"),
             "rank",
         )
         .orderBy("query_id", "rank")

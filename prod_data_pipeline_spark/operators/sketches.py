@@ -28,23 +28,25 @@ collisions); with width w and depth d, the overestimate exceeds
 Hashing follows operators/dedup.py's one recipe: the bucket comes from
 the first 12 hex digits of md5 (48 bits, exact in int64, replayable in
 any engine — the DuckDB oracle recomputes every cell bit-for-bit).  It is
-deterministic per (salt, row) — safe under task retry/speculation — and
-a sketch built anywhere is read back by `cms_estimate` with the same
-(depth, width, salt).
+deterministic per (``CMS_SALT``, row) — safe under task
+retry/speculation — and a sketch built anywhere is read back by
+`cms_estimate` with the same (depth, width).
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _bucket(key: F.Column, row: int, width: int, salt: str) -> F.Column:
+# Prefix of every hashed cell key: md5('cms<row>:<key>').
+CMS_SALT = "cms"
+
+
+def _bucket(key: F.Column, row: int, width: int) -> F.Column:
     """Bucket of `key` in hash row `row`: non-negative int64 mod width."""
     h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{salt}{row}:"), key)), 1, 12), 16, 10
+        F.substring(F.md5(F.concat(F.lit(f"{CMS_SALT}{row}:"), key)), 1, 12), 16, 10
     ).cast("long")
     return F.pmod(h, F.lit(width)).cast("int")
 
@@ -55,7 +57,6 @@ def cms_build(
     weight_col: str | None = None,
     depth: int = 4,
     width: int = 512,
-    salt: str = "cms",
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Build a count-min sketch of `key_col` occurrences (or weights).
@@ -76,7 +77,7 @@ def cms_build(
         *[
             F.struct(
                 F.lit(r).alias("row"),
-                _bucket(key, r, width, salt).alias("bucket"),
+                _bucket(key, r, width).alias("bucket"),
             )
             for r in range(depth)
         ]
@@ -101,7 +102,6 @@ def cms_estimate(
     key_col: str,
     depth: int = 4,
     width: int = 512,
-    salt: str = "cms",
 ) -> DataFrame:
     """Point-estimate each key in `keys`: min over its depth cells.
 
@@ -120,7 +120,7 @@ def cms_estimate(
                 *[
                     F.struct(
                         F.lit(r).alias("row"),
-                        _bucket(key, r, width, salt).alias("bucket"),
+                        _bucket(key, r, width).alias("bucket"),
                     )
                     for r in range(depth)
                 ]
@@ -132,15 +132,6 @@ def cms_estimate(
         .groupBy(key_col)
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias("cms_count"))
     )
-
-
-def cms_error_bound(depth: int, width: int, n_total: int) -> tuple[float, float]:
-    """(epsilon*N, failure probability): overestimate <= e/width * N with
-    probability >= 1 - exp(-depth) — the textbook CMS bound, exposed for
-    tests and capacity planning."""
-    import math
-
-    return (math.e / width) * n_total, math.exp(-depth)
 
 
 def value_histogram_build(
@@ -205,7 +196,7 @@ def cms_inner_product(sketch_a: DataFrame, sketch_b: DataFrame) -> DataFrame:
     relations, so the estimate never touches the underlying corpora —
     and because CMS cells are counters, both sides inherit cms_build's
     incremental/mergeable story (sketch daily partitions, merge, then
-    estimate).  Both sketches MUST share (depth, width, salt).
+    estimate).  Both sketches MUST share (depth, width).
 
     The bucket join is INNER: a (row, bucket) cell missing from either
     side is zero-count and contributes 0 to the dot.  A hash row with NO

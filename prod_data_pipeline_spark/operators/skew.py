@@ -69,9 +69,9 @@ def write_bucketed(
     bucket_cols: str | Sequence[str],
     num_buckets: int = 32,
     sort_cols: str | Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table.
+    """Persist as a bucketed (and optionally sorted) managed table, replacing
+    any table of that name.
 
     Bucketing pre-shuffles the data by key at write time; joins and
     aggregations between tables bucketed the same way on the same key need
@@ -81,7 +81,7 @@ def write_bucketed(
     table fits an executor core's working memory at target scale.
     """
     bucket_cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-    writer = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
+    writer = df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         sort_cols = [sort_cols] if isinstance(sort_cols, str) else list(sort_cols)
         writer = writer.sortBy(*sort_cols)

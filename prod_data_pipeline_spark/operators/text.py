@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from prod_data_pipeline_spark.functions.text import distinct_tokens, shingles, tokens
+from prod_data_pipeline_spark.functions.text import shingles, tokens
 from prod_data_pipeline_spark.session import ensure_parallelism
 
 # Tiny per-language stopword sets for the n-gram/stopword-hit heuristic.
@@ -302,16 +302,19 @@ def synthetic_paragraph_doc(
     ).drop("_toks", "_paras")
 
 
+# Winnowing recipe: WINNOW_K-token shingles, WINNOW_WINDOW-hash windows.
+WINNOW_K = 3
+WINNOW_WINDOW = 4
+
+
 def winnow_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 3,
-    window: int = 4,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 scheme):
-    hash every k-token shingle, keep the min hash of each sliding window,
-    dedupe.  Sub-linear fingerprint count per doc.  Used for
+    hash every WINNOW_K-token shingle, keep the min hash of each sliding
+    window of WINNOW_WINDOW hashes, dedupe.  Sub-linear fingerprint count per doc.  Used for
     plagiarism-style containment detection at scale.
 
     Each shingle hashes to the lowercase hex md5 digest and window minima
@@ -328,9 +331,9 @@ def winnow_fingerprints(
 
     df = ensure_parallelism(df)
     toks = tokens(F.col(text_col))
-    hashes = F.transform(shingles(toks, k), lambda s: F.md5(s))
+    hashes = F.transform(shingles(toks, WINNOW_K), lambda s: F.md5(s))
     e = df.select(F.col(id_col), F.posexplode(hashes).alias("_pos", "_h"))
-    wmin = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(0, window - 1)
+    wmin = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(0, WINNOW_WINDOW - 1)
     wn = Window.partitionBy(id_col)
     mins = e.select(
         F.col(id_col),
@@ -341,8 +344,8 @@ def winnow_fingerprints(
     # full windows only; a doc with fewer hashes than one window keeps the
     # min of everything it has (the pos==0 truncated frame)
     valid = mins.filter(
-        (F.col("_pos") <= F.col("_n") - window)
-        | ((F.col("_n") < window) & (F.col("_pos") == 0))
+        (F.col("_pos") <= F.col("_n") - WINNOW_WINDOW)
+        | ((F.col("_n") < WINNOW_WINDOW) & (F.col("_pos") == 0))
     )
     fps = valid.groupBy(id_col).agg(F.array_sort(F.collect_set("_wmin")).alias("fingerprints"))
     return (

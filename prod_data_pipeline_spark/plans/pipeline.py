@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
-from datetime import date, datetime, timedelta
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,17 +47,9 @@ class DQGateError(Exception):
         super().__init__(f"DQ gate failed: {report.get('failures')}")
 
 
-@dataclass(frozen=True)
-class DQThresholds:
-    """Reference thresholds: v3_dq.py:25-26 and rules v3_dq.py:108-122."""
-
-    max_null_user_rate: float = 0.03
-    max_dup_event_rate: float = 0.02
-    valid_event_types: tuple = tuple(VALID_EVENT_TYPES)
-    require_nonempty: bool = True
-    forbid_null_event_id: bool = True
-    forbid_null_event_type: bool = True
-    forbid_invalid_event_type: bool = True
+# Reference thresholds (v3_dq.py:25-26); the rules are v3_dq.py:108-122.
+MAX_NULL_USER_RATE = 0.03
+MAX_DUP_EVENT_RATE = 0.02
 
 
 def validate_date(s: str) -> str:
@@ -85,28 +77,28 @@ def curate_transform(df: DataFrame, ingestion_date: str) -> DataFrame:
     )
 
 
-def dq_profile(df: DataFrame, thresholds: DQThresholds) -> dict:
+def dq_profile(df: DataFrame) -> dict:
     """A1-A6 fused: the reference's seven actions as ONE aggregation pass.
 
     dup_rows == the reference's sum(count-1) over per-id counts
     (v3_dq.py:81-83) computed as count(id) - count(distinct id).
     """
-    valid = list(thresholds.valid_event_types)
     row = df.agg(
         F.count(F.lit(1)).alias("total_rows"),
         F.sum(F.when(F.col("event_id").isNull(), 1).otherwise(0)).alias("null_event_id"),
         F.sum(F.when(F.col("user_id").isNull(), 1).otherwise(0)).alias("null_user_id"),
         F.sum(F.when(F.col("event_type").isNull(), 1).otherwise(0)).alias("null_event_type"),
         F.sum(
-            F.when(F.col("event_type").isNotNull() & ~F.col("event_type").isin(valid), 1).otherwise(0)
+            F.when(
+                F.col("event_type").isNotNull() & ~F.col("event_type").isin(VALID_EVENT_TYPES), 1
+            ).otherwise(0)
         ).alias("invalid_event_type"),
         (F.count("event_id") - F.count_distinct(F.col("event_id"))).alias("dup_event_rows"),
     ).first()
     p = {k: int(row[k] or 0) for k in row.asDict()}
     # count(event_id) skips NULLs, but the reference's groupBy('event_id')
     # .count() treats all NULL ids as ONE group — n nulls contribute n-1
-    # duplicate rows (v3_dq.py:81-83).  Matters when forbid_null_event_id
-    # is relaxed: without this the dup-rate gate is weaker than the
+    # duplicate rows (v3_dq.py:81-83), so the reported dup rate matches the
     # reference's.  Same single pass — null_event_id is already in the agg.
     if p["null_event_id"] > 1:
         p["dup_event_rows"] += p["null_event_id"] - 1
@@ -117,24 +109,24 @@ def dq_profile(df: DataFrame, thresholds: DQThresholds) -> dict:
     return p
 
 
-def evaluate_dq(profile: dict, thresholds: DQThresholds) -> list[str]:
+def evaluate_dq(profile: dict) -> list[str]:
     """C2 rule set (v3_dq.py:108-126); returns failure strings (empty=PASS)."""
     failures: list[str] = []
-    if thresholds.require_nonempty and profile["total_rows"] == 0:
+    if profile["total_rows"] == 0:
         failures.append("total_rows == 0")
-    if thresholds.forbid_null_event_id and profile["null_event_id"] > 0:
+    if profile["null_event_id"] > 0:
         failures.append(f"null event_id rows: {profile['null_event_id']}")
-    if thresholds.forbid_null_event_type and profile["null_event_type"] > 0:
+    if profile["null_event_type"] > 0:
         failures.append(f"null event_type rows: {profile['null_event_type']}")
-    if thresholds.forbid_invalid_event_type and profile["invalid_event_type"] > 0:
+    if profile["invalid_event_type"] > 0:
         failures.append(f"invalid event_type rows: {profile['invalid_event_type']}")
-    if profile["null_user_rate"] > thresholds.max_null_user_rate:
+    if profile["null_user_rate"] > MAX_NULL_USER_RATE:
         failures.append(
-            f"null_user_rate {profile['null_user_rate']:.4f} > {thresholds.max_null_user_rate}"
+            f"null_user_rate {profile['null_user_rate']:.4f} > {MAX_NULL_USER_RATE}"
         )
-    if profile["dup_event_rate"] > thresholds.max_dup_event_rate:
+    if profile["dup_event_rate"] > MAX_DUP_EVENT_RATE:
         failures.append(
-            f"dup_event_rate {profile['dup_event_rate']:.4f} > {thresholds.max_dup_event_rate}"
+            f"dup_event_rate {profile['dup_event_rate']:.4f} > {MAX_DUP_EVENT_RATE}"
         )
     return failures
 
@@ -145,7 +137,6 @@ def curate(
     ingestion_date: str,
     curated_base: str,
     metrics_base: str,
-    thresholds: DQThresholds | None = None,
     source_system: str = "app",
     on_failure: Callable[[dict], None] | None = None,
 ) -> dict:
@@ -156,7 +147,6 @@ def curate(
     sensor semantics, design.md:128-134).
     """
     tune(spark)
-    thresholds = thresholds or DQThresholds()
     validate_date(ingestion_date)
 
     raw_path = os.path.join(
@@ -170,16 +160,16 @@ def curate(
     # exactly once per run (the reference re-read it per action, SURVEY §3).
     df = df.cache()
     try:
-        profile = dq_profile(df, thresholds)
-        failures = evaluate_dq(profile, thresholds)
+        profile = dq_profile(df)
+        failures = evaluate_dq(profile)
         report = {
             "ingestion_date": ingestion_date,
             "raw_path": raw_path,
             "profile": profile,
             "thresholds": {
-                "max_null_user_rate": thresholds.max_null_user_rate,
-                "max_dup_event_rate": thresholds.max_dup_event_rate,
-                "valid_event_types": list(thresholds.valid_event_types),
+                "max_null_user_rate": MAX_NULL_USER_RATE,
+                "max_dup_event_rate": MAX_DUP_EVENT_RATE,
+                "valid_event_types": list(VALID_EVENT_TYPES),
             },
             "failures": failures,
             "status": "FAIL" if failures else "PASS",
@@ -227,7 +217,6 @@ def backfill(
     end: str,
     curated_base: str,
     metrics_base: str,
-    thresholds: DQThresholds | None = None,
     source_system: str = "app",
     on_failure: Callable[[dict], None] | None = None,
     max_parallel: int = 1,
@@ -250,7 +239,7 @@ def backfill(
     def run_one(d: str) -> dict:
         return curate(
             spark, raw_base, d, curated_base, metrics_base,
-            thresholds, source_system, on_failure,
+            source_system, on_failure,
         )
 
     if max_parallel <= 1:

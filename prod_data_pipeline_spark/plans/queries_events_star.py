@@ -1028,11 +1028,18 @@ def user_sessions(spark, sf_dir):
 
 _TOKS_SQL = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
 
+from prod_data_pipeline_spark.operators.dedup import (
+    MINHASH_HASHES,
+    SIMHASH_BITS,
+    SIMHASH_MAX_HAMMING,
+)
+from prod_data_pipeline_spark.operators.text import WINNOW_K, WINNOW_WINDOW
 
-def _minhash_sql(num_hashes: int = 8) -> str:
+
+def _minhash_sql() -> str:
     mh = ",\n           ".join(
         f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-        for j in range(num_hashes)
+        for j in range(MINHASH_HASHES)
     )
     return f"""
     WITH t AS (
@@ -1071,7 +1078,7 @@ def dedup_docs_exact(spark, sf_dir):
 
 @query(
     "docs_minhash_signatures",
-    oracle=_minhash_sql(8),
+    oracle=_minhash_sql(),
     tags=("dedup", "minhash"),
 )
 def docs_minhash_signatures(spark, sf_dir):
@@ -1080,8 +1087,8 @@ def docs_minhash_signatures(spark, sf_dir):
     from prod_data_pipeline_spark.operators.dedup import with_minhash
 
     docs = _t(spark, sf_dir, "documents")
-    sig = with_minhash(docs, num_hashes=8)
-    return sig.select("doc_id", *[f"mh_{j}" for j in range(8)]).orderBy("doc_id")
+    sig = with_minhash(docs)
+    return sig.select("doc_id", *[f"mh_{j}" for j in range(MINHASH_HASHES)]).orderBy("doc_id")
 
 
 @query(
@@ -1330,13 +1337,15 @@ def corpus_dup_clusters(spark, sf_dir):
     return dup_clusters(pairs).orderBy("doc_id")
 
 
-def _simhash_core_sql(bits: int = 60, max_hamming: int = 3, p: str = "") -> str:
+def _simhash_core_sql(p: str = "") -> str:
     """CTE chain (no WITH, no final SELECT) replaying the md5
     SimHash pipeline: per-token bit from hex-nibble arithmetic,
     sign-of-sum per bit, 4-chunk pigeonhole bucketing, exact Hamming
-    verify.  Mirrors operators/dedup.py bit for bit.  ``p`` prefixes
+    verify (SIMHASH_BITS bits, Hamming <= SIMHASH_MAX_HAMMING).  Mirrors
+    operators/dedup.py bit for bit.  ``p`` prefixes
     every CTE name so the chain composes into larger oracles; the final
     CTE is ``{p}shpairs (id_a, id_b, hamming)``."""
+    bits, max_hamming = SIMHASH_BITS, SIMHASH_MAX_HAMMING
     sums = ",\n             ".join(
         f"SUM(CASE WHEN ((strpos('0123456789abcdef', substr(h, {b // 4 + 1}, 1)) - 1)"
         f" >> {b % 4}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
@@ -1371,9 +1380,9 @@ def _simhash_core_sql(bits: int = 60, max_hamming: int = 3, p: str = "") -> str:
     )"""
 
 
-def _simhash_sql(bits: int = 60, max_hamming: int = 3) -> str:
+def _simhash_sql() -> str:
     return f"""
-    WITH {_simhash_core_sql(bits, max_hamming)}
+    WITH {_simhash_core_sql()}
     SELECT id_a, id_b, hamming FROM shpairs ORDER BY id_a, id_b
     """
 
@@ -1418,7 +1427,7 @@ def docs_simhash_pairs(spark, sf_dir):
       JOIN t2 tb ON tb.doc_id = c.id_b
       WHERE 100 * len(list_intersect(ta.toks, tb.toks))
             >= 90 * (len(ta.toks) + len(tb.toks) - len(list_intersect(ta.toks, tb.toks)))
-    ), {_simhash_core_sql(60, 3, "sh_")}
+    ), {_simhash_core_sql("sh_")}
     , ov AS (
       SELECT s.id_a, s.id_b FROM sh_shpairs s
       JOIN exact e ON e.id_a = s.id_a AND e.id_b = s.id_b
@@ -1482,10 +1491,11 @@ def docs_simhash_recall_vs_exact(spark, sf_dir):
     )
 
 
-def _winnow_sql(k: int = 3, window: int = 4) -> str:
+def _winnow_sql() -> str:
     """DuckDB replay of md5 winnowing: k-gram shingles (ordered,
     with duplicates), md5 per shingle, lexicographic min of each w-window
     (a short doc keeps the min of everything it has), distinct + explode."""
+    k, window = WINNOW_K, WINNOW_WINDOW
     return f"""
     WITH t AS (
       SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
@@ -2023,6 +2033,8 @@ def docs_mixing_weights(spark, sf_dir):
     return mixing_weights(docs, {"src0": 0.5, "src1": 0.3, "src2": 0.2}, "source")
 
 
+from prod_data_pipeline_spark.operators.sampling import DSIR_BUCKETS, DSIR_SALT
+
 # Shared DuckDB CTE chain replaying operators.sampling.dsir_importance:
 # target = English documents, raw = everything else; hashed-bigram bucket
 # distributions with Laplace smoothing, per-bucket ln-ratio rounded to 7
@@ -2040,7 +2052,7 @@ _DSIR_CTES = f"""
       FROM rawd
     ), db AS (
       SELECT doc_id,
-             CAST(('0x' || substr(md5('dsir:' || gram), 1, 8))::BIGINT % 1024
+             CAST(('0x' || substr(md5('{DSIR_SALT}:' || gram), 1, 8))::BIGINT % {DSIR_BUCKETS}
                   AS INT) AS bucket,
              COUNT(*) AS cnt
       FROM rg GROUP BY 1, 2
@@ -2051,7 +2063,7 @@ _DSIR_CTES = f"""
                ELSE [] END) AS gram
       FROM tgtd
     ), tcb AS (
-      SELECT CAST(('0x' || substr(md5('dsir:' || gram), 1, 8))::BIGINT % 1024
+      SELECT CAST(('0x' || substr(md5('{DSIR_SALT}:' || gram), 1, 8))::BIGINT % {DSIR_BUCKETS}
                   AS INT) AS bucket,
              COUNT(*) AS tc
       FROM tg GROUP BY 1
@@ -2060,7 +2072,7 @@ _DSIR_CTES = f"""
     ), buckets AS (
       SELECT CAST(d.range AS INT) AS bucket,
              COALESCE(tcb.tc, 0) AS tc, COALESCE(rcb.rc, 0) AS rc
-      FROM range(0, 1024) d
+      FROM range(0, {DSIR_BUCKETS}) d
       LEFT JOIN tcb ON tcb.bucket = d.range
       LEFT JOIN rcb ON rcb.bucket = d.range
     ), tot AS (
@@ -2068,8 +2080,8 @@ _DSIR_CTES = f"""
       FROM buckets
     ), ratio AS (
       SELECT bucket,
-             ROUND(ln((tc + 1.0) / (tt + 1024.0))
-                   - ln((rc + 1.0) / (rt + 1024.0)), 7) AS log_ratio
+             ROUND(ln((tc + 1.0) / (tt + {DSIR_BUCKETS}.0))
+                   - ln((rc + 1.0) / (rt + {DSIR_BUCKETS}.0)), 7) AS log_ratio
       FROM buckets, tot
     ), w AS (
       SELECT db.doc_id, CAST(SUM(cnt) AS BIGINT) AS n_grams,

@@ -1512,7 +1512,7 @@ def docs_dup_pagerank(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = near_dup_pairs(docs, sort=False).select("id_a", "id_b")
-    ranks = pagerank_quantized(pairs, n_iters=6, checkpoint_every=3)
+    ranks = pagerank_quantized(pairs, n_iters=6)
     return (
         ranks.select(
             F.col("node").alias("doc_id"), F.round("rank", 9).alias("centrality")
@@ -1639,7 +1639,7 @@ def docs_textrank_keywords(spark, sf_dir):
         F.least(wid(F.col("wa")), wid(F.col("wb"))).alias("id_a"),
         F.greatest(wid(F.col("wa")), wid(F.col("wb"))).alias("id_b"),
     ).distinct()
-    ranks = pagerank_quantized(pairs, n_iters=6, checkpoint_every=3)
+    ranks = pagerank_quantized(pairs, n_iters=6)
     vocab = (
         adj.select(F.col("wa").alias("word"))
         .union(adj.select(F.col("wb").alias("word")))

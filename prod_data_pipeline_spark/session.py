@@ -79,7 +79,7 @@ def get_spark(
     return tune(builder.getOrCreate())
 
 
-def ensure_parallelism(df, factor: int = 1):
+def ensure_parallelism(df):
     """Repartition up to the session's default parallelism when the source
     has fewer partitions.  A small table read from one parquet file is ONE
     partition — and any compute-heavy per-row operator (minhash, simhash,
@@ -87,7 +87,7 @@ def ensure_parallelism(df, factor: int = 1):
     whenever the input is already at least as parallel as the cluster, so
     at real scale (thousands of input splits) this never adds a shuffle.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     files = df.inputFiles()
     if files:
         # File-source scan: input-split count is bounded below by file count

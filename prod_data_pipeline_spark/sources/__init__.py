@@ -7,7 +7,6 @@ from prod_data_pipeline_spark.sources.manifest import (  # noqa: F401
 from prod_data_pipeline_spark.sources.readers import (  # noqa: F401
     TABLES,
     load_table,
-    load_tables,
     read_events_csv,
     read_events_ndjson,
     with_ingestion_date_from_path,

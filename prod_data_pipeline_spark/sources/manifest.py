@@ -354,17 +354,18 @@ _BLOOM_BITS = 1024
 _BLOOM_K = 3
 
 
-def _bloom_positions_py(value, bits: int = _BLOOM_BITS, k: int = _BLOOM_K) -> list[int]:
+def _bloom_positions_py(value) -> list[int]:
     """The k bloom bit positions of a value — md5-derived so the DRIVER
     (plain Python, no JVM) computes the identical positions the Spark-side
     collection did: position_j = int(md5("bf{j}:" + str(value))[:12], 16)
-    mod bits.  Values hash by str() form on both sides."""
+    mod _BLOOM_BITS, for j < _BLOOM_K.  Values hash by str() form on both
+    sides."""
     import hashlib
 
     s = str(value)
     return [
-        int(hashlib.md5(f"bf{j}:{s}".encode()).hexdigest()[:12], 16) % bits
-        for j in range(k)
+        int(hashlib.md5(f"bf{j}:{s}".encode()).hexdigest()[:12], 16) % _BLOOM_BITS
+        for j in range(_BLOOM_K)
     ]
 
 
@@ -386,7 +387,7 @@ def _bloom_value_render_safe(value) -> bool:
     return isinstance(value, (str, int, datetime.date))
 
 
-def _bloom_pos_col(col: str, j: int, bits: int = _BLOOM_BITS):
+def _bloom_pos_col(col: str, j: int):
     from pyspark.sql import functions as F
 
     return F.pmod(
@@ -397,7 +398,7 @@ def _bloom_pos_col(col: str, j: int, bits: int = _BLOOM_BITS):
             16,
             10,
         ).cast("long"),
-        F.lit(bits),
+        F.lit(_BLOOM_BITS),
     ).cast("int")
 
 
@@ -780,27 +781,26 @@ def delete_where(
     matching SQL ``DELETE WHERE col = value`` semantics.  Stats and
     blooms for rewritten files are re-collected over the SAME columns
     the snapshot already tracked; carried-over files keep theirs.
-    Returns the new Snapshot.
+    Returns the new Snapshot; no-ops (returns the current snapshot, no
+    version bump) when pruning proves the value absent from every file.
     """
     from pyspark.sql import functions as F
 
     snap = _read_head(table_path)
     _require_schema_column(snap, col, "delete_where")
     rewrite = set(prune_files_eq(snap, col, value))
+    if not rewrite:
+        return snap  # bloom/zone proof: nothing to delete
     carried = [f for f in snap.files if f not in rewrite]
 
-    new = _NO_NEW_FILES
-    if rewrite:
-        # fold pending MOR deletes in — scoped to exactly the files each
-        # entry covers (a union-wide filter would destroy a key
-        # re-inserted by a later append) — then apply this delete's own
-        # predicate.  The read has the recorded width, so the rewritten
-        # files keep every evolved column's data.
-        src = _grouped_delete_read(
-            _reader(spark, snap), snap.deletes, sorted(rewrite)
-        )
-        kept_rows = src.filter(~F.col(col).eqNullSafe(F.lit(value)))
-        new = _write_data_files(kept_rows, table_path, *_tracked_cols(snap))
+    # fold pending MOR deletes in — scoped to exactly the files each entry
+    # covers (a union-wide filter would destroy a key re-inserted by a
+    # later append) — then apply this delete's own predicate.  The read
+    # has the recorded width, so the rewritten files keep every evolved
+    # column's data.
+    src = _grouped_delete_read(_reader(spark, snap), snap.deletes, sorted(rewrite))
+    kept_rows = src.filter(~F.col(col).eqNullSafe(F.lit(value)))
+    new = _write_data_files(kept_rows, table_path, *_tracked_cols(snap))
 
     # the prune/rewrite plan was computed against the head; a concurrent
     # commit may have added files containing the key
@@ -817,12 +817,7 @@ def delete_where(
     )
 
 
-def delete_where_mor(
-    spark: SparkSession,
-    table_path: str,
-    col: str,
-    value,
-) -> Snapshot:
+def delete_where_mor(table_path: str, col: str, value) -> Snapshot:
     """Merge-on-read targeted deletion (Iceberg equality-delete / Delta
     deletion-vector shape): instead of rewriting the files that may hold
     ``col == value`` (delete_where's copy-on-write), commit a manifest
@@ -1130,7 +1125,6 @@ def rewrite_small_files(
     spark: SparkSession,
     table_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    min_group: int = 2,
     partition_col: str | None = None,
 ) -> Snapshot:
     """Bin-pack table maintenance (Iceberg `rewrite_data_files` shape): read
@@ -1146,8 +1140,8 @@ def rewrite_small_files(
     columns the snapshot already tracked; carried files keep theirs.
     Prior versions still reference the small files until ``vacuum()``
     expires them (time travel intact).  No-ops (returns the current
-    snapshot) when fewer than ``min_group`` small files exist — one small
-    file cannot be packed any better.
+    snapshot) when fewer than two small files exist — one small file
+    cannot be packed any better.
 
     At warehouse scale this is the nightly maintenance job: the rewrite
     set is chosen driver-side from manifest-listed sizes (no file is
@@ -1167,7 +1161,7 @@ def rewrite_small_files(
 
     snap = _read_head(table_path)
     small = [f for f in snap.files if os.path.getsize(f) < target_file_bytes]
-    if len(small) < min_group:
+    if len(small) < 2:
         return snap
     small_set = set(small)
     carried = [f for f in snap.files if f not in small_set]

@@ -47,11 +47,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def read_curated(spark: SparkSession, curated_base: str, merge_schema: bool = True) -> DataFrame:
+def read_curated(spark: SparkSession, curated_base: str) -> DataFrame:
     """Read the curated table with additive schema evolution.
 
     The reference defers schema evolution entirely (design.md:165); Spark
@@ -60,9 +56,7 @@ def read_curated(spark: SparkSession, curated_base: str, merge_schema: bool = Tr
     the union across partition footers.  Columns may be ADDED over time;
     renames/type changes still require a rewrite (as everywhere).
     """
-    return (
-        spark.read.option("mergeSchema", str(merge_schema).lower()).parquet(curated_base)
-    )
+    return spark.read.option("mergeSchema", "true").parquet(curated_base)
 
 
 def read_events_ndjson(
@@ -77,12 +71,7 @@ def read_events_ndjson(
     return reader.json(path)
 
 
-def read_events_csv(
-    spark: SparkSession,
-    path: str,
-    recursive: bool = False,
-    header: bool = True,
-) -> DataFrame:
+def read_events_csv(spark: SparkSession, path: str) -> DataFrame:
     """Schema-enforced CSV landing (same contract as the NDJSON path).
 
     PERMISSIVE mode with a rescue column: rows that fail the schema land
@@ -95,15 +84,13 @@ def read_events_csv(
     schema = StructType(
         EVENT_RAW_SCHEMA.fields + [StructField("_corrupt_record", StringType())]
     )
-    reader = (
+    return (
         spark.read.schema(schema)
-        .option("header", str(header).lower())
+        .option("header", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .csv(path)
     )
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.csv(path)
 
 
 def with_ingestion_date_from_path(df: DataFrame, col: str = "ingestion_date") -> DataFrame:

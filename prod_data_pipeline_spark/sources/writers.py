@@ -26,14 +26,13 @@ def write_curated(
     df: DataFrame,
     curated_base: str,
     partition_col: str = "ingestion_date",
-    mode: str = "overwrite",
     sort_cols: list[str] | None = None,
     file_format: str = "parquet",
 ) -> None:
     """S5 + C1: write the curated table partitioned by date.
 
     With ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set in
-    session.RUNTIME_CONFS), mode="overwrite" replaces exactly the
+    session.RUNTIME_CONFS), the overwrite replaces exactly the
     partitions present in `df` and leaves every other partition untouched —
     the reference's purge-then-append semantics (v3_dq.py:155-162) without
     the AWS-proprietary purge call, and atomically per partition.
@@ -46,7 +45,7 @@ def write_curated(
     if sort_cols:
         df = df.sortWithinPartitions(partition_col, *sort_cols)
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .partitionBy(partition_col)
         .format(file_format)  # parquet default; orc is the bundled alternative
         .save(curated_base)
@@ -129,11 +128,10 @@ def compact_partition(
     base: str,
     value: str,
     partition_col: str = "ingestion_date",
-    target_files: int = 1,
     sort_cols: list[str] | None = None,
 ) -> int:
-    """Maintenance: rewrite one partition's many small files into
-    `target_files` (optionally sorted for row-group skipping).
+    """Maintenance: rewrite one partition's many small files into one file
+    (optionally sorted for row-group skipping).
 
     Streaming appends and per-batch writes accumulate small files that
     crush scan throughput at scale (one task + one open per file).  The
@@ -151,9 +149,9 @@ def compact_partition(
     tmp_path = os.path.join(base, f".compact_tmp_{partition_col}={value}")
     df = spark.read.parquet(part_path)
     if sort_cols:
-        df = df.repartition(target_files).sortWithinPartitions(*sort_cols)
+        df = df.repartition(1).sortWithinPartitions(*sort_cols)
     else:
-        df = df.coalesce(target_files)
+        df = df.coalesce(1)
     df.write.mode("overwrite").parquet(tmp_path)
     n = spark.read.parquet(tmp_path).count()
     # Rename the old partition aside BEFORE renaming the new one into place:

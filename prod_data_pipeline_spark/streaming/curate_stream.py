@@ -44,6 +44,12 @@ from pyspark.sql import functions as F
 
 from prod_data_pipeline_spark.schemas import EVENT_RAW_SCHEMA
 
+# Event-time horizon of the windowed aggregations and the event dedup:
+# events later than this are dropped instead of updating their window.
+WATERMARK = "2 days"
+# Inactivity gap that closes a user session (the batch user_sessions rule).
+SESSION_GAP_MINUTES = 30
+
 
 def stream_events(spark: SparkSession, raw_glob: str, max_files_per_trigger: int = 10) -> DataFrame:
     """readStream over the NDJSON landing zone (one file per partition dir)."""
@@ -55,12 +61,12 @@ def stream_events(spark: SparkSession, raw_glob: str, max_files_per_trigger: int
     )
 
 
-def streaming_daily_counts(events: DataFrame, watermark: str = "2 days") -> DataFrame:
+def streaming_daily_counts(events: DataFrame) -> DataFrame:
     """Watermarked tumbling daily counts — the reference's per-day partition
     rollup (curated_events.sql:17-20) with late-data handled by the engine
     instead of manual re-runs."""
     return (
-        events.withWatermark("event_ts", watermark)
+        events.withWatermark("event_ts", WATERMARK)
         .groupBy(F.window("event_ts", "1 day").alias("day_window"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -74,22 +80,17 @@ def streaming_daily_counts(events: DataFrame, watermark: str = "2 days") -> Data
     )
 
 
-def streaming_sliding_rates(
-    events: DataFrame,
-    window_len: str = "6 hours",
-    slide: str = "3 hours",
-    watermark: str = "2 days",
-) -> DataFrame:
-    """Watermarked SLIDING-window event rates: each event lands in
-    window_len/slide overlapping windows, giving the smoothed rate curve
-    an alerting/monitoring consumer reads (tumbling windows quantize rate
-    changes to window boundaries; sliding windows see them at slide
-    granularity).  State per key is bounded by windows-per-slide x the
-    watermark horizon, exactly like the tumbling case scaled by the
-    overlap factor."""
+def streaming_sliding_rates(events: DataFrame) -> DataFrame:
+    """Watermarked SLIDING-window event rates: 6-hour windows every 3
+    hours, so each event lands in 2 overlapping windows, giving the
+    smoothed rate curve an alerting/monitoring consumer reads (tumbling
+    windows quantize rate changes to window boundaries; sliding windows
+    see them at slide granularity).  State per key is bounded by
+    windows-per-slide x the watermark horizon, exactly like the tumbling
+    case scaled by the overlap factor."""
     return (
-        events.withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window_len, slide).alias("w"))
+        events.withWatermark("event_ts", WATERMARK)
+        .groupBy(F.window("event_ts", "6 hours", "3 hours").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -122,7 +123,7 @@ def streaming_curate(
     )
 
 
-def streaming_dedup_events(events: DataFrame, watermark: str = "2 days") -> DataFrame:
+def streaming_dedup_events(events: DataFrame) -> DataFrame:
     """Streaming exact dedup on event_id: keeps the first occurrence seen,
     drops re-deliveries that arrive within the watermark horizon.
 
@@ -133,7 +134,7 @@ def streaming_dedup_events(events: DataFrame, watermark: str = "2 days") -> Data
     100 TB/day feed.  Re-deliveries later than the watermark are a
     DQ/backfill concern (handled by the batch path), not a streaming one.
     """
-    return events.withWatermark("event_ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("event_ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -152,15 +153,13 @@ def streaming_enriched(events: DataFrame, dim: DataFrame, on: str = "event_type"
 def streaming_click_attribution(
     events: DataFrame,
     lookback_minutes: int = 10,
-    watermark: str = "30 minutes",
-    click_type: str = "view_item",
-    purchase_type: str = "purchase",
 ) -> DataFrame:
     """Stream-stream interval join: each purchase matched to the same
-    user's clicks in the preceding ``lookback_minutes``.
+    user's clicks (``view_item`` events) in the preceding
+    ``lookback_minutes``.
 
-    Both sides carry a watermark and the join condition bounds event time
-    on BOTH ends, so Spark can evict buffered rows once the watermark
+    Both sides carry a 30-minute watermark and the join condition bounds
+    event time on BOTH ends, so Spark can evict buffered rows once the watermark
     passes them — state is proportional to the lookback horizon, not the
     stream length.  An unbounded condition (plain equi-join of streams)
     would accumulate state forever; this is the scale-safe form.
@@ -172,22 +171,22 @@ def streaming_click_attribution(
     # lineage (one stream filtered twice), so same-name Column references
     # would resolve ambiguously (a trivially-true `user_id == user_id`).
     clicks = (
-        events.filter(F.col("event_type") == click_type)
+        events.filter(F.col("event_type") == "view_item")
         .select(
             F.col("user_id").alias("click_user_id"),
             F.col("event_id").alias("click_id"),
             F.col("event_ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", "30 minutes")
     )
     purchases = (
-        events.filter(F.col("event_type") == purchase_type)
+        events.filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id"),
             F.col("event_id").alias("purchase_id"),
             F.col("event_ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", "30 minutes")
     )
     return purchases.join(
         clicks,
@@ -201,7 +200,7 @@ def streaming_click_attribution(
     ).select("user_id", "purchase_id", "purchase_ts", "click_id", "click_ts")
 
 
-def streaming_user_sessions(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def streaming_user_sessions(events: DataFrame) -> DataFrame:
     """Custom stateful streaming operator: per-user session counting with an
     inactivity gap, via applyInPandasWithState (GroupState keeps last-seen
     timestamp + session count per user across micro-batches)."""
@@ -229,7 +228,7 @@ def streaming_user_sessions(events: DataFrame, gap_minutes: int = 30) -> DataFra
             StructField("n_events", LongType()),
         ]
     )
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
 
     def update(key, pdfs, state: GroupState):
         (user_id,) = key
@@ -259,13 +258,9 @@ def streaming_user_sessions(events: DataFrame, gap_minutes: int = 30) -> DataFra
     )
 
 
-def streaming_session_stats(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "2 days",
-) -> DataFrame:
+def streaming_session_stats(events: DataFrame) -> DataFrame:
     """Native session-window aggregation: per-user sessions delimited by a
-    `gap_minutes` inactivity gap, via ``F.session_window`` — Spark merges
+    SESSION_GAP_MINUTES inactivity gap, via ``F.session_window`` — Spark merges
     overlapping windows and finalizes a session once the watermark passes
     its close.
 
@@ -275,10 +270,12 @@ def streaming_session_stats(
     the per-group logic outgrows an aggregation (e.g. emitting
     mid-session updates)."""
     return (
-        events.withWatermark("event_ts", watermark)
+        events.withWatermark("event_ts", WATERMARK)
         .groupBy(
             F.col("user_id"),
-            F.session_window(F.col("event_ts"), f"{gap_minutes} minutes").alias("session"),
+            F.session_window(F.col("event_ts"), f"{SESSION_GAP_MINUTES} minutes").alias(
+                "session"
+            ),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -438,7 +435,6 @@ def streaming_incremental_dedup(
     snapshot_keys: DataFrame,
     key_col: str = "fp",
     watermark_col: str | None = None,
-    watermark: str = "1 day",
 ) -> DataFrame:
     """Streaming twin of operators.dedup.incremental_dedup: ingest a
     document stream, dropping anything already in the static snapshot AND
@@ -450,8 +446,8 @@ def streaming_incremental_dedup(
          re-resolved each micro-batch so a snapshot refresh lands without
          a restart);
       2. streaming dropDuplicates on the key for the within-stream
-         kept-first rule.  With `watermark_col` set the state is
-         watermark-bounded (dropDuplicatesWithinWatermark) — the
+         kept-first rule.  With `watermark_col` set the state is bounded
+         by a 1-day watermark (dropDuplicatesWithinWatermark) — the
          unbounded-stream-safe form; without it, plain dropDuplicates
          keeps all-keys state and is only for bounded replays/tests.
 
@@ -463,7 +459,7 @@ def streaming_incremental_dedup(
         F.broadcast(snapshot_keys.select(key_col)), key_col, "left_anti"
     )
     if watermark_col is not None:
-        return fresh.withWatermark(watermark_col, watermark).dropDuplicatesWithinWatermark(
+        return fresh.withWatermark(watermark_col, "1 day").dropDuplicatesWithinWatermark(
             [key_col]
         )
     return fresh.dropDuplicates([key_col])
@@ -523,7 +519,6 @@ def streaming_histogram_sink(
     sketch_path: str,
     checkpoint_dir: str,
     n_buckets: int = 64,
-    vmax_cents: int = 50_000,
 ):
     """Streaming quantile sketch: maintain the mergeable equal-width
     value histogram (operators.sketches.value_histogram_build) from a
@@ -538,9 +533,7 @@ def streaming_histogram_sink(
     from prod_data_pipeline_spark.operators.sketches import value_histogram_build
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        sk = value_histogram_build(
-            batch, value_col, n_buckets=n_buckets, vmax_cents=vmax_cents
-        )
+        sk = value_histogram_build(batch, value_col, n_buckets=n_buckets)
         sk.write.mode("overwrite").parquet(
             os.path.join(sketch_path, f"batch={batch_id}")
         )
@@ -562,7 +555,7 @@ def read_histogram(spark: SparkSession, sketch_path: str) -> DataFrame:
     )
 
 
-def streaming_content_blocks(pages: DataFrame, keep_boiler: bool = False) -> DataFrame:
+def streaming_content_blocks(pages: DataFrame) -> DataFrame:
     """Streaming twin of the boilerplate gate (operators.text
     .markup_blocks): classify every markup block of a crawled-page stream
     and emit the content blocks — the gate every crawl pipeline runs AT
@@ -574,10 +567,7 @@ def streaming_content_blocks(pages: DataFrame, keep_boiler: bool = False) -> Dat
     STATELESS — no watermark, no state store, arbitrary input rate; the
     downstream per-doc assembly (extract_main_content's groupBy) belongs
     in the batch layer or a foreachBatch sink where the micro-batch
-    bounds it.  ``keep_boiler=True`` emits every block with its
-    ``is_good`` verdict instead of filtering — the auditing/metrics
-    shape."""
+    bounds it."""
     from prod_data_pipeline_spark.operators.text import markup_blocks
 
-    blocks = markup_blocks(pages)
-    return blocks if keep_boiler else blocks.filter(F.col("is_good"))
+    return markup_blocks(pages).filter(F.col("is_good"))

@@ -263,8 +263,8 @@ def test_adamic_adar_canonicalizes_mixed_orientation_input(spark):
 
 def test_truncate_lineage_local_mode(spark, small_graph):
     """Default mode: no checkpoint dir configured -> localCheckpoint.
-    PageRank (which cuts lineage via session.truncate_lineage every
-    checkpoint_every rounds) must still match numpy exactly."""
+    PageRank (which cuts lineage via session.truncate_lineage every 4th
+    round) must still match numpy exactly."""
     from prod_data_pipeline_spark.operators.graph import pagerank
     from prod_data_pipeline_spark.session import truncate_lineage
 

@@ -479,12 +479,12 @@ def _stale_head_table(spark, t):
             stats_cols=("k", "p"),
             bloom_cols=("k",),
         )
-    M.delete_where_mor(spark, t, "k", "u3")
+    M.delete_where_mor(t, "k", "u3")
 
 
 _STALE_HEAD_OPS = {
     "delete_where": lambda M, spark, t: M.delete_where(spark, t, "k", "u7"),
-    "delete_where_mor": lambda M, spark, t: M.delete_where_mor(spark, t, "k", "u5"),
+    "delete_where_mor": lambda M, spark, t: M.delete_where_mor(t, "k", "u5"),
     "compact_deletes": lambda M, spark, t: M.compact_deletes(spark, t),
     "commit_replace_where": lambda M, spark, t: M.commit_replace_where(
         spark.range(0, 10)
@@ -990,7 +990,7 @@ def test_multi_writer_full_op_matrix_serializes(spark, tmp_path):
         for did in (3, 11, 17):
             for _ in range(12):
                 try:
-                    s2 = delete_where_mor(spark, t, "id", did)
+                    s2 = delete_where_mor(t, "id", did)
                     if s2.mode == "mor-delete":  # a real entry landed
                         mor_payloads[s2.version] = did
                     break
@@ -1137,7 +1137,7 @@ def test_mor_delete_hides_rows_without_touching_files(spark, tmp_path):
 
     t = _mor_table(spark, tmp_path)
     before = read_manifest(t, 3)
-    s = delete_where_mor(spark, t, "user_id", 15)
+    s = delete_where_mor(t, "user_id", 15)
     assert s.version == 4
     # zero data movement: identical file list, physical row count unchanged
     assert s.files == before.files
@@ -1167,7 +1167,7 @@ def test_mor_delete_sequencing_reinserted_key_survives(spark, tmp_path):
     )
 
     t = _mor_table(spark, tmp_path)
-    delete_where_mor(spark, t, "user_id", 7)
+    delete_where_mor(t, "user_id", 7)
     assert read_snapshot(spark, t).filter(F.col("user_id") == 7).count() == 0
     # re-insert the key (new file, new version)
     df = (
@@ -1187,9 +1187,37 @@ def test_mor_delete_noop_when_pruning_proves_absence(spark, tmp_path):
     from prod_data_pipeline_spark.sources.manifest import delete_where_mor
 
     t = _mor_table(spark, tmp_path)
-    s = delete_where_mor(spark, t, "user_id", 9999)
+    s = delete_where_mor(t, "user_id", 9999)
     assert s.version == 3  # no version bump, no entry
     assert not (s.deletes or {})
+
+
+def test_cow_delete_noop_when_pruning_proves_absence(spark, tmp_path):
+    """A copy-on-write delete of a value the bloom/zone indexes prove
+    absent from every file publishes nothing, as the MOR delete: the head
+    version and every file under the table directory stay as they were."""
+    from prod_data_pipeline_spark.sources.manifest import (
+        current_version,
+        delete_where,
+    )
+
+    t = str(tmp_path / "noop")
+    commit_snapshot(
+        spark.range(0, 10).withColumn("k", F.col("id")).coalesce(1),
+        t,
+        stats_cols=("k",),
+        bloom_cols=("k",),
+    )
+
+    def listing():
+        return sorted(
+            os.path.join(d, f) for d, _, files in os.walk(t) for f in files
+        )
+
+    before = listing()
+    s = delete_where(spark, t, "k", 999)
+    assert s.version == 1 and current_version(t) == 1
+    assert listing() == before
 
 
 def test_compact_deletes_folds_entries_and_preserves_content(spark, tmp_path):
@@ -1200,8 +1228,8 @@ def test_compact_deletes_folds_entries_and_preserves_content(spark, tmp_path):
     )
 
     t = _mor_table(spark, tmp_path)
-    delete_where_mor(spark, t, "user_id", 3)
-    delete_where_mor(spark, t, "user_id", 25)
+    delete_where_mor(t, "user_id", 3)
+    delete_where_mor(t, "user_id", 25)
     logical = sorted(r.user_id for r in read_snapshot(spark, t).collect())
     s = compact_deletes(spark, t)
     assert not (s.deletes or {})
@@ -1226,7 +1254,7 @@ def test_binpack_compaction_folds_pending_mor_deletes(spark, tmp_path):
     )
 
     t = _mor_table(spark, tmp_path)
-    delete_where_mor(spark, t, "user_id", 12)
+    delete_where_mor(t, "user_id", 12)
     s = rewrite_small_files(spark, t)  # everything is tiny: full pack
     assert s.mode == "compact"
     assert not (s.deletes or {})
@@ -1247,7 +1275,7 @@ def test_cow_delete_folds_pending_mor_on_shared_files(spark, tmp_path):
     )
 
     t = _mor_table(spark, tmp_path)
-    delete_where_mor(spark, t, "user_id", 11)  # same file as 12 (10..19)
+    delete_where_mor(t, "user_id", 11)  # same file as 12 (10..19)
     s = delete_where(spark, t, "user_id", 12)  # COW rewrite of that file
     got = read_snapshot(spark, t)
     assert got.count() == 28
@@ -1268,14 +1296,14 @@ def test_mor_delete_null_safety_and_value_type_guard(spark, tmp_path):
         [(1, 5), (2, None), (3, 5)], "id long, user_id long"
     ).coalesce(1)
     commit_snapshot(df, t, stats_cols=("user_id",))
-    delete_where_mor(spark, t, "user_id", 5)
+    delete_where_mor(t, "user_id", 5)
     got = read_snapshot(spark, t).collect()
     # NULL rows survive a value delete (null-safe equality)
     assert sorted(r.id for r in got) == [2]
     import pytest as _pytest
 
     with _pytest.raises(TypeError):
-        delete_where_mor(spark, t, "user_id", object())
+        delete_where_mor(t, "user_id", object())
 
 
 def test_rewrite_paths_never_destroy_reinserted_keys(spark, tmp_path):
@@ -1306,7 +1334,7 @@ def test_rewrite_paths_never_destroy_reinserted_keys(spark, tmp_path):
 
     # bin-pack compaction
     t = _mor_table(spark, tmp_path, "seq_binpack")
-    delete_where_mor(spark, t, "user_id", 11)
+    delete_where_mor(t, "user_id", 11)
     reinsert(t, 11, 901)
     rewrite_small_files(spark, t)  # packs ALL files incl. the re-insert
     got = read_snapshot(spark, t).filter(F.col("user_id") == 11).collect()
@@ -1314,11 +1342,11 @@ def test_rewrite_paths_never_destroy_reinserted_keys(spark, tmp_path):
 
     # dedicated delete compaction
     t = _mor_table(spark, tmp_path, "seq_merge")
-    delete_where_mor(spark, t, "user_id", 11)
+    delete_where_mor(t, "user_id", 11)
     reinsert(t, 11, 902)
     # second entry scoping the re-inserted file: its rewrite set now spans
     # a file the FIRST entry must not touch
-    delete_where_mor(spark, t, "user_id", 12)
+    delete_where_mor(t, "user_id", 12)
     s = compact_deletes(spark, t)
     assert not (s.deletes or {})
     got = read_snapshot(spark, t).filter(F.col("user_id").isin(11, 12)).collect()
@@ -1326,7 +1354,7 @@ def test_rewrite_paths_never_destroy_reinserted_keys(spark, tmp_path):
 
     # copy-on-write delete overlapping the scoped file
     t = _mor_table(spark, tmp_path, "seq_cow")
-    delete_where_mor(spark, t, "user_id", 11)
+    delete_where_mor(t, "user_id", 11)
     reinsert(t, 11, 903)
     delete_where(spark, t, "user_id", 12)  # rewrites the 10..19 file
     got = read_snapshot(spark, t).filter(F.col("user_id").isin(11, 12)).collect()
@@ -1342,7 +1370,7 @@ def test_mor_delete_rejects_null_value(spark, tmp_path):
 
     t = _mor_table(spark, tmp_path, "mor_nullval")
     with _pytest.raises(TypeError):
-        delete_where_mor(spark, t, "user_id", None)
+        delete_where_mor(t, "user_id", None)
 
 
 def test_binpack_survives_fully_hidden_small_set(spark, tmp_path):
@@ -1372,7 +1400,7 @@ def test_binpack_survives_fully_hidden_small_set(spark, tmp_path):
             .coalesce(1)
         )
         commit_snapshot(tiny, t, mode="append", stats_cols=("user_id", "day"))
-    delete_where_mor(spark, t, "user_id", 99999)  # scopes ONLY the tiny files
+    delete_where_mor(t, "user_id", 99999)  # scopes ONLY the tiny files
     big_file_bytes = max(
         os.path.getsize(f)
         for f in __import__(
@@ -1450,7 +1478,7 @@ def test_mor_delete_on_schema_evolved_column(spark, tmp_path):
     commit_snapshot(
         evolved, t, mode="append", stats_cols=("tier",), bloom_cols=("tier",)
     )
-    s = delete_where_mor(spark, t, "tier", 1)
+    s = delete_where_mor(t, "tier", 1)
     (entry,) = s.deletes.values()
     # the pre-evolution files have no stats for "tier": pruning keeps them
     assert len(entry["applies_to"]) > 1
@@ -1485,7 +1513,7 @@ def test_mor_delete_mixed_schema_group_never_resurrects(spark, tmp_path):
     commit_snapshot(
         evolved, t, mode="append", stats_cols=("tier",), bloom_cols=("tier",)
     )
-    delete_where_mor(spark, t, "tier", 1)  # scopes old files too (no stats)
+    delete_where_mor(t, "tier", 1)  # scopes old files too (no stats)
     # compaction reads the mixed group with a PLAIN reader and rewrites:
     # the 5 tier=1 rows must stay gone afterwards, the other 35 survive
     s = compact_deletes(spark, t)
@@ -1522,7 +1550,7 @@ def test_mixed_width_groups_union_and_binpack(spark, tmp_path):
     commit_snapshot(
         evolved, t, mode="append", stats_cols=("tier",), bloom_cols=("tier",)
     )
-    delete_where_mor(spark, t, "tier", 1)  # scopes every existing file
+    delete_where_mor(t, "tier", 1)  # scopes every existing file
     # append one MORE old-schema file AFTER the delete: outside every
     # applies_to -> its group keeps the narrow sampled schema
     late = (
@@ -1632,7 +1660,7 @@ def test_authoritative_schema_recorded_and_stable_across_mor_state(spark, tmp_pa
 
     # DEFAULT read: full recorded width already
     cols_before = read_snapshot(spark, t).columns
-    delete_where_mor(spark, t, "tier", 1)
+    delete_where_mor(t, "tier", 1)
     cols_pending = read_snapshot(spark, t).columns
     compact_deletes(spark, t)
     cols_after = read_snapshot(spark, t).columns
@@ -1771,7 +1799,7 @@ def test_delete_on_unknown_column_fails_fast(spark, tmp_path):
     with pytest.raises(ValueError, match="not in the table schema"):
         delete_where(spark, t, "no_such_col", None)
     with pytest.raises(ValueError, match="not in the table schema"):
-        delete_where_mor(spark, t, "no_such_col", 1)
+        delete_where_mor(t, "no_such_col", 1)
     assert read_snapshot(spark, t).count() == 10
 
 
@@ -1844,11 +1872,11 @@ def test_returned_snapshot_equals_stored_manifest(spark, tmp_path):
         ),
         # an append of no rows: its part file records 0 rows
         lambda: commit_snapshot(part(300, 3, 0).limit(0), t, **indexes),
-        lambda: delete_where_mor(spark, t, "k", "u7"),
+        lambda: delete_where_mor(t, "k", "u7"),
         lambda: delete_where(spark, t, "k", "u2"),
         lambda: commit_replace_where(part(200, 1, 0), t, "p", 1, **indexes),
         lambda: rewrite_small_files(spark, t, partition_col="p"),
-        lambda: delete_where_mor(spark, t, "k", "u8"),
+        lambda: delete_where_mor(t, "k", "u8"),
         lambda: compact_deletes(spark, t),
         lambda: rollback(t, 2),
     ]
@@ -1911,11 +1939,11 @@ def test_table_operations_take_row_counts_from_the_manifest(
         snap = op()
         return len(calls), snap.n_rows
 
-    delete_where_mor(spark, t, "user_id", 12)
+    delete_where_mor(t, "user_id", 12)
     # physical rows: the hidden user_id=12 row stays until a rewrite folds it
     assert counts_and_rows(lambda: delete_where(spark, t, "user_id", 3)) == (0, 29)
     assert counts_and_rows(lambda: rewrite_small_files(spark, t)) == (0, 28)
-    delete_where_mor(spark, t, "user_id", 25)
+    delete_where_mor(t, "user_id", 25)
     assert counts_and_rows(lambda: compact_deletes(spark, t)) == (0, 27)
     repl = spark.range(100, 105).withColumn("day", F.lit(1)).coalesce(1)
     assert counts_and_rows(

@@ -28,13 +28,13 @@ def assets(spark):
 
 
 def test_decode_schema_and_determinism(spark, assets):
-    out = decode_and_featurize(assets, feature_dim=16)
+    out = decode_and_featurize(assets)
     rows = {r["asset_id"]: r for r in out.collect()}
     assert set(rows) == {1, 2, 3, 4, 5}
     assert all(len(r["features"]) == 16 for r in rows.values())
     assert rows[5]["n_bytes"] == 0 and all(v == 0.0 for v in rows[5]["features"])
     # deterministic: same payload -> same features across runs
-    again = {r["asset_id"]: r["features"] for r in decode_and_featurize(assets, 16).collect()}
+    again = {r["asset_id"]: r["features"] for r in decode_and_featurize(assets).collect()}
     assert again == {k: r["features"] for k, r in rows.items()}
     # distinct payloads -> distinct features
     assert rows[1]["features"] != rows[2]["features"]

@@ -9,7 +9,6 @@ import pytest
 
 from prod_data_pipeline_spark.plans.pipeline import (
     DQGateError,
-    DQThresholds,
     backfill,
     curate,
     validate_date,
@@ -297,15 +296,15 @@ def test_additive_schema_evolution_across_partitions(spark, tmp_path):
 def test_dup_event_rows_counts_null_id_group(spark):
     """count(event_id) skips NULLs, but the reference's groupBy('event_id')
     .count() treats all NULL ids as ONE group — n nulls must contribute n-1
-    duplicate rows (v3_dq.py:81-83) or the dup-rate gate is weaker than the
-    reference's when forbid_null_event_id is relaxed."""
+    duplicate rows (v3_dq.py:81-83) or the reported dup rate is lower than
+    the reference's."""
     from prod_data_pipeline_spark.plans.pipeline import dq_profile
 
     rows = [("a",), ("a",), ("b",), (None,), (None,), (None,)]
     df = spark.createDataFrame(rows, "event_id string").selectExpr(
         "event_id", "cast(null as string) as user_id", "'login' as event_type"
     )
-    p = dq_profile(df, DQThresholds())
+    p = dq_profile(df)
     assert p["dup_event_rows"] == 3  # 'a' contributes 1, the 3 nulls contribute 2
 
 

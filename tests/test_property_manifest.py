@@ -78,8 +78,10 @@ def test_mor_sequencing_matches_model(spark, tmp_path_factory, ops):
         if op == "append":
             append(arg)
         elif op in ("mor_delete", "cow_delete"):
-            fn = delete_where_mor if op == "mor_delete" else delete_where
-            fn(spark, t, "user_id", arg)
+            if op == "mor_delete":
+                delete_where_mor(t, "user_id", arg)
+            else:
+                delete_where(spark, t, "user_id", arg)
             model[:] = [r for r in model if r[0] != arg]
         elif op == "compact":
             compact_deletes(spark, t)

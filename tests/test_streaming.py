@@ -368,7 +368,7 @@ def test_streaming_upsert_sink_recovers_snapshot_from_old(spark, tmp_path):
 def test_streaming_sliding_rates_match_batch(spark, raw, tmp_path):
     """Sliding-window rates (6h window / 3h slide) from the stream equal
     the same windowed aggregation computed in batch over the same files —
-    every event in window_len/slide overlapping windows, none dropped."""
+    every event in both of its overlapping windows, none dropped."""
     base, _ = raw
     agg = streaming_sliding_rates(stream_events(spark, _glob(base)))
     q = (

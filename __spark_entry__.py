@@ -36,8 +36,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: spec.oracle
-        for name, spec in QUERIES.items()
-        if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in QUERIES.items()}

@@ -28,6 +28,10 @@ from prod_data_pipeline_spark.session import truncate_lineage
 # vector to ROUND_VEC digits.  The SQL oracles replay the same digits.
 ROUND_TERM = 12
 ROUND_VEC = 9
+# int40 covariance quantizer: q = floor(p * INT40_SCALE), summed as exact
+# int64 hi/lo partials split at INT40_LO.
+INT40_SCALE = 1 << 40
+INT40_LO = 1 << 20
 
 
 def covariance_matrix(
@@ -164,15 +168,15 @@ def covariance_matrix(
         cmax = 2.0 * amax
         if (
             cmax * cmax >= float(1 << 22)
-            or cmax * cmax * float(n) * float(1 << 20) >= float(1 << 62)
+            or cmax * cmax * float(n) * float(INT40_LO) >= float(1 << 62)
             or n >= (1 << 42)
         ):
             raise ValueError(
                 f"covariance_matrix: int40 quantizer bounds exceeded "
                 f"(max|x|={amax}, n={n}); pass quantizer='decimal'"
             )
-        scale = float(1 << 40)
-        m = 1 << 20
+        scale = float(INT40_SCALE)
+        m = INT40_LO
         prods = F.flatten(
             F.transform(
                 idx,

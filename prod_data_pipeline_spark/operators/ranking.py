@@ -141,7 +141,9 @@ def exact_quantiles(
     """Exact interpolated quantiles (SQL ``percentile_cont`` /  DuckDB
     ``quantile_cont`` semantics) per ``by`` group, distributed.
 
-    ``probs`` maps output column name -> quantile in [0, 1].  Only the
+    ``probs`` maps output column name -> quantile in [0, 1].  Returns
+    (``*by``, qname, quantile, n_total), n_total being the group's row
+    count, so callers need no second count of the input.  Only the
     two rows flanking each target rank survive the rank pass; the
     interpolation ``lo + (hi - lo) * frac`` with ``h = 1 + p*(n-1)`` is
     the standard continuous-quantile definition, evaluated once per
@@ -171,6 +173,7 @@ def exact_quantiles(
         totals.withColumn("__q", F.explode(prob_rows))
         .select(
             *by,
+            TOTAL_COL,
             F.col("__q.qname").alias("qname"),
             (F.lit(1) + F.col("__q.p") * (F.col(TOTAL_COL) - 1)).alias("__h"),
         )
@@ -187,6 +190,7 @@ def exact_quantiles(
     hits = r.join(F.broadcast(nd), cond).select(
         *[F.col(f"__nd.{c}") for c in by],
         F.col("__nd.qname").alias("qname"),
+        F.col(f"__nd.{TOTAL_COL}").alias(TOTAL_COL),
         F.col("__nd.__k1").alias("__k1"),
         F.col("__nd.__frac").alias("__frac"),
         F.col(f"__r.{RANK_COL}").alias("__rk"),
@@ -197,6 +201,7 @@ def exact_quantiles(
         .agg(
             F.max(F.when(F.col("__rk") == F.col("__k1"), F.col("__v"))).alias("__lo"),
             F.max(F.when(F.col("__rk") != F.col("__k1"), F.col("__v"))).alias("__hi"),
+            F.max(TOTAL_COL).alias(TOTAL_COL),
         )
         .select(
             *by,
@@ -205,5 +210,6 @@ def exact_quantiles(
                 F.col("__lo")
                 + (F.coalesce("__hi", "__lo") - F.col("__lo")) * F.col("__frac")
             ).alias("quantile"),
+            TOTAL_COL,
         )
     )

@@ -41,6 +41,9 @@ ROUND_SIM = 4
 KMEANS_SEED = 42
 # md5 prefix of the SRP hyperplanes: component (b, i) hashes "42:b:i".
 SRP_SEED = 42
+# SRP signature width and the bits per LSH band of srp_near_dup_pairs.
+SRP_BITS = 32
+SRP_BAND_BITS = 8
 
 
 def _norm_emb(df: DataFrame, emb_col: str) -> DataFrame:
@@ -574,7 +577,7 @@ def _md5_planes(dim: int, nbits: int) -> list[list[float]]:
 def with_srp_signature(
     df: DataFrame,
     dim: int,
-    nbits: int = 32,
+    nbits: int = SRP_BITS,
     emb_col: str = "embedding",
 ) -> DataFrame:
     """Append a signed-random-projection (SimHash-for-cosine) signature:
@@ -680,8 +683,8 @@ def srp_near_dup_pairs(
     df: DataFrame,
     dim: int,
     threshold: float = 0.3,
-    nbits: int = 32,
-    band_bits: int = 8,
+    nbits: int = SRP_BITS,
+    band_bits: int = SRP_BAND_BITS,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     sort: bool = True,
@@ -1330,13 +1333,15 @@ def pq_codebook(
 #: decimal columns, vectorizable.  (Contrast the ROUND+DECIMAL recipe,
 #: whose per-value BigDecimal cost dominates the covariance family.)
 PQ_QUANT = float(1 << 40)
+#: Product-quantization subspaces (codes per vector).
+PQ_SUBSPACES = 8
 
 
 def pq_encode(
     df: DataFrame,
     labels: list,
     codebook: dict,
-    m: int = 8,
+    m: int = PQ_SUBSPACES,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
 ) -> DataFrame:
@@ -1407,7 +1412,7 @@ def pq_adc_topk(
     df: DataFrame,
     query_df: DataFrame,
     k: int = 5,
-    m: int = 8,
+    m: int = PQ_SUBSPACES,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     label_col: str = "label",

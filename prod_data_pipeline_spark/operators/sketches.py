@@ -41,6 +41,9 @@ from pyspark.sql import functions as F
 
 # Prefix of every hashed cell key: md5('cms<row>:<key>').
 CMS_SALT = "cms"
+# Default sketch shape: hash rows x buckets per row.
+CMS_DEPTH = 4
+CMS_WIDTH = 512
 
 
 def _bucket(key: F.Column, row: int, width: int) -> F.Column:
@@ -55,8 +58,8 @@ def cms_build(
     df: DataFrame,
     key_col: str,
     weight_col: str | None = None,
-    depth: int = 4,
-    width: int = 512,
+    depth: int = CMS_DEPTH,
+    width: int = CMS_WIDTH,
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Build a count-min sketch of `key_col` occurrences (or weights).
@@ -100,8 +103,8 @@ def cms_estimate(
     sketch: DataFrame,
     keys: DataFrame,
     key_col: str,
-    depth: int = 4,
-    width: int = 512,
+    depth: int = CMS_DEPTH,
+    width: int = CMS_WIDTH,
 ) -> DataFrame:
     """Point-estimate each key in `keys`: min over its depth cells.
 

@@ -16,6 +16,13 @@ parquet tables.  Conventions that make the value-hash comparison exact:
 - averages are written as (exact_sum_as_double) / count — one double
   division instead of engine-specific AVG accumulation;
 - top-k queries always carry a unique tie-break key;
+- an oracle that replays an operator recipe builds those CTEs from the
+  query_registry SQL helpers (shingles_sql, minhash_sig_sql,
+  near_dup_pairs_sql, jaccard_prefix_sql, snm_key_sql, cms_cells_sql,
+  srp_candidates_sql, pq_adc_sql, int40_cov_sql, nb_train_sql,
+  ft_scored_sql), which read the operators' constants, never from a
+  hand copy (tests/test_queries_parity.py::
+  test_operator_recipes_have_one_sql_mirror);
 - ``events.ts`` is naive parquet TIMESTAMP(MICROS): Spark reads it as a
   session-UTC TIMESTAMP (sources.readers.load_table), DuckDB as a naive
   UTC TIMESTAMP — identical micros on both sides.
@@ -26,13 +33,7 @@ Reference parity notes cite /root/reference file:line in each docstring.
 
 from __future__ import annotations
 
-from prod_data_pipeline_spark.plans.query_registry import (  # noqa: F401
-    QUERIES,
-    QuerySpec,
-    _t,
-    dsum,
-    query,
-)
+from prod_data_pipeline_spark.plans.query_registry import QUERIES, QuerySpec  # noqa: F401
 
 # Chunk imports REGISTER the queries as a side effect; the order below
 # is the original monolithic file order, so QUERIES preserves the

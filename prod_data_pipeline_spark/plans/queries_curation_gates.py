@@ -5,33 +5,26 @@ plans/queries.py imports the chunks in original file order).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass, field
-from functools import reduce
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from prod_data_pipeline_spark.schemas import TESTDATA_EVENT_TYPES
-from prod_data_pipeline_spark.session import truncate_lineage, tune
-from prod_data_pipeline_spark.sources.readers import load_table
-
-from prod_data_pipeline_spark.plans.query_registry import (  # noqa: F401
-    _t,
-    dsum,
-    query,
+from prod_data_pipeline_spark.operators.quality import (
+    NB_BUCKETS,
+    NB_SALT,
+    TRAIN_FOLDS,
 )
-from prod_data_pipeline_spark.plans.queries_events_star import (  # noqa: F401
+from prod_data_pipeline_spark.session import truncate_lineage, tune
+
+from prod_data_pipeline_spark.plans.query_registry import (
     _LANG_SQL_SETS,
     _TOKS_SQL,
-    corpus_dup_clusters,
-    docs_lang_id,
-    docs_packed_bins,
-    docs_quality_scores,
-    emb_topk_bruteforce,
-)
-from prod_data_pipeline_spark.plans.queries_tpch_graph import (  # noqa: F401
-    events_kanonymity_audit,
+    _t,
+    dsum,
+    ft_scored_sql,
+    nb_train_sql,
+    near_dup_pairs_sql,
+    pq_adc_sql,
+    query,
 )
 
 # ---------------------------------------------------------------------------
@@ -84,7 +77,6 @@ def _boiler_oracle_sql() -> str:
 @query(
     "docs_boilerplate_stats",
     oracle=_boiler_oracle_sql(),
-    tags=("text", "curation", "boilerplate", "justext"),
 )
 def docs_boilerplate_stats(spark, sf_dir):
     """Boilerplate/markup-removal gate (jusText-style): per source, the
@@ -217,7 +209,6 @@ _PARA_REP_ORACLE = f"""
 @query(
     "docs_paragraph_repetition",
     oracle=_PARA_REP_ORACLE,
-    tags=("text", "curation", "gopher", "repetition"),
 )
 def docs_paragraph_repetition(spark, sf_dir):
     """Gopher/MassiveText duplicate-LINE/PARAGRAPH gates (Rae et al. 2021
@@ -327,7 +318,6 @@ _PARA_DEDUP_ORACLE = f"""
 @query(
     "docs_paragraph_dedup",
     oracle=_PARA_DEDUP_ORACLE,
-    tags=("text", "curation", "dedup", "ccnet", "paragraph"),
 )
 def docs_paragraph_dedup(spark, sf_dir):
     """CCNet-style CORPUS-WIDE paragraph dedup — the shard-level step
@@ -379,57 +369,7 @@ def docs_paragraph_dedup(spark, sf_dir):
 @query(
     "docs_model_quality_gate",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, source, {_TOKS_SQL} AS tk FROM documents
-    ), lab AS (
-      SELECT doc_id, source, len(tk) AS n, len(list_distinct(tk)) AS nd,
-             CASE WHEN ROUND(0.5 * LEAST(len(tk) / 100.0, 1.0)
-                  + 0.5 * (len(list_distinct(tk)) / CAST(len(tk) AS DOUBLE)), 4)
-                  >= 0.52 THEN 1 ELSE 0 END AS y,
-             CAST(doc_id % 5 AS INT) AS fold
-      FROM t
-    ), feats AS (
-      SELECT doc_id, source, y, fold,
-             ['len:' || CAST(LEAST(n // 5, 40) AS VARCHAR),
-              'div:' || CAST((nd * 40) // n AS VARCHAR),
-              'lxd:' || CAST(LEAST(n // 10, 20) AS VARCHAR) || '_'
-                     || CAST((nd * 20) // n AS VARCHAR)] AS fs
-      FROM lab
-    ), ex AS (
-      SELECT doc_id, source, y, fold,
-             CAST(('0x' || substr(md5(f), 1, 8))::BIGINT % 4096
-                  AS BIGINT) AS b
-      FROM (SELECT doc_id, source, y, fold, unnest(fs) AS f FROM feats)
-      GROUP BY 1, 2, 3, 4, 5
-    ), prior_counts AS (
-      SELECT CAST(SUM(y) AS DOUBLE) AS npos,
-             CAST(SUM(1 - y) AS DOUBLE) AS nneg
-      FROM lab WHERE fold < 4
-    ), llr AS (
-      SELECT CAST(d.range AS BIGINT) AS b,
-             ROUND(ln((COALESCE(cpos, 0) + 1.0) / (npos + 2.0))
-                   - ln((COALESCE(cneg, 0) + 1.0) / (nneg + 2.0)), 7) AS w
-      FROM range(0, 4096) d
-      LEFT JOIN (SELECT b, SUM(y) AS cpos, SUM(1 - y) AS cneg
-                 FROM ex WHERE fold < 4 GROUP BY 1) trainb
-        ON trainb.b = d.range, prior_counts
-    ), prior AS (
-      SELECT ROUND(ln((npos + 1.0) / (nneg + 1.0)), 7) AS pr
-      FROM prior_counts
-    ), perdoc AS (
-      SELECT e.doc_id, e.source, COUNT(b) AS n_feats,
-             CAST(CAST(COALESCE(SUM(CAST(FLOOR(w * 10000000.0 + 0.5) AS BIGINT)),
-                                0) AS BIGINT) AS DOUBLE) / 10000000.0
-               AS wsum
-      FROM ex e JOIN llr USING (b)
-      GROUP BY 1, 2
-    ), scored AS (
-      SELECT doc_id, source, n_feats,
-             ROUND(1.0 / (1.0 + exp(-(CASE WHEN n_feats > 0
-                 THEN (wsum + (SELECT pr FROM prior)) / n_feats
-                 ELSE 0.0 END))), 6) AS prob
-      FROM perdoc
-    )
+    WITH {ft_scored_sql(", source")}
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CASE WHEN prob >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
@@ -440,7 +380,6 @@ def docs_paragraph_dedup(spark, sf_dir):
                  / COUNT(*), 6) AS mean_prob
     FROM scored GROUP BY 1 ORDER BY 1
     """,
-    tags=("text", "curation", "quality", "classifier", "fasttext", "trained"),
 )
 def docs_model_quality_gate(spark, sf_dir):
     """Model-based quality filtering with the fastText architecture — the
@@ -527,57 +466,7 @@ def kappa_report_columns() -> list:
 @query(
     "docs_gate_auc",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {{_TOKS_SQL}} AS tk FROM documents
-    ), lab AS (
-      SELECT doc_id, len(tk) AS n, len(list_distinct(tk)) AS nd,
-             CASE WHEN ROUND(0.5 * LEAST(len(tk) / 100.0, 1.0)
-                  + 0.5 * (len(list_distinct(tk)) / CAST(len(tk) AS DOUBLE)), 4)
-                  >= 0.52 THEN 1 ELSE 0 END AS y,
-             CAST(doc_id % 5 AS INT) AS fold
-      FROM t
-    ), feats AS (
-      SELECT doc_id, y, fold,
-             ['len:' || CAST(LEAST(n // 5, 40) AS VARCHAR),
-              'div:' || CAST((nd * 40) // n AS VARCHAR),
-              'lxd:' || CAST(LEAST(n // 10, 20) AS VARCHAR) || '_'
-                     || CAST((nd * 20) // n AS VARCHAR)] AS fs
-      FROM lab
-    ), ex AS (
-      SELECT doc_id, y, fold,
-             CAST(('0x' || substr(md5(f), 1, 8))::BIGINT % 4096
-                  AS BIGINT) AS b
-      FROM (SELECT doc_id, y, fold, unnest(fs) AS f FROM feats)
-      GROUP BY 1, 2, 3, 4
-    ), prior_counts AS (
-      SELECT CAST(SUM(y) AS DOUBLE) AS npos,
-             CAST(SUM(1 - y) AS DOUBLE) AS nneg
-      FROM lab WHERE fold < 4
-    ), llr AS (
-      SELECT CAST(d.range AS BIGINT) AS b,
-             ROUND(ln((COALESCE(cpos, 0) + 1.0) / (npos + 2.0))
-                   - ln((COALESCE(cneg, 0) + 1.0) / (nneg + 2.0)), 7) AS w
-      FROM range(0, 4096) d
-      LEFT JOIN (SELECT b, SUM(y) AS cpos, SUM(1 - y) AS cneg
-                 FROM ex WHERE fold < 4 GROUP BY 1) trainb
-        ON trainb.b = d.range, prior_counts
-    ), prior AS (
-      SELECT ROUND(ln((npos + 1.0) / (nneg + 1.0)), 7) AS pr
-      FROM prior_counts
-    ), perdoc AS (
-      SELECT e.doc_id, COUNT(b) AS n_feats,
-             CAST(CAST(COALESCE(SUM(CAST(FLOOR(w * 10000000.0 + 0.5) AS BIGINT)),
-                                0) AS BIGINT) AS DOUBLE) / 10000000.0
-               AS wsum
-      FROM ex e JOIN llr USING (b)
-      GROUP BY 1
-    ), scored AS (
-      SELECT doc_id,
-             ROUND(1.0 / (1.0 + exp(-(CASE WHEN n_feats > 0
-                 THEN (wsum + (SELECT pr FROM prior)) / n_feats
-                 ELSE 0.0 END))), 6) AS prob
-      FROM perdoc
-    ), p6 AS (
+    WITH {ft_scored_sql()}, p6 AS (
       SELECT CAST(ROUND(s.prob * 1000000.0, 0) AS BIGINT) AS pm, lab.y
       FROM scored s JOIN lab USING (doc_id)
     ), byscore AS (
@@ -602,8 +491,7 @@ def kappa_report_columns() -> list:
                  + 2 * npos * nneg)
                 // (2 * 2 * npos * nneg) AS BIGINT) / 1000000.0 AS auc
     FROM agg
-    """.replace("{{_TOKS_SQL}}", "{_TOKS_SQL}").format(_TOKS_SQL=_TOKS_SQL),
-    tags=("text", "curation", "quality", "eval", "auc"),
+    """,
 )
 def docs_gate_auc(spark, sf_dir):
     """Exact ROC-AUC of the trained quality gate against its heuristic
@@ -683,52 +571,13 @@ def docs_gate_auc(spark, sf_dir):
 @query(
     "docs_nb_quality_gate",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS tk FROM documents
-    ), lab AS (
-      SELECT doc_id, len(tk) AS n, len(list_distinct(tk)) AS nd,
-             CASE WHEN ROUND(0.5 * LEAST(len(tk) / 100.0, 1.0)
-                  + 0.5 * (len(list_distinct(tk)) / CAST(len(tk) AS DOUBLE)), 4)
-                  >= 0.52 THEN 1 ELSE 0 END AS y,
-             CAST(doc_id % 5 AS INT) AS fold
-      FROM t
-    ), feats AS (
-      SELECT doc_id, y, fold,
-             ['len:' || CAST(LEAST(n // 5, 40) AS VARCHAR),
-              'div:' || CAST((nd * 40) // n AS VARCHAR),
-              'lxd:' || CAST(LEAST(n // 10, 20) AS VARCHAR) || '_'
-                     || CAST((nd * 20) // n AS VARCHAR)] AS fs
-      FROM lab
-    ), ex AS (
-      SELECT doc_id, y, fold,
-             CAST(('0x' || substr(md5('nbq:' || f), 1, 8))::BIGINT % 1024
-                  AS INT) AS bucket
-      FROM (SELECT doc_id, y, fold, unnest(fs) AS f FROM feats)
-      GROUP BY 1, 2, 3, 4
-    ), prior_counts AS (
-      SELECT CAST(SUM(y) AS DOUBLE) AS npos,
-             CAST(SUM(1 - y) AS DOUBLE) AS nneg,
-             COUNT(*) AS n_train
-      FROM lab WHERE fold < 4
-    ), trainb AS (
-      SELECT bucket, SUM(y) AS cpos, SUM(1 - y) AS cneg
-      FROM ex WHERE fold < 4 GROUP BY 1
-    ), llr AS (
-      SELECT CAST(d.range AS INT) AS bucket,
-             ROUND(ln((COALESCE(cpos, 0) + 1.0) / (npos + 2.0))
-                   - ln((COALESCE(cneg, 0) + 1.0) / (nneg + 2.0)), 7) AS w
-      FROM range(0, 1024) d
-      LEFT JOIN trainb ON trainb.bucket = d.range, prior_counts
-    ), prior AS (
-      SELECT ROUND(ln((npos + 1.0) / (nneg + 1.0)), 7) AS pr, n_train
-      FROM prior_counts
-    ), scored AS (
+    WITH {nb_train_sql(NB_BUCKETS, NB_SALT)}, scored AS (
       SELECT e.doc_id, MAX(e.y) AS y,
              CAST(FLOOR((CAST(SUM(CAST(FLOOR(llr.w * 10000000.0 + 0.5)
                                        AS BIGINT)) AS BIGINT) + 5) / 10.0)
                   AS BIGINT) / 1000000.0
                + (SELECT pr FROM prior) AS score
-      FROM ex e JOIN llr USING (bucket) WHERE e.fold = 4
+      FROM ex e JOIN llr USING (b) WHERE e.fold = {TRAIN_FOLDS}
       GROUP BY e.doc_id
     ), conf AS (
       SELECT (SELECT n_train FROM prior) AS n_train,
@@ -761,7 +610,6 @@ def docs_gate_auc(spark, sf_dir):
                AS recall_ok
     FROM metrics
     """,
-    tags=("text", "curation", "quality", "classifier", "naive-bayes", "eval"),
 )
 def docs_nb_quality_gate(spark, sf_dir):
     """TRAINED model quality gate with held-out evaluation (round-9
@@ -857,7 +705,6 @@ _GOPHER_GATE_ORACLE = f"""
 @query(
     "docs_gopher_full_gate",
     oracle=_GOPHER_GATE_ORACLE,
-    tags=("text", "curation", "gopher", "quality"),
 )
 def docs_gopher_full_gate(spark, sf_dir):
     """The COMPLETE Gopher/MassiveText document-level rule set (Rae et
@@ -936,7 +783,7 @@ def docs_gopher_full_gate(spark, sf_dir):
     "docs_langid_eval",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, list_distinct({{_TOKS_SQL}}) AS dt FROM documents
+      SELECT doc_id, lang, list_distinct({_TOKS_SQL}) AS dt FROM documents
     ), h AS (
       SELECT doc_id, lang,
              len(list_intersect(dt, {_LANG_SQL_SETS['en']})) AS h_en,
@@ -971,8 +818,7 @@ def docs_gopher_full_gate(spark, sf_dir):
            ROUND(CAST(tp AS DOUBLE) / NULLIF(tp + fn, 0), 6) AS recall,
            ROUND(CAST(2 * tp AS DOUBLE) / NULLIF(2 * tp + fp + fn, 0), 6) AS f1
     FROM m ORDER BY lang
-    """.replace("{{_TOKS_SQL}}", "{_TOKS_SQL}").format(_TOKS_SQL=_TOKS_SQL),
-    tags=("text", "lang-id", "evaluation", "metrics"),
+    """,
 )
 def docs_langid_eval(spark, sf_dir):
     """Classifier evaluation as distributed dataflow — the metrics layer
@@ -1082,7 +928,6 @@ def docs_langid_eval(spark, sf_dir):
     FROM agg JOIN agg2 USING (batch_size)
     ORDER BY batch_size
     """,
-    tags=("packing", "training", "batching"),
 )
 def docs_padding_waste(spark, sf_dir):
     """Padding-waste audit for fixed-size training batches: every
@@ -1191,7 +1036,6 @@ def docs_padding_waste(spark, sf_dir):
     QUALIFY rank <= 5
     ORDER BY query_id, rank
     """,
-    tags=("similarity", "training", "contrastive", "hard-negatives"),
 )
 def emb_hard_negatives(spark, sf_dir):
     """Hard-negative mining (operators.similarity.hard_negative_topk):
@@ -1233,7 +1077,6 @@ def emb_hard_negatives(spark, sf_dir):
     JOIN singles sb ON sb.event_type = p.type_b
     ORDER BY 1, 2
     """,
-    tags=("approx", "sketch", "audience-overlap"),
 )
 def events_type_audience_overlap(spark, sf_dir):
     """Sketch-algebra audience overlap: |A∩B| estimated per event-type
@@ -1306,39 +1149,7 @@ def events_type_audience_overlap(spark, sf_dir):
 @query(
     "docs_cluster_canonical_by_quality",
     oracle=f"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id, {{_TOKS_SQL}} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS (
-      SELECT doc_id, sh,
-             {", ".join(
-                 f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-                 for j in range(8)
-             )}
-      FROM s
-    ), bands AS (
-      {" UNION ALL ".join(
-          f"SELECT doc_id, {b} AS band_id, mh_{2 * b} || '|' || mh_{2 * b + 1} AS band_key "
-          "FROM sig WHERE len(sh) > 0"
-          for b in range(4)
-      )}
-    ), pairs AS (
-      SELECT c.id_a, c.id_b FROM (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4) >= 0.5
-    ), edges AS (
+    WITH RECURSIVE {near_dup_pairs_sql(0.5)}, edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs
@@ -1369,8 +1180,7 @@ def events_type_audience_overlap(spark, sf_dir):
            MAX(CASE WHEN rn = 1 THEN doc_id END) <> cluster_id
              AS differs_from_minid
     FROM ranked GROUP BY cluster_id ORDER BY cluster_id
-    """.replace("{{_TOKS_SQL}}", "{_TOKS_SQL}").format(_TOKS_SQL=_TOKS_SQL),
-    tags=("dedup", "clustering", "curation", "quality"),
+    """,
 )
 def docs_cluster_canonical_by_quality(spark, sf_dir):
     """Quality-aware canonical selection per near-dup cluster: real
@@ -1449,7 +1259,6 @@ def docs_cluster_canonical_by_quality(spark, sf_dir):
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
     FROM j GROUP BY 1 ORDER BY 1
     """,
-    tags=("cdc", "scd2", "asof", "temporal-join"),
 )
 def events_scd2_temporal_join(spark, sf_dir):
     """Fact-to-SCD2 temporal join — THE classic warehouse lookup: each
@@ -1522,7 +1331,6 @@ def events_scd2_temporal_join(spark, sf_dir):
                  / SUM(c), 6) AS at_risk_share
     FROM qi
     """,
-    tags=("dq", "privacy", "l-diversity"),
 )
 def events_ldiversity_audit(spark, sf_dir):
     """l-diversity audit — the companion gate to events_kanonymity_audit:
@@ -1597,7 +1405,6 @@ def events_ldiversity_audit(spark, sf_dir):
                  / SUM(c_g), 6) AS at_risk_share
     FROM scored
     """,
-    tags=("dq", "privacy", "t-closeness"),
 )
 def events_tcloseness_audit(spark, sf_dir):
     """t-closeness audit — the third gate of the release-audit trio
@@ -1692,50 +1499,7 @@ def events_tcloseness_audit(spark, sf_dir):
 @query(
     "docs_split_leakage_audit",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS (
-      SELECT doc_id, sh,
-             list_aggregate(list_transform(sh, x -> md5('0:' || x)), 'min') AS mh_0,
-             list_aggregate(list_transform(sh, x -> md5('1:' || x)), 'min') AS mh_1,
-             list_aggregate(list_transform(sh, x -> md5('2:' || x)), 'min') AS mh_2,
-             list_aggregate(list_transform(sh, x -> md5('3:' || x)), 'min') AS mh_3,
-             list_aggregate(list_transform(sh, x -> md5('4:' || x)), 'min') AS mh_4,
-             list_aggregate(list_transform(sh, x -> md5('5:' || x)), 'min') AS mh_5,
-             list_aggregate(list_transform(sh, x -> md5('6:' || x)), 'min') AS mh_6,
-             list_aggregate(list_transform(sh, x -> md5('7:' || x)), 'min') AS mh_7
-      FROM s
-    ), bands AS (
-      SELECT doc_id, 0 AS band_id, mh_0 || '|' || mh_1 AS band_key FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 1, mh_2 || '|' || mh_3 FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 2, mh_4 || '|' || mh_5 FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 3, mh_6 || '|' || mh_7 FROM sig WHERE len(sh) > 0
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_id = b.band_id AND a.band_key = b.band_key
-       AND a.doc_id < b.doc_id
-    ), pairs AS (
-      SELECT c.id_a, c.id_b,
-             ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                   / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))),
-                   4) AS jaccard
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
-    ), sp AS (
+    WITH {near_dup_pairs_sql(0.5)}, sp AS (
       SELECT doc_id,
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= 'cb' THEN 'train'
                   WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= 'e5' THEN 'val'
@@ -1764,7 +1528,6 @@ def events_tcloseness_audit(spark, sf_dir):
     FROM lab l JOIN perdoc USING (category)
     GROUP BY l.category ORDER BY l.category
     """,
-    tags=("dedup", "split", "eval-hygiene", "curation"),
 )
 def docs_split_leakage_audit(spark, sf_dir):
     """Cross-split near-duplicate LEAKAGE audit — the eval-hygiene pass a
@@ -1861,7 +1624,6 @@ def docs_split_leakage_audit(spark, sf_dir):
                AS within_bound
     FROM noise ORDER BY day
     """,
-    tags=("dq", "privacy", "differential-privacy"),
 )
 def events_dp_noisy_counts(spark, sf_dir):
     """Differentially-private count release (epsilon = 1, Laplace
@@ -1948,7 +1710,6 @@ def events_dp_noisy_counts(spark, sf_dir):
                  / SUM(n_chars), 6) AS kept_char_share
     FROM r GROUP BY source ORDER BY source
     """,
-    tags=("curation", "sampling", "frequency-cap", "c4"),
 )
 def docs_source_frequency_cap(spark, sf_dir):
     """Per-source document frequency cap — the C4 / RefinedWeb corpus-
@@ -2015,7 +1776,6 @@ def docs_source_frequency_cap(spark, sf_dir):
            TRUE AS imbalance_le_4x
     FROM embeddings
     """,
-    tags=("similarity", "ann", "ivf", "audit"),
 )
 def emb_ivf_cell_balance(spark, sf_dir):
     """IVF index balance audit: per-cell posting-list sizes from the same
@@ -2045,17 +1805,6 @@ def emb_ivf_cell_balance(spark, sf_dir):
         (F.max("c") * F.count(F.lit(1)) <= 4 * F.sum("c")).alias("imbalance_le_4x"),
     )
 
-
-_SQDIST_SQL = (
-    "list_sum(list_transform(range(1, len({a})+1),"
-    " i -> ({a}[i]-{b}[i])*({a}[i]-{b}[i])))"
-)
-
-_COS_SQL = (
-    "list_sum(list_transform(range(1, len({a})+1), i -> {a}[i] * {b}[i]))"
-    " / (sqrt(list_sum(list_transform(range(1, len({a})+1), i -> {a}[i] * {a}[i])))"
-    " * sqrt(list_sum(list_transform(range(1, len({b})+1), i -> {b}[i] * {b}[i]))))"
-)
 
 # snapshot/batch split for the incremental-ANN family: vec_id % 8 == 7 is
 # the nightly batch (~12.5%), everything else the already-indexed snapshot
@@ -2094,7 +1843,6 @@ _IVF_APPEND_SPLIT_SQL = "CASE WHEN vec_id % 8 = 7 THEN 1 ELSE 0 END"
            (1.0 - q4 >= 0.5) AS in_detection_zone
     FROM p ORDER BY sim
     """,
-    tags=("dedup", "lsh", "planner"),
 )
 def docs_lsh_band_planner(spark, sf_dir):
     """LSH banding S-curve for the engine's MinHash configuration
@@ -2125,39 +1873,8 @@ def docs_lsh_band_planner(spark, sf_dir):
 
 @query(
     "emb_pq_recall_vs_exact",
-    oracle="""
-    WITH v AS (
-      SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ), cent AS (
-      SELECT label, pos, ROUND(SUM(e[pos]) / COUNT(*), 6) AS c
-      FROM v, unnest(range(1, len(e) + 1)) AS t(pos)
-      GROUP BY 1, 2
-    ), carr AS (
-      SELECT label, list(c ORDER BY pos) AS carr,
-             ROW_NUMBER() OVER (ORDER BY label) - 1 AS idx
-      FROM cent GROUP BY label
-    ), dist AS (
-      SELECT v.vec_id, t.m, ca.idx,
-             floor(list_sum(list_transform(range(1, 9),
-                 i -> (v.e[8*t.m + i] - ca.carr[8*t.m + i])
-                    * (v.e[8*t.m + i] - ca.carr[8*t.m + i])))
-                   * 1099511627776.0) / 1099511627776.0 AS d
-      FROM v, unnest(range(8)) AS t(m), carr ca
-    ), codes AS (
-      SELECT vec_id, m, idx AS code FROM (
-        SELECT vec_id, m, idx,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d, idx) AS rn
-        FROM dist) WHERE rn = 1
-    ), qd AS (
-      SELECT vec_id AS qid, m, idx, d FROM dist WHERE vec_id < 8
-    ), adc AS (
-      SELECT q.qid AS query_id, c.vec_id AS neighbor_id, SUM(q.d) AS dist
-      FROM codes c JOIN qd q ON q.m = c.m AND q.idx = c.code
-      WHERE q.qid <> c.vec_id
-      GROUP BY 1, 2
-    ), adc_top AS (
+    oracle=f"""
+    WITH {pq_adc_sql()}, adc_top AS (
       SELECT query_id, neighbor_id FROM (
         SELECT query_id, neighbor_id,
                ROW_NUMBER() OVER (
@@ -2186,7 +1903,6 @@ def docs_lsh_band_planner(spark, sf_dir):
            CAST(n_match AS DOUBLE) / 5.0 AS recall
     FROM matched ORDER BY query_id
     """,
-    tags=("similarity", "ann", "pq", "quality"),
 )
 def emb_pq_recall_vs_exact(spark, sf_dir):
     """Recall@5 of PQ asymmetric-distance search against the exact
@@ -2210,7 +1926,7 @@ def emb_pq_recall_vs_exact(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    adc = pq_adc_topk(emb, queries_df, k=5, m=8).select("query_id", "neighbor_id")
+    adc = pq_adc_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
     exact = l2_topk(emb, queries_df, k=5).select("query_id", "neighbor_id")
     # matches = exact-list rows that also appear in the ADC list (semi join
     # on (query_id, neighbor_id) — two rank-list-sized relations)
@@ -2272,7 +1988,6 @@ def emb_pq_recall_vs_exact(spark, sf_dir):
     FROM tot, (VALUES (900), (1800), (3600)) AS t(gap_s)
     ORDER BY t.gap_s
     """,
-    tags=("window", "sessionization", "sweep"),
 )
 def user_session_gap_sensitivity(spark, sf_dir):
     """Sessionization gap-parameter sweep: session counts at inactivity
@@ -2330,51 +2045,8 @@ def user_session_gap_sensitivity(spark, sf_dir):
 
 @query(
     "docs_near_dup_threshold_sweep",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'),
-                                 x -> x <> '') AS toks
-      FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS (
-      SELECT doc_id, sh,
-             list_aggregate(list_transform(sh, x -> md5('0:' || x)), 'min') AS mh_0,
-             list_aggregate(list_transform(sh, x -> md5('1:' || x)), 'min') AS mh_1,
-             list_aggregate(list_transform(sh, x -> md5('2:' || x)), 'min') AS mh_2,
-             list_aggregate(list_transform(sh, x -> md5('3:' || x)), 'min') AS mh_3,
-             list_aggregate(list_transform(sh, x -> md5('4:' || x)), 'min') AS mh_4,
-             list_aggregate(list_transform(sh, x -> md5('5:' || x)), 'min') AS mh_5,
-             list_aggregate(list_transform(sh, x -> md5('6:' || x)), 'min') AS mh_6,
-             list_aggregate(list_transform(sh, x -> md5('7:' || x)), 'min') AS mh_7
-      FROM s
-    ), bands AS (
-      SELECT doc_id, 0 AS band_id, mh_0 || '|' || mh_1 AS band_key FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 1, mh_2 || '|' || mh_3 FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 2, mh_4 || '|' || mh_5 FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 3, mh_6 || '|' || mh_7 FROM sig WHERE len(sh) > 0
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ), pairs AS (
-      SELECT ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-               / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4)
-               AS jaccard
-      FROM cand c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.3
-    ), agg AS (
+    oracle=f"""
+    WITH {near_dup_pairs_sql(0.3)}, agg AS (
       SELECT
         SUM(CASE WHEN jaccard >= 0.3 THEN 1 ELSE 0 END) AS c30,
         CAST(SUM(CASE WHEN jaccard >= 0.3
@@ -2407,7 +2079,6 @@ def user_session_gap_sensitivity(spark, sf_dir):
     FROM agg, (VALUES (0.3), (0.5), (0.7), (0.9)) AS t(threshold)
     ORDER BY t.threshold
     """,
-    tags=("dedup", "lsh", "sweep"),
 )
 def docs_near_dup_threshold_sweep(spark, sf_dir):
     """Near-dup threshold sweep: verified-pair counts and mean Jaccard at

@@ -5,22 +5,27 @@ plans/queries.py imports the chunks in original file order).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass, field
-from functools import reduce
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from prod_data_pipeline_spark.schemas import TESTDATA_EVENT_TYPES
-from prod_data_pipeline_spark.session import truncate_lineage, tune
-from prod_data_pipeline_spark.sources.readers import load_table
+from prod_data_pipeline_spark.session import truncate_lineage
 
-from prod_data_pipeline_spark.plans.query_registry import (  # noqa: F401
+from prod_data_pipeline_spark.plans.query_registry import (
+    _COS_SQL,
+    _LANG_SQL_SETS,
+    _SQDIST_SQL,
+    _TOKS_SQL,
     _VALID_TYPES_SQL,
     _t,
     dsum,
+    jaccard_sql,
+    minhash_sig_sql,
+    near_dup_pairs_sql,
+    pq_adc_sql,
     query,
+    shingles_sql,
+    srp_candidates_sql,
 )
 
 # ---------------------------------------------------------------------------
@@ -36,7 +41,6 @@ from prod_data_pipeline_spark.plans.query_registry import (  # noqa: F401
     SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n_events
     FROM events GROUP BY 1 ORDER BY 1
     """,
-    tags=("A2", "O1"),
 )
 def events_per_day(spark, sf_dir):
     """Golden query #1: rows per ingestion day (curated_events.sql:17-20)."""
@@ -54,7 +58,6 @@ def events_per_day(spark, sf_dir):
     SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n_events
     FROM events GROUP BY 1 ORDER BY 1
     """,
-    tags=("A2", "O1", "sql-api"),
 )
 def events_per_day_sql(spark, sf_dir):
     """Golden query #1 through the SQL entry point (parse -> analyze ->
@@ -77,7 +80,6 @@ def events_per_day_sql(spark, sf_dir):
            CAST(SUM(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_event_type
     FROM events
     """,
-    tags=("A4", "P8"),
 )
 def events_null_profile(spark, sf_dir):
     """Golden query #2: conditional null profile (curated_events.sql:23-27)."""
@@ -107,7 +109,6 @@ _PROFILE_COLS = ["event_id", "event_type", "props", "ts", "user_id", "value"]
         for c in _PROFILE_COLS
     )
     + " ORDER BY column_name",
-    tags=("profiling", "A1", "A4"),
 )
 def events_column_profile(spark, sf_dir):
     """Whole-table column profile (null count + exact distinct per column)
@@ -144,7 +145,6 @@ def events_column_profile(spark, sf_dir):
            CAST(COUNT(DISTINCT event_id) AS BIGINT) AS distinct_event_ids
     FROM events
     """,
-    tags=("A1", "A3", "P4", "P5"),
 )
 def events_dq_profile(spark, sf_dir):
     """Single-pass DQ profile: the reference ran SEVEN actions for these
@@ -177,7 +177,6 @@ def events_dq_profile(spark, sf_dir):
     WHERE event_type IN ({_VALID_TYPES_SQL})
     GROUP BY event_type ORDER BY event_type
     """,
-    tags=("P5", "A3"),
 )
 def events_type_value_stats(spark, sf_dir):
     """Set-membership filter (v3_dq.py:78) + per-type value stats with
@@ -205,7 +204,6 @@ def events_type_value_stats(spark, sf_dir):
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
     FROM events GROUP BY 1 ORDER BY 1
     """,
-    tags=("A2",),
 )
 def events_hourly_activity(spark, sf_dir):
     """Hourly rollup — the time-series shape of the reference's daily
@@ -229,7 +227,6 @@ def events_hourly_activity(spark, sf_dir):
     GROUP BY user_id HAVING COUNT(*) > 1
     ORDER BY n_events DESC, user_id LIMIT 20
     """,
-    tags=("A7", "O2", "P7"),
 )
 def repeat_users_topk(spark, sf_dir):
     """HAVING + top-k with deterministic tie-break (curated_events.sql:31-36
@@ -257,7 +254,6 @@ def repeat_users_topk(spark, sf_dir):
     FROM ev GROUP BY event_id HAVING COUNT(*) > 1
     ORDER BY occurrences DESC, event_id LIMIT 20
     """,
-    tags=("A2", "A7", "O2"),
 )
 def dup_event_ids(spark, sf_dir):
     """Golden query #3 verbatim shape: duplicate event_id inspection
@@ -288,7 +284,6 @@ def dup_event_ids(spark, sf_dir):
     FROM (SELECT event_type, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k FROM events)
     GROUP BY event_type ORDER BY event_type
     """,
-    tags=("P8", "json"),
 )
 def props_key_stats(spark, sf_dir):
     """Semi-structured column: JSON path extraction stays JVM-side via
@@ -318,7 +313,6 @@ def props_key_stats(spark, sf_dir):
     FROM (SELECT ts, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k FROM events)
     GROUP BY 1 ORDER BY 1
     """,
-    tags=("json", "struct"),
 )
 def props_typed_struct_stats(spark, sf_dir):
     """Semi-structured column via from_json with an explicit schema (the
@@ -343,7 +337,6 @@ def props_typed_struct_stats(spark, sf_dir):
            CAST(ts AS DATE) AS ingestion_date
     FROM events ORDER BY event_id
     """,
-    tags=("P1", "P2", "P3"),
 )
 def events_curated_projection(spark, sf_dir):
     """The curate transform's deterministic columns (v3_dq.py:54-65):
@@ -386,7 +379,6 @@ def events_curated_projection(spark, sf_dir):
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
-    tags=("A2", "A3", "A4"),
 )
 def q1_pricing_summary(spark, sf_dir):
     """TPC-H Q1 shape: wide partial-aggregatable scan-agg, the canonical
@@ -426,7 +418,6 @@ def q1_pricing_summary(spark, sf_dir):
     GROUP BY o.o_orderkey, o.o_orderdate, c.c_mktsegment
     ORDER BY revenue DESC, o.o_orderkey LIMIT 10
     """,
-    tags=("join", "O2"),
 )
 def top_orders_by_revenue(spark, sf_dir):
     """TPC-H Q3 shape, pre-aggregated: lineitem revenue collapses to one row
@@ -470,7 +461,6 @@ def top_orders_by_revenue(spark, sf_dir):
     GROUP BY r.r_name, n.n_name
     ORDER BY r.r_name, n.n_name
     """,
-    tags=("join",),
 )
 def regional_nation_revenue(spark, sf_dir):
     """TPC-H Q5 shape: 6-way star join; every dimension broadcast, the two
@@ -510,7 +500,6 @@ def regional_nation_revenue(spark, sf_dir):
     FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
     GROUP BY p.p_brand ORDER BY p.p_brand
     """,
-    tags=("join", "broadcast"),
 )
 def brand_volume(spark, sf_dir):
     """Fact x broadcast-dim join + agg: the bread-and-butter shape at 100 TB
@@ -540,7 +529,6 @@ def brand_volume(spark, sf_dir):
                     AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
-    tags=("semi-join", "correlated"),
 )
 def slow_orders_by_priority(spark, sf_dir):
     """TPC-H Q4 shape: correlated EXISTS decorrelated into a left-semi join
@@ -576,7 +564,6 @@ def slow_orders_by_priority(spark, sf_dir):
     JOIN pa ON pa.l_partkey = l.l_partkey
     WHERE l.l_quantity < 0.2 * pa.avg_qty
     """,
-    tags=("correlated", "scalar-subquery"),
 )
 def small_quantity_parts_revenue(spark, sf_dir):
     """TPC-H Q17 shape: correlated scalar AVG subquery decorrelated into a
@@ -607,7 +594,6 @@ def small_quantity_parts_revenue(spark, sf_dir):
     WHERE (p.p_brand = 'Brand#4'  AND p.p_size BETWEEN 1 AND 15 AND l.l_quantity >= 10)
        OR (p.p_brand = 'Brand#19' AND p.p_size BETWEEN 10 AND 30 AND l.l_quantity >= 20)
     """,
-    tags=("join", "disjunctive-pushdown"),
 )
 def disjunctive_brand_revenue(spark, sf_dir):
     """TPC-H Q19 shape: OR-of-ANDs mixed predicate over a broadcast join.
@@ -643,7 +629,6 @@ def disjunctive_brand_revenue(spark, sf_dir):
       GROUP BY c.c_custkey
     ) GROUP BY n_orders ORDER BY n_orders
     """,
-    tags=("join", "A2"),
 )
 def customer_order_distribution(spark, sf_dir):
     """TPC-H Q13 shape: left outer join preserving zero-order customers +
@@ -670,7 +655,6 @@ def customer_order_distribution(spark, sf_dir):
     WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     GROUP BY c_mktsegment ORDER BY c_mktsegment
     """,
-    tags=("semi-join",),
 )
 def customers_with_orders_by_segment(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
@@ -695,7 +679,6 @@ def customers_with_orders_by_segment(spark, sf_dir):
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     ORDER BY c_custkey
     """,
-    tags=("anti-join",),
 )
 def customers_without_orders(spark, sf_dir):
     """Orphan check via anti-join — the scalable form of referential DQ.
@@ -723,7 +706,6 @@ def customers_without_orders(spark, sf_dir):
       SELECT c_nationkey FROM customer UNION SELECT s_nationkey FROM supplier
     ) ORDER BY n_nationkey
     """,
-    tags=("set-op", "union"),
 )
 def trading_nations(spark, sf_dir):
     """UNION (distinct) + semi-join."""
@@ -750,7 +732,6 @@ def trading_nations(spark, sf_dir):
     SELECT s_nationkey FROM supplier
     ORDER BY nationkey
     """,
-    tags=("set-op",),
 )
 def nation_keys_intersect(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
@@ -774,7 +755,6 @@ def nation_keys_intersect(spark, sf_dir):
     SELECT s_nationkey FROM supplier
     ORDER BY nationkey
     """,
-    tags=("set-op",),
 )
 def nation_keys_except(spark, sf_dir):
     """Distinct-set EXCEPT.  Customers and suppliers cover the same 25
@@ -802,7 +782,6 @@ def nation_keys_except(spark, sf_dir):
     SELECT s_nationkey FROM supplier
     ORDER BY nationkey
     """,
-    tags=("set-op",),
 )
 def nation_keys_except_all(spark, sf_dir):
     """Multiset EXCEPT ALL (bag semantics — each supplier occurrence cancels
@@ -824,7 +803,6 @@ def nation_keys_except_all(spark, sf_dir):
     GROUP BY GROUPING SETS ((CAST(ts AS DATE)), (event_type))
     ORDER BY day NULLS FIRST, event_type NULLS FIRST
     """,
-    tags=("grouping-sets", "sql-api"),
 )
 def events_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS (neither rollup nor cube): per-day totals and
@@ -857,7 +835,6 @@ def events_grouping_sets(spark, sf_dir):
            )}
     FROM events GROUP BY 1 ORDER BY 1
     """,
-    tags=("pivot",),
 )
 def events_daily_type_pivot(spark, sf_dir):
     """Pivot day x event_type — explicit value list so the plan is a single
@@ -883,7 +860,6 @@ def events_daily_type_pivot(spark, sf_dir):
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
     """,
-    tags=("rollup",),
 )
 def order_rollup_stats(spark, sf_dir):
     """GROUPING SETS surface: rollup with subtotal + grand-total rows."""
@@ -906,7 +882,6 @@ def order_rollup_stats(spark, sf_dir):
     GROUP BY CUBE (CAST(ts AS DATE), event_type)
     ORDER BY day NULLS FIRST, event_type NULLS FIRST
     """,
-    tags=("cube",),
 )
 def events_cube_day_type(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
@@ -927,7 +902,6 @@ def events_cube_day_type(spark, sf_dir):
     ) = 1
     ORDER BY o_custkey
     """,
-    tags=("window",),
 )
 def top_order_per_customer(spark, sf_dir):
     """row_number window — the keep-first-per-key primitive that also backs
@@ -952,7 +926,6 @@ def top_order_per_customer(spark, sf_dir):
            ) AS BIGINT) AS DOUBLE) / 100.0 AS running_value
     FROM events ORDER BY event_id
     """,
-    tags=("window",),
 )
 def user_running_value(spark, sf_dir):
     """Running (prefix) sum per user — long-numerator accumulation
@@ -999,7 +972,6 @@ def user_running_value(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n_events
     FROM g GROUP BY user_id ORDER BY user_id
     """,
-    tags=("window", "sessionization"),
 )
 def user_sessions(spark, sf_dir):
     """Sessionization (30-min inactivity gap) via lag + conditional sum.
@@ -1026,36 +998,12 @@ def user_sessions(spark, sf_dir):
 # including md5-based MinHash so signatures are bit-identical cross-engine.
 # ---------------------------------------------------------------------------
 
-_TOKS_SQL = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
-
 from prod_data_pipeline_spark.operators.dedup import (
     MINHASH_HASHES,
     SIMHASH_BITS,
     SIMHASH_MAX_HAMMING,
 )
 from prod_data_pipeline_spark.operators.text import WINNOW_K, WINNOW_WINDOW
-
-
-def _minhash_sql() -> str:
-    mh = ",\n           ".join(
-        f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-        for j in range(MINHASH_HASHES)
-    )
-    return f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    )
-    SELECT doc_id,
-           {mh}
-    FROM s ORDER BY doc_id
-    """
 
 
 @query(
@@ -1066,7 +1014,6 @@ def _minhash_sql() -> str:
            CAST(COUNT(*) AS BIGINT) AS n_copies
     FROM documents GROUP BY md5(text) ORDER BY content_hash
     """,
-    tags=("dedup",),
 )
 def dedup_docs_exact(spark, sf_dir):
     """Exact dedup groups: digest group-by, keep-lowest-id (operators.dedup)."""
@@ -1078,8 +1025,10 @@ def dedup_docs_exact(spark, sf_dir):
 
 @query(
     "docs_minhash_signatures",
-    oracle=_minhash_sql(),
-    tags=("dedup", "minhash"),
+    oracle=f"""
+    WITH {minhash_sig_sql()}
+    SELECT * EXCLUDE (sh) FROM sig ORDER BY doc_id
+    """,
 )
 def docs_minhash_signatures(spark, sf_dir):
     """MinHash signatures (8 hashes, word-3-gram shingles, md5 per
@@ -1093,51 +1042,10 @@ def docs_minhash_signatures(spark, sf_dir):
 
 @query(
     "docs_near_dup_pairs",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, """ + _TOKS_SQL + """ AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS (
-      SELECT doc_id, sh,
-             list_aggregate(list_transform(sh, x -> md5('0:' || x)), 'min') AS mh_0,
-             list_aggregate(list_transform(sh, x -> md5('1:' || x)), 'min') AS mh_1,
-             list_aggregate(list_transform(sh, x -> md5('2:' || x)), 'min') AS mh_2,
-             list_aggregate(list_transform(sh, x -> md5('3:' || x)), 'min') AS mh_3,
-             list_aggregate(list_transform(sh, x -> md5('4:' || x)), 'min') AS mh_4,
-             list_aggregate(list_transform(sh, x -> md5('5:' || x)), 'min') AS mh_5,
-             list_aggregate(list_transform(sh, x -> md5('6:' || x)), 'min') AS mh_6,
-             list_aggregate(list_transform(sh, x -> md5('7:' || x)), 'min') AS mh_7
-      FROM s
-    ), bands AS (
-      SELECT doc_id, 0 AS band_id, mh_0 || '|' || mh_1 AS band_key FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 1, mh_2 || '|' || mh_3 FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 2, mh_4 || '|' || mh_5 FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 3, mh_6 || '|' || mh_7 FROM sig WHERE len(sh) > 0
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    )
-    SELECT c.id_a, c.id_b,
-           ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                 / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4) AS jaccard
-    FROM cand c
-    JOIN sig sa ON sa.doc_id = c.id_a
-    JOIN sig sb ON sb.doc_id = c.id_b
-    WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-          / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
-    ORDER BY id_a, id_b
+    oracle=f"""
+    WITH {near_dup_pairs_sql(0.5)}
+    SELECT id_a, id_b, jaccard FROM pairs ORDER BY id_a, id_b
     """,
-    tags=("dedup", "lsh"),
 )
 def docs_near_dup_pairs(spark, sf_dir):
     """MinHash-LSH near-duplicate pairs (4 bands x 2 rows) with exact
@@ -1150,27 +1058,20 @@ def docs_near_dup_pairs(spark, sf_dir):
 
 @query(
     "docs_ngram_jaccard_pairs",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, source, """ + _TOKS_SQL + """ AS toks FROM documents
+      SELECT doc_id, lang, source, {_TOKS_SQL} AS toks FROM documents
     ), s AS (
-      SELECT doc_id, lang, source,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
+      SELECT doc_id, lang, source, {shingles_sql()} AS sh FROM t
     )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 4) AS jaccard
-    FROM s a JOIN s b
-      ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-          / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.2
+    SELECT id_a, id_b, jaccard FROM (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+             ROUND({jaccard_sql("a.sh", "b.sh")}, 4) AS jaccard
+      FROM s a JOIN s b
+        ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
+    ) WHERE jaccard >= 0.2
     ORDER BY id_a, id_b
     """,
-    tags=("dedup", "jaccard"),
 )
 def docs_ngram_jaccard_pairs(spark, sf_dir):
     """Blocked exact n-gram Jaccard pairs (block on lang+source)."""
@@ -1189,39 +1090,7 @@ def docs_ngram_jaccard_pairs(spark, sf_dir):
                ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
         FROM documents
       ) WHERE rn = 1
-    ), t AS (
-      SELECT doc_id, lang, {_TOKS_SQL} AS toks FROM dedup
-    ), s AS (
-      SELECT doc_id, lang, toks,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS (
-      SELECT doc_id, sh,
-             {", ".join(
-                 f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-                 for j in range(8)
-             )}
-      FROM s
-    ), bands AS (
-      {" UNION ALL ".join(
-          f"SELECT doc_id, {b} AS band_id, mh_{2*b} || '|' || mh_{2*b+1} AS band_key "
-          "FROM sig WHERE len(sh) > 0"
-          for b in range(4)
-      )}
-    ), pairs AS (
-      SELECT c.id_a, c.id_b FROM (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4) >= 0.5
-    ), edges AS (
+    ), {near_dup_pairs_sql(0.5, src="dedup")}, edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs
@@ -1232,11 +1101,12 @@ def docs_ngram_jaccard_pairs(spark, sf_dir):
     ), losers AS (
       SELECT src AS id_b FROM walk GROUP BY src HAVING src > MIN(reach)
     ), q AS (
-      SELECT lang, len(toks) AS n,
-             ROUND(0.5 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
-                   + 0.5 * (CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)), 4)
+      SELECT d.lang, len(t.toks) AS n,
+             ROUND(0.5 * least(CAST(len(t.toks) AS DOUBLE) / 100.0, 1.0)
+                   + 0.5 * (CAST(len(list_distinct(t.toks)) AS DOUBLE) / len(t.toks)), 4)
                  AS quality
-      FROM s WHERE doc_id NOT IN (SELECT id_b FROM losers)
+      FROM dedup d JOIN t USING (doc_id)
+      WHERE doc_id NOT IN (SELECT id_b FROM losers)
     )
     SELECT lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1246,7 +1116,6 @@ def docs_ngram_jaccard_pairs(spark, sf_dir):
     FROM q WHERE quality >= 0.45
     GROUP BY lang ORDER BY lang
     """,
-    tags=("dedup", "text", "pipeline"),
 )
 def corpus_curation_stats(spark, sf_dir):
     """Flagship training-data composition (operators.corpus.curate_corpus):
@@ -1277,39 +1146,7 @@ def corpus_curation_stats(spark, sf_dir):
 @query(
     "corpus_dup_clusters",
     oracle=f"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS (
-      SELECT doc_id, sh,
-             {", ".join(
-                 f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-                 for j in range(8)
-             )}
-      FROM s
-    ), bands AS (
-      {" UNION ALL ".join(
-          f"SELECT doc_id, {b} AS band_id, mh_{2 * b} || '|' || mh_{2 * b + 1} AS band_key "
-          "FROM sig WHERE len(sh) > 0"
-          for b in range(4)
-      )}
-    ), pairs AS (
-      SELECT c.id_a, c.id_b FROM (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4) >= 0.5
-    ), edges AS (
+    WITH RECURSIVE {near_dup_pairs_sql(0.5)}, edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs
@@ -1321,7 +1158,6 @@ def corpus_curation_stats(spark, sf_dir):
     SELECT src AS doc_id, least(src, MIN(reach)) AS cluster_id
     FROM walk GROUP BY src ORDER BY doc_id
     """,
-    tags=("dedup", "clustering"),
 )
 def corpus_dup_clusters(spark, sf_dir):
     """Transitive near-duplicate clusters: connected components over the
@@ -1387,7 +1223,7 @@ def _simhash_sql() -> str:
     """
 
 
-@query("docs_simhash_pairs", oracle=_simhash_sql(), tags=("dedup", "simhash"))
+@query("docs_simhash_pairs", oracle=_simhash_sql())
 def docs_simhash_pairs(spark, sf_dir):
     """SimHash near-dup candidates (4-chunk pigeonhole, Hamming <= 3).
     60-bit md5 SimHash, so the DuckDB oracle replays the scheme exactly;
@@ -1440,7 +1276,6 @@ def docs_simhash_pairs(spark, sf_dir):
            ROUND(CAST((SELECT COUNT(*) FROM ov) AS DOUBLE)
                  / greatest((SELECT COUNT(*) FROM sh_shpairs), 1), 4) AS precision
     """,
-    tags=("dedup", "simhash", "recall", "instrumentation"),
 )
 def docs_simhash_recall_vs_exact(spark, sf_dir):
     """SimHash sketch calibration against EXACT token-Jaccard ground
@@ -1501,10 +1336,7 @@ def _winnow_sql() -> str:
       SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
     ), s AS (
       SELECT doc_id,
-             CASE WHEN len(toks) >= {k}
-                  THEN list_transform(range(1, len(toks) - {k - 2}),
-                         i -> md5(array_to_string(toks[i:i+{k - 1}], ' ')))
-                  ELSE [] END AS hs
+             list_transform({shingles_sql(k, distinct=False)}, x -> md5(x)) AS hs
       FROM t
     ), w AS (
       SELECT doc_id,
@@ -1521,7 +1353,7 @@ def _winnow_sql() -> str:
     """
 
 
-@query("docs_winnow_fingerprints", oracle=_winnow_sql(), tags=("text", "fingerprint"))
+@query("docs_winnow_fingerprints", oracle=_winnow_sql())
 def docs_winnow_fingerprints(spark, sf_dir):
     """Winnowing fingerprints, exploded to (doc_id, fingerprint) rows.
     md5 shingle hashes and lexicographic window minima, so the DuckDB oracle
@@ -1535,14 +1367,6 @@ def docs_winnow_fingerprints(spark, sf_dir):
         .select("doc_id", F.explode("fingerprints").alias("fingerprint"))
         .orderBy("doc_id", "fingerprint")
     )
-
-
-_LANG_SQL_SETS = {
-    "en": "['the','a','and','of','to','is','in']",
-    "es": "['el','la','de','que','y','los','un']",
-    "fr": "['le','la','de','et','un','les','des']",
-    "de": "['der','die','und','das','ist','von','ein']",
-}
 
 
 @query(
@@ -1567,7 +1391,6 @@ _LANG_SQL_SETS = {
            CAST(COUNT(*) AS BIGINT) AS n_docs
     FROM h GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("text", "lang-id"),
 )
 def docs_lang_id(spark, sf_dir):
     """Stopword-hit language-ID heuristic: labeled vs predicted confusion
@@ -1609,7 +1432,6 @@ _STOP_ALL_SQL = (
            ROUND(CAST(punct_n AS DOUBLE) / NULLIF(bpe_n, 0), 4) AS punct_ratio
     FROM t ORDER BY doc_id
     """,
-    tags=("text", "quality"),
 )
 def docs_quality_scores(spark, sf_dir):
     """Per-document quality features: length-saturation + lexical-diversity
@@ -1680,7 +1502,6 @@ def _char_entropy_sql() -> str:
 @query(
     "docs_char_entropy",
     oracle=_char_entropy_sql(),
-    tags=("text", "quality", "entropy"),
 )
 def docs_char_entropy(spark, sf_dir):
     """Character-level Shannon entropy per document — the information-
@@ -1759,7 +1580,6 @@ def docs_char_entropy(spark, sf_dir):
                AS chars_per_token
     FROM t GROUP BY lang ORDER BY lang
     """,
-    tags=("text", "tokenizer", "diagnostics"),
 )
 def docs_tokenizer_fertility(spark, sf_dir):
     """Tokenizer fertility per language — the standard multilingual
@@ -1806,7 +1626,6 @@ def docs_tokenizer_fertility(spark, sf_dir):
            CAST(COUNT(*) AS DOUBLE) / COUNT(DISTINCT doc_id) AS avg_tokens_per_doc
     FROM e GROUP BY lang ORDER BY lang
     """,
-    tags=("text", "tokens"),
 )
 def docs_token_stats(spark, sf_dir):
     """Corpus token statistics per language, split into two cheap aggregates
@@ -1864,7 +1683,6 @@ def docs_token_stats(spark, sf_dir):
     QUALIFY rank <= 5
     ORDER BY query_id, rank
     """,
-    tags=("similarity", "ann"),
 )
 def emb_topk_bruteforce(spark, sf_dir):
     """Exact cosine top-5 neighbors for query vectors vec_id < 8 —
@@ -1875,12 +1693,6 @@ def emb_topk_bruteforce(spark, sf_dir):
     queries_df = emb.filter(F.col("vec_id") < 8)
     out = brute_force_topk(emb, queries_df, k=5)
     return out.withColumn("rank", F.col("rank").cast("long"))
-
-
-_SQDIST_SQL = (
-    "list_sum(list_transform(range(1, len({a})+1),"
-    " i -> ({a}[i]-{b}[i])*({a}[i]-{b}[i])))"
-)
 
 
 @query(
@@ -1929,7 +1741,6 @@ _SQDIST_SQL = (
     QUALIFY rank <= 5
     ORDER BY query_id, rank
     """,
-    tags=("similarity", "ann", "ivf"),
 )
 def emb_topk_ivf(spark, sf_dir):
     """IVF approximate top-5 with the DETERMINISTIC label-centroid coarse
@@ -1983,7 +1794,6 @@ _B32 = 1 << 32
            CAST(SUM(n_chars) AS BIGINT) AS sum_chars
     FROM kept GROUP BY source ORDER BY source
     """,
-    tags=("sampling", "mixing"),
 )
 def docs_stratified_sample(spark, sf_dir):
     """Deterministic stratified sampling (operators.sampling) — per-source
@@ -2021,7 +1831,6 @@ def docs_stratified_sample(spark, sf_dir):
            ROUND((target_share * m) / n_rows, 6) AS keep_rate
     FROM t, m ORDER BY source
     """,
-    tags=("sampling", "mixing"),
 )
 def docs_mixing_weights(spark, sf_dir):
     """Data-mixing rates: per-source keep rates that hit a target mixture
@@ -2102,7 +1911,6 @@ _DSIR_CTES = f"""
     + """
     SELECT doc_id, n_grams, log_w FROM full_w ORDER BY doc_id
     """,
-    tags=("sampling", "selection", "dsir"),
 )
 def docs_dsir_weights(spark, sf_dir):
     """DSIR importance weights (operators.sampling.dsir_importance; Xie et
@@ -2144,7 +1952,6 @@ def docs_dsir_weights(spark, sf_dir):
     FROM sel JOIN (SELECT DISTINCT doc_id, source FROM rawd) d USING (doc_id)
     GROUP BY 1 ORDER BY 1
     """,
-    tags=("sampling", "selection", "dsir"),
 )
 def docs_dsir_selection(spark, sf_dir):
     """DSIR top-20% selection audit: which sources the importance
@@ -2206,7 +2013,6 @@ def docs_dsir_selection(spark, sf_dir):
            start_off % 512 AS chunk_offset
     FROM w WHERE toks > 0 ORDER BY doc_id
     """,
-    tags=("packing", "training-data"),
 )
 def docs_chunk_spans(spark, sf_dir):
     """GPT-style concat-then-chunk sequence layout (operators.packing):
@@ -2260,7 +2066,6 @@ def docs_chunk_spans(spark, sf_dir):
     FROM step s JOIN ff f USING (grp)
     ORDER BY s.doc_id
     """,
-    tags=("packing", "training-data"),
 )
 def docs_packed_bins(spark, sf_dir):
     """No-split first-fit-decreasing bin packing into 512-token bins
@@ -2308,7 +2113,6 @@ _PII_IP = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
            CAST(SUM(n_ip) AS BIGINT) AS total_ips
     FROM c GROUP BY source ORDER BY source
     """,
-    tags=("text", "cleaning", "pii"),
 )
 def docs_pii_scrub_stats(spark, sf_dir):
     """PII detection stats per source (functions.text.pii_count) over a
@@ -2357,7 +2161,6 @@ def docs_pii_scrub_stats(spark, sf_dir):
            TRUE AS avg_recall_ge_floor
     FROM embeddings WHERE vec_id < 8
     """,
-    tags=("similarity", "ann", "ivf", "quality"),
 )
 def emb_ivf_recall(spark, sf_dir):
     """Recall@5 of IVF (nprobe=4 of 8 k-means cells) vs exact brute force
@@ -2405,7 +2208,6 @@ def emb_ivf_recall(spark, sf_dir):
     FROM (VALUES (1, 0.3), (2, 0.5), (4, 0.8), (8, 1.0)) AS t(nprobe, floor)
     ORDER BY t.nprobe
     """,
-    tags=("similarity", "ann", "ivf", "quality", "sweep"),
 )
 def emb_ivf_nprobe_sweep(spark, sf_dir):
     """IVF recall/cost curve: recall@10 at nprobe ∈ {1,2,4,8} of 8 k-means
@@ -2520,7 +2322,6 @@ _LABEL_PER_QUERY_SQL = """, per AS (
                 // (2 * n_queries) AS BIGINT) / 1000000.0 AS hit_rate_at_k
     FROM agg
     """,
-    tags=("similarity", "eval", "ranking", "mrr"),
 )
 def emb_label_retrieval_mrr(spark, sf_dir):
     """MRR@10 / precision@10 / hit-rate@10 of exact cosine retrieval under
@@ -2596,7 +2397,6 @@ def emb_label_retrieval_mrr(spark, sf_dir):
                 // (2 * 10 * n_queries) AS BIGINT) / 1000000.0 AS precision_at_k
     FROM g ORDER BY qlabel
     """,
-    tags=("similarity", "eval", "ranking", "mrr"),
 )
 def emb_label_retrieval_by_label(spark, sf_dir):
     """Per-label MRR@10 / precision@10 breakdown of the label-relevance
@@ -2662,7 +2462,6 @@ def emb_label_retrieval_by_label(spark, sf_dir):
                 // (2 * COUNT(*)) AS BIGINT) / 1000000.0 AS accuracy
     FROM pred GROUP BY qlabel ORDER BY qlabel
     """,
-    tags=("similarity", "eval", "knn", "classification"),
 )
 def emb_knn_label_accuracy(spark, sf_dir):
     """Leave-one-out 5-NN majority-vote label accuracy per class
@@ -2698,41 +2497,8 @@ def emb_knn_label_accuracy(spark, sf_dir):
 
 @query(
     "emb_pq_adc_topk",
-    oracle="""
-    WITH v AS (
-      SELECT vec_id, label,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      FROM embeddings
-    ), cent AS (
-      SELECT label, pos, ROUND(SUM(e[pos]) / COUNT(*), 6) AS c
-      FROM v, unnest(range(1, len(e) + 1)) AS t(pos)
-      GROUP BY 1, 2
-    ), carr AS (
-      SELECT label, list(c ORDER BY pos) AS carr,
-             ROW_NUMBER() OVER (ORDER BY label) - 1 AS idx
-      FROM cent GROUP BY label
-    ), dist AS (
-      SELECT v.vec_id, t.m, ca.idx,
-             floor(list_sum(list_transform(range(1, 9),
-                 i -> (v.e[8*t.m + i] - ca.carr[8*t.m + i])
-                    * (v.e[8*t.m + i] - ca.carr[8*t.m + i])))
-                   * 1099511627776.0) / 1099511627776.0 AS d
-      FROM v, unnest(range(8)) AS t(m), carr ca
-    ), codes AS (
-      SELECT vec_id, m, idx AS code FROM (
-        SELECT vec_id, m, idx,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d, idx) AS rn
-        FROM dist) WHERE rn = 1
-    ), qd AS (
-      SELECT vec_id AS qid, m, idx, d FROM dist WHERE vec_id < 8
-    ), adc AS (
-      -- plain double SUM is EXACT here: quantized terms are multiples of
-      -- 2^-40 whose total stays far below 2^53 ulps, so order is free
-      SELECT q.qid AS query_id, c.vec_id AS neighbor_id, SUM(q.d) AS dist
-      FROM codes c JOIN qd q ON q.m = c.m AND q.idx = c.code
-      WHERE q.qid <> c.vec_id
-      GROUP BY 1, 2
-    ), ranked AS (
+    oracle=f"""
+    WITH {pq_adc_sql()}, ranked AS (
       SELECT query_id, neighbor_id, ROUND(dist, 6) AS adc_dist,
              ROW_NUMBER() OVER (
                PARTITION BY query_id ORDER BY dist, neighbor_id) AS rank
@@ -2741,7 +2507,6 @@ def emb_knn_label_accuracy(spark, sf_dir):
     SELECT query_id, neighbor_id, adc_dist, CAST(rank AS INT) AS rank
     FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
     """,
-    tags=("similarity", "ann", "pq", "quantization"),
 )
 def emb_pq_adc_topk(spark, sf_dir):
     """Product-quantization ADC top-k — the memory-bound ANN technique:
@@ -2765,7 +2530,7 @@ def emb_pq_adc_topk(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    return pq_adc_topk(emb, queries_df, k=5, m=8)
+    return pq_adc_topk(emb, queries_df, k=5)
 
 
 def _z2_sql(a_expr: str, b_expr: str, bits: int = 10) -> str:
@@ -2802,7 +2567,6 @@ def _z2_sql(a_expr: str, b_expr: str, bits: int = 10) -> str:
            ROUND(CAST(SUM(span_b) AS DOUBLE) / COUNT(*), 6) AS avg_span_b
     FROM per GROUP BY 1 ORDER BY 1
     """,
-    tags=("layout", "zorder", "pruning", "scale"),
 )
 def lineitem_zorder_clustering(spark, sf_dir):
     """Multi-dimensional clustering audit: Morton/Z-order layout
@@ -2885,7 +2649,6 @@ def lineitem_zorder_clustering(spark, sf_dir):
     FROM act a JOIN firstday f ON f.user_id = a.user_id
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("window", "retention"),
 )
 def user_retention_cohorts(spark, sf_dir):
     """Cohort retention triangle: users bucketed by first-seen day, counted
@@ -2917,7 +2680,6 @@ def user_retention_cohorts(spark, sf_dir):
     FROM events WHERE user_id IS NOT NULL
     GROUP BY user_id ORDER BY user_id
     """,
-    tags=("ordered-agg", "path"),
 )
 def user_event_type_paths(spark, sf_dir):
     """Ordered aggregation: each user's full event-type journey as a
@@ -2958,7 +2720,6 @@ def user_event_type_paths(spark, sf_dir):
       ON p.user_id = v.user_id AND p.purchase_ts >= v.view_ts
     ORDER BY p.event_id
     """,
-    tags=("asof-join", "window"),
 )
 def events_asof_last_view(spark, sf_dir):
     """As-of join (operators.joins.asof_join): each purchase matched to the
@@ -2998,7 +2759,6 @@ def events_asof_last_view(spark, sf_dir):
      AND c.ts <= CAST(p.ts AS TIMESTAMP)
     GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
     """,
-    tags=("range-join",),
 )
 def events_clicks_before_purchase(spark, sf_dir):
     """Time-range (interval) join: clicks within the 10 minutes before each
@@ -3045,7 +2805,6 @@ def events_clicks_before_purchase(spark, sf_dir):
            CAST(SUM(bpe_n) AS DOUBLE) / COUNT(*) AS avg_bpe_per_doc
     FROM t GROUP BY lang ORDER BY lang
     """,
-    tags=("text", "tokens", "bpe"),
 )
 def docs_bpe_token_stats(spark, sf_dir):
     """Token counting both ways (whitespace + BPE-ish regex pre-tokens) —
@@ -3070,13 +2829,6 @@ def docs_bpe_token_stats(spark, sf_dir):
     )
 
 
-_COS_SQL = (
-    "list_sum(list_transform(range(1, len(a.e)+1), i -> a.e[i] * b.e[i]))"
-    " / (sqrt(list_sum(list_transform(range(1, len(a.e)+1), i -> a.e[i] * a.e[i])))"
-    " * sqrt(list_sum(list_transform(range(1, len(b.e)+1), i -> b.e[i] * b.e[i]))))"
-)
-
-
 @query(
     "emb_cosine_near_dup_pairs",
     oracle=f"""
@@ -3084,12 +2836,11 @@ _COS_SQL = (
       SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
       FROM embeddings
     )
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b, ROUND({_COS_SQL}, 4) AS sim
+    SELECT a.vec_id AS id_a, b.vec_id AS id_b, ROUND({_COS_SQL.format(a="a.e", b="b.e")}, 4) AS sim
     FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE ROUND({_COS_SQL}, 4) >= 0.3
+    WHERE ROUND({_COS_SQL.format(a="a.e", b="b.e")}, 4) >= 0.3
     ORDER BY id_a, id_b
     """,
-    tags=("dedup", "similarity"),
 )
 def emb_cosine_near_dup_pairs(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs, blocked on label: the exact
@@ -3106,28 +2857,12 @@ def emb_cosine_near_dup_pairs(spark, sf_dir):
     WITH v AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
       FROM embeddings
-    ), sig AS (
-      SELECT vec_id, b,
-             list_sum(list_transform(range(1, len(e)+1),
-               i -> e[i] * (2.0 * (('0x' || substr(md5('42:' || b || ':' || (i-1)), 1, 13))::BIGINT
-                                   / 4503599627370496.0) - 1.0))) AS d
-      FROM v, range(0, 32) t(b)
-    ), bands AS (
-      SELECT vec_id, CAST(b // 8 AS INT) AS band_id,
-             CAST(SUM(CASE WHEN d > 0 THEN 1 << CAST(b % 8 AS INT) ELSE 0 END) AS BIGINT)
-                 AS band_key
-      FROM sig GROUP BY vec_id, b // 8
-    ), cand AS (
-      SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
-      FROM bands l JOIN bands r
-        ON l.band_id = r.band_id AND l.band_key = r.band_key AND l.vec_id < r.vec_id
-    )
-    SELECT c.id_a, c.id_b, ROUND({_COS_SQL}, 4) AS sim
+    ), {srp_candidates_sql()}
+    SELECT c.id_a, c.id_b, ROUND({_COS_SQL.format(a="a.e", b="b.e")}, 4) AS sim
     FROM cand c JOIN v a ON a.vec_id = c.id_a JOIN v b ON b.vec_id = c.id_b
-    WHERE ROUND({_COS_SQL}, 4) >= 0.3
+    WHERE ROUND({_COS_SQL.format(a="a.e", b="b.e")}, 4) >= 0.3
     ORDER BY id_a, id_b
     """,
-    tags=("dedup", "similarity", "lsh"),
 )
 def emb_srp_near_dup_pairs(spark, sf_dir):
     """Sign-LSH (random-hyperplane) bucketed near-dup candidates + exact
@@ -3185,7 +2920,6 @@ def emb_srp_near_dup_pairs(spark, sf_dir):
            CAST(SUM(16) AS BIGINT) AS total_feature_vals
     FROM f GROUP BY 1 ORDER BY media_type
     """,
-    tags=("multimodal",),
 )
 def media_decode_profile(spark, sf_dir):
     """Multimodal REAL-codec path end-to-end: synthetic_media_assets
@@ -3264,7 +2998,6 @@ def media_decode_profile(spark, sf_dir):
     QUALIFY rank <= 3
     ORDER BY query_id, rank
     """,
-    tags=("multimodal", "similarity"),
 )
 def media_feature_topk(spark, sf_dir):
     """Cross-modal composition: REAL-decoded media features (intensity

@@ -5,40 +5,22 @@ plans/queries.py imports the chunks in original file order).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass, field
-from functools import reduce
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from prod_data_pipeline_spark.schemas import TESTDATA_EVENT_TYPES
-from prod_data_pipeline_spark.session import truncate_lineage, tune
-from prod_data_pipeline_spark.sources.readers import load_table
+from prod_data_pipeline_spark.session import truncate_lineage
 
-from prod_data_pipeline_spark.plans.query_registry import (  # noqa: F401
+from prod_data_pipeline_spark.plans.query_registry import (
+    _TOKS_SQL,
     _t,
     dsum,
+    jaccard_prefix_sql,
+    jaccard_sql,
+    near_dup_pairs_sql,
     query,
-)
-from prod_data_pipeline_spark.plans.queries_events_star import (  # noqa: F401
-    _TOKS_SQL,
-    emb_topk_bruteforce,
-    user_retention_cohorts,
-)
-from prod_data_pipeline_spark.plans.queries_text_dedup import (  # noqa: F401
-    docs_bigram_logprob,
-    docs_dup_pagerank,
-    docs_lsh_recall_vs_exact,
-    docs_quality_weighted_sample,
-    docs_train_val_test_split,
-    docs_unigram_logprob,
-    events_type_transitions,
-)
-from prod_data_pipeline_spark.plans.queries_tpch_graph import (  # noqa: F401
-    basket_part_pair_lift,
-    media_audio_waveform_stats,
-    media_image_phash_groups,
+    shingles_sql,
+    snm_key_sql,
+    snm_window_sql,
 )
 
 # ---------------------------------------------------------------------------
@@ -81,7 +63,6 @@ from prod_data_pipeline_spark.plans.queries_tpch_graph import (  # noqa: F401
     WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.u = c.u AND e.v = c.v)
     ORDER BY aa_score DESC, id_a, id_b LIMIT 50
     """,
-    tags=("graph", "recommendation", "link-prediction"),
 )
 def parts_adamic_adar_links(spark, sf_dir):
     """Adamic-Adar link prediction over the part co-purchase graph
@@ -172,7 +153,6 @@ def _ppr_oracle_sql(n_iters: int = 6, n_seeds: int = 4, top_n: int = 25) -> str:
 @query(
     "parts_related_by_ppr",
     oracle=_ppr_oracle_sql(6, 4, 25),
-    tags=("graph", "iterative", "recommendation"),
 )
 def parts_related_by_ppr(spark, sf_dir):
     """Related-products by personalized PageRank
@@ -233,10 +213,7 @@ def parts_related_by_ppr(spark, sf_dir):
       SELECT doc_id, source, {_TOKS_SQL} AS toks FROM documents
     ), g AS (
       SELECT doc_id, source,
-             unnest(CASE WHEN len(toks) >= 3
-                    THEN list_distinct(list_transform(range(1, len(toks)-1),
-                           i -> array_to_string(toks[i:i+2], ' ')))
-                    ELSE [] END) AS gram
+             unnest({shingles_sql()}) AS gram
       FROM t
     ), fst AS (
       SELECT gram, MIN(doc_id) AS first_doc FROM g GROUP BY gram
@@ -259,7 +236,6 @@ def parts_related_by_ppr(spark, sf_dir):
                AS avg_doc_novelty
     FROM per_doc GROUP BY source ORDER BY source
     """,
-    tags=("text", "dedup", "curation"),
 )
 def docs_novelty_by_source(spark, sf_dir):
     """Marginal-content attribution: a 3-gram shingle is 'novel' in the
@@ -318,34 +294,22 @@ def docs_novelty_by_source(spark, sf_dir):
 @query(
     "docs_sorted_neighborhood_pairs",
     oracle=f"""
-    WITH t0 AS (
-      SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents
-    ), t AS (
-      SELECT doc_id,
-             substr(regexp_replace(lower(substr(text, 1, 64)),
-                                   '[^a-z0-9]', '', 'g'), 1, 16) AS key,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t0
+    WITH t AS (
+      SELECT doc_id, {snm_key_sql()} AS key, {_TOKS_SQL} AS toks FROM documents
     ), r AS MATERIALIZED (
-      SELECT doc_id, key, sh,
+      SELECT doc_id, key, {shingles_sql()} AS sh,
              ROW_NUMBER() OVER (ORDER BY key, doc_id) AS rnk
       FROM t
     )
     SELECT id_a, id_b, rank_gap, jac AS jaccard FROM (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
              CAST(b.rnk - a.rnk AS BIGINT) AS rank_gap,
-             ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                   / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))),
-                   4) AS jac
-      FROM r a JOIN r b ON b.rnk > a.rnk AND b.rnk <= a.rnk + 5
+             ROUND({jaccard_sql("a.sh", "b.sh")}, 4) AS jac
+      FROM r a JOIN r b ON {snm_window_sql()}
       WHERE len(a.sh) > 0 AND len(b.sh) > 0
     ) WHERE jac >= 0.3
     ORDER BY id_a, id_b
     """,
-    tags=("dedup", "blocking", "entity-resolution"),
 )
 def docs_sorted_neighborhood_pairs(spark, sf_dir):
     """Sorted-neighborhood blocking dedup
@@ -410,7 +374,6 @@ def docs_sorted_neighborhood_pairs(spark, sf_dir):
     FROM fused QUALIFY fused_rank <= 10
     ORDER BY query_id, fused_rank
     """,
-    tags=("similarity", "ann", "rank-fusion"),
 )
 def emb_rrf_topk(spark, sf_dir):
     """Reciprocal-rank fusion of two exact retrievers — cosine top-50
@@ -545,7 +508,6 @@ def _audio_band_hash_oracle_sql() -> str:
 @query(
     "media_audio_dominant_band",
     oracle=_audio_band_oracle_sql(),
-    tags=("multimodal", "audio", "dsp"),
 )
 def media_audio_dominant_band(spark, sf_dir):
     """Spectral band analysis over REAL WAV decode
@@ -572,7 +534,6 @@ def media_audio_dominant_band(spark, sf_dir):
 @query(
     "media_audio_band_hash_groups",
     oracle=_audio_band_hash_oracle_sql(),
-    tags=("multimodal", "audio", "perceptual-hash", "dedup"),
 )
 def media_audio_band_hash_groups(spark, sf_dir):
     """Perceptual AUDIO dedup: each real-decoded WAV gets a band-energy
@@ -643,7 +604,6 @@ def media_audio_band_hash_groups(spark, sf_dir):
            MAX(doc_id) AS max_asset_id
     FROM h GROUP BY temporal_hash ORDER BY temporal_hash
     """,
-    tags=("multimodal", "video", "perceptual-hash", "dedup"),
 )
 def media_video_framehash_groups(spark, sf_dir):
     """Perceptual VIDEO dedup: each real-decoded Y4M clip gets its
@@ -705,7 +665,6 @@ def media_video_framehash_groups(spark, sf_dir):
     WHERE cb.c >= 10
     ORDER BY pmi DESC, prev, cur LIMIT 30
     """,
-    tags=("text", "lm", "collocations"),
 )
 def docs_collocations_pmi(spark, sf_dir):
     """Top-30 bigram collocations by pointwise mutual information with a
@@ -820,7 +779,6 @@ def docs_collocations_pmi(spark, sf_dir):
       FROM ringmv
     ) ORDER BY scheme
     """,
-    tags=("sampling", "shard", "consistent-hashing"),
 )
 def docs_shard_rebalance_audit(spark, sf_dir):
     """Shard-rebalance blast radius, mod-N vs consistent-hash ring: when
@@ -964,7 +922,6 @@ def docs_shard_rebalance_audit(spark, sf_dir):
                 ELSE ROUND(exp(cum), 6) END AS survival
     FROM surv WHERE d > 0 ORDER BY duration_days
     """,
-    tags=("analytics", "survival", "retention"),
 )
 def customers_survival_curve(spark, sf_dir):
     """Kaplan-Meier survival curve over customer ORDERING lifetimes: a
@@ -1113,7 +1070,6 @@ def customers_survival_curve(spark, sf_dir):
            ROUND(MAX(ce), 6) AS max_ce
     FROM per_doc GROUP BY lang ORDER BY lang
     """,
-    tags=("text", "lm", "pipeline"),
 )
 def docs_trigram_logprob(spark, sf_dir):
     """Order-3 language-model quality signal completing the n-gram LM
@@ -1270,7 +1226,6 @@ def docs_trigram_logprob(spark, sf_dir):
            ROUND(CAST(edge_sum AS DOUBLE) / n_interior, 4) AS mean_edge
     FROM e ORDER BY asset_id
     """,
-    tags=("multimodal", "image", "convolution"),
 )
 def media_image_edge_density(spark, sf_dir):
     """Sobel edge density over REAL BMP decode
@@ -1323,7 +1278,6 @@ def media_image_edge_density(spark, sf_dir):
     FROM fy a JOIN fy b ON b.doc_id = a.doc_id AND b.i = a.i - 1
     ORDER BY asset_id, frame_idx
     """,
-    tags=("multimodal", "video", "motion"),
 )
 def media_video_motion_energy(spark, sf_dir):
     """Pixel-level temporal motion energy over REAL Y4M decode
@@ -1373,7 +1327,6 @@ def media_video_motion_energy(spark, sf_dir):
       AND (effective_to IS NULL OR effective_to > TIMESTAMP '2024-01-15 12:00:00')
     ORDER BY user_id
     """,
-    tags=("cdc", "scd2", "time-travel"),
 )
 def events_scd2_asof_snapshot(spark, sf_dir):
     """Bitemporal AS-OF read over the SCD2 history: reconstruct every
@@ -1437,7 +1390,6 @@ def events_scd2_asof_snapshot(spark, sf_dir):
                  / (CAST(b AS DOUBLE) * CAST(c AS DOUBLE)), 6) AS r2
     FROM f ORDER BY priority
     """,
-    tags=("analytics", "regression", "timeseries"),
 )
 def orders_revenue_trend_ols(spark, sf_dir):
     """Per-priority monthly revenue trend by closed-form OLS: slope,
@@ -1529,7 +1481,6 @@ def orders_revenue_trend_ols(spark, sf_dir):
     FROM hit h JOIN c ON c.n = h.len_at_q
     ORDER BY quantile
     """,
-    tags=("text", "quantiles", "packing"),
 )
 def docs_token_mass_quantiles(spark, sf_dir):
     """TOKEN-MASS-weighted length quantiles: the smallest document length
@@ -1611,7 +1562,6 @@ def docs_token_mass_quantiles(spark, sf_dir):
     FROM r, mom
     ORDER BY maha_d2 DESC, l_orderkey, l_linenumber LIMIT 50
     """,
-    tags=("analytics", "outliers", "multivariate"),
 )
 def lineitem_mahalanobis_outliers(spark, sf_dir):
     """Multivariate outliers by exact-moment Mahalanobis distance over
@@ -1727,7 +1677,6 @@ def lineitem_mahalanobis_outliers(spark, sf_dir):
     FROM est e JOIN exact x ON x.q100 = e.q100
     ORDER BY quantile
     """,
-    tags=("sketches", "quantiles", "mergeable"),
 )
 def events_value_sketch_quantiles(spark, sf_dir):
     """Mergeable QUANTILE sketch, exact-replayable — completing the
@@ -1857,7 +1806,6 @@ def _mmr_oracle_sql(k_candidates: int = 20, k_select: int = 8) -> str:
 @query(
     "emb_mmr_rerank",
     oracle=_mmr_oracle_sql(20, 8),
-    tags=("similarity", "rag", "diversity"),
 )
 def emb_mmr_rerank(spark, sf_dir):
     """Maximal-marginal-relevance re-rank
@@ -1880,57 +1828,19 @@ def emb_mmr_rerank(spark, sf_dir):
 @query(
     "docs_snm_recall_vs_exact",
     oracle=f"""
-    WITH t0 AS (
-      SELECT doc_id, {_TOKS_SQL} AS tk FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 3
-                  THEN list_distinct(list_transform(range(1, len(tk)-1),
-                         i -> array_to_string(tk[i:i+2], ' ')))
-                  ELSE [] END AS toks
-      FROM t0
-    ), t2 AS MATERIALIZED (
-      SELECT doc_id, toks FROM sh WHERE len(toks) > 0
-    ), tok AS (
-      SELECT doc_id, unnest(toks) AS token, len(toks) AS sz FROM t2
-    ), dfreq AS (
-      SELECT token, COUNT(*) AS df FROM tok GROUP BY token
-    ), ranked AS (
-      SELECT doc_id, token, sz,
-             row_number() OVER (PARTITION BY doc_id ORDER BY df, token) AS rn
-      FROM tok JOIN dfreq USING (token)
-    ), prefix AS (
-      SELECT doc_id, token, sz FROM ranked
-      WHERE rn <= sz - ((50 * sz + 99) // 100) + 1
-    ), pcand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM prefix a JOIN prefix b
-        ON a.token = b.token AND a.doc_id < b.doc_id
-      WHERE 50 * greatest(a.sz, b.sz) <= 100 * least(a.sz, b.sz)
-    ), exact AS MATERIALIZED (
-      SELECT c.id_a, c.id_b FROM pcand c
-      JOIN t2 ta ON ta.doc_id = c.id_a
-      JOIN t2 tb ON tb.doc_id = c.id_b
-      WHERE 100 * len(list_intersect(ta.toks, tb.toks))
-            >= 50 * (len(ta.toks) + len(tb.toks) - len(list_intersect(ta.toks, tb.toks)))
-    ), key AS (
-      SELECT doc_id,
-             substr(regexp_replace(lower(substr(text, 1, 64)),
-                                   '[^a-z0-9]', '', 'g'), 1, 16) AS key
-      FROM documents
+    WITH {jaccard_prefix_sql(materialize=True)}, key AS (
+      SELECT doc_id, {snm_key_sql()} AS key FROM documents
     ), snmr AS MATERIALIZED (
       SELECT doc_id, ROW_NUMBER() OVER (ORDER BY key, doc_id) AS rnk FROM key
     ), scand AS (
       SELECT a.doc_id AS ra, b.doc_id AS rb
-      FROM snmr a JOIN snmr b ON b.rnk > a.rnk AND b.rnk <= a.rnk + 5
+      FROM snmr a JOIN snmr b ON {snm_window_sql()}
     ), snm AS MATERIALIZED (
       SELECT DISTINCT least(c.ra, c.rb) AS id_a, greatest(c.ra, c.rb) AS id_b
       FROM scand c
       JOIN t2 ta ON ta.doc_id = c.ra
       JOIN t2 tb ON tb.doc_id = c.rb
-      WHERE ROUND(CAST(len(list_intersect(ta.toks, tb.toks)) AS DOUBLE)
-            / (len(ta.toks) + len(tb.toks) - len(list_intersect(ta.toks, tb.toks))),
-            4) >= 0.5
+      WHERE ROUND({jaccard_sql("ta.sh", "tb.sh")}, 4) >= 0.5
     )
     SELECT CAST((SELECT COUNT(*) FROM exact) AS BIGINT) AS n_exact,
            CAST((SELECT COUNT(*) FROM snm) AS BIGINT) AS n_snm,
@@ -1940,7 +1850,6 @@ def emb_mmr_rerank(spark, sf_dir):
                  ON e.id_a = s.id_a AND e.id_b = s.id_b) AS DOUBLE)
                  / greatest((SELECT COUNT(*) FROM exact), 1), 4) AS recall
     """,
-    tags=("dedup", "blocking", "recall", "instrumentation"),
 )
 def docs_snm_recall_vs_exact(spark, sf_dir, sample_pct: int = 100):
     """Sorted-neighborhood recall audit against the SAME exact ground
@@ -2036,7 +1945,6 @@ def docs_snm_recall_vs_exact(spark, sf_dir, sample_pct: int = 100):
            ROUND(CAST(SUM(CAST(t AS DECIMAL(24,10))) AS DOUBLE), 6) AS chi2
     FROM terms
     """,
-    tags=("analytics", "statistics", "independence"),
 )
 def docs_lang_source_chi2(spark, sf_dir):
     """Pearson chi-square independence test for language x source — the
@@ -2117,7 +2025,6 @@ def _seq_patterns() -> list[str]:
     FROM sup
     ORDER BY n_users DESC, pattern LIMIT 20
     """,
-    tags=("sequence-mining", "events", "behavior"),
 )
 def users_frequent_type_sequences(spark, sf_dir):
     """Frequent length-3 event-type SUBSEQUENCES (PrefixSpan-style
@@ -2235,7 +2142,6 @@ def _markov_oracle_sql(n_iters: int = 8) -> str:
 @query(
     "events_type_markov_stationary",
     oracle=_markov_oracle_sql(8),
-    tags=("graph", "iterative", "markov"),
 )
 def events_type_markov_stationary(spark, sf_dir):
     """Stationary distribution of the event-type Markov chain — the
@@ -2313,7 +2219,6 @@ def events_type_markov_stationary(spark, sf_dir):
            CAST(ROW_NUMBER() OVER (ORDER BY k DESC, doc_id) AS BIGINT) AS rank
     FROM d QUALIFY rank <= 50 ORDER BY rank
     """,
-    tags=("sampling", "weighted", "llm-pipeline"),
 )
 def docs_weighted_reservoir_topk(spark, sf_dir):
     """Efraimidis-Spirakis weighted sampling WITHOUT replacement: a
@@ -2383,7 +2288,6 @@ def docs_weighted_reservoir_topk(spark, sf_dir):
     FROM r JOIN sz ON sz.cohort = r.cohort
     ORDER BY r.cohort, age
     """,
-    tags=("analytics", "cohort", "ltv"),
 )
 def customers_cohort_ltv(spark, sf_dir):
     """Cohort lifetime-value triangle: customers grouped by
@@ -2449,7 +2353,6 @@ def customers_cohort_ltv(spark, sf_dir):
            ROUND(quantile_cont(us, 0.9) / 1000000.0, 3) AS p90_seconds
     FROM lat
     """,
-    tags=("funnel", "latency", "quantiles"),
 )
 def events_conversion_latency(spark, sf_dir):
     """View-to-purchase conversion latency: for each user, microseconds
@@ -2540,7 +2443,6 @@ def events_conversion_latency(spark, sf_dir):
     FROM v WHERE 100 * inter >= 95 * sz_a
     ORDER BY id_small, id_container
     """,
-    tags=("dedup", "containment", "exact-join"),
 )
 def docs_containment_pairs(spark, sf_dir):
     """EXACT asymmetric containment join at 95% with a 2x container
@@ -2608,7 +2510,6 @@ _BM25_TERMS = ("merge", "stream", "hash")
     GROUP BY doc_id
     ORDER BY bm25 DESC, doc_id LIMIT 20
     """,
-    tags=("text", "retrieval", "bm25"),
 )
 def docs_bm25_topk(spark, sf_dir):
     """BM25 ranked retrieval (k1=1.2, b=0.75) for a fixed 3-term query —
@@ -2690,39 +2591,7 @@ def docs_bm25_topk(spark, sf_dir):
 @query(
     "docs_leakage_safe_split",
     oracle=f"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS (
-      SELECT doc_id, sh,
-             {", ".join(
-                 f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-                 for j in range(8)
-             )}
-      FROM s
-    ), bands AS (
-      {" UNION ALL ".join(
-          f"SELECT doc_id, {b} AS band_id, mh_{2 * b} || '|' || mh_{2 * b + 1} AS band_key "
-          "FROM sig WHERE len(sh) > 0"
-          for b in range(4)
-      )}
-    ), pairs AS (
-      SELECT c.id_a, c.id_b FROM (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4) >= 0.5
-    ), edges AS (
+    WITH RECURSIVE {near_dup_pairs_sql(0.5)}, edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs
@@ -2758,7 +2627,6 @@ def docs_bm25_topk(spark, sf_dir):
            CAST((SELECT n FROM leak) AS BIGINT) AS n_cross_split_dup_pairs
     FROM assigned GROUP BY split ORDER BY split
     """,
-    tags=("sampling", "dedup", "llm-pipeline", "leakage"),
 )
 def docs_leakage_safe_split(spark, sf_dir):
     """LEAKAGE-SAFE train/val/test split: the 80/10/10 hash split is

@@ -32,12 +32,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from prod_data_pipeline_spark.plans.query_registry import _t, query
-from prod_data_pipeline_spark.plans.queries_curation_gates import (
+from prod_data_pipeline_spark.plans.query_registry import (
     _COS_SQL,
-    _IVF_APPEND_SPLIT_SQL,
     _SQDIST_SQL,
-    _TOKS_SQL,
+    _t,
+    ft_scored_sql,
+    query,
+)
+from prod_data_pipeline_spark.plans.queries_curation_gates import (
+    _IVF_APPEND_SPLIT_SQL,
     kappa_report_columns,
 )
 from prod_data_pipeline_spark.session import truncate_lineage
@@ -64,7 +67,6 @@ ORDER BY scope
 @query(
     "events_hll_users_panel",
     oracle=HLL_USERS_PANEL_ORACLE,
-    tags=("approx", "sketch", "rollup", "panel"),
 )
 def events_hll_users_panel(spark, sf_dir):
     """Distinct-user estimation panel, per event_type AND corpus-wide in
@@ -145,58 +147,8 @@ def events_hll_users_panel(spark, sf_dir):
 #    (docs_gate_agreement_kappa + docs_gate_calibration)
 # ---------------------------------------------------------------------------
 
-GATE_EVAL_PANEL_ORACLE = """
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS tk FROM documents
-    ), lab AS (
-      SELECT doc_id, len(tk) AS n, len(list_distinct(tk)) AS nd,
-             CASE WHEN ROUND(0.5 * LEAST(len(tk) / 100.0, 1.0)
-                  + 0.5 * (len(list_distinct(tk)) / CAST(len(tk) AS DOUBLE)), 4)
-                  >= 0.52 THEN 1 ELSE 0 END AS y,
-             CAST(doc_id % 5 AS INT) AS fold
-      FROM t
-    ), feats AS (
-      SELECT doc_id, y, fold,
-             ['len:' || CAST(LEAST(n // 5, 40) AS VARCHAR),
-              'div:' || CAST((nd * 40) // n AS VARCHAR),
-              'lxd:' || CAST(LEAST(n // 10, 20) AS VARCHAR) || '_'
-                     || CAST((nd * 20) // n AS VARCHAR)] AS fs
-      FROM lab
-    ), ex AS (
-      SELECT doc_id, y, fold,
-             CAST(('0x' || substr(md5(f), 1, 8))::BIGINT % 4096
-                  AS BIGINT) AS b
-      FROM (SELECT doc_id, y, fold, unnest(fs) AS f FROM feats)
-      GROUP BY 1, 2, 3, 4
-    ), prior_counts AS (
-      SELECT CAST(SUM(y) AS DOUBLE) AS npos,
-             CAST(SUM(1 - y) AS DOUBLE) AS nneg
-      FROM lab WHERE fold < 4
-    ), llr AS (
-      SELECT CAST(d.range AS BIGINT) AS b,
-             ROUND(ln((COALESCE(cpos, 0) + 1.0) / (npos + 2.0))
-                   - ln((COALESCE(cneg, 0) + 1.0) / (nneg + 2.0)), 7) AS w
-      FROM range(0, 4096) d
-      LEFT JOIN (SELECT b, SUM(y) AS cpos, SUM(1 - y) AS cneg
-                 FROM ex WHERE fold < 4 GROUP BY 1) trainb
-        ON trainb.b = d.range, prior_counts
-    ), prior AS (
-      SELECT ROUND(ln((npos + 1.0) / (nneg + 1.0)), 7) AS pr
-      FROM prior_counts
-    ), perdoc AS (
-      SELECT e.doc_id, COUNT(b) AS n_feats,
-             CAST(CAST(COALESCE(SUM(CAST(FLOOR(w * 10000000.0 + 0.5) AS BIGINT)),
-                                0) AS BIGINT) AS DOUBLE) / 10000000.0
-               AS wsum
-      FROM ex e JOIN llr USING (b)
-      GROUP BY 1
-    ), scored AS (
-      SELECT doc_id,
-             ROUND(1.0 / (1.0 + exp(-(CASE WHEN n_feats > 0
-                 THEN (wsum + (SELECT pr FROM prior)) / n_feats
-                 ELSE 0.0 END))), 6) AS prob
-      FROM perdoc
-    ), p6 AS (
+GATE_EVAL_PANEL_ORACLE = f"""
+    WITH {ft_scored_sql()}, p6 AS (
       SELECT s.doc_id, lab.y,
              CAST(ROUND(s.prob * 1000000.0, 0) AS BIGINT) AS pm
       FROM scored s JOIN lab USING (doc_id)
@@ -272,13 +224,12 @@ GATE_EVAL_PANEL_ORACLE = """
            END AS kappa
     FROM conf
     ORDER BY metric, bin
-""".format(_TOKS_SQL=_TOKS_SQL)
+"""
 
 
 @query(
     "docs_gate_eval_panel",
     oracle=GATE_EVAL_PANEL_ORACLE,
-    tags=("text", "curation", "quality", "eval", "panel"),
 )
 def docs_gate_eval_panel(spark, sf_dir):
     """Trained-gate evaluation panel: the reliability diagram + ECE
@@ -534,7 +485,6 @@ IVF_APPEND_PANEL_ORACLE = f"""
 @query(
     "emb_ivf_append_panel",
     oracle=IVF_APPEND_PANEL_ORACLE,
-    tags=("similarity", "ivf", "incremental", "panel"),
 )
 def emb_ivf_append_panel(spark, sf_dir):
     """Post-append IVF maintenance panel: per-cell posting-list balance
@@ -694,7 +644,6 @@ ORDER BY section, bin, event_type
 @query(
     "events_value_distribution",
     oracle=VALUE_DISTRIBUTION_ORACLE,
-    tags=("stats", "histogram", "quantile", "panel"),
 )
 def events_value_distribution(spark, sf_dir):
     """Event-value distribution panel: the fixed-width 25-unit histogram
@@ -737,12 +686,10 @@ def events_value_distribution(spark, sf_dir):
     q = exact_quantiles(
         ev, "value", {"p50": 0.5, "p90": 0.9, "p99": 0.99}, by=["event_type"]
     )
-    counts = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     quant = (
-        q.groupBy("event_type")
+        q.groupBy("event_type", F.col("n_total").alias("n"))
         .pivot("qname", ["p50", "p90", "p99"])
         .agg(F.round(F.first("quantile"), 6))
-        .join(counts, "event_type")
         .select(
             F.lit("quantiles").alias("section"),
             nl.alias("bin"),

@@ -5,28 +5,24 @@ plans/queries.py imports the chunks in original file order).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass, field
-from functools import reduce
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from prod_data_pipeline_spark.schemas import TESTDATA_EVENT_TYPES
-from prod_data_pipeline_spark.session import truncate_lineage, tune
-from prod_data_pipeline_spark.sources.readers import load_table
+from prod_data_pipeline_spark.session import truncate_lineage
 
-from prod_data_pipeline_spark.plans.query_registry import (  # noqa: F401
+from prod_data_pipeline_spark.plans.query_registry import (
+    _TOKS_SQL,
     _t,
     dnum,
     dsum,
+    jaccard_prefix_sql,
+    lsh_bands_sql,
+    lsh_candidates_sql,
+    minhash_sql,
+    near_dup_pairs_sql,
     num_to_double,
     query,
-)
-from prod_data_pipeline_spark.plans.queries_events_star import (  # noqa: F401
-    _TOKS_SQL,
-    docs_quality_scores,
-    emb_ivf_recall,
+    shingles_sql,
 )
 
 # ---------------------------------------------------------------------------
@@ -70,7 +66,6 @@ from prod_data_pipeline_spark.plans.queries_events_star import (  # noqa: F401
                AS dup_ngram_frac
     FROM s LEFT JOIN a USING (doc_id) ORDER BY doc_id
     """,
-    tags=("text", "quality", "repetition"),
 )
 def docs_repetition_stats(spark, sf_dir):
     """Per-document repetition profile (operators.quality.repetition_profile):
@@ -89,12 +84,7 @@ def docs_repetition_stats(spark, sf_dir):
     WITH t AS (
       SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
     ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
+      SELECT doc_id, {shingles_sql()} AS sh FROM t
     ), bench AS (
       SELECT DISTINCT unnest(sh) AS gram FROM s WHERE doc_id % 17 = 0
     ), dg AS (
@@ -117,7 +107,6 @@ def docs_repetition_stats(spark, sf_dir):
     FROM (SELECT doc_id FROM s WHERE doc_id % 17 <> 0) d
     LEFT JOIN a USING (doc_id) ORDER BY doc_id
     """,
-    tags=("text", "quality", "decontamination"),
 )
 def docs_contamination(spark, sf_dir):
     """Benchmark decontamination (operators.quality.contamination_overlap):
@@ -159,7 +148,6 @@ def docs_contamination(spark, sf_dir):
     QUALIFY row_number() OVER (PARTITION BY lang ORDER BY tfidf DESC, term) <= 5
     ORDER BY lang, tfidf DESC, term
     """,
-    tags=("text", "tfidf", "window"),
 )
 def docs_tfidf_top_terms(spark, sf_dir):
     """Corpus TF-IDF: top-5 terms per language by smoothed tf-idf.  The
@@ -214,7 +202,6 @@ def docs_tfidf_top_terms(spark, sf_dir):
     ) = 1
     ORDER BY user_id
     """,
-    tags=("cdc", "window"),
 )
 def events_latest_per_user(spark, sf_dir):
     """SCD1 / CDC log compaction (operators.cdc.latest_snapshot): each
@@ -256,7 +243,6 @@ def events_latest_per_user(spark, sf_dir):
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ORDER BY user_id, effective_from
     """,
-    tags=("cdc", "scd2", "window"),
 )
 def events_user_type_scd2(spark, sf_dir):
     """SCD2 effective-dated history (operators.cdc.scd2_history): each
@@ -295,7 +281,6 @@ def events_user_type_scd2(spark, sf_dir):
            CAST(SUM(price_cents) AS DOUBLE) / 100.0 AS total_price
     FROM merged
     """,
-    tags=("cdc", "merge"),
 )
 def orders_merge_upsert(spark, sf_dir):
     """MERGE-INTO semantics on bare parquet (operators.cdc.merge_upsert):
@@ -357,7 +342,6 @@ def orders_merge_upsert(spark, sf_dir):
     WHERE e.value > q.p99
     ORDER BY e.event_id
     """,
-    tags=("stats", "outliers"),
 )
 def events_value_p99_outliers(spark, sf_dir):
     """Per-type outlier detection against an exact P99 threshold.  The
@@ -405,7 +389,6 @@ def events_value_p99_outliers(spark, sf_dir):
            ROUND((sxy - sx * sy / n) / (n - 1), 6) AS qty_price_covar
     FROM s
     """,
-    tags=("stats", "correlation"),
 )
 def lineitem_qty_price_corr(spark, sf_dir):
     """Pearson correlation + sample covariance of quantity vs extended
@@ -472,7 +455,6 @@ def lineitem_qty_price_corr(spark, sf_dir):
                THEN 'changed' END IS NOT NULL
     ORDER BY o_orderkey
     """,
-    tags=("cdc", "reconciliation"),
 )
 def orders_table_diff(spark, sf_dir):
     """Key-level reconciliation (operators.cdc.table_diff) of the orders
@@ -530,7 +512,6 @@ def orders_table_diff(spark, sf_dir):
     FROM per CROSS JOIN tot
     ORDER BY per.n_tokens DESC, per.source
     """,
-    tags=("text", "tokens", "budget"),
 )
 def docs_token_budget(spark, sf_dir):
     """Token-budget accounting per source: BPE-token totals, corpus share,
@@ -581,7 +562,6 @@ def docs_token_budget(spark, sf_dir):
     FROM o WHERE next_type IS NOT NULL
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("window", "transitions"),
 )
 def events_type_transitions(spark, sf_dir):
     """Markov transition matrix of event types: per-user lead() pairs
@@ -632,7 +612,6 @@ def events_type_transitions(spark, sf_dir):
                AS n_purchase
     FROM s3 GROUP BY day ORDER BY day
     """,
-    tags=("window", "funnel"),
 )
 def events_funnel_daily(spark, sf_dir):
     """Ordered three-step funnel per day (view -> click after the view ->
@@ -691,7 +670,6 @@ def events_funnel_daily(spark, sf_dir):
     FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(pos)
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("similarity", "centroids"),
 )
 def emb_label_centroids(spark, sf_dir):
     """Per-label centroid vectors in long form (label, dimension, mean) —
@@ -738,7 +716,6 @@ def emb_label_centroids(spark, sf_dir):
     GROUP BY 1, 2, 3, 4
     ORDER BY total_qty DESC, o.o_orderkey
     """,
-    tags=("join", "subquery", "Q18"),
 )
 def large_volume_orders(spark, sf_dir):
     """TPC-H Q18 shape: IN-subquery with a HAVING aggregate, decorrelated
@@ -780,7 +757,6 @@ def large_volume_orders(spark, sf_dir):
     GROUP BY 1, 2
     ORDER BY supplier_cnt DESC, p.p_brand, p.p_size
     """,
-    tags=("join", "anti-join", "Q16"),
 )
 def parts_supplier_counts(spark, sf_dir):
     """TPC-H Q16 shape: distinct-supplier counts per (brand, size) with a
@@ -817,7 +793,6 @@ def parts_supplier_counts(spark, sf_dir):
            CAST((CAST(CAST(SUM(CAST(FLOOR((o_totalprice) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0) AS DOUBLE) AS total
     FROM d GROUP BY decile ORDER BY decile
     """,
-    tags=("window", "ntile"),
 )
 def orders_price_deciles(spark, sf_dir):
     """Equal-population price deciles with per-bucket bounds and exact
@@ -870,7 +845,6 @@ def orders_price_deciles(spark, sf_dir):
            ) AS DOUBLE) / 7.0, 6) AS rolling_7d_avg
     FROM daily ORDER BY day
     """,
-    tags=("window", "range-frame", "rolling"),
 )
 def events_rolling_7day(spark, sf_dir):
     """Trailing 7-day event volume: a RANGE-frame window over calendar
@@ -921,7 +895,6 @@ def events_rolling_7day(spark, sf_dir):
     GROUP BY c.c_custkey, c.c_name, n.n_name
     ORDER BY revenue DESC, c.c_custkey LIMIT 20
     """,
-    tags=("join", "tpch", "q10"),
 )
 def q10_returned_revenue(spark, sf_dir):
     """TPC-H Q10 shape: customers ranked by revenue they returned.
@@ -965,7 +938,6 @@ def q10_returned_revenue(spark, sf_dir):
       AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY l.l_linestatus ORDER BY l.l_linestatus
     """,
-    tags=("join", "tpch", "q12"),
 )
 def lineitem_priority_by_status(spark, sf_dir):
     """TPC-H Q12 shape (shipmode -> linestatus against this schema): a
@@ -1016,7 +988,6 @@ def lineitem_priority_by_status(spark, sf_dir):
            ((tn + 50) // 100) / 100.0 AS total_revenue
     FROM a
     """,
-    tags=("join", "tpch", "q14"),
 )
 def q14_promo_revenue(spark, sf_dir):
     """TPC-H Q14: promotion revenue share for a ship window.  The date
@@ -1074,7 +1045,6 @@ def q14_promo_revenue(spark, sf_dir):
            ROUND(MIN(o_totalprice), 2) AS min_price
     FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
-    tags=("agg", "argmax"),
 )
 def orders_priority_extremes(spark, sf_dir):
     """Arg-max aggregates: the order ids carrying each priority class's
@@ -1108,7 +1078,6 @@ def orders_priority_extremes(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n_events
     FROM events GROUP BY 1 ORDER BY 1
     """,
-    tags=("agg", "distinct"),
 )
 def events_daily_distinct_users(spark, sf_dir):
     """Exact per-day distinct users alongside raw counts — the
@@ -1135,7 +1104,6 @@ def events_daily_distinct_users(spark, sf_dir):
            CAST((CAST(CAST(SUM(CAST(FLOOR((value) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100.0) AS DOUBLE) AS total_value
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    tags=("agg", "skew", "salting"),
 )
 def events_salted_type_counts(spark, sf_dir):
     """Skew-proof aggregation as a first-class query: event_type has ~5
@@ -1188,7 +1156,6 @@ def events_salted_type_counts(spark, sf_dir):
     SELECT user_id, streak_days, streak_start, streak_end
     FROM best ORDER BY streak_days DESC, user_id LIMIT 20
     """,
-    tags=("window", "gaps-islands"),
 )
 def user_activity_streaks(spark, sf_dir):
     """Gaps-and-islands: each user's longest run of consecutive active
@@ -1239,7 +1206,6 @@ def user_activity_streaks(spark, sf_dir):
                         AND l3.l_suppkey <> l1.l_suppkey)
     GROUP BY s.s_name ORDER BY numwait DESC, s.s_name LIMIT 20
     """,
-    tags=("correlated", "tpch", "q21"),
 )
 def q21_waiting_suppliers(spark, sf_dir):
     """TPC-H Q21 shape (receiptdate -> shipdate-vs-orderdate against this
@@ -1298,7 +1264,6 @@ def q21_waiting_suppliers(spark, sf_dir):
                         AND o.o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
     GROUP BY 1 ORDER BY 1
     """,
-    tags=("correlated", "tpch", "q22"),
 )
 def q22_idle_balances(spark, sf_dir):
     """TPC-H Q22 shape (phone country code -> nation key against this
@@ -1353,7 +1318,6 @@ def q22_idle_balances(spark, sf_dir):
     WHERE r.trn = (SELECT MAX(trn) FROM rev)
     ORDER BY s.s_suppkey
     """,
-    tags=("correlated", "tpch", "q15"),
 )
 def q15_top_supplier(spark, sf_dir):
     """TPC-H Q15: the supplier(s) hitting the window's MAX revenue — the
@@ -1386,46 +1350,8 @@ def q15_top_supplier(spark, sf_dir):
 
 @query(
     "docs_dup_pagerank",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS (
-      SELECT doc_id, sh,
-             list_aggregate(list_transform(sh, x -> md5('0:' || x)), 'min') AS mh_0,
-             list_aggregate(list_transform(sh, x -> md5('1:' || x)), 'min') AS mh_1,
-             list_aggregate(list_transform(sh, x -> md5('2:' || x)), 'min') AS mh_2,
-             list_aggregate(list_transform(sh, x -> md5('3:' || x)), 'min') AS mh_3,
-             list_aggregate(list_transform(sh, x -> md5('4:' || x)), 'min') AS mh_4,
-             list_aggregate(list_transform(sh, x -> md5('5:' || x)), 'min') AS mh_5,
-             list_aggregate(list_transform(sh, x -> md5('6:' || x)), 'min') AS mh_6,
-             list_aggregate(list_transform(sh, x -> md5('7:' || x)), 'min') AS mh_7
-      FROM s
-    ), bands AS (
-      SELECT doc_id, 0 AS band_id, mh_0 || '|' || mh_1 AS band_key FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 1 AS band_id, mh_2 || '|' || mh_3 AS band_key FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 2 AS band_id, mh_4 || '|' || mh_5 AS band_key FROM sig WHERE len(sh) > 0
-      UNION ALL
-      SELECT doc_id, 3 AS band_id, mh_6 || '|' || mh_7 AS band_key FROM sig WHERE len(sh) > 0
-    ), pairs AS (
-      SELECT c.id_a, c.id_b FROM (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
-    ), sym AS (
+    oracle=f"""
+    WITH {near_dup_pairs_sql(0.5)}, sym AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs
@@ -1494,7 +1420,6 @@ def q15_top_supplier(spark, sf_dir):
     FROM r6
     ORDER BY centrality DESC, doc_id LIMIT 50
     """,
-    tags=("graph", "iterative", "dedup"),
 )
 def docs_dup_pagerank(spark, sf_dir):
     """Iterative-algorithm surface, ORACLE-CHECKED: PageRank over the
@@ -1585,7 +1510,6 @@ def _pagerank_unroll_sql(n_iters: int = 6) -> str:
     FROM r6 r JOIN vocab v ON v.vid = r.node JOIN deg d ON d.src = r.node
     ORDER BY textrank DESC, word LIMIT 25
     """,
-    tags=("text", "graph", "iterative", "keywords"),
 )
 def docs_textrank_keywords(spark, sf_dir):
     """TextRank keyword extraction (Mihalcea & Tarau): PageRank over the
@@ -1682,7 +1606,6 @@ def docs_textrank_keywords(spark, sf_dir):
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("filter", "tpch", "q6"),
 )
 def q6_forecast_revenue(spark, sf_dir):
     """TPC-H Q6: pure scan + conjunctive filter + global agg.  Every
@@ -1717,7 +1640,6 @@ def q6_forecast_revenue(spark, sf_dir):
       )
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
-    tags=("semi-join", "tpch", "q4"),
 )
 def q4_late_order_priority(spark, sf_dir):
     """TPC-H Q4 shape: priority distribution of orders with at least one
@@ -1763,7 +1685,6 @@ def q4_late_order_priority(spark, sf_dir):
       AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
     """,
-    tags=("join", "tpch", "q7"),
 )
 def q7_volume_shipping(spark, sf_dir):
     """TPC-H Q7: bilateral trade volume between a nation pair by ship year.
@@ -1824,7 +1745,6 @@ def q7_volume_shipping(spark, sf_dir):
                  / CAST(CAST(SUM(vn) AS BIGINT) AS DOUBLE), 6) AS mkt_share
     FROM vol GROUP BY o_year ORDER BY o_year
     """,
-    tags=("join", "tpch", "q8"),
 )
 def q8_market_share(spark, sf_dir):
     """TPC-H Q8: one nation's share of ECONOMY-part revenue sold into one
@@ -1896,7 +1816,6 @@ def q8_market_share(spark, sf_dir):
     WHERE p.p_name LIKE '%red%'
     GROUP BY 1, 2 ORDER BY 1, 2 DESC
     """,
-    tags=("join", "tpch", "q9"),
 )
 def q9_product_profit(spark, sf_dir):
     """TPC-H Q9 shape: per-nation, per-year profit on parts matching a name
@@ -1952,7 +1871,6 @@ def q9_product_profit(spark, sf_dir):
            CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
     FROM assigned GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("sampling", "split", "pipeline"),
 )
 def docs_train_val_test_split(spark, sf_dir):
     """Deterministic train/val/test split (~80/10/10) by content-free key
@@ -2002,7 +1920,6 @@ def docs_train_val_test_split(spark, sf_dir):
            ROUND(CAST(SUM(oov) AS DOUBLE) / COUNT(*), 6) AS oov_rate
     FROM marked GROUP BY lang ORDER BY lang
     """,
-    tags=("text", "vocab", "pipeline"),
 )
 def docs_vocab_coverage(spark, sf_dir):
     """Vocabulary coverage audit: build the corpus vocabulary (tokens with
@@ -2064,7 +1981,6 @@ def docs_vocab_coverage(spark, sf_dir):
                AS avg_mse
     FROM q GROUP BY label ORDER BY label
     """,
-    tags=("similarity", "quantization", "pipeline"),
 )
 def emb_quantization_error(spark, sf_dir):
     """Embedding int8 quantization audit: per-vector min/max scalar
@@ -2139,7 +2055,6 @@ def emb_quantization_error(spark, sf_dir):
     FROM spine s LEFT JOIN daily d USING (day)
     ORDER BY s.day
     """,
-    tags=("calendar", "gap-fill"),
 )
 def events_per_day_dense(spark, sf_dir):
     """Calendar-spine gap fill: daily event counts with EVERY day between
@@ -2186,7 +2101,6 @@ def events_per_day_dense(spark, sf_dir):
                          THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 6) AS drop_rate
     FROM seq GROUP BY event_type ORDER BY event_type
     """,
-    tags=("dedup", "window", "debounce"),
 )
 def events_debounce_stats(spark, sf_dir):
     """Debounce deduplication audit: collapse rapid-fire repeats (same
@@ -2248,7 +2162,6 @@ def events_debounce_stats(spark, sf_dir):
            ROUND(MAX(ce), 6) AS max_ce
     FROM per_doc GROUP BY lang ORDER BY lang
     """,
-    tags=("text", "lm", "pipeline"),
 )
 def docs_unigram_logprob(spark, sf_dir):
     """Unigram language-model quality signal (the CCNet/KenLM-style
@@ -2305,38 +2218,8 @@ def docs_unigram_logprob(spark, sf_dir):
 @query(
     "docs_dup_triangles",
     oracle=f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS (
-      SELECT doc_id, sh,
-             {", ".join(
-                 f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-                 for j in range(8)
-             )}
-      FROM s
-    ), bands AS (
-      {" UNION ALL ".join(
-          f"SELECT doc_id, {b} AS band_id, mh_{2*b} || '|' || mh_{2*b+1} AS band_key "
-          "FROM sig WHERE len(sh) > 0"
-          for b in range(4)
-      )}
-    ), edges AS (
-      SELECT c.id_a, c.id_b FROM (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
+    WITH {near_dup_pairs_sql(0.5)}, edges AS (
+      SELECT id_a, id_b FROM pairs
     ), degs AS (
       SELECT v, COUNT(*) AS deg FROM (
         SELECT id_a AS v FROM edges UNION ALL SELECT id_b AS v FROM edges
@@ -2357,7 +2240,6 @@ def docs_unigram_logprob(spark, sf_dir):
                       THEN 3.0 * (SELECT t FROM tri) / (SELECT w FROM wedge)
                       ELSE 0.0 END, 6) AS global_clustering
     """,
-    tags=("graph", "dedup", "triangles"),
 )
 def docs_dup_triangles(spark, sf_dir):
     """Triangle census of the MinHash-LSH verified near-dup graph
@@ -2415,7 +2297,6 @@ def docs_dup_triangles(spark, sf_dir):
     FROM verified WHERE 100 * inter >= 92 * union_sz
     ORDER BY id_a, id_b
     """,
-    tags=("dedup", "similarity", "exact-join"),
 )
 def docs_jaccard_prefix_pairs(spark, sf_dir):
     """EXACT Jaccard>=0.92 token-set similarity join via prefix filtering
@@ -2469,7 +2350,6 @@ def docs_jaccard_prefix_pairs(spark, sf_dir):
            (SELECT ROUND(CAST((CAST(CAST(SUM(CAST(FLOOR((term) * 1000000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 1000000000.0) AS DOUBLE), 6)
             FROM hy_terms) AS h_bucket_nats
     """,
-    tags=("stats", "information", "profiling"),
 )
 def events_type_value_mi(spark, sf_dir):
     """Mutual information between event type and value bucket, plus both
@@ -2574,7 +2454,6 @@ def events_type_value_mi(spark, sf_dir):
     FROM spans sp JOIN t2 d USING (doc_id)
     GROUP BY sp.doc_id ORDER BY sp.doc_id
     """,
-    tags=("dedup", "substring", "llm-pipeline"),
 )
 def docs_substring_dup_spans(spark, sf_dir):
     """Span-level exact substring dedup audit (ExactSubstr family): per
@@ -2634,7 +2513,6 @@ def docs_substring_dup_spans(spark, sf_dir):
     FROM pairs GROUP BY pair
     ORDER BY pair_count DESC, pair ASC LIMIT 20
     """,
-    tags=("text", "tokenizer", "llm-pipeline"),
 )
 def docs_bpe_merge_candidates(spark, sf_dir):
     """BPE tokenizer-training first step: corpus-weighted adjacent
@@ -2696,7 +2574,6 @@ def docs_bpe_merge_candidates(spark, sf_dir):
     FROM p2 GROUP BY pair
     ORDER BY pair_count DESC, pair ASC LIMIT 10
     """,
-    tags=("text", "tokenizer", "llm-pipeline", "iterative"),
 )
 def docs_bpe_second_merge(spark, sf_dir):
     """BPE training iteration TWO: take the argmax pair of iteration one
@@ -2797,7 +2674,6 @@ def _bpe_train_oracle(n_merges: int) -> str:
 @query(
     "docs_bpe_train_16",
     oracle=_bpe_train_oracle(16),
-    tags=("text", "tokenizer", "llm-pipeline", "iterative"),
 )
 def docs_bpe_train_16(spark, sf_dir, n_merges: int = 16):
     """Generalized BPE TRAINER: the full Sennrich et al. loop for 16
@@ -2903,7 +2779,6 @@ def docs_bpe_train_16(spark, sf_dir, n_merges: int = 16):
            ROUND(MAX(ce), 6) AS max_ce
     FROM per_doc GROUP BY lang ORDER BY lang
     """,
-    tags=("text", "lm", "pipeline"),
 )
 def docs_bigram_logprob(spark, sf_dir):
     """Order-2 language-model quality signal: Jelinek-Mercer interpolated
@@ -2992,61 +2867,18 @@ def docs_bigram_logprob(spark, sf_dir):
 @query(
     "docs_lsh_recall_vs_exact",
     oracle=f"""
-    WITH t0 AS (
-      SELECT doc_id, {_TOKS_SQL} AS tk FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 3
-                  THEN list_distinct(list_transform(range(1, len(tk)-1),
-                         i -> array_to_string(tk[i:i+2], ' ')))
-                  ELSE [] END AS toks
-      FROM t0
-    ), t2 AS (
-      SELECT doc_id, toks FROM sh WHERE len(toks) > 0
-    ), tok AS (
-      SELECT doc_id, unnest(toks) AS token, len(toks) AS sz FROM t2
-    ), dfreq AS (
-      SELECT token, COUNT(*) AS df FROM tok GROUP BY token
-    ), ranked AS (
-      SELECT doc_id, token, sz,
-             row_number() OVER (PARTITION BY doc_id ORDER BY df, token) AS rn
-      FROM tok JOIN dfreq USING (token)
-    ), prefix AS (
-      SELECT doc_id, token, sz FROM ranked
-      WHERE rn <= sz - ((50 * sz + 99) // 100) + 1
-    ), pcand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM prefix a JOIN prefix b
-        ON a.token = b.token AND a.doc_id < b.doc_id
-      WHERE 50 * greatest(a.sz, b.sz) <= 100 * least(a.sz, b.sz)
-    ), exact AS (
-      SELECT c.id_a, c.id_b FROM pcand c
-      JOIN t2 ta ON ta.doc_id = c.id_a
-      JOIN t2 tb ON tb.doc_id = c.id_b
-      WHERE 100 * len(list_intersect(ta.toks, tb.toks))
-            >= 50 * (len(ta.toks) + len(tb.toks) - len(list_intersect(ta.toks, tb.toks)))
-    ), sig AS (
-      SELECT doc_id, toks,
-             {", ".join(
-                 f"list_aggregate(list_transform(toks, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-                 for j in range(8)
-             )}
-      FROM t2
+    WITH {jaccard_prefix_sql()}, sig AS (
+      SELECT doc_id, sh, {minhash_sql()} FROM t2
     ), bands AS (
-      {" UNION ALL ".join(
-          f"SELECT doc_id, {b} AS band_id, mh_{2*b} || '|' || mh_{2*b+1} AS band_key FROM sig"
-          for b in range(4)
-      )}
+      {lsh_bands_sql()}
     ), lcand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+      {lsh_candidates_sql()}
     ), lsh AS (
       SELECT c.id_a, c.id_b FROM lcand c
       JOIN t2 ta ON ta.doc_id = c.id_a
       JOIN t2 tb ON tb.doc_id = c.id_b
-      WHERE 100 * len(list_intersect(ta.toks, tb.toks))
-            >= 50 * (len(ta.toks) + len(tb.toks) - len(list_intersect(ta.toks, tb.toks)))
+      WHERE 100 * len(list_intersect(ta.sh, tb.sh))
+            >= 50 * (len(ta.sh) + len(tb.sh) - len(list_intersect(ta.sh, tb.sh)))
     )
     SELECT CAST((SELECT COUNT(*) FROM exact) AS BIGINT) AS n_exact,
            CAST((SELECT COUNT(*) FROM lsh) AS BIGINT) AS n_lsh,
@@ -3055,7 +2887,6 @@ def docs_bigram_logprob(spark, sf_dir):
            ROUND(CAST((SELECT COUNT(*) FROM lsh) AS DOUBLE)
                  / greatest((SELECT COUNT(*) FROM exact), 1), 4) AS recall
     """,
-    tags=("dedup", "similarity", "recall", "instrumentation"),
 )
 def docs_lsh_recall_vs_exact(spark, sf_dir, sample_pct: int = 100):
     """LSH recall audit against EXACT ground truth, both sides
@@ -3173,7 +3004,6 @@ def docs_lsh_recall_vs_exact(spark, sf_dir, sample_pct: int = 100):
            CAST(COUNT(*) AS BIGINT) AS n_dup_pairs
     FROM pairs GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    tags=("dedup", "curation", "diagnostics"),
 )
 def docs_cross_source_dup_matrix(spark, sf_dir):
     """Cross-source duplication matrix: exact Jaccard>=0.92 near-dup pair
@@ -3232,7 +3062,6 @@ def docs_cross_source_dup_matrix(spark, sf_dir):
                AS intercept
     FROM s
     """,
-    tags=("text", "diagnostics", "corpus-health"),
 )
 def docs_zipf_fit(spark, sf_dir):
     """Zipf's-law fit over the corpus frequency table: least-squares slope
@@ -3307,7 +3136,6 @@ def docs_zipf_fit(spark, sf_dir):
            CAST(MAX(doc_id) AS BIGINT) AS max_doc_id
     FROM assigned GROUP BY shard ORDER BY shard
     """,
-    tags=("sampling", "shard", "llm-pipeline"),
 )
 def docs_shard_assignment(spark, sf_dir):
     """Training-shard assignment audit: every document routes to one of 8
@@ -3376,7 +3204,6 @@ def docs_shard_assignment(spark, sf_dir):
                  / (10000 * greatest(SUM(kept), 1)), 6) AS avg_quality_kept
     FROM marked GROUP BY source ORDER BY source
     """,
-    tags=("sampling", "quality", "llm-pipeline"),
 )
 def docs_quality_weighted_sample(spark, sf_dir):
     """Quality-weighted deterministic sampling (importance-resampling

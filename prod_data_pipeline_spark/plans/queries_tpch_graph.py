@@ -5,40 +5,27 @@ plans/queries.py imports the chunks in original file order).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from prod_data_pipeline_spark.schemas import TESTDATA_EVENT_TYPES
-from prod_data_pipeline_spark.session import truncate_lineage, tune
-from prod_data_pipeline_spark.sources.readers import load_table
+from prod_data_pipeline_spark.operators.sketches import CMS_DEPTH, CMS_WIDTH
+from prod_data_pipeline_spark.session import truncate_lineage
 
-from prod_data_pipeline_spark.plans.query_registry import (  # noqa: F401
-    _t,
-    dnum,
-    dsum,
-    num_to_double,
-    query,
-)
-from prod_data_pipeline_spark.plans.queries_events_star import (  # noqa: F401
+from prod_data_pipeline_spark.plans.query_registry import (
     _COS_SQL,
     _TOKS_SQL,
-    corpus_dup_clusters,
-    emb_ivf_recall,
-    events_dq_profile,
-    user_sessions,
-)
-from prod_data_pipeline_spark.plans.queries_text_dedup import (  # noqa: F401
-    docs_bpe_merge_candidates,
-    docs_bpe_second_merge,
-    docs_dup_triangles,
-    docs_lsh_recall_vs_exact,
-    docs_substring_dup_spans,
-    emb_label_centroids,
-    emb_quantization_error,
+    _t,
+    cms_bucket_sql,
+    cms_cells_sql,
+    dnum,
+    dsum,
+    int40_cov_sql,
+    near_dup_pairs_sql,
+    num_to_double,
+    query,
+    shingles_sql,
 )
 
 # ---------------------------------------------------------------------------
@@ -76,7 +63,6 @@ from prod_data_pipeline_spark.plans.queries_text_dedup import (  # noqa: F401
     WHERE p.p_size = 15 AND p.p_type = 'STANDARD'
     ORDER BY s_acctbal DESC, nation, s_name, p_partkey LIMIT 100
     """,
-    tags=("join", "tpch", "q2", "correlated-subquery"),
 )
 def q2_min_cost_supplier(spark, sf_dir):
     """TPC-H Q2 shape: for every size-15 STANDARD part, the EUROPE supplier
@@ -145,7 +131,6 @@ def q2_min_cost_supplier(spark, sf_dir):
       AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
     GROUP BY 1 ORDER BY revenue DESC, nation
     """,
-    tags=("join", "tpch", "q5"),
 )
 def q5_local_supplier_volume(spark, sf_dir):
     """TPC-H Q5 (full fidelity — every column exists): revenue by nation
@@ -196,7 +181,6 @@ def q5_local_supplier_volume(spark, sf_dir):
     WHERE vn * 500 > (SELECT SUM(vn) FROM val)
     ORDER BY part_value DESC, p_partkey
     """,
-    tags=("join", "tpch", "q11", "scalar-subquery"),
 )
 def q11_important_part_value(spark, sf_dir):
     """TPC-H Q11 shape: parts whose traded value through NATION_3
@@ -258,7 +242,6 @@ def q11_important_part_value(spark, sf_dir):
       AND s.s_suppkey IN (SELECT l_suppkey FROM shipped WHERE qty > 40)
     ORDER BY s_name
     """,
-    tags=("semi-join", "tpch", "q20"),
 )
 def q20_promotable_suppliers(spark, sf_dir):
     """TPC-H Q20 shape: EUROPE suppliers who shipped more than 40 units
@@ -309,7 +292,7 @@ def q20_promotable_suppliers(spark, sf_dir):
     ), pruned AS (
       SELECT DISTINCT b.vec_id
       FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-      WHERE ROUND({_COS_SQL}, 4) >= 0.3
+      WHERE ROUND({_COS_SQL.format(a="a.e", b="b.e")}, 4) >= 0.3
     )
     SELECT v.label,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
@@ -322,7 +305,6 @@ def q20_promotable_suppliers(spark, sf_dir):
     FROM v LEFT JOIN pruned p ON p.vec_id = v.vec_id
     GROUP BY v.label ORDER BY v.label
     """,
-    tags=("dedup", "similarity", "semdedup", "llm-pipeline"),
 )
 def emb_semdedup_stats(spark, sf_dir):
     """SemDeDup audit (operators.similarity.semdedup): per semantic
@@ -385,7 +367,6 @@ def emb_semdedup_stats(spark, sf_dir):
                 AS BIGINT) AS n_ingested
     FROM flagged GROUP BY source ORDER BY source
     """,
-    tags=("dedup", "incremental", "llm-pipeline"),
 )
 def docs_incremental_dedup(spark, sf_dir):
     """Incremental ingestion dedup (operators.dedup.incremental_dedup):
@@ -446,7 +427,6 @@ def docs_incremental_dedup(spark, sf_dir):
     FROM dev d JOIN mad a USING (event_type)
     GROUP BY d.event_type ORDER BY d.event_type
     """,
-    tags=("robust-stats", "quantile", "outliers"),
 )
 def events_value_mad_outliers(spark, sf_dir):
     """Robust outlier detection per event type: median/MAD z-score (the
@@ -526,7 +506,6 @@ def events_value_mad_outliers(spark, sf_dir):
            MIN(energy) AS min_energy
     FROM r GROUP BY k ORDER BY k
     """,
-    tags=("embeddings", "matryoshka", "audit"),
 )
 def emb_matryoshka_energy(spark, sf_dir):
     """Matryoshka-truncation audit (Kusupati et al. 2022, MRL): how much
@@ -601,7 +580,6 @@ def emb_matryoshka_energy(spark, sf_dir):
     WHERE levenshtein(a.p_name, b.p_name) <= 3
     ORDER BY name_a, name_b
     """,
-    tags=("fuzzy-join", "record-linkage", "dedup"),
 )
 def parts_fuzzy_name_matches(spark, sf_dir):
     """Fuzzy entity resolution over the part-name catalog
@@ -683,7 +661,6 @@ def parts_fuzzy_name_matches(spark, sf_dir):
                                WHEN 3 THEN s3 ELSE s4 END AS n_out) v
     ORDER BY stage
     """,
-    tags=("quality", "curation", "funnel", "llm-pipeline"),
 )
 def docs_filter_funnel(spark, sf_dir):
     """Curation attrition funnel: how many documents each quality gate
@@ -806,10 +783,7 @@ def docs_filter_funnel(spark, sf_dir):
       FROM documents
     ), g AS (
       SELECT source, sn,
-             unnest(CASE WHEN len(toks) >= 3
-                         THEN list_transform(range(1, len(toks) - 1),
-                                i -> array_to_string(toks[i:i+2], ' '))
-                         ELSE [] END) AS gram
+             unnest({shingles_sql(distinct=False)}) AS gram
       FROM t
     ), snap_vocab AS (
       SELECT DISTINCT gram FROM g WHERE sn < 10
@@ -828,7 +802,6 @@ def docs_filter_funnel(spark, sf_dir):
            ROUND(CAST(SUM(novel) AS DOUBLE) / COUNT(*), 6) AS novelty_rate
     FROM batch GROUP BY source ORDER BY source
     """,
-    tags=("text", "drift", "oov", "llm-pipeline"),
 )
 def docs_distribution_shift(spark, sf_dir):
     """Cross-corpus distribution-shift audit: what fraction of the new
@@ -912,7 +885,6 @@ def docs_distribution_shift(spark, sf_dir):
                AS expansion_ratio
     FROM per GROUP BY source ORDER BY source
     """,
-    tags=("chunking", "rag", "llm-pipeline"),
 )
 def docs_rag_chunk_stats(spark, sf_dir):
     """Sliding-window RAG chunking audit (operators.packing.rag_chunks):
@@ -977,7 +949,6 @@ def docs_rag_chunk_stats(spark, sf_dir):
                  / 1200, 6) AS cap_utilization
     FROM marked GROUP BY source ORDER BY source
     """,
-    tags=("sampling", "budget", "llm-pipeline"),
 )
 def docs_source_token_cap(spark, sf_dir):
     """Per-source token-budget cap enforcement (the per-domain
@@ -1038,29 +1009,7 @@ def _pca_oracle_sql(n_iters: int = 16, dim: int = 64) -> str:
     v0 = f"1.0 / sqrt({dim}.0)"
     parts = [
         f"""
-    WITH x AS MATERIALIZED (
-      SELECT vec_id AS rid, i - 1 AS i, CAST(embedding[i] AS DOUBLE) AS xi
-      FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
-    ), nn AS MATERIALIZED (
-      SELECT COUNT(*) AS n FROM embeddings
-    ), mu AS MATERIALIZED (
-      SELECT i, CAST(SUM(CAST(xi AS DECIMAL(38,12))) AS DOUBLE)
-                / (SELECT n FROM nn) AS mu
-      FROM x GROUP BY i
-    ), cx AS MATERIALIZED (
-      SELECT rid, x.i, xi - mu AS ci FROM x JOIN mu USING (i)
-    ), qt AS MATERIALIZED (
-      SELECT a.i, b.i AS j,
-             CAST(floor(a.ci * b.ci * 1099511627776.0) AS BIGINT) AS q
-      FROM cx a JOIN cx b USING (rid)
-    ), cov AS MATERIALIZED (
-      SELECT i, j,
-             (CAST(SUM((q - ((q % 1048576 + 1048576) % 1048576)) // 1048576)
-                   AS DOUBLE) * 1048576.0
-              + CAST(SUM((q % 1048576 + 1048576) % 1048576) AS DOUBLE))
-             / 1099511627776.0 / ((SELECT n FROM nn) - 1) AS c
-      FROM qt GROUP BY 1, 2
-    ), v0 AS (
+    WITH {int40_cov_sql()}, v0 AS (
       SELECT CAST(i AS INT) AS j, {v0} AS v FROM range(0, {dim}) t(i)
     )"""
     ]
@@ -1092,7 +1041,6 @@ def _pca_oracle_sql(n_iters: int = 16, dim: int = 64) -> str:
 @query(
     "emb_top_principal_component",
     oracle=_pca_oracle_sql(16, 64),
-    tags=("linalg", "pca", "embeddings", "iterative"),
 )
 def emb_top_principal_component(spark, sf_dir):
     """Top principal component of the embedding corpus by DISTRIBUTED
@@ -1122,42 +1070,11 @@ def emb_top_principal_component(spark, sf_dir):
 def _taint_oracle_sql(max_hops: int = 4) -> str:
     """Near-dup edges (same minhash-LSH pipeline as the PageRank/triangle
     oracles) + unrolled integer-MIN BFS rounds from the seed set."""
-    mh = ",\n             ".join(
-        f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-        for j in range(8)
-    )
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, mh_{2*b} || '|' || mh_{2*b+1} AS band_key "
-        "FROM sig WHERE len(sh) > 0"
-        for b in range(4)
-    )
     parts = [
         f"""
-    WITH t AS MATERIALIZED (
-      SELECT doc_id, {{_TOKS_SQL}} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS MATERIALIZED (
-      SELECT doc_id, sh, {mh} FROM s
-    ), bands AS ({bands}
-    ), edges AS MATERIALIZED (
-      SELECT c.id_a, c.id_b FROM (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
-    ), sym AS MATERIALIZED (
-      SELECT id_a AS src, id_b AS dst FROM edges
-      UNION SELECT id_b AS src, id_a AS dst FROM edges
+    WITH {near_dup_pairs_sql(0.5, materialize=True)}, sym AS MATERIALIZED (
+      SELECT id_a AS src, id_b AS dst FROM pairs
+      UNION SELECT id_b AS src, id_a AS dst FROM pairs
     ), d0 AS MATERIALIZED (
       SELECT doc_id AS node, 0 AS hop FROM documents WHERE doc_id % 97 = 0
     )"""
@@ -1184,13 +1101,12 @@ def _taint_oracle_sql(max_hops: int = 4) -> str:
     FROM {prev} GROUP BY hop ORDER BY hop
     """
     )
-    return "".join(parts).replace("{_TOKS_SQL}", _TOKS_SQL)
+    return "".join(parts)
 
 
 @query(
     "docs_taint_blast_radius",
     oracle=_taint_oracle_sql(4),
-    tags=("graph", "dedup", "taint", "llm-pipeline"),
 )
 def docs_taint_blast_radius(spark, sf_dir):
     """Taint propagation over the near-dup graph
@@ -1244,7 +1160,6 @@ def docs_taint_blast_radius(spark, sf_dir):
            CAST(list_max(list_transform(pcm, x -> abs(x))) AS BIGINT) AS peak_amp
     FROM f ORDER BY asset_id
     """,
-    tags=("multimodal", "audio", "waveform"),
 )
 def media_audio_waveform_stats(spark, sf_dir):
     """Waveform-level audio verification: synthetic_media_assets builds
@@ -1295,7 +1210,6 @@ def media_audio_waveform_stats(spark, sf_dir):
            CAST(list_max(y) AS INT) AS y_peak
     FROM fy ORDER BY asset_id, frame_idx
     """,
-    tags=("multimodal", "video", "frames"),
 )
 def media_video_frame_stats(spark, sf_dir):
     """Frame-level video verification: synthetic_media_assets builds REAL
@@ -1341,7 +1255,6 @@ def media_video_frame_stats(spark, sf_dir):
     FROM dev d JOIN mad a USING (dow)
     ORDER BY d.day
     """,
-    tags=("anomaly", "time-series", "robust-stats"),
 )
 def events_daily_anomalies(spark, sf_dir):
     """Day-level traffic anomaly detection against a day-of-week seasonal
@@ -1426,29 +1339,7 @@ def _pca2_oracle_sql(n_iters: int = 8, dim: int = 64) -> str:
     """Two-component replay: chain 1 on cov, quantized Hotelling deflation,
     chain 2 on the deflated matrix — mirrors operators.linalg exactly."""
     cov_part = f"""
-    WITH x AS MATERIALIZED (
-      SELECT vec_id AS rid, i - 1 AS i, CAST(embedding[i] AS DOUBLE) AS xi
-      FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
-    ), nn AS MATERIALIZED (
-      SELECT COUNT(*) AS n FROM embeddings
-    ), mu AS MATERIALIZED (
-      SELECT i, CAST(SUM(CAST(xi AS DECIMAL(38,12))) AS DOUBLE)
-                / (SELECT n FROM nn) AS mu
-      FROM x GROUP BY i
-    ), cx AS MATERIALIZED (
-      SELECT rid, x.i, xi - mu AS ci FROM x JOIN mu USING (i)
-    ), qt AS MATERIALIZED (
-      SELECT a.i, b.i AS j,
-             CAST(floor(a.ci * b.ci * 1099511627776.0) AS BIGINT) AS q
-      FROM cx a JOIN cx b USING (rid)
-    ), cov AS MATERIALIZED (
-      SELECT i, j,
-             (CAST(SUM((q - ((q % 1048576 + 1048576) % 1048576)) // 1048576)
-                   AS DOUBLE) * 1048576.0
-              + CAST(SUM((q % 1048576 + 1048576) % 1048576) AS DOUBLE))
-             / 1099511627776.0 / ((SELECT n FROM nn) - 1) AS c
-      FROM qt GROUP BY 1, 2
-    )"""
+    WITH {int40_cov_sql()}"""
     c1 = _pca_chain_sql("a_", "cov", n_iters, dim)
     defl = f""", defl AS MATERIALIZED (
       SELECT cov.i, cov.j,
@@ -1475,7 +1366,6 @@ def _pca2_oracle_sql(n_iters: int = 8, dim: int = 64) -> str:
 @query(
     "emb_top2_principal_components",
     oracle=_pca2_oracle_sql(8, 64),
-    tags=("linalg", "pca", "embeddings", "iterative", "deflation"),
 )
 def emb_top2_principal_components(spark, sf_dir):
     """Top-2 principal components via power iteration + quantized
@@ -1526,7 +1416,6 @@ def emb_top2_principal_components(spark, sf_dir):
            CAST(CAST(SUM(mn) AS BIGINT) AS DOUBLE) / 100.0 AS total_monetary
     FROM q GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
     """,
-    tags=("rfm", "segmentation", "ntile", "analytics"),
 )
 def customer_rfm_segments(spark, sf_dir):
     """RFM customer segmentation (recency / frequency / monetary
@@ -1601,7 +1490,6 @@ def customer_rfm_segments(spark, sf_dir):
            CAST((CAST(CAST(SUM(CAST(FLOOR((ROUND(10000 * s * s, 6)) * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 1000000.0) AS DOUBLE) AS hhi
     FROM shares GROUP BY p_type ORDER BY p_type
     """,
-    tags=("analytics", "concentration", "hhi"),
 )
 def supplier_concentration_hhi(spark, sf_dir):
     """Supplier-concentration Herfindahl–Hirschman index per part type:
@@ -1659,7 +1547,6 @@ def supplier_concentration_hhi(spark, sf_dir):
                AS abs_deviation
     FROM c, t ORDER BY c.digit
     """,
-    tags=("analytics", "audit", "benford"),
 )
 def orders_benford_audit(spark, sf_dir):
     """Benford's-law first-digit audit on order totals — the classic
@@ -1732,7 +1619,6 @@ def orders_benford_audit(spark, sf_dir):
     FROM scored
     ORDER BY pair_n DESC, part_a, part_b LIMIT 50
     """,
-    tags=("analytics", "market-basket", "association"),
 )
 def basket_part_pair_lift(spark, sf_dir):
     """Market-basket association mining: the top co-purchased part pairs
@@ -1849,7 +1735,6 @@ def basket_part_pair_lift(spark, sf_dir):
            (SELECT CAST(n AS BIGINT) FROM pts WHERE k = 10) AS grams_final
     FROM s
     """,
-    tags=("text", "diagnostics", "corpus-health", "heaps"),
 )
 def docs_heaps_law_fit(spark, sf_dir):
     """Heaps'-law fit — the companion corpus-health number to the Zipf
@@ -1948,38 +1833,9 @@ def docs_heaps_law_fit(spark, sf_dir):
 def _local_cc_oracle_sql() -> str:
     """Near-dup edges (same LSH pipeline as the triangle/taint oracles) +
     per-node triangle credit and local clustering coefficient."""
-    mh = ",\n             ".join(
-        f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-        for j in range(8)
-    )
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, mh_{2*b} || '|' || mh_{2*b+1} AS band_key "
-        "FROM sig WHERE len(sh) > 0"
-        for b in range(4)
-    )
     return f"""
-    WITH t AS MATERIALIZED (
-      SELECT doc_id, {{_TOKS_SQL}} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS MATERIALIZED (
-      SELECT doc_id, sh, {mh} FROM s
-    ), bands AS ({bands}
-    ), edges AS MATERIALIZED (
-      SELECT c.id_a AS a, c.id_b AS b FROM (
-        SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-        FROM bands x JOIN bands y
-          ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
+    WITH {near_dup_pairs_sql(0.5, materialize=True)}, edges AS (
+      SELECT id_a AS a, id_b AS b FROM pairs
     ), deg AS MATERIALIZED (
       SELECT v, COUNT(*) AS deg FROM (
         SELECT a AS v FROM edges UNION ALL SELECT b AS v FROM edges
@@ -2004,13 +1860,12 @@ def _local_cc_oracle_sql() -> str:
                 ELSE 0.0 END AS local_cc
     FROM deg LEFT JOIN credit ON credit.v = deg.v
     ORDER BY deg.v
-    """.replace("{{_TOKS_SQL}}", "{_TOKS_SQL}").format(_TOKS_SQL=_TOKS_SQL)
+    """
 
 
 @query(
     "docs_local_clustering",
     oracle=_local_cc_oracle_sql(),
-    tags=("graph", "dedup", "clustering-coefficient"),
 )
 def docs_local_clustering(spark, sf_dir):
     """Per-node local clustering coefficients over the near-dup graph
@@ -2038,28 +1893,21 @@ def docs_local_clustering(spark, sf_dir):
 
 @query(
     "events_cms_heavy_hitters",
-    oracle="""
+    oracle=f"""
     WITH counts AS (
       SELECT user_id, COUNT(*) AS true_count
       FROM events WHERE user_id IS NOT NULL GROUP BY 1
     ), cells AS (
-      SELECT j,
-             CAST(('0x' || substr(md5('cms' || j || ':' || user_id), 1, 12))::BIGINT
-                  % 512 AS INT) AS bucket,
-             SUM(true_count) AS cnt
-      FROM counts CROSS JOIN (SELECT unnest(range(4)) AS j)
-      GROUP BY 1, 2
+      {cms_cells_sql("counts", "user_id", "true_count")}
     ), top AS (
       SELECT user_id, true_count FROM counts
       ORDER BY true_count DESC, user_id LIMIT 20
     ), est AS (
       SELECT t.user_id, MIN(COALESCE(c.cnt, 0)) AS cms_count
       FROM top t
-      CROSS JOIN (SELECT unnest(range(4)) AS j) r
+      CROSS JOIN (SELECT unnest(range({CMS_DEPTH})) AS j) r
       LEFT JOIN cells c
-        ON c.j = r.j
-       AND c.bucket = CAST(('0x' || substr(md5('cms' || r.j || ':' || t.user_id), 1, 12))::BIGINT
-                           % 512 AS INT)
+        ON c.j = r.j AND c.bucket = {cms_bucket_sql("r.j", "t.user_id")}
       GROUP BY 1
     )
     SELECT t.user_id,
@@ -2069,7 +1917,6 @@ def docs_local_clustering(spark, sf_dir):
     FROM top t JOIN est e USING (user_id)
     ORDER BY true_count DESC, user_id
     """,
-    tags=("sketch", "cms", "heavy-hitters"),
 )
 def events_cms_heavy_hitters(spark, sf_dir):
     """Heavy-hitter frequency estimation via MERGEABLE count-min sketches
@@ -2096,14 +1943,12 @@ def events_cms_heavy_hitters(spark, sf_dir):
     daily = cms_build(
         ev.select(F.to_date("ts").alias("day"), "user_id"),
         "user_id",
-        depth=4,
-        width=512,
         group_cols=("day",),
     )
     merged = cms_merge(daily)
     counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("true_count"))
     top = counts.orderBy(F.desc("true_count"), "user_id").limit(20)
-    est = cms_estimate(merged, top.select("user_id"), "user_id", depth=4, width=512)
+    est = cms_estimate(merged, top.select("user_id"), "user_id")
     return (
         top.join(est, "user_id")
         .select(
@@ -2116,28 +1961,14 @@ def events_cms_heavy_hitters(spark, sf_dir):
     )
 
 
-# md5 CMS bucket, DuckDB side — identical derivation to sketches._bucket
-# (and to the events_cms_heavy_hitters oracle): first 12 hex chars of
-# md5('cms<row>:<key>') as int64, mod width.  Values are <= 2^48 so the
-# C-signed % matches Spark's pmod.
-_CMS_CELLS_SQL = """
-      SELECT j,
-             CAST(('0x' || substr(md5('cms' || j || ':' || k), 1, 12))::BIGINT
-                  % 512 AS INT) AS bucket,
-             CAST(SUM(c) AS BIGINT) AS cnt
-      FROM {src} CROSS JOIN (SELECT unnest(range(4)) AS j)
-      GROUP BY 1, 2"""
-
-
 @query(
     "events_selfjoin_size_cms",
-    oracle="""
+    oracle=f"""
     WITH counts AS (
       SELECT user_id AS k, CAST(COUNT(*) AS BIGINT) AS c
       FROM events WHERE user_id IS NOT NULL GROUP BY 1
-    ), cells AS ("""
-    + _CMS_CELLS_SQL.format(src="counts")
-    + """
+    ), cells AS (
+      {cms_cells_sql("counts", "k", "c")}
     ), dots AS (
       SELECT j, CAST(SUM(cnt * cnt) AS BIGINT) AS dot FROM cells GROUP BY j
     ), agg AS (
@@ -2149,11 +1980,10 @@ _CMS_CELLS_SQL = """
     SELECT n_rows, n_keys, exact_size, cms_est,
            CAST(cms_est - exact_size AS BIGINT) AS overcount,
            cms_est >= exact_size AS est_ge_exact,
-           (cms_est - exact_size) * 512 <= 3 * n_rows * n_rows
+           (cms_est - exact_size) * {CMS_WIDTH} <= 3 * n_rows * n_rows
                AS within_weak_bound
     FROM agg
     """,
-    tags=("sketch", "cms", "join-size", "planner"),
 )
 def events_selfjoin_size_cms(spark, sf_dir):
     """Self-join size (second frequency moment F2 = sum f(u)^2) of events
@@ -2178,7 +2008,7 @@ def events_selfjoin_size_cms(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    sketch = cms_build(ev, "user_id", depth=4, width=512)
+    sketch = cms_build(ev, "user_id")
     est = cms_inner_product(sketch, sketch).agg(
         F.coalesce(F.min("dot"), F.lit(0)).cast("long").alias("cms_est")
     )
@@ -2204,19 +2034,17 @@ def events_selfjoin_size_cms(spark, sf_dir):
 
 @query(
     "lineitem_orders_join_size_cms",
-    oracle="""
+    oracle=f"""
     WITH la AS (
       SELECT l_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS c
       FROM lineitem GROUP BY 1
     ), ob AS (
       SELECT o_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS c
       FROM orders WHERE o_orderpriority = '1-URGENT' GROUP BY 1
-    ), ca AS ("""
-    + _CMS_CELLS_SQL.format(src="la")
-    + """
-    ), cb AS ("""
-    + _CMS_CELLS_SQL.format(src="ob")
-    + """
+    ), ca AS (
+      {cms_cells_sql("la", "k", "c")}
+    ), cb AS (
+      {cms_cells_sql("ob", "k", "c")}
     ), dots AS (
       SELECT ca.j, CAST(SUM(ca.cnt * cb.cnt) AS BIGINT) AS dot
       FROM ca JOIN cb ON ca.j = cb.j AND ca.bucket = cb.bucket
@@ -2231,11 +2059,10 @@ def events_selfjoin_size_cms(spark, sf_dir):
     SELECT n_fact_rows, n_dim_rows, exact_join_size, cms_est,
            CAST(cms_est - exact_join_size AS BIGINT) AS overcount,
            cms_est >= exact_join_size AS est_ge_exact,
-           (cms_est - exact_join_size) * 512 <= 3 * n_fact_rows * n_dim_rows
+           (cms_est - exact_join_size) * {CMS_WIDTH} <= 3 * n_fact_rows * n_dim_rows
                AS within_weak_bound
     FROM agg
     """,
-    tags=("sketch", "cms", "join-size", "planner"),
 )
 def lineitem_orders_join_size_cms(spark, sf_dir):
     """Cross-relation join-size estimation: |lineitem JOIN urgent orders
@@ -2262,8 +2089,8 @@ def lineitem_orders_join_size_cms(spark, sf_dir):
     od = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    sa = cms_build(li, "l_orderkey", depth=4, width=512)
-    sb = cms_build(od, "o_orderkey", depth=4, width=512)
+    sa = cms_build(li, "l_orderkey")
+    sb = cms_build(od, "o_orderkey")
     est = cms_inner_product(sa, sb).agg(
         F.coalesce(F.min("dot"), F.lit(0)).cast("long").alias("cms_est")
     )
@@ -2301,40 +2128,9 @@ def _kcore_oracle_sql(k: int = 2, rounds: int = 6) -> str:
     fixed unroll equals the Spark side's early-exited fixpoint whenever
     the graph converges within the bound (and equals its partial state
     otherwise — the two engines replay the identical recurrence)."""
-    mh = ",\n             ".join(
-        f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-        for j in range(8)
-    )
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, mh_{2*b} || '|' || mh_{2*b+1} AS band_key "
-        "FROM sig WHERE len(sh) > 0"
-        for b in range(4)
-    )
     parts = [
         f"""
-    WITH t AS MATERIALIZED (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS MATERIALIZED (
-      SELECT doc_id, sh, {mh} FROM s
-    ), bands AS ({bands}
-    ), pairs AS MATERIALIZED (
-      SELECT c.id_a, c.id_b FROM (
-        SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-        FROM bands x JOIN bands y
-          ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
-    ), e0 AS MATERIALIZED (
+    WITH {near_dup_pairs_sql(0.5, materialize=True)}, e0 AS MATERIALIZED (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs
@@ -2364,7 +2160,6 @@ def _kcore_oracle_sql(k: int = 2, rounds: int = 6) -> str:
 @query(
     "docs_kcore_summary",
     oracle=_kcore_oracle_sql(k=2, rounds=6),
-    tags=("graph", "dedup", "kcore"),
 )
 def docs_kcore_summary(spark, sf_dir):
     """2-core of the near-dup graph (operators.graph.kcore): the maximal
@@ -2419,7 +2214,6 @@ _EWMA_DENOM = (1 << _EWMA_LAGS) - 1  # 16383 = sum of the weights
     FROM wnd WHERE rn > {_EWMA_LAGS}
     ORDER BY event_type, day
     """,
-    tags=("timeseries", "anomaly", "ewma"),
 )
 def events_ewma_anomalies(spark, sf_dir):
     """EWMA daily-volume baseline with EXACT RATIONAL arithmetic: the
@@ -2516,7 +2310,6 @@ def _fk_oracle_sql() -> str:
 @query(
     "fk_integrity_audit",
     oracle=_fk_oracle_sql(),
-    tags=("dq", "constraints", "referential-integrity"),
 )
 def fk_integrity_audit(spark, sf_dir):
     """Referential-integrity audit over every foreign-key edge of the
@@ -2604,7 +2397,6 @@ def fk_integrity_audit(spark, sf_dir):
            CAST(carry + greatest(mx, 0) AS BIGINT) AS peak_concurrency
     FROM c ORDER BY day
     """,
-    tags=("window", "sessionization", "sweep-line"),
 )
 def sessions_peak_concurrency(spark, sf_dir):
     """Peak concurrent sessions per day by distributed sweep-line: the
@@ -2713,7 +2505,6 @@ def sessions_peak_concurrency(spark, sf_dir):
     FROM own o JOIN best b ON b.la = o.label AND b.rn = 1
     ORDER BY o.label
     """,
-    tags=("similarity", "embeddings", "class-separation"),
 )
 def emb_label_separation(spark, sf_dir):
     """Embedding class-separation diagnostic: per label, the mean cosine
@@ -2824,7 +2615,6 @@ def emb_label_separation(spark, sf_dir):
     FROM chunks c JOIN freq f USING (chunk_hash)
     GROUP BY c.source ORDER BY c.source
     """,
-    tags=("dedup", "cdc-chunking", "llm-pipeline"),
 )
 def docs_cdc_chunk_dedup(spark, sf_dir):
     """Content-defined chunk dedup (the FastCDC/rsync family, token-level):
@@ -2928,7 +2718,6 @@ def docs_cdc_chunk_dedup(spark, sf_dir):
            MAX(doc_id) AS max_asset_id
     FROM ph GROUP BY phash ORDER BY phash
     """,
-    tags=("multimodal", "image", "perceptual-hash", "dedup"),
 )
 def media_image_phash_groups(spark, sf_dir):
     """Perceptual image dedup: REAL BMP payloads decode to pixels, each
@@ -2962,52 +2751,18 @@ def media_image_phash_groups(spark, sf_dir):
 
 
 def _threshold_sweep_oracle_sql(thresholds: tuple[float, ...]) -> str:
-    mh = ",\n             ".join(
-        f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-        for j in range(8)
-    )
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, mh_{2*b} || '|' || mh_{2*b+1} AS band_key "
-        "FROM sig WHERE len(sh) > 0"
-        for b in range(4)
-    )
     theta_rows = " UNION ALL ".join(f"SELECT {t} AS theta" for t in thresholds)
     return f"""
-    WITH t AS MATERIALIZED (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS MATERIALIZED (
-      SELECT doc_id, sh, {mh} FROM s
-    ), bands AS ({bands}
-    ), scored AS MATERIALIZED (
-      SELECT id_a, id_b, jac FROM (
-        SELECT c.id_a, c.id_b,
-               ROUND(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-               / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))), 4) AS jac
-        FROM (
-          SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-          FROM bands x JOIN bands y
-            ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-        ) c
-        JOIN sig sa ON sa.doc_id = c.id_a
-        JOIN sig sb ON sb.doc_id = c.id_b
-      ) WHERE jac >= 0.5
-    ), ends AS MATERIALIZED (
-      SELECT id_a AS v, jac FROM scored UNION ALL SELECT id_b AS v, jac FROM scored
+    WITH {near_dup_pairs_sql(0.5, materialize=True)}, ends AS MATERIALIZED (
+      SELECT id_a AS v, jaccard FROM pairs UNION ALL SELECT id_b AS v, jaccard FROM pairs
     ), thetas AS ({theta_rows})
     SELECT theta,
-           CAST((SELECT COUNT(*) FROM scored WHERE jac >= theta) AS BIGINT) AS n_pairs,
-           CAST((SELECT COUNT(DISTINCT v) FROM ends WHERE jac >= theta) AS BIGINT)
+           CAST((SELECT COUNT(*) FROM pairs WHERE jaccard >= theta) AS BIGINT) AS n_pairs,
+           CAST((SELECT COUNT(DISTINCT v) FROM ends WHERE jaccard >= theta) AS BIGINT)
              AS n_nodes,
            ROUND(COALESCE(
-             (SELECT CAST((CAST(CAST(SUM(CAST(FLOOR((jac) * 100000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100000000.0) AS DOUBLE)
-                     / COUNT(*) FROM scored WHERE jac >= theta), 0.0), 6) AS avg_jaccard
+             (SELECT CAST((CAST(CAST(SUM(CAST(FLOOR((jaccard) * 100000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS DOUBLE) / 100000000.0) AS DOUBLE)
+                     / COUNT(*) FROM pairs WHERE jaccard >= theta), 0.0), 6) AS avg_jaccard
     FROM thetas ORDER BY theta
     """
 
@@ -3015,7 +2770,6 @@ def _threshold_sweep_oracle_sql(thresholds: tuple[float, ...]) -> str:
 @query(
     "docs_dup_threshold_sweep",
     oracle=_threshold_sweep_oracle_sql((0.5, 0.6, 0.7, 0.8)),
-    tags=("dedup", "diagnostics", "threshold-sweep"),
 )
 def docs_dup_threshold_sweep(spark, sf_dir):
     """Dedup-aggressiveness knob sweep: the verified LSH near-dup pairs are
@@ -3109,7 +2863,6 @@ def docs_dup_threshold_sweep(spark, sf_dir):
     FROM tsrc s JOIN vocab v USING (token)
     GROUP BY s.source ORDER BY s.source
     """,
-    tags=("text", "tokenizer", "llm-pipeline"),
 )
 def docs_bpe_encode_stats(spark, sf_dir):
     """BPE ENCODE applied end-to-end: the two merges learned by
@@ -3187,40 +2940,9 @@ def _lpa_oracle_sql(n_rounds: int = 4) -> str:
     """Near-dup edges (same LSH pipeline as the kcore/taint oracles) +
     `n_rounds` unrolled synchronous label-propagation rounds with the
     count-desc/label-asc argmax tie-break."""
-    mh = ",\n             ".join(
-        f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
-        for j in range(8)
-    )
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, mh_{2*b} || '|' || mh_{2*b+1} AS band_key "
-        "FROM sig WHERE len(sh) > 0"
-        for b in range(4)
-    )
     parts = [
         f"""
-    WITH t AS MATERIALIZED (
-      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
-    ), s AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 3
-                  THEN list_distinct(list_transform(range(1, len(toks)-1),
-                         i -> array_to_string(toks[i:i+2], ' ')))
-                  ELSE [] END AS sh
-      FROM t
-    ), sig AS MATERIALIZED (
-      SELECT doc_id, sh, {mh} FROM s
-    ), bands AS ({bands}
-    ), pairs AS MATERIALIZED (
-      SELECT c.id_a, c.id_b FROM (
-        SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-        FROM bands x JOIN bands y
-          ON x.band_id = y.band_id AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-      ) c
-      JOIN sig sa ON sa.doc_id = c.id_a
-      JOIN sig sb ON sb.doc_id = c.id_b
-      WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-            / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5
-    ), e0 AS MATERIALIZED (
+    WITH {near_dup_pairs_sql(0.5, materialize=True)}, e0 AS MATERIALIZED (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
       SELECT id_b AS src, id_a AS dst FROM pairs
@@ -3260,7 +2982,6 @@ def _lpa_oracle_sql(n_rounds: int = 4) -> str:
 @query(
     "docs_lpa_communities",
     oracle=_lpa_oracle_sql(4),
-    tags=("graph", "dedup", "communities"),
 )
 def docs_lpa_communities(spark, sf_dir):
     """Label-propagation communities over the near-dup graph
@@ -3321,7 +3042,6 @@ def docs_lpa_communities(spark, sf_dir):
            ROUND(s.dot / greatest(sqrt(s.n0) * sqrt(s.n1), 1e-12), 6) AS cos_drift
     FROM sums s JOIN counts c USING (label) ORDER BY s.label
     """,
-    tags=("similarity", "embeddings", "drift"),
 )
 def emb_centroid_drift(spark, sf_dir):
     """Embedding drift check between two halves of the corpus (vec_id
@@ -3403,7 +3123,6 @@ def emb_centroid_drift(spark, sf_dir):
     WHERE o.o_totalprice = c.dmax AND (c.carry IS NULL OR o.o_totalprice > c.carry)
     ORDER BY o_orderdate, o.o_orderkey
     """,
-    tags=("analytics", "skyline", "preference"),
 )
 def orders_pareto_frontier(spark, sf_dir):
     """Pareto frontier (skyline) of orders under (earlier date, higher
@@ -3474,7 +3193,6 @@ def orders_pareto_frontier(spark, sf_dir):
            CAST(MAX(y_sum) AS BIGINT) AS max_luma_sum
     FROM lagged GROUP BY doc_id ORDER BY asset_id
     """,
-    tags=("multimodal", "video", "scene-detection"),
 )
 def media_video_scene_changes(spark, sf_dir):
     """Scene-change detection over REAL-decoded video: consecutive frames
@@ -3557,7 +3275,6 @@ def _fingerprint_oracle_sql() -> str:
 @query(
     "tables_fingerprint_audit",
     oracle=_fingerprint_oracle_sql(),
-    tags=("dq", "migration", "fingerprint"),
 )
 def tables_fingerprint_audit(spark, sf_dir):
     """Order-insensitive table fingerprints: per table, an exact DECIMAL
@@ -3617,7 +3334,6 @@ def _skew_oracle_sql() -> str:
 @query(
     "join_key_skew_report",
     oracle=_skew_oracle_sql(),
-    tags=("dq", "skew", "capacity-planning"),
 )
 def join_key_skew_report(spark, sf_dir):
     """Join-key skew profile for every shuffle key the workload joins or
@@ -3669,7 +3385,6 @@ def join_key_skew_report(spark, sf_dir):
              AS at_risk_share
     FROM qi
     """,
-    tags=("dq", "privacy", "k-anonymity"),
 )
 def events_kanonymity_audit(spark, sf_dir):
     """k-anonymity audit over the quasi-identifier tuple (event_type, day,
@@ -3720,7 +3435,6 @@ def events_kanonymity_audit(spark, sf_dir):
            ROUND(2.0 * wsum / (n * total) - (n + 1.0) / n, 6) AS gini
     FROM s
     """,
-    tags=("analytics", "inequality", "ranking"),
 )
 def customer_revenue_gini(spark, sf_dir):
     """Gini coefficient of customer revenue concentration — the

@@ -1,35 +1,61 @@
 """Query registry: the QuerySpec dataclass, the QUERIES dict, the
-@query registration decorator, and the shared tiny helpers every
-chunk module uses (split out of the former monolithic
-plans/queries.py in round 10)."""
+@query registration decorator, the shared tiny helpers every chunk
+module uses, and the SQL mirrors of the operator recipes the oracles
+replay (split out of the former monolithic plans/queries.py in
+round 10)."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
-from functools import reduce
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prod_data_pipeline_spark.operators.dedup import (
+    LSH_BAND_SIZE,
+    MINHASH_HASHES,
+    SHINGLE_N,
+    SNM_KEY_LEN,
+    SNM_WINDOW,
+)
+from prod_data_pipeline_spark.operators.linalg import INT40_LO, INT40_SCALE
+from prod_data_pipeline_spark.operators.quality import (
+    FT_BUCKETS,
+    N_FOLDS,
+    QUALITY_LABEL_CUTOFF,
+    TRAIN_FOLDS,
+)
+from prod_data_pipeline_spark.operators.similarity import (
+    PQ_QUANT,
+    PQ_SUBSPACES,
+    SRP_BAND_BITS,
+    SRP_BITS,
+    SRP_SEED,
+)
+from prod_data_pipeline_spark.operators.sketches import (
+    CMS_DEPTH,
+    CMS_SALT,
+    CMS_WIDTH,
+)
+from prod_data_pipeline_spark.operators.text import STOPWORDS
 from prod_data_pipeline_spark.schemas import TESTDATA_EVENT_TYPES
-from prod_data_pipeline_spark.session import truncate_lineage, tune
+from prod_data_pipeline_spark.session import tune
 from prod_data_pipeline_spark.sources.readers import load_table
 
 
 @dataclass(frozen=True)
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None = None  # None => driver records rows-only check
-    tags: tuple = field(default_factory=tuple)
+    oracle: str  # DuckDB SQL over the same parquet tables
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None, tags: tuple = ()):
+def query(name: str, oracle: str):
     def deco(fn):
-        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle, tags=tags)
+        QUERIES[name] = QuerySpec(fn=fn, oracle=oracle)
         return fn
 
     return deco
@@ -243,3 +269,354 @@ def num_to_double(c, scale: int = 2) -> F.Column:
 _VALID_TYPES_SQL = ", ".join(f"'{t}'" for t in TESTDATA_EVENT_TYPES)
 
 
+# ---------------------------------------------------------------------------
+# SQL mirrors of operator recipes.  An oracle that replays an operator
+# builds its CTEs from these helpers, and each helper reads the operator's
+# own constants, so an operator and its oracles cannot drift apart.
+# ---------------------------------------------------------------------------
+
+#: functions.text.tokens: lowercased whitespace tokens, empties dropped.
+_TOKS_SQL = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
+
+#: operators.text.STOPWORDS as DuckDB list literals.
+_LANG_SQL_SETS = {
+    lang: "[" + ",".join(f"'{w}'" for w in words) + "]"
+    for lang, words in STOPWORDS.items()
+}
+
+#: In-order squared-L2 and cosine folds over two DOUBLE lists ``{a}``,
+#: ``{b}`` (fill with ``.format(a=..., b=...)``).
+_SQDIST_SQL = (
+    "list_sum(list_transform(range(1, len({a})+1),"
+    " i -> ({a}[i]-{b}[i])*({a}[i]-{b}[i])))"
+)
+_COS_SQL = (
+    "list_sum(list_transform(range(1, len({a})+1), i -> {a}[i] * {b}[i]))"
+    " / (sqrt(list_sum(list_transform(range(1, len({a})+1), i -> {a}[i] * {a}[i])))"
+    " * sqrt(list_sum(list_transform(range(1, len({b})+1), i -> {b}[i] * {b}[i]))))"
+)
+
+
+def shingles_sql(n: int = SHINGLE_N, distinct: bool = True) -> str:
+    """functions.text.shingles over the token list ``toks``: word n-grams
+    joined by single spaces, ``[]`` below n tokens; ``distinct`` adds the
+    array_distinct that with_minhash and the Jaccard joins apply."""
+    grams = (
+        f"list_transform(range(1, len(toks) - {n - 2}),"
+        f" i -> array_to_string(toks[i:i+{n - 1}], ' '))"
+    )
+    if distinct:
+        grams = f"list_distinct({grams})"
+    return f"CASE WHEN len(toks) >= {n} THEN {grams} ELSE [] END"
+
+
+def jaccard_sql(a: str, b: str) -> str:
+    """dedup.jaccard of two distinct-element lists, unrounded."""
+    return (
+        f"CAST(len(list_intersect({a}, {b})) AS DOUBLE)"
+        f" / (len({a}) + len({b}) - len(list_intersect({a}, {b})))"
+    )
+
+
+def minhash_sql() -> str:
+    """dedup.with_minhash's mh_0..mh_{MINHASH_HASHES-1} over shingle list ``sh``."""
+    return ", ".join(
+        f"list_aggregate(list_transform(sh, x -> md5('{j}:' || x)), 'min') AS mh_{j}"
+        for j in range(MINHASH_HASHES)
+    )
+
+
+def minhash_sig_sql(src: str = "documents", materialize: bool = False) -> str:
+    """CTEs ``t(doc_id, toks)``, ``s(doc_id, sh)`` and ``sig(doc_id, sh,
+    mh_*)`` over relation ``src``: the distinct word-SHINGLE_N shingle set
+    and MinHash signature of dedup.with_minhash."""
+    m = " MATERIALIZED" if materialize else ""
+    return f"""t AS{m} (
+      SELECT doc_id, {_TOKS_SQL} AS toks FROM {src}
+    ), s AS (
+      SELECT doc_id, {shingles_sql()} AS sh FROM t
+    ), sig AS{m} (
+      SELECT doc_id, sh, {minhash_sql()} FROM s
+    )"""
+
+
+def lsh_bands_sql() -> str:
+    """dedup.lsh_bands over ``sig``: one (doc_id, band_id, band_key) row per
+    LSH_BAND_SIZE-hash band; docs without shingles never collide."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band_id, "
+        + " || '|' || ".join(
+            f"mh_{j}" for j in range(b * LSH_BAND_SIZE, (b + 1) * LSH_BAND_SIZE)
+        )
+        + " AS band_key FROM sig WHERE len(sh) > 0"
+        for b in range(MINHASH_HASHES // LSH_BAND_SIZE)
+    )
+
+
+def lsh_candidates_sql() -> str:
+    """Distinct (id_a < id_b) pairs sharing a band of ``bands``."""
+    return """SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM bands a JOIN bands b
+        ON a.band_id = b.band_id AND a.band_key = b.band_key AND a.doc_id < b.doc_id"""
+
+
+def near_dup_pairs_sql(
+    threshold: float, src: str = "documents", materialize: bool = False
+) -> str:
+    """CTE chain ``t, s, sig, bands, pairs(id_a, id_b, jaccard)`` — the SQL
+    mirror of dedup._near_dup_pairs_lsh: MinHash-LSH candidates verified
+    by exact shingle Jaccard, kept when the 4-digit rounded value reaches
+    ``threshold`` (the operator's ``F.round(jaccard, 4) >= threshold``).
+    ``materialize`` marks t, sig and pairs MATERIALIZED, for oracles that
+    read the pair relation many times."""
+    m = " MATERIALIZED" if materialize else ""
+    return f"""{minhash_sig_sql(src, materialize)}, bands AS (
+      {lsh_bands_sql()}
+    ), pairs AS{m} (
+      SELECT id_a, id_b, jaccard FROM (
+        SELECT c.id_a, c.id_b, ROUND({jaccard_sql("sa.sh", "sb.sh")}, 4) AS jaccard
+        FROM ({lsh_candidates_sql()}) c
+        JOIN sig sa ON sa.doc_id = c.id_a
+        JOIN sig sb ON sb.doc_id = c.id_b
+      ) WHERE jaccard >= {threshold}
+    )"""
+
+
+def snm_key_sql() -> str:
+    """dedup.sorted_neighborhood_pairs' sort key over ``text``."""
+    return (
+        f"substr(regexp_replace(lower(substr(text, 1, {4 * SNM_KEY_LEN})),"
+        f" '[^a-z0-9]', '', 'g'), 1, {SNM_KEY_LEN})"
+    )
+
+
+def snm_window_sql() -> str:
+    """Join predicate: row ``b`` is one of the SNM_WINDOW successors of ``a``
+    in rank column ``rnk``."""
+    return f"b.rnk > a.rnk AND b.rnk <= a.rnk + {SNM_WINDOW}"
+
+
+def cms_bucket_sql(row: str, key: str) -> str:
+    """sketches._bucket: first 12 md5 hex digits of CMS_SALT<row>:<key> as
+    int64 mod CMS_WIDTH (values < 2^48, so C-signed % matches pmod)."""
+    return (
+        f"CAST(('0x' || substr(md5('{CMS_SALT}' || {row} || ':' || {key}), 1, 12))::BIGINT"
+        f" % {CMS_WIDTH} AS INT)"
+    )
+
+
+def cms_cells_sql(src: str, key: str, cnt: str) -> str:
+    """sketches.cms_build cells (j, bucket, cnt) of key ``key`` weighted by
+    ``cnt`` over relation ``src``: CMS_DEPTH hash rows x CMS_WIDTH buckets."""
+    return f"""SELECT j, {cms_bucket_sql("j", key)} AS bucket,
+             CAST(SUM({cnt}) AS BIGINT) AS cnt
+      FROM {src} CROSS JOIN (SELECT unnest(range({CMS_DEPTH})) AS j)
+      GROUP BY 1, 2"""
+
+
+def srp_candidates_sql() -> str:
+    """CTEs ``sig, bands, cand(id_a, id_b)`` over ``v(vec_id, e)``:
+    similarity.srp_near_dup_pairs' SRP_BITS sign bits against md5
+    hyperplanes seeded SRP_SEED, packed SRP_BAND_BITS per band, and the
+    distinct id pairs sharing a band."""
+    return f"""sig AS (
+      SELECT vec_id, b,
+             list_sum(list_transform(range(1, len(e)+1),
+               i -> e[i] * (2.0 * (('0x' || substr(md5('{SRP_SEED}:' || b || ':' || (i-1)), 1, 13))::BIGINT
+                                   / 4503599627370496.0) - 1.0))) AS d
+      FROM v, range(0, {SRP_BITS}) t(b)
+    ), bands AS (
+      SELECT vec_id, CAST(b // {SRP_BAND_BITS} AS INT) AS band_id,
+             CAST(SUM(CASE WHEN d > 0 THEN 1 << CAST(b % {SRP_BAND_BITS} AS INT) ELSE 0 END) AS BIGINT)
+                 AS band_key
+      FROM sig GROUP BY vec_id, b // {SRP_BAND_BITS}
+    ), cand AS (
+      SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
+      FROM bands l JOIN bands r
+        ON l.band_id = r.band_id AND l.band_key = r.band_key AND l.vec_id < r.vec_id
+    )"""
+
+
+def pq_adc_sql() -> str:
+    """CTEs ``v, cent, carr, dist, codes, qd, adc(query_id, neighbor_id,
+    dist)``: similarity.pq_codebook (label means rounded to 6), pq_encode
+    (PQ_SUBSPACES in-order sub-distance folds quantized to 1/PQ_QUANT,
+    (d, idx) tie-break) and pq_adc_topk's distance totals for the queries
+    vec_id < 8 (the query set of every PQ builder)."""
+    q = repr(PQ_QUANT)
+    return f"""v AS (
+      SELECT vec_id, label,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
+             len(embedding) // {PQ_SUBSPACES} AS dsub
+      FROM embeddings
+    ), cent AS (
+      SELECT label, pos, ROUND(SUM(e[pos]) / COUNT(*), 6) AS c
+      FROM v, unnest(range(1, len(e) + 1)) AS t(pos)
+      GROUP BY 1, 2
+    ), carr AS (
+      SELECT label, list(c ORDER BY pos) AS carr,
+             ROW_NUMBER() OVER (ORDER BY label) - 1 AS idx
+      FROM cent GROUP BY label
+    ), dist AS (
+      SELECT v.vec_id, t.m, ca.idx,
+             floor(list_sum(list_transform(range(1, v.dsub + 1),
+                 i -> (v.e[v.dsub*t.m + i] - ca.carr[v.dsub*t.m + i])
+                    * (v.e[v.dsub*t.m + i] - ca.carr[v.dsub*t.m + i])))
+                   * {q}) / {q} AS d
+      FROM v, unnest(range({PQ_SUBSPACES})) AS t(m), carr ca
+    ), codes AS (
+      SELECT vec_id, m, idx AS code FROM (
+        SELECT vec_id, m, idx,
+               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d, idx) AS rn
+        FROM dist) WHERE rn = 1
+    ), qd AS (
+      SELECT vec_id AS qid, m, idx, d FROM dist WHERE vec_id < 8
+    ), adc AS (
+      -- plain double SUM is EXACT here: quantized terms are multiples of
+      -- 1/PQ_QUANT whose total stays far below 2^53 ulps, so order is free
+      SELECT q.qid AS query_id, c.vec_id AS neighbor_id, SUM(q.d) AS dist
+      FROM codes c JOIN qd q ON q.m = c.m AND q.idx = c.code
+      WHERE q.qid <> c.vec_id
+      GROUP BY 1, 2
+    )"""
+
+
+def int40_cov_sql() -> str:
+    """CTEs ``x, nn, mu, cx, qt, cov(i, j, c)`` over ``embeddings``:
+    linalg.covariance_matrix with the int40 quantizer — q =
+    floor(ci*cj*INT40_SCALE) summed as exact hi/lo int64 partials split at
+    INT40_LO (DuckDB ``%`` is C-signed: wrap with +m %m; ``//`` is the
+    exact quotient), recombined in DOUBLE with the operator's op order."""
+    s, lo = repr(float(INT40_SCALE)), INT40_LO
+    return f"""x AS MATERIALIZED (
+      SELECT vec_id AS rid, i - 1 AS i, CAST(embedding[i] AS DOUBLE) AS xi
+      FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
+    ), nn AS MATERIALIZED (
+      SELECT COUNT(*) AS n FROM embeddings
+    ), mu AS MATERIALIZED (
+      SELECT i, CAST(SUM(CAST(xi AS DECIMAL(38,12))) AS DOUBLE)
+                / (SELECT n FROM nn) AS mu
+      FROM x GROUP BY i
+    ), cx AS MATERIALIZED (
+      SELECT rid, x.i, xi - mu AS ci FROM x JOIN mu USING (i)
+    ), qt AS MATERIALIZED (
+      SELECT a.i, b.i AS j,
+             CAST(floor(a.ci * b.ci * {s}) AS BIGINT) AS q
+      FROM cx a JOIN cx b USING (rid)
+    ), cov AS MATERIALIZED (
+      SELECT i, j,
+             (CAST(SUM((q - ((q % {lo} + {lo}) % {lo})) // {lo})
+                   AS DOUBLE) * {float(lo)!r}
+              + CAST(SUM((q % {lo} + {lo}) % {lo}) AS DOUBLE))
+             / {s} / ((SELECT n FROM nn) - 1) AS c
+      FROM qt GROUP BY 1, 2
+    )"""
+
+
+def nb_train_sql(n_buckets: int, salt: str = "", carry: str = "") -> str:
+    """CTEs ``t, lab, feats, ex, prior_counts, llr(b, w), prior(pr,
+    n_train)``: the training half both trained quality gates share
+    (operators.quality nb_quality_gate_eval / ft_trained_quality_scores).
+    Labels are quality_score >= QUALITY_LABEL_CUTOFF, folds doc_id %
+    N_FOLDS (folds < TRAIN_FOLDS train), features structural_feats hashed
+    to md5([salt:]f) mod ``n_buckets`` with one vote per (doc, bucket), and
+    llr/prior the smoothed Bernoulli-NB log-likelihood ratios rounded to
+    7.  ``carry`` (e.g. ``", source"``) adds document columns to
+    t/lab/feats/ex."""
+    f = f"'{salt}:' || f" if salt else "f"
+    return f"""t AS (
+      SELECT doc_id{carry}, {_TOKS_SQL} AS tk FROM documents
+    ), lab AS (
+      SELECT doc_id{carry}, len(tk) AS n, len(list_distinct(tk)) AS nd,
+             CASE WHEN ROUND(0.5 * LEAST(len(tk) / 100.0, 1.0)
+                  + 0.5 * (len(list_distinct(tk)) / CAST(len(tk) AS DOUBLE)), 4)
+                  >= {QUALITY_LABEL_CUTOFF} THEN 1 ELSE 0 END AS y,
+             CAST(doc_id % {N_FOLDS} AS INT) AS fold
+      FROM t
+    ), feats AS (
+      SELECT doc_id{carry}, y, fold,
+             ['len:' || CAST(LEAST(n // 5, 40) AS VARCHAR),
+              'div:' || CAST((nd * 40) // n AS VARCHAR),
+              'lxd:' || CAST(LEAST(n // 10, 20) AS VARCHAR) || '_'
+                     || CAST((nd * 20) // n AS VARCHAR)] AS fs
+      FROM lab
+    ), ex AS (
+      SELECT DISTINCT doc_id{carry}, y, fold,
+             CAST(('0x' || substr(md5({f}), 1, 8))::BIGINT % {n_buckets}
+                  AS BIGINT) AS b
+      FROM (SELECT doc_id{carry}, y, fold, unnest(fs) AS f FROM feats)
+    ), prior_counts AS (
+      SELECT CAST(SUM(y) AS DOUBLE) AS npos,
+             CAST(SUM(1 - y) AS DOUBLE) AS nneg,
+             COUNT(*) AS n_train
+      FROM lab WHERE fold < {TRAIN_FOLDS}
+    ), llr AS (
+      SELECT CAST(d.range AS BIGINT) AS b,
+             ROUND(ln((COALESCE(cpos, 0) + 1.0) / (npos + 2.0))
+                   - ln((COALESCE(cneg, 0) + 1.0) / (nneg + 2.0)), 7) AS w
+      FROM range(0, {n_buckets}) d
+      LEFT JOIN (SELECT b, SUM(y) AS cpos, SUM(1 - y) AS cneg
+                 FROM ex WHERE fold < {TRAIN_FOLDS} GROUP BY 1) trainb
+        ON trainb.b = d.range, prior_counts
+    ), prior AS (
+      SELECT ROUND(ln((npos + 1.0) / (nneg + 1.0)), 7) AS pr, n_train
+      FROM prior_counts
+    )"""
+
+
+def ft_scored_sql(carry: str = "") -> str:
+    """:func:`nb_train_sql` over FT_BUCKETS unsalted buckets, then
+    ``perdoc`` and ``scored(doc_id, <carry>, n_feats, prob)``:
+    ft_trained_quality_scores' presence-pooled sigmoid of (sum llr +
+    prior) / n_feats, rounded to 6."""
+    return f"""{nb_train_sql(FT_BUCKETS, carry=carry)}, perdoc AS (
+      SELECT e.doc_id{carry}, COUNT(b) AS n_feats,
+             CAST(CAST(COALESCE(SUM(CAST(FLOOR(w * 10000000.0 + 0.5) AS BIGINT)),
+                                0) AS BIGINT) AS DOUBLE) / 10000000.0
+               AS wsum
+      FROM ex e JOIN llr USING (b)
+      GROUP BY e.doc_id{carry}
+    ), scored AS (
+      SELECT doc_id{carry}, n_feats,
+             ROUND(1.0 / (1.0 + exp(-(CASE WHEN n_feats > 0
+                 THEN (wsum + (SELECT pr FROM prior)) / n_feats
+                 ELSE 0.0 END))), 6) AS prob
+      FROM perdoc
+    )"""
+
+
+def jaccard_prefix_sql(materialize: bool = False) -> str:
+    """CTEs ``t, t2(doc_id, sh), tok, dfreq, ranked, prefix, pcand,
+    exact(id_a, id_b)``: dedup.jaccard_prefix_pairs at threshold_pct=50
+    over the non-empty distinct shingle sets — rarest-first prefix
+    candidates verified by the all-integer rule 100*inter >= 50*union.
+    ``materialize`` marks t2 and exact MATERIALIZED."""
+    m = " MATERIALIZED" if materialize else ""
+    return f"""t AS (
+      SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+    ), t2 AS{m} (
+      SELECT doc_id, sh FROM (SELECT doc_id, {shingles_sql()} AS sh FROM t)
+      WHERE len(sh) > 0
+    ), tok AS (
+      SELECT doc_id, unnest(sh) AS token, len(sh) AS sz FROM t2
+    ), dfreq AS (
+      SELECT token, COUNT(*) AS df FROM tok GROUP BY token
+    ), ranked AS (
+      SELECT doc_id, token, sz,
+             row_number() OVER (PARTITION BY doc_id ORDER BY df, token) AS rn
+      FROM tok JOIN dfreq USING (token)
+    ), prefix AS (
+      SELECT doc_id, token, sz FROM ranked
+      WHERE rn <= sz - ((50 * sz + 99) // 100) + 1
+    ), pcand AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM prefix a JOIN prefix b
+        ON a.token = b.token AND a.doc_id < b.doc_id
+      WHERE 50 * greatest(a.sz, b.sz) <= 100 * least(a.sz, b.sz)
+    ), exact AS{m} (
+      SELECT c.id_a, c.id_b FROM pcand c
+      JOIN t2 ta ON ta.doc_id = c.id_a
+      JOIN t2 tb ON tb.doc_id = c.id_b
+      WHERE 100 * len(list_intersect(ta.sh, tb.sh))
+            >= 50 * (len(ta.sh) + len(tb.sh) - len(list_intersect(ta.sh, tb.sh)))
+    )"""

@@ -90,9 +90,6 @@ def check_query(spark, name: str, sf_dir: str):
 
     spec = QUERIES[name]
     mine = spec.fn(spark, sf_dir).toPandas()
-    if spec.oracle is None:
-        assert len(mine) >= 0  # rows-only check
-        return mine
     oracle = oracle_df(spec.oracle, sf_dir)
     assert_frames_match(mine, oracle, name)
     return mine

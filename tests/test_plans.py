@@ -365,17 +365,17 @@ def test_consolidation_panel_plan_shapes(spark):
     - events_hll_users_panel: exactly TWO parquet scans (daily sketching
       + the direct rollup — the merge's whole point; the pair ran three)
       joined with a broadcast, never a sort-merge.
-    - events_value_distribution: the histogram and per-type count scans;
-      exact_quantiles cuts its own input, so its single read runs before
-      the final plan.  This pin is an UPPER bound that must only ever
-      move down.
+    - events_value_distribution: the histogram scan only; the per-type
+      counts come with exact_quantiles' n_total, and the operator cuts its
+      own input, so its single read runs before the final plan.  This pin
+      is an UPPER bound that must only ever move down.
     """
     plan = _executed_plan(spark, "events_hll_users_panel")
     assert plan.count("Scan parquet") == 2, plan.count("Scan parquet")
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
     plan = _executed_plan(spark, "events_value_distribution")
-    assert plan.count("Scan parquet") <= 2, plan.count("Scan parquet")
+    assert plan.count("Scan parquet") <= 1, plan.count("Scan parquet")
     assert "SortMergeJoin" not in plan
 
 

@@ -40,20 +40,117 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert list(e.queries()) == list(QUERIES)
-    assert list(e.oracle_sql()) == [
-        name for name, spec in QUERIES.items() if spec.oracle is not None
-    ]
+    oracles = e.oracle_sql()
+    assert list(oracles) == list(QUERIES)
+    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
 
 
-def test_rows_only_queries_document_their_justification():
-    """Governance: a query without an oracle gets only the driver's weak
-    rows-only check, so its docstring must say why that is the strongest
-    check its semantics admit (approximate output, order-nondeterminism,
-    no tractable SQL mirror) — no silent oracle omissions."""
-    for name, spec in QUERIES.items():
-        if spec.oracle is None:
-            doc = (spec.fn.__doc__ or "").lower()
-            assert "rows-only" in doc, f"{name}: no_oracle without justification"
+#: Literal fragments of the operator recipes that plans/query_registry.py
+#: mirrors in SQL: the word-3-gram shingle slice, the MinHash salts, the
+#: LSH band table, the CMS cell hash, the SRP hyperplanes, the PQ
+#: sub-distance fold and the NB structural features.  ``band_key`` followed
+#: by a quote is a Spark column name, not SQL.
+_RECIPE_LITERALS = (
+    r"\w+\[i:i\+2\]",
+    r"md5\('\{j\}:'",
+    r"md5\('0:'",
+    r"band_key(?![\"'])",
+    r"md5\('cms'",
+    r"md5\('42:'",
+    r"8\*t\.m \+ i",
+    r"'len:' \|\|",
+)
+
+
+def test_operator_recipes_have_one_sql_mirror():
+    """Every operator recipe an oracle replays is written once, in a
+    plans/query_registry.py helper that reads the operator's constants.
+    A query chunk that spells a recipe out again can drift from the
+    operator (a hard-coded hash count, an unrounded threshold), so any
+    recipe literal in plans/queries_*.py fails here."""
+    import re
+    from pathlib import Path
+
+    import prod_data_pipeline_spark.plans as plans
+
+    hits = []
+    for path in sorted(Path(plans.__file__).parent.glob("queries_*.py")):
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            if any(re.search(p, line) for p in _RECIPE_LITERALS):
+                hits.append(f"{path.name}:{n}: {line.strip()}")
+    assert not hits, "recipe literals outside query_registry helpers:\n" + "\n".join(hits)
+
+
+def _shared_band(a: list[str], b: list[str]) -> bool:
+    """Whether two shingle sets collide in some LSH band (the Python twin
+    of dedup.with_minhash + lsh_bands)."""
+    import hashlib
+
+    from prod_data_pipeline_spark.operators.dedup import LSH_BAND_SIZE, MINHASH_HASHES
+
+    def sig(sh):
+        return [
+            min(hashlib.md5(f"{j}:{x}".encode()).hexdigest() for x in sh)
+            for j in range(MINHASH_HASHES)
+        ]
+
+    sa, sb = sig(a), sig(b)
+    return any(
+        sa[i : i + LSH_BAND_SIZE] == sb[i : i + LSH_BAND_SIZE]
+        for i in range(0, MINHASH_HASHES, LSH_BAND_SIZE)
+    )
+
+
+def test_near_dup_rounded_threshold_boundary(spark, tmp_path):
+    """A pair at Jaccard 5000/10001 (0.49995, rounds to 0.5) is kept by
+    both the Spark operator, which filters round(jaccard, 4) >= 0.5, and
+    the DuckDB near_dup_pairs_sql mirror run through oracle_df.  The two
+    documents share a 5002-token prefix (5000 common word-3-grams) and
+    have 2500 and 2501 shingles of their own; the token prefix is chosen
+    so the pair collides in an LSH band."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from prod_data_pipeline_spark.operators.dedup import near_dup_pairs
+    from prod_data_pipeline_spark.plans.query_registry import near_dup_pairs_sql
+    from prod_data_pipeline_spark.sources.readers import TABLES
+    from tests.parity import oracle_df
+
+    def shingle_set(toks):
+        return [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
+
+    for salt in range(50):
+        common = [f"c{salt}x{i}" for i in range(5002)]
+        a = common + [f"a{salt}x{i}" for i in range(2500)]
+        b = common + [f"b{salt}x{i}" for i in range(2501)]
+        if _shared_band(shingle_set(a), shingle_set(b)):
+            break
+    else:
+        raise AssertionError("no token prefix gave an LSH band collision")
+    sa, sb = set(shingle_set(a)), set(shingle_set(b))
+    assert (len(sa & sb), len(sa | sb)) == (5000, 10001)
+    assert len(sa & sb) / len(sa | sb) < 0.5  # only the rounded value reaches it
+
+    docs = spark.createDataFrame(
+        [(1, " ".join(a)), (2, " ".join(b))], "doc_id long, text string"
+    )
+    got = [tuple(r) for r in near_dup_pairs(docs, threshold=0.5).collect()]
+    assert got == [(1, 2, 0.5)]
+
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    pq.write_table(
+        pa.table({"doc_id": [1, 2], "text": [" ".join(a), " ".join(b)]}),
+        tmp_path / "documents.parquet",
+    )
+    oracle = oracle_df(
+        f"WITH {near_dup_pairs_sql(0.5)} SELECT id_a, id_b, jaccard FROM pairs",
+        str(tmp_path),
+    )
+    assert [tuple(r) for r in oracle.itertuples(index=False)] == [(1, 2, 0.5)]
 
 
 def _decimal_sum_sites(sql: str) -> int:
@@ -91,7 +188,7 @@ def test_no_unexempted_decimal_sums():
 
     offenders = {}
     for name, spec in QUERIES.items():
-        if spec.oracle and _decimal_sum_sites(spec.oracle):
+        if _decimal_sum_sites(spec.oracle):
             offenders[name] = _decimal_sum_sites(spec.oracle)
     unexempted = sorted(set(offenders) - set(DSUM_EXCEPTIONS))
     assert not unexempted, (
@@ -152,7 +249,7 @@ def test_no_unexempted_float_div_half_up():
     offenders = {
         name: _floor_float_div_sites(spec.oracle)
         for name, spec in QUERIES.items()
-        if spec.oracle and _floor_float_div_sites(spec.oracle)
+        if _floor_float_div_sites(spec.oracle)
     }
     unexempted = sorted(set(offenders) - set(FLOORDIV_EXCEPTIONS))
     assert not unexempted, (

@@ -138,7 +138,7 @@ def test_exact_quantiles_events_shape(spark):
         [("g", 1.0), ("g", 5.0), ("g", 9.0), ("h", 2.0)], ["g", "v"]
     )
     a = sorted(map(tuple, exact_quantiles(tiny, "v", {"p50": 0.5}, by=["g"]).collect()))
-    assert a == [("g", "p50", 5.0), ("h", "p50", 2.0)]
+    assert a == [("g", "p50", 5.0, 3), ("h", "p50", 2.0, 1)]
 
 
 def test_exact_quantiles_scan_count(spark):

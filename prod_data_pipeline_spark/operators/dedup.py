@@ -16,6 +16,12 @@ Scale design (100 TB):
 - SimHash gives a 60-bit near-dup key per document (15 hex nibbles of
   md5 keep it inside a signed bigint); Hamming-adjacent bucketing is a
   bit-chunk band join, same shuffle shape as LSH.
+
+Every LSH pair operator (MinHash here, SimHash, similarity's SRP) shares
+one pipeline: a bucket table of (id, band_id, band_key) rows (lsh_bands
+or bit_bands), ONE band self-join (lsh_candidates, the Spark twin of
+plans/query_registry.lsh_candidates_sql), its own verify, the optional
+exact-dup collapse (collapsed_pairs) and one sort/materialize finish.
 """
 
 from __future__ import annotations
@@ -35,16 +41,9 @@ from prod_data_pipeline_spark.session import (
 # MinHash-LSH recipe of near_dup_pairs: 8 md5 MinHashes in 4 bands of 2.
 MINHASH_HASHES = 8
 LSH_BAND_SIZE = 2
-# Word-shingle width of the blocked Jaccard and sorted-neighborhood joins.
+# Word-shingle width of the MinHash signatures (with_minhash, near_dup_pairs)
+# and of the blocked Jaccard and sorted-neighborhood joins.
 SHINGLE_N = 3
-
-
-def _maybe_sort(pairs: DataFrame, sort: bool) -> DataFrame:
-    """Deterministic (id_a, id_b) ordering for oracle comparison and stable
-    reports.  Production pipelines that only consume the pair RELATION
-    (cluster resolution, anti-joins) should pass sort=False — the global
-    sort is a full range-exchange that buys nothing downstream."""
-    return pairs.orderBy("id_a", "id_b") if sort else pairs
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -78,7 +77,7 @@ def with_minhash(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = MINHASH_HASHES,
-    shingle_n: int = 3,
+    shingle_n: int = SHINGLE_N,
 ) -> DataFrame:
     """Append MinHash signature columns mh_0..mh_{k-1} plus the distinct
     shingle set (kept for verification joins)."""
@@ -103,6 +102,59 @@ def lsh_bands(sig_df: DataFrame, id_col: str, num_hashes: int, band_size: int) -
         sig_df.select(F.col(id_col), F.explode(F.array(*bands)).alias("band"))
         .select(id_col, "band.band_id", "band.band_key")
         .filter(F.col("band_key") != "")  # docs with no shingles never collide
+    )
+
+
+def bit_bands(
+    sig_df: DataFrame,
+    id_col: str,
+    sig_col: str,
+    n_bands: int,
+    band_bits: int,
+    carry: tuple = (),
+) -> DataFrame:
+    """Cut an integer signature into n_bands chunks of band_bits bits: one
+    (id, *carry, band_id, band_key) row per chunk — the bucket table of
+    the sign-LSH family (SimHash, SRP)."""
+    mask = (1 << band_bits) - 1
+    chunks = F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("band_id"),
+                F.shiftright(F.col(sig_col), band_bits * c)
+                .bitwiseAND(F.lit(mask))
+                .alias("band_key"),
+            )
+            for c in range(n_bands)
+        ]
+    )
+    return sig_df.select(id_col, *carry, F.explode(chunks).alias("c")).select(
+        id_col, *carry, "c.band_id", "c.band_key"
+    )
+
+
+def lsh_candidates(buckets: DataFrame, id_col: str, carry: tuple = ()) -> DataFrame:
+    """Distinct (id_a, id_b) pairs, id_a < id_b, sharing a band of the
+    bucket table ``buckets(id, band_id, band_key, *carry)`` — the one
+    band self-join of every LSH operator, and the Spark twin of
+    plans/query_registry.lsh_candidates_sql.  The only shuffle is on band
+    keys.  Each carry column comes back as <c>_a, <c>_b, so a verifier
+    that needs only small per-id values skips the join back to them."""
+    l, r = buckets.alias("l"), buckets.alias("r")
+    return (
+        l.join(
+            r,
+            (F.col("l.band_id") == F.col("r.band_id"))
+            & (F.col("l.band_key") == F.col("r.band_key"))
+            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+            *[F.col(f"l.{c}").alias(f"{c}_a") for c in carry],
+            *[F.col(f"r.{c}").alias(f"{c}_b") for c in carry],
+        )
+        .distinct()
     )
 
 
@@ -148,19 +200,7 @@ def _near_dup_pairs_lsh(
     # and re-hashes the corpus.  MEMORY_AND_DISK spills under pressure; at
     # warehouse scale the equivalent is materializing a signature table.
     sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    bands = lsh_bands(sig, id_col, MINHASH_HASHES, LSH_BAND_SIZE)
-    left = bands.alias("l")
-    right = bands.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = lsh_candidates(lsh_bands(sig, id_col, MINHASH_HASHES, LSH_BAND_SIZE), id_col)
     sa = sig.select(F.col(id_col).alias("id_a"), F.col("shingle_set").alias("set_a"))
     sb = sig.select(F.col(id_col).alias("id_b"), F.col("shingle_set").alias("set_b"))
     out = (
@@ -175,9 +215,10 @@ def _near_dup_pairs_lsh(
 
 def collapse_exact_groups(df: DataFrame, id_col: str, key: Column, ok: Column):
     """Exact-duplicate group structure for the collapse-then-expand LSH
-    optimization: returns (members, gstats) where members = (id, _k,
-    _rep, _m, _ok) and gstats = one row per distinct key with the MIN id
-    as representative, the group size, and the eligibility flag.
+    optimization: returns (members, reps) where members = (id, _k, _rep,
+    _m, _ok) is persisted — per distinct key the MIN id as representative,
+    the group size and the eligibility flag — and reps = the rows of
+    ``df`` that represent their group.
 
     `key` must be collision-proof for the domain (md5 — 128 bits; a
     collision would merge distinct contents into one group), `ok` marks
@@ -195,7 +236,17 @@ def collapse_exact_groups(df: DataFrame, id_col: str, key: Column, ok: Column):
         .join(gstats, "_k")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    return members, gstats
+    # reps read the PERSISTED members blocks — each group's representative
+    # row is the one where id == _rep, so a narrow filter over the cache
+    # replaces what would otherwise be another reference to the gstats
+    # plan, replaying the corpus-wide key group-by unless ReuseExchange
+    # happens to fire (the scheduler accident this module never relies on).
+    reps = df.join(
+        members.filter(F.col(id_col) == F.col("_rep")).select(id_col),
+        id_col,
+        "left_semi",
+    )
+    return members, reps
 
 
 def expand_group_pairs(
@@ -240,11 +291,56 @@ def expand_group_pairs(
     return intra.unionByName(inter)
 
 
+def collapsed_pairs(
+    df: DataFrame, id_col: str, key: Column, ok: Column, core, self_sim, sim_col: str
+):
+    """Run an LSH pair core on one representative per exact-duplicate
+    group and expand the result back to full-id pairs: the
+    collapse-then-expand sequence every LSH operator shares.
+
+    ``core(reps) -> (rep_pairs, sig_cache)`` is the operator's pipeline;
+    ``self_sim(members, sig_cache)`` returns (_ssid, _ss), the verified
+    similarity of a representative with itself, for eligible groups.
+    Returns (pairs, [sig_cache, members]) — the caller owns both caches.
+    """
+    members, reps = collapse_exact_groups(df, id_col, key, ok)
+    rep_pairs, sig = core(reps)
+    out = expand_group_pairs(rep_pairs, members, id_col, self_sim(members, sig), sim_col)
+    return out, [sig, members]
+
+
+def _finish_pairs(out: DataFrame, sort: bool, materialize: bool, caches: list) -> DataFrame:
+    """The one ending of every LSH pair operator.
+
+    materialize=True checkpoints the verified pairs and releases the
+    operator's caches.  Otherwise the caches stay persisted with no handle
+    returned, keeping the hot path one pipelined job.
+
+    sort=True orders by (id_a, id_b) for oracle comparison and stable
+    reports; pipelines that only consume the pair RELATION (cluster
+    resolution, anti-joins) pass sort=False — the global sort is a full
+    range-exchange that buys nothing downstream.  A global sort's range
+    partitioner SAMPLES its child, so an unmaterialized child executes
+    twice (once for the sample, once for the sort): compact_for_sort
+    repartitions the slim pair relation down (defaultParallelism/4) and
+    lazy-cuts it first, so checkpoint-write + sample + sort stop
+    scheduling 65 tasks over kilobyte blocks (measured 3.2 -> 2.4 s on the
+    MinHash pairs at the inflated bench shape; see session.compact_for_sort).
+    """
+    if materialize:
+        out = out.transform(truncate_lineage, eager=True)
+        for cache in caches:
+            cache.unpersist()
+    elif sort:
+        out = compact_for_sort(out)
+    return out.orderBy("id_a", "id_b") if sort else out
+
+
 def near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 3,
+    shingle_n: int = SHINGLE_N,
     threshold: float = 0.5,
     sort: bool = True,
     materialize: bool = False,
@@ -258,7 +354,7 @@ def near_dup_pairs(
 
     collapse_exact (default on) first groups BYTE-IDENTICAL texts by
     md5 and runs the LSH pipeline on one representative per group, then
-    expands rep-level pairs back to full-id pairs (expand_group_pairs).
+    expands rep-level pairs back to full-id pairs (collapsed_pairs).
     The output is EXACTLY the uncollapsed output — identical docs have
     identical signatures, so they collide iff their rep collides, and
     verify to the same Jaccard — but signature hashing, banding, the
@@ -280,58 +376,65 @@ def near_dup_pairs(
     this in a loop should pass materialize=True: the verified pairs are
     checkpointed and the caches are released before returning.
     """
+
+    def core(d: DataFrame):
+        return _near_dup_pairs_lsh(d, id_col, text_col, shingle_n, threshold)
+
     if not collapse_exact:
-        out, sig = _near_dup_pairs_lsh(
-            df, id_col, text_col, shingle_n, threshold
-        )
-        if materialize:
-            out = out.transform(truncate_lineage, eager=True)
-            sig.unpersist()
-        elif sort:
-            # a global sort's range partitioner SAMPLES its child — an
-            # unmaterialized child executes twice (once for the sample,
-            # once for the sort).  compact_for_sort repartitions the slim
-            # pair relation down (defaultParallelism/4) and lazy-cuts, so
-            # checkpoint-write + sample + sort stop scheduling 65 tasks
-            # over kilobyte blocks (measured 3.2 -> 2.4 s at the inflated
-            # bench shape; see session.compact_for_sort).
-            out = compact_for_sort(out)
-        return _maybe_sort(out, sort)
+        out, sig = core(df)
+        return _finish_pairs(out, sort, materialize, [sig])
 
     # eligibility = the doc can produce at least one shingle (shorter docs
     # have empty shingle sets, whose band keys are filtered out of the
     # bucket table — so identical short docs never pair in the original
-    # pipeline either)
+    # pipeline either).  The self-similarity of an identical pair: Jaccard
+    # of a non-empty set with itself is exactly 1.0 (the verified value
+    # the uncollapsed pipeline computes for identical docs), read off the
+    # persisted members.
     ok = F.size(tokens(F.col(text_col))) >= shingle_n
-    members, gstats = collapse_exact_groups(df, id_col, F.md5(F.col(text_col)), ok)
-    # reps and self_sim read the PERSISTED members blocks — each group's
-    # representative row is the one where id == _rep, so a narrow filter
-    # over the cache replaces what would otherwise be extra references to
-    # the gstats plan, each replaying the corpus-wide md5 group-by unless
-    # ReuseExchange happens to fire (the scheduler accident this module
-    # never relies on).
-    reps = df.join(
-        members.filter(F.col(id_col) == F.col("_rep")).select(id_col),
+    out, caches = collapsed_pairs(
+        df,
         id_col,
-        "left_semi",
+        F.md5(F.col(text_col)),
+        ok,
+        core,
+        lambda members, _sig: members.filter(
+            (F.col(id_col) == F.col("_rep")) & F.col("_ok")
+        ).select(F.col("_rep").alias("_ssid"), F.lit(1.0).alias("_ss")),
+        "jaccard",
     )
-    rep_pairs, sig = _near_dup_pairs_lsh(
-        reps, id_col, text_col, shingle_n, threshold
+    return _finish_pairs(out, sort, materialize, caches)
+
+
+def blocked_pairs(
+    base: DataFrame,
+    id_col: str,
+    block_cols: tuple,
+    sim: Column,
+    sim_col: str,
+    threshold: float,
+    sort: bool,
+) -> DataFrame:
+    """Exact pairwise similarity within blocking groups: a self-join of
+    ``base`` (aliased a, b) on block equality with id_a < id_b, keeping
+    the pair when ``sim`` (over a.* and b.*) reaches ``threshold`` — the
+    shared body of ngram_jaccard_pairs and
+    similarity.cosine_near_dup_pairs.  The n^2 blowup is bounded per block."""
+    a, b = base.alias("a"), base.alias("b")
+    on = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for c in block_cols:
+        on = on & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    out = (
+        a.join(b, on)
+        .withColumn(sim_col, sim)
+        .filter(F.col(sim_col) >= threshold)
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            sim_col,
+        )
     )
-    # self-similarity of an identical pair: Jaccard of a non-empty set
-    # with itself is exactly 1.0 (the verified value the uncollapsed
-    # pipeline computes for identical docs)
-    self_sim = members.filter(
-        (F.col(id_col) == F.col("_rep")) & F.col("_ok")
-    ).select(F.col("_rep").alias("_ssid"), F.lit(1.0).alias("_ss"))
-    out = expand_group_pairs(rep_pairs, members, id_col, self_sim, "jaccard")
-    if materialize:
-        out = out.transform(truncate_lineage, eager=True)
-        sig.unpersist()
-        members.unpersist()
-    elif sort:
-        out = compact_for_sort(out)  # see above
-    return _maybe_sort(out, sort)
+    return out.orderBy("id_a", "id_b") if sort else out
 
 
 def ngram_jaccard_pairs(
@@ -349,22 +452,8 @@ def ngram_jaccard_pairs(
     base = ensure_parallelism(df).select(
         F.col(id_col), *[F.col(c) for c in block_cols], sh.alias("sset")
     )
-    a = base.alias("a")
-    b = base.alias("b")
-    on = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    for c in block_cols:
-        on = on & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    out = (
-        a.join(b, on)
-        .withColumn("jaccard", F.round(jaccard(F.col("a.sset"), F.col("b.sset")), 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            "jaccard",
-        )
-    )
-    return out.orderBy("id_a", "id_b")
+    sim = F.round(jaccard(F.col("a.sset"), F.col("b.sset")), 4)
+    return blocked_pairs(base, id_col, block_cols, sim, "jaccard", threshold, True)
 
 
 SIMHASH_BITS = 60
@@ -425,51 +514,18 @@ def simhash_bucket_pairs(
     no handle returned (it lives until the session stops, clearCache()
     or LRU eviction); materialize=True checkpoints the pair set and
     releases it."""
-    chunk_bits = SIMHASH_BITS // 4
-    mask = (1 << chunk_bits) - 1
     sim = with_simhash(df, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk_id"),
-                F.shiftright(F.col("simhash"), chunk_bits * c)
-                .bitwiseAND(F.lit(mask))
-                .alias("chunk"),
-            )
-            for c in range(4)
-        ]
-    )
-    b = sim.select(id_col, "simhash", F.explode(chunks).alias("c")).select(
-        id_col, "simhash", "c.chunk_id", "c.chunk"
-    )
-    l, r = b.alias("l"), b.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.chunk_id") == F.col("r.chunk_id"))
-            & (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.simhash").alias("sim_a"),
-            F.col("r.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    bands = bit_bands(sim, id_col, "simhash", 4, SIMHASH_BITS // 4, carry=("simhash",))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     out = (
-        cand.withColumn("hamming", hamming)
+        lsh_candidates(bands, id_col, carry=("simhash",))
+        .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    if materialize:
-        out = out.transform(truncate_lineage, eager=True)
-        sim.unpersist()
-    return _maybe_sort(out, sort)
+    return _finish_pairs(out, sort, materialize, [sim])
 
 
 def substring_dup_spans(

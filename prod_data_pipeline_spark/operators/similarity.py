@@ -28,11 +28,14 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from prod_data_pipeline_spark.functions.vector import cosine_sim, to_double_array
-from prod_data_pipeline_spark.session import (
-    compact_for_sort,
-    ensure_parallelism,
-    truncate_lineage,
+from prod_data_pipeline_spark.operators.dedup import (
+    _finish_pairs,
+    bit_bands,
+    blocked_pairs,
+    collapsed_pairs,
+    lsh_candidates,
 )
+from prod_data_pipeline_spark.session import ensure_parallelism, truncate_lineage
 
 # Digits every reported cosine similarity is rounded to (before any
 # threshold compare, in both engines).
@@ -529,21 +532,8 @@ def cosine_near_dup_pairs(
     base = _norm_emb(df, emb_col).select(
         F.col(id_col), *[F.col(c) for c in block_cols], "_emb"
     )
-    a, b = base.alias("a"), base.alias("b")
-    on = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    for c in block_cols:
-        on = on & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    out = (
-        a.join(b, on)
-        .withColumn("sim", F.round(cosine_sim(F.col("a._emb"), F.col("b._emb")), ROUND_SIM))
-        .filter(F.col("sim") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            "sim",
-        )
-    )
-    return out.orderBy("id_a", "id_b") if sort else out
+    sim = F.round(cosine_sim(F.col("a._emb"), F.col("b._emb")), ROUND_SIM)
+    return blocked_pairs(base, id_col, block_cols, sim, "sim", threshold, sort)
 
 
 def _md5_planes(dim: int, nbits: int) -> list[list[float]]:
@@ -640,33 +630,7 @@ def _srp_pairs_lsh(
     # referenced by both band sides + both verify sides: persist or the
     # 1024-literal projection re-evaluates four times
     sig = sig.select(F.col(id_col), "_emb", "srp_sig").persist(StorageLevel.MEMORY_AND_DISK)
-    n_bands = nbits // band_bits
-    mask = (1 << band_bits) - 1
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("band_id"),
-                F.shiftright(F.col("srp_sig"), band_bits * c)
-                .bitwiseAND(F.lit(mask))
-                .alias("band_key"),
-            )
-            for c in range(n_bands)
-        ]
-    )
-    b = sig.select(id_col, F.explode(chunks).alias("c")).select(
-        id_col, "c.band_id", "c.band_key"
-    )
-    l, r = b.alias("l"), b.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = lsh_candidates(bit_bands(sig, id_col, "srp_sig", nbits // band_bits, band_bits), id_col)
     ea = sig.select(F.col(id_col).alias("id_a"), F.col("_emb").alias("_ea"))
     eb = sig.select(F.col(id_col).alias("id_b"), F.col("_emb").alias("_eb"))
     out = (
@@ -709,7 +673,7 @@ def srp_near_dup_pairs(
     collapse_exact (default on) groups BIT-IDENTICAL embeddings (md5 of
     the stringified array) and runs the pipeline on one representative
     per group, then expands rep pairs back to full-id pairs
-    (operators.dedup.expand_group_pairs) — output identical, but
+    (operators.dedup.collapsed_pairs) — output identical, but
     signatures, banding, and verification run on the distinct-vector
     corpus.  Replica cliques are QUADRATIC in candidate volume (every
     replica shares every band key), so this attacks sign-LSH's worst
@@ -719,26 +683,13 @@ def srp_near_dup_pairs(
     not assumed 1.0 — a zero vector's self-cosine is NULL and stays
     excluded, exactly as the uncollapsed verify excludes it).
     """
-    if not collapse_exact:
-        out, sig = _srp_pairs_lsh(df, dim, threshold, nbits, band_bits, id_col, emb_col)
-        if materialize:
-            # sig feeds four plan branches; materialize the (small) verified
-            # pair set and release the cache — no per-call storage leak.
-            out = out.transform(truncate_lineage, eager=True)
-            sig.unpersist()
-        elif sort:
-            # compact + lazy lineage cut so the sort's range-partitioner
-            # sampling pass materializes few, dense blocks the sort then
-            # re-reads, instead of executing the verify pipeline twice or
-            # scheduling 65 tasks over kilobyte blocks (see near_dup_pairs
-            # and session.compact_for_sort)
-            out = compact_for_sort(out)
-        return out.orderBy("id_a", "id_b") if sort else out
 
-    from prod_data_pipeline_spark.operators.dedup import (
-        collapse_exact_groups,
-        expand_group_pairs,
-    )
+    def core(d: DataFrame):
+        return _srp_pairs_lsh(d, dim, threshold, nbits, band_bits, id_col, emb_col)
+
+    if not collapse_exact:
+        out, sig = core(df)
+        return _finish_pairs(out, sort, materialize, [sig])
 
     # Null-safe, length-prefixed group key: concat_ws SKIPS NULL elements,
     # so without the per-element coalesce [1.0, NULL, 2.0] and
@@ -755,33 +706,19 @@ def srp_near_dup_pairs(
             ),
         )
     )
-    members, gstats = collapse_exact_groups(df, id_col, key, F.lit(True))
-    # rep rows come off the PERSISTED members cache (id == _rep), not the
-    # gstats plan — an extra gstats reference would replay the corpus-wide
-    # key group-by per consumer (see near_dup_pairs).
-    reps = df.join(
-        members.filter(F.col(id_col) == F.col("_rep")).select(id_col),
+    out, caches = collapsed_pairs(
+        df,
         id_col,
-        "left_semi",
-    )
-    rep_pairs, sig = _srp_pairs_lsh(
-        reps, dim, threshold, nbits, band_bits, id_col, emb_col
-    )
-    self_sim = (
-        sig.select(
+        key,
+        F.lit(True),
+        core,
+        lambda _members, sig: sig.select(
             F.col(id_col).alias("_ssid"),
             F.round(cosine_sim(F.col("_emb"), F.col("_emb")), ROUND_SIM).alias("_ss"),
-        )
-        .filter(F.col("_ss") >= threshold)
+        ).filter(F.col("_ss") >= threshold),
+        "sim",
     )
-    out = expand_group_pairs(rep_pairs, members, id_col, self_sim, "sim")
-    if materialize:
-        out = out.transform(truncate_lineage, eager=True)
-        sig.unpersist()
-        members.unpersist()
-    elif sort:
-        out = compact_for_sort(out)  # see above
-    return out.orderBy("id_a", "id_b") if sort else out
+    return _finish_pairs(out, sort, materialize, caches)
 
 
 def ivf_recall_at_k(

@@ -21,6 +21,7 @@ from prod_data_pipeline_spark.plans.query_registry import (
     minhash_sql,
     near_dup_pairs_sql,
     num_to_double,
+    pagerank_sql,
     query,
     shingles_sql,
 )
@@ -1351,71 +1352,7 @@ def q15_top_supplier(spark, sf_dir):
 @query(
     "docs_dup_pagerank",
     oracle=f"""
-    WITH {near_dup_pairs_sql(0.5)}, sym AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION
-      SELECT id_b AS src, id_a AS dst FROM pairs
-    ), deg AS (
-      SELECT src, COUNT(*) AS deg FROM sym GROUP BY src
-    ), nn AS (
-      SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM deg
-    ), r0 AS (
-      SELECT src AS node, ROUND(1.0 / (SELECT n FROM nn), 12) AS rank FROM deg
-    ), c0 AS (
-      SELECT e.dst, SUM(CAST(ROUND(r.rank / d.deg, 12) AS DECIMAL(20,12))) AS s
-      FROM sym e JOIN r0 r ON r.node = e.src JOIN deg d ON d.src = e.src
-      GROUP BY e.dst
-    ), r1 AS (
-      SELECT dst AS node,
-             ROUND((1.0 - 0.85) / (SELECT n FROM nn)
-                   + 0.85 * CAST(s AS DOUBLE), 12) AS rank
-      FROM c0
-    ), c1 AS (
-      SELECT e.dst, SUM(CAST(ROUND(r.rank / d.deg, 12) AS DECIMAL(20,12))) AS s
-      FROM sym e JOIN r1 r ON r.node = e.src JOIN deg d ON d.src = e.src
-      GROUP BY e.dst
-    ), r2 AS (
-      SELECT dst AS node,
-             ROUND((1.0 - 0.85) / (SELECT n FROM nn)
-                   + 0.85 * CAST(s AS DOUBLE), 12) AS rank
-      FROM c1
-    ), c2 AS (
-      SELECT e.dst, SUM(CAST(ROUND(r.rank / d.deg, 12) AS DECIMAL(20,12))) AS s
-      FROM sym e JOIN r2 r ON r.node = e.src JOIN deg d ON d.src = e.src
-      GROUP BY e.dst
-    ), r3 AS (
-      SELECT dst AS node,
-             ROUND((1.0 - 0.85) / (SELECT n FROM nn)
-                   + 0.85 * CAST(s AS DOUBLE), 12) AS rank
-      FROM c2
-    ), c3 AS (
-      SELECT e.dst, SUM(CAST(ROUND(r.rank / d.deg, 12) AS DECIMAL(20,12))) AS s
-      FROM sym e JOIN r3 r ON r.node = e.src JOIN deg d ON d.src = e.src
-      GROUP BY e.dst
-    ), r4 AS (
-      SELECT dst AS node,
-             ROUND((1.0 - 0.85) / (SELECT n FROM nn)
-                   + 0.85 * CAST(s AS DOUBLE), 12) AS rank
-      FROM c3
-    ), c4 AS (
-      SELECT e.dst, SUM(CAST(ROUND(r.rank / d.deg, 12) AS DECIMAL(20,12))) AS s
-      FROM sym e JOIN r4 r ON r.node = e.src JOIN deg d ON d.src = e.src
-      GROUP BY e.dst
-    ), r5 AS (
-      SELECT dst AS node,
-             ROUND((1.0 - 0.85) / (SELECT n FROM nn)
-                   + 0.85 * CAST(s AS DOUBLE), 12) AS rank
-      FROM c4
-    ), c5 AS (
-      SELECT e.dst, SUM(CAST(ROUND(r.rank / d.deg, 12) AS DECIMAL(20,12))) AS s
-      FROM sym e JOIN r5 r ON r.node = e.src JOIN deg d ON d.src = e.src
-      GROUP BY e.dst
-    ), r6 AS (
-      SELECT dst AS node,
-             ROUND((1.0 - 0.85) / (SELECT n FROM nn)
-                   + 0.85 * CAST(s AS DOUBLE), 12) AS rank
-      FROM c5
-    )
+    WITH {near_dup_pairs_sql(0.5)}, {pagerank_sql(6)}
     SELECT node AS doc_id, ROUND(rank, 9) AS centrality
     FROM r6
     ORDER BY centrality DESC, doc_id LIMIT 50
@@ -1447,29 +1384,6 @@ def docs_dup_pagerank(spark, sf_dir):
     )
 
 
-def _pagerank_unroll_sql(n_iters: int = 6) -> str:
-    """The c{i}/r{i+1} CTE chain replaying pagerank_quantized's recurrence
-    (contributions rounded to 12 digits summed as exact DECIMAL, damped
-    update rounded back) — the docs_dup_pagerank oracle's unroll, generated
-    instead of copy-pasted so new PageRank-family oracles share one text."""
-    parts = []
-    prev = "r0"
-    for i in range(n_iters):
-        parts.append(
-            f"""), c{i} AS (
-      SELECT e.dst, SUM(CAST(ROUND(r.rank / d.deg, 12) AS DECIMAL(20,12))) AS s
-      FROM sym e JOIN {prev} r ON r.node = e.src JOIN deg d ON d.src = e.src
-      GROUP BY e.dst
-    ), r{i + 1} AS (
-      SELECT dst AS node,
-             ROUND((1.0 - 0.85) / (SELECT n FROM nn)
-                   + 0.85 * CAST(s AS DOUBLE), 12) AS rank
-      FROM c{i}"""
-        )
-        prev = f"r{i + 1}"
-    return "".join(parts)
-
-
 @query(
     "docs_textrank_keywords",
     oracle="""
@@ -1490,20 +1404,9 @@ def _pagerank_unroll_sql(n_iters: int = 6) -> str:
       FROM adj
       JOIN vocab va ON va.w = adj.wa
       JOIN vocab vb ON vb.w = adj.wb
-    ), sym AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION
-      SELECT id_b AS src, id_a AS dst FROM pairs
-    ), deg AS (
-      SELECT src, COUNT(*) AS deg FROM sym GROUP BY src
-    ), nn AS (
-      SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM deg
-    ), r0 AS (
-      SELECT src AS node, ROUND(1.0 / (SELECT n FROM nn), 12) AS rank FROM deg
-    """
-    + _pagerank_unroll_sql(6)
+    ), """
+    + pagerank_sql(6)
     + """
-    )
     SELECT v.w AS word,
            CAST(d.deg AS BIGINT) AS n_neighbors,
            ROUND(r.rank, 9) AS textrank
@@ -2911,9 +2814,15 @@ def docs_lsh_recall_vs_exact(spark, sf_dir, sample_pct: int = 100):
     so per-pair LSH membership is identical in the subsample).  The
     oracle and driver run the full-corpus default; the knob is the
     production configuration for petabyte audits."""
+    from pyspark.storagelevel import StorageLevel
+
     from prod_data_pipeline_spark.operators.dedup import (
+        LSH_BAND_SIZE,
+        MINHASH_HASHES,
+        SHINGLE_N,
         jaccard_prefix_pairs,
         lsh_bands,
+        lsh_candidates,
         with_minhash,
     )
 
@@ -2922,27 +2831,15 @@ def docs_lsh_recall_vs_exact(spark, sf_dir, sample_pct: int = 100):
         from prod_data_pipeline_spark.operators.sampling import hash_sample
 
         docs = hash_sample(docs, sample_pct / 100.0, "doc_id", salt="recall_audit")
-    exact = jaccard_prefix_pairs(docs, threshold_pct=50, shingle_n=3).select(
+    exact = jaccard_prefix_pairs(docs, threshold_pct=50, shingle_n=SHINGLE_N).select(
         "id_a", "id_b"
     )
-    sig = with_minhash(docs, num_hashes=8, shingle_n=3).select(
-        "doc_id", "shingle_set", *[f"mh_{j}" for j in range(8)]
+    sig = (
+        with_minhash(docs)
+        .select("doc_id", "shingle_set", *[f"mh_{j}" for j in range(MINHASH_HASHES)])
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    from pyspark.storagelevel import StorageLevel
-
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    bands = lsh_bands(sig, "doc_id", 8, 2)
-    l, r = bands.alias("l"), bands.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-        .distinct()
-    )
+    cand = lsh_candidates(lsh_bands(sig, "doc_id", MINHASH_HASHES, LSH_BAND_SIZE), "doc_id")
     sa = sig.select(F.col("doc_id").alias("id_a"), F.col("shingle_set").alias("set_a"))
     sb = sig.select(F.col("doc_id").alias("id_b"), F.col("shingle_set").alias("set_b"))
     inter = F.size(F.array_intersect("set_a", "set_b"))

@@ -19,6 +19,7 @@ from prod_data_pipeline_spark.operators.dedup import (
     SNM_KEY_LEN,
     SNM_WINDOW,
 )
+from prod_data_pipeline_spark.operators.graph import DAMPING, RANK_SCALE
 from prod_data_pipeline_spark.operators.linalg import INT40_LO, INT40_SCALE
 from prod_data_pipeline_spark.operators.quality import (
     FT_BUCKETS,
@@ -379,6 +380,40 @@ def near_dup_pairs_sql(
         JOIN sig sa ON sa.doc_id = c.id_a
         JOIN sig sb ON sb.doc_id = c.id_b
       ) WHERE jaccard >= {threshold}
+    )"""
+
+
+def pagerank_sql(n_iters: int) -> str:
+    """CTEs ``sym, deg, nn, r0 .. r{n_iters}`` over ``pairs(id_a, id_b)``:
+    graph.pagerank_quantized on the symmetrized pair graph — contributions
+    rounded to RANK_SCALE digits and summed as exact DECIMAL, the DAMPING
+    update rounded back.  Every level is MATERIALIZED: each one is read by
+    the next, and an inlined chain recomputes its whole prefix per level."""
+    dec = f"DECIMAL({RANK_SCALE + 8},{RANK_SCALE})"
+    levels = "".join(
+        f"""
+    ), c{i} AS MATERIALIZED (
+      SELECT e.dst, SUM(CAST(ROUND(r.rank / d.deg, {RANK_SCALE}) AS {dec})) AS s
+      FROM sym e JOIN r{i} r ON r.node = e.src JOIN deg d ON d.src = e.src
+      GROUP BY e.dst
+    ), r{i + 1} AS MATERIALIZED (
+      SELECT dst AS node,
+             ROUND((1.0 - {DAMPING}) / (SELECT n FROM nn)
+                   + {DAMPING} * CAST(s AS DOUBLE), {RANK_SCALE}) AS rank
+      FROM c{i}"""
+        for i in range(n_iters)
+    )
+    return f"""sym AS MATERIALIZED (
+      SELECT id_a AS src, id_b AS dst FROM pairs
+      UNION
+      SELECT id_b AS src, id_a AS dst FROM pairs
+    ), deg AS MATERIALIZED (
+      SELECT src, COUNT(*) AS deg FROM sym GROUP BY src
+    ), nn AS (
+      SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM deg
+    ), r0 AS MATERIALIZED (
+      SELECT src AS node, ROUND(1.0 / (SELECT n FROM nn), {RANK_SCALE}) AS rank
+      FROM deg{levels}
     )"""
 
 

@@ -779,3 +779,43 @@ def test_srp_pairs_collapse_equivalence(spark):
     found = {(x, y) for x, y, _ in b}
     assert {(1, 2), (1, 7), (2, 7)} <= found
     assert not any(5 in p or 6 in p for p in found)
+
+
+def test_lsh_steps_written_once():
+    """Each shared LSH step has one home: the (band_id, band_key)
+    equality self-join lives only in dedup.lsh_candidates, and the
+    pre-sort compact_for_sort call of the operators only in
+    dedup._finish_pairs.  A hand copy drifts: SimHash's sorted path once
+    skipped the compact and so ran its verify pipeline twice."""
+    import ast
+    import pathlib
+    import re
+
+    import prod_data_pipeline_spark
+
+    root = pathlib.Path(prod_data_pipeline_spark.__file__).parent
+    band_join = re.compile(r'(band_key|chunk)"\)\s*==')
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        funcs = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+
+        def owner(lineno):
+            inner = [f for f in funcs if f[0] <= lineno <= f[1]]
+            return min(inner, key=lambda f: f[1] - f[0])[2] if inner else None
+
+        for i, line in enumerate(src.splitlines(), 1):
+            if band_join.search(line) and owner(i) != "lsh_candidates":
+                hits.append(f"{path.relative_to(root)}:{i} band self-join")
+            if (
+                "compact_for_sort(" in line
+                and path.parent.name == "operators"
+                and owner(i) != "_finish_pairs"
+            ):
+                hits.append(f"{path.relative_to(root)}:{i} compact_for_sort")
+    assert not hits, hits
+

@@ -445,9 +445,10 @@ def test_triangle_stats_driver_path_matches_distributed(spark):
 
 def test_compact_for_sort_sites_compute_once_under_checkpoint_dir(tmp_path):
     """Round-11 verdict #6, generalizing the lazy-reliable-checkpoint fix
-    structurally: every compact_for_sort call site (near_dup_pairs and
-    srp_near_dup_pairs, collapse_exact True/False — four sites) must not
-    re-execute its upstream pipeline under $SPARK_GRAFT_CHECKPOINT_DIR.
+    structurally: every compact_for_sort caller (near_dup_pairs and
+    srp_near_dup_pairs, collapse_exact True/False, and
+    simhash_bucket_pairs) must not re-execute its upstream pipeline under
+    $SPARK_GRAFT_CHECKPOINT_DIR.
     Invariant: an accumulator-ticking UDF on the INPUT counts the same
     number of evaluations with sort=True (compact + range-partitioner
     sample + sort) as with sort=False — any reintroduced lazy
@@ -465,7 +466,7 @@ sys.path.insert(0, os.environ["REPO"])
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 from prod_data_pipeline_spark.session import get_spark
-from prod_data_pipeline_spark.operators.dedup import near_dup_pairs
+from prod_data_pipeline_spark.operators.dedup import near_dup_pairs, simhash_bucket_pairs
 from prod_data_pipeline_spark.operators.similarity import srp_near_dup_pairs
 
 spark = get_spark(cpus=4)
@@ -526,6 +527,11 @@ measure(
         df, dim=8, sort=s, collapse_exact=False, materialize=False
     ),
 )
+measure(
+    "simhash",
+    lambda u: docs_raw.select(u(F.col("doc_id")).alias("doc_id"), "text"),
+    lambda df, s: simhash_bucket_pairs(df, sort=s),
+)
 print(json.dumps(results))
 """
     env = dict(
@@ -540,7 +546,8 @@ print(json.dumps(results))
     assert proc.returncode == 0, proc.stderr[-3000:]
     results = json.loads(proc.stdout.strip().splitlines()[-1])
     assert set(results) == {
-        "near_dup_collapse", "near_dup_plain", "srp_collapse", "srp_plain"
+        "near_dup_collapse", "near_dup_plain", "srp_collapse", "srp_plain",
+        "simhash",
     }
     for tag, r in results.items():
         assert r["base"] > 0, (tag, r)
